@@ -29,6 +29,8 @@ reference's per-predicate slice selection.
 
 from __future__ import annotations
 
+import itertools
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
@@ -258,10 +260,12 @@ def select_join(
         shared = sorted(set(acc.columns) & set(pdf.columns))
         acc = acc.join(pdf, on=shared, how="inner") if shared else acc.crossJoin(pdf)
 
-    # Property-path patterns (SPARQL 1.1 superset — plans.paths): each
-    # evaluates to a (src, dst) pair set, renamed/filtered to its variable
-    # bindings, then joined like any other pattern group. A bound subject
-    # becomes the closure's seed set (frontier-only expansion).
+    # Property-path patterns (SPARQL 1.1 superset): a closure-free path
+    # plans as the BGP of its §18.2.2.4 translation; any other evaluates
+    # to a plans.paths (src, dst) pair set, renamed/filtered to its
+    # variable bindings. Either joins like any other pattern group. A
+    # bound subject becomes the closure's seed set (frontier-only
+    # expansion).
     acc = _apply_paths(triples, acc, paths)
 
     # OPTIONAL groups (SPARQL superset — the reference is conjunctive-only):
@@ -413,11 +417,11 @@ def select_join(
 
 def _apply_paths(triples: DataFrame, acc: DataFrame | None, paths: list) -> DataFrame:
     """Fold property-path patterns into the accumulated plan: each path
-    evaluates to a variable-column plan (plans.paths via _path_plan) and
-    joins on shared variables; when ``acc`` already binds the path's
-    subject variable, those bindings SEED the evaluator so closures
+    evaluates to a variable-column plan (:func:`_path_plan`) and joins on
+    shared variables; when ``acc`` already binds the path's subject
+    variable, those bindings SEED the closure evaluator so closures
     expand only from reachable nodes (the same seeding Seq applies
-    internally)."""
+    internally). Closure-free paths plan as BGP joins and ignore them."""
     for s_u, expr, o_u in paths:
         seeds = None
         if acc is not None and isinstance(s_u, Var) and s_u.name in acc.columns:
@@ -708,12 +712,15 @@ def _named_node_gate(triples: DataFrame, value: str) -> DataFrame:
     """0/1-row gate: does ``value`` denote a NAMED node in the store (it
     appears as some subject, or as an object with o_kind = named)?  Bound
     pattern values match named nodes only (``pattern_filter``'s rule,
-    graph.rs:1031-1033); this extends the same rule to bound path ends,
-    which otherwise compare by string value alone. Residual: the check is
-    per-NODE, not per-edge — if the same string occurs both as a named
-    node and as a literal object on a matched predicate (pathological in
-    RDF), a path ending at the literal twin still matches; exact per-edge
-    kind would have to thread o_kind through every closure round."""
+    graph.rs:1031-1033); this extends the same rule to the bound ends of
+    closure paths, which the fixpoint evaluator compares by string value
+    alone. Residual, closure paths only: the check is per-NODE, not
+    per-edge — if the same string occurs both as a named node and as a
+    literal object on a matched predicate (pathological in RDF), a closure
+    ending at the literal twin still matches; exact per-edge kind would
+    have to thread o_kind through every closure round. Closure-free paths
+    lower to triple patterns (:func:`_lower_path`), where the rule holds
+    per edge."""
     from rippledb_spark import model
 
     return (
@@ -729,11 +736,45 @@ def _named_node_gate(triples: DataFrame, value: str) -> DataFrame:
     )
 
 
+def _lower_path(expr, s_u, o_u, fresh) -> list[tuple] | None:
+    """SPARQL 1.1 §18.2.2.4 translation of a closure-free path into triple
+    patterns: ``X p Y`` is the pattern itself, ``X ^P Y`` is ``Y P X``,
+    and ``X P1/P2 Y`` is ``X P1 ?v . ?v P2 Y`` with ``?v`` drawn from
+    ``fresh``. None when ``expr`` contains a closure, alternative, negated
+    set or zero-length step — those stay on the fixpoint evaluator."""
+    from rippledb_spark.plans.paths import Inv, Pred, Seq
+
+    if isinstance(expr, Pred):
+        return [(s_u, Val(expr.name), o_u)]
+    if isinstance(expr, Inv):
+        return _lower_path(expr.inner, o_u, s_u, fresh)
+    if isinstance(expr, Seq):
+        conds: list[tuple] = []
+        left = s_u
+        for i, step in enumerate(expr.steps):
+            right = o_u if i == len(expr.steps) - 1 else Var(next(fresh))
+            lowered = _lower_path(step, left, right, fresh)
+            if lowered is None:
+                return None
+            conds += lowered
+            left = right
+        return conds
+    return None
+
+
 def _path_plan(
     triples: DataFrame, s_u, expr: str, o_u, seeds: DataFrame | None = None
 ) -> DataFrame:
     """One property-path pattern → a joinable variable-column plan.
 
+    A closure-free path (predicates, inverses and sequences of them)
+    lowers to ordinary triple patterns (:func:`_lower_path`) and plans as
+    a BGP join projected to the path's end variables — the same route,
+    gates and named-only rule as any other pattern group. Its hidden
+    joint variables are prefixed so they never collide with the end
+    variables, the only columns the plan keeps.
+
+    Any other path runs the fixpoint evaluator (plans.paths.path_pairs).
     Bound subject (or ``seeds`` — subject bindings already produced by the
     required patterns) seeds the evaluator, so closures expand only from
     it. A bound OBJECT with an unseeded subject evaluates the REVERSED
@@ -744,7 +785,19 @@ def _path_plan(
     be a full-closure scan at 100 TB). Both ends bound → a gate row, like
     a fully-bound triple pattern. Bound ends follow the engine's
     named-only matching rule via :func:`_named_node_gate`."""
-    from rippledb_spark.plans.paths import path_pairs, reverse_path
+    from rippledb_spark.plans.paths import parse_path, path_pairs, reverse_path
+
+    ends = list(dict.fromkeys(u.name for u in (s_u, o_u) if isinstance(u, Var)))
+    prefix = "__path"
+    while any(n.lower().startswith(prefix) for n in ends):
+        prefix = "_" + prefix
+    path = parse_path(expr)
+    conds = _lower_path(path, s_u, o_u, (f"{prefix}{i}" for i in itertools.count()))
+    if conds is not None:
+        plan = _join_group(triples, _order_patterns(conds))
+        if ends:
+            return plan.select(*ends)
+        return plan.limit(1).select(F.lit(1).alias("__gate"))
 
     spark = triples.sparkSession
     srcs = seeds
@@ -754,12 +807,12 @@ def _path_plan(
         gates.append(_named_node_gate(triples, s_u.value))
     if isinstance(o_u, Val) and srcs is None:
         dsts = spark.createDataFrame([(o_u.value,)], ["node"])
-        pairs = path_pairs(triples, reverse_path(expr), srcs=dsts).select(
+        pairs = path_pairs(triples, reverse_path(path), srcs=dsts).select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
         )
         gates.append(_named_node_gate(triples, o_u.value))
     else:
-        pairs = path_pairs(triples, expr, srcs=srcs)
+        pairs = path_pairs(triples, path, srcs=srcs)
         if isinstance(o_u, Val):
             pairs = pairs.filter(F.col("dst") == F.lit(o_u.value))
             gates.append(_named_node_gate(triples, o_u.value))

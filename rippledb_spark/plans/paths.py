@@ -29,6 +29,15 @@ Semantics follow the spec's ALP evaluation:
                  members exclude predicates over swapped (o, s) pairs, and
                  the two parts union. ``!p`` is shorthand for ``!(p)``.
 
+Planner route: in a query, a closure-free path — a predicate, an
+inverse, or a sequence of them — does not reach this evaluator.
+``plans.bgp._path_plan`` lowers it to ordinary triple patterns under the
+spec's §18.2.2.4 translation (``X p/q Y`` ≡ ``X p ?v . ?v q Y``,
+``X ^p Y`` ≡ ``Y p X``) and plans it as a BGP join, so bound ends follow
+the named-only rule per edge.
+Only query paths containing a closure (``+ * ?``), an alternative, a
+negated set or a zero-length step run through :func:`path_pairs`.
+
 Zero-length paths: the spec matches every term in the graph; here that is
 the store's node universe (distinct ``s`` ∪ ``o_value``) — identical, since
 a term "in the graph" is exactly one appearing in some triple. When a

@@ -19,6 +19,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of MemTotal, capped at 16g (16g when ``meminfo`` is
+    unreadable, e.g. off Linux)."""
+    cap_mib = 16 * 1024
+    try:
+        with open(meminfo) as f:
+            for line in f:
+                if line.startswith("MemTotal:"):
+                    kib = int(line.split()[1])
+                    return f"{min(kib // 2048, cap_mib)}m"
+    except OSError:
+        pass
+    return f"{cap_mib}m"
+
+
 def get_spark(
     app_name: str = "rippledb_spark",
     cores: int | None = None,
@@ -70,12 +85,15 @@ def get_spark(
         # 30 min — far too lazy for a long-lived analytics session.
         .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.ui.enabled", "false")
-        # local[32] drives executor + driver work from one JVM: 21-query
-        # bench sessions accumulate broadcasts/blocks, and an 8g heap was
-        # measurably GC-bound by the tail queries (pagerank 2× slower
-        # in-bench than standalone). The box has 128 GiB; 16g is still
-        # conservative.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        # local[N] drives executor + driver work from one JVM: long
+        # sessions accumulate broadcasts/blocks, and an 8g heap was
+        # measurably GC-bound by the tail queries of a 21-query bench.
+        # The default heap is half the host's memory, capped at 16g, so
+        # it always fits the host; $SPARK_DRIVER_MEMORY overrides it.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -5,6 +5,8 @@ independent implementation (the test_bgp_properties model)."""
 
 from __future__ import annotations
 
+import itertools
+
 import pytest
 
 from rippledb_spark import Sparql, TripleStore
@@ -662,7 +664,7 @@ def test_quantifier_reverse_path(store):
 
 # -- r6: path parser round-trip (render → parse → same pairs) ---------------
 
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as hst
 
 
@@ -715,3 +717,225 @@ def test_path_parser_roundtrip(expr):
     restructure Seq/Alt nesting without changing the relation)."""
     text = _render_path(expr)
     assert naive(parse_path(text)) == naive(expr)
+
+
+# -- closure-free paths plan as BGP joins (SPARQL 1.1 §18.2.2.4) ------------
+
+
+def test_closure_free_path_named_only_per_edge(spark):
+    """'term' is a literal object of label and a named subject elsewhere.
+    The plain pattern ``$s label term`` matches nothing (named-only bound
+    values); a closure-free path lowers to the same pattern, so the rule
+    holds per edge and the path matches nothing either."""
+    st = TripleStore.from_rows(
+        spark,
+        [
+            ("a", "next", "b"),
+            ("b", "named", "label", "term", "literal", None, None),
+            ("term", "next", "z"),
+        ],
+    )
+    qp = Sparql().select(["$s"]).filter([["$s", "label", "term"]])
+    assert st.select_join(qp).count() == 0
+    for s, expr, o, var in [
+        ("$s", "label", "term", "$s"),
+        ("term", "^label", "$o", "$o"),
+        ("$s", "next/label", "term", "$s"),
+        ("term", "^label/^next", "$o", "$o"),
+    ]:
+        q = Sparql().select([var]).path(s, expr, o)
+        assert st.select_join(q).count() == 0, expr
+    # the named twin still answers through its own edges
+    q = Sparql().select(["$s"]).path("$s", "label/next", "z")
+    assert [r["s"] for r in st.select_join(q).collect()] == ["b"]
+
+
+def test_closure_free_path_plan_shape(spark, tmp_path):
+    """``n0 p/q/r ?r`` plans like the explicit three-pattern BGP: no seed
+    relation, no limit-gate, and the same number of joins."""
+    TripleStore.from_rows(
+        spark,
+        [("n0", "p", "n1"), ("n1", "q", "n2"), ("n2", "r", "n3"), ("n2", "r", "n4")],
+    ).df.write.parquet(str(tmp_path / "triples"))
+    st = TripleStore(spark, spark.read.parquet(str(tmp_path / "triples")))
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    path_df = st.sparql("SELECT ?r WHERE { n0 p/q/r ?r }")
+    bgp_df = st.sparql("SELECT ?r WHERE { n0 p ?x . ?x q ?y . ?y r ?r }")
+    plan = optimized(path_df)
+    for node in ("GlobalLimit", "LocalLimit", "LocalRelation"):
+        assert node not in plan, plan
+    assert plan.count("Join ") == optimized(bgp_df).count("Join ") == 2
+    assert sorted(r["r"] for r in path_df.collect()) == ["n3", "n4"]
+
+    assert st.sparql("ASK { n0 p/q n2 }").count() == 1
+    assert st.sparql("ASK { n0 p/q n3 }").count() == 0
+    assert st.sparql("ASK { n3 ^r/^q n1 }").count() == 1
+
+
+# Random graphs for the equivalence property: named nodes n0..n3, a blank
+# node b0 (subject or object), and literal objects — one of them, "n1",
+# shares its string with a named node.
+_NAMED_NODES = ["n0", "n1", "n2", "n3"]
+_SUBJECTS = [(n, "named") for n in _NAMED_NODES] + [("b0", "blank")]
+_OBJECTS = _SUBJECTS + [("n1", "literal"), ("l0", "literal")]
+
+_edges_strategy = hst.lists(
+    hst.tuples(
+        hst.sampled_from(_SUBJECTS), hst.sampled_from(["p", "q"]), hst.sampled_from(_OBJECTS)
+    ),
+    min_size=1,
+    max_size=10,
+)
+
+
+def _closure_free_strategy(depth: int):
+    base = hst.sampled_from(["p", "q"]).map(P.Pred)
+    if depth <= 0:
+        return base
+    sub = _closure_free_strategy(depth - 1)
+    return hst.one_of(
+        base,
+        sub.map(P.Inv),
+        hst.lists(sub, min_size=2, max_size=3).map(lambda l: P.Seq(tuple(l))),
+    )
+
+
+def _bgp_translation(expr, s: str, o: str, fresh) -> list[list[str]]:
+    """The spec's translation written out: X ^P Y → Y P X, X P1/P2 Y →
+    X P1 ?h . ?h P2 Y."""
+    if isinstance(expr, P.Pred):
+        return [[s, expr.name, o]]
+    if isinstance(expr, P.Inv):
+        return _bgp_translation(expr.inner, o, s, fresh)
+    out, left = [], s
+    for i, step in enumerate(expr.steps):
+        right = o if i == len(expr.steps) - 1 else f"$h{next(fresh)}"
+        out += _bgp_translation(step, left, right, fresh)
+        left = right
+    return out
+
+
+def _shape_queries(shape: str, text: str, conds: list, x: str, y: str):
+    """(path query, BGP-translation query, projected vars) for one shape;
+    ``conds`` is the translation of ``$s PATH $o``."""
+
+    def bgp(mapping):
+        return [[mapping.get(u, u) for u in pat] for pat in conds]
+
+    if shape == "free":
+        return (Sparql().select(["$s", "$o"]).path("$s", text, "$o"),
+                Sparql().select(["$s", "$o"]).filter(bgp({})), ["s", "o"])
+    if shape == "bound_s":
+        return (Sparql().select(["$o"]).path(x, text, "$o"),
+                Sparql().select(["$o"]).filter(bgp({"$s": x})), ["o"])
+    if shape == "bound_o":
+        return (Sparql().select(["$s"]).path("$s", text, y),
+                Sparql().select(["$s"]).filter(bgp({"$o": y})), ["s"])
+    if shape == "same":
+        return (Sparql().select(["$s"]).path("$s", text, "$s"),
+                Sparql().select(["$s"]).filter(bgp({"$o": "$s"})), ["s"])
+    if shape == "both":
+        gate = [["$a", "p", "$w"]]
+        return (Sparql().select(["$a", "$w"]).filter(gate).path(x, text, y),
+                Sparql().select(["$a", "$w"]).filter(gate + bgp({"$s": x, "$o": y})),
+                ["a", "w"])
+    seed = [["$s", "p", "$w"]]
+    if shape == "seeded":
+        return (Sparql().select(["$s", "$o"]).filter(seed).path("$s", text, "$o"),
+                Sparql().select(["$s", "$o"]).filter(seed + bgp({})), ["s", "o"])
+    if shape == "optional":
+        return (
+            Sparql().select(["$s", "$w", "$o"]).filter(seed)
+            .optional_group(Sparql().path("$s", text, "$o")),
+            Sparql().select(["$s", "$w", "$o"]).filter(seed)
+            .optional_group(Sparql().filter(bgp({}))),
+            ["s", "w", "o"],
+        )
+    assert shape == "minus"
+    return (
+        Sparql().select(["$s", "$w"]).filter(seed).minus_group(Sparql().path("$s", text, "$o")),
+        Sparql().select(["$s", "$w"]).filter(seed).minus_group(Sparql().filter(bgp({}))),
+        ["s", "w"],
+    )
+
+
+def _naive_rows(shape: str, pairs: set, edges: list, x: str, y: str) -> set:
+    seeds = {(s, o) for s, p, o in edges if p == "p"}
+    if shape == "free":
+        return pairs
+    if shape == "bound_s":
+        return {(o,) for s, o in pairs if s == x}
+    if shape == "bound_o":
+        return {(s,) for s, o in pairs if o == y}
+    if shape == "same":
+        return {(s,) for s, o in pairs if s == o}
+    if shape == "both":
+        return seeds if (x, y) in pairs else set()
+    if shape == "seeded":
+        return {(s, o) for s, _ in seeds for s2, o in pairs if s2 == s}
+    if shape == "optional":
+        return {
+            (s, w, o)
+            for s, w in seeds
+            for o in ({o for s2, o in pairs if s2 == s} or {None})
+        }
+    return {(s, w) for s, w in seeds if not any(s2 == s for s2, _ in pairs)}
+
+
+_CHAIN = [
+    (("n0", "named"), "p", ("n1", "named")),
+    (("n1", "named"), "q", ("n2", "named")),
+    (("n2", "named"), "p", ("n1", "literal")),
+    (("b0", "blank"), "p", ("n0", "named")),
+]
+
+
+@settings(max_examples=40, deadline=None)
+@given(
+    _edges_strategy,
+    _closure_free_strategy(2),
+    hst.sampled_from(
+        ["free", "bound_s", "bound_o", "both", "same", "seeded", "optional", "minus"]
+    ),
+    hst.sampled_from(_NAMED_NODES + ["b0", "l0"]),
+    hst.sampled_from(_NAMED_NODES + ["b0", "l0"]),
+)
+@example(_CHAIN, P.Inv(P.Seq((P.Pred("p"), P.Pred("q")))), "bound_o", "n0", "n0")
+@example(_CHAIN, P.Seq((P.Pred("q"), P.Inv(P.Pred("q")))), "same", "n0", "n0")
+@example(_CHAIN, P.Seq((P.Pred("p"), P.Pred("p"))), "bound_s", "b0", "n0")
+@example(_CHAIN, P.Seq((P.Pred("q"), P.Pred("p"))), "bound_o", "n0", "n1")
+@example(_CHAIN, P.Seq((P.Inv(P.Pred("p")), P.Pred("p"))), "optional", "n0", "n0")
+@example(_CHAIN, P.Inv(P.Seq((P.Pred("p"), P.Pred("q")))), "both", "n2", "n0")
+def test_closure_free_path_equals_bgp_translation(spark, edges, expr, shape, x, y):
+    """A closure-free path through select_join returns exactly the bag its
+    hand-written BGP translation returns — bound (one or both), free,
+    repeated and seeded ends, and paths inside OPTIONAL and MINUS groups —
+    and the set the naive evaluator gives wherever the bound ends are pure
+    named nodes (never a blank or literal term with the same string)."""
+    rows = [(s, sk, p, o, ok, None, None) for (s, sk), p, (o, ok) in edges]
+    st = TripleStore.from_rows(spark, rows)
+    text = _render_path(expr)
+    conds = _bgp_translation(expr, "$s", "$o", itertools.count())
+    path_q, bgp_q, cols = _shape_queries(shape, text, conds, x, y)
+
+    def bag(q):
+        return sorted(
+            (tuple(r[c] for c in cols) for r in st.select_join(q).collect()),
+            key=repr,
+        )
+
+    got = bag(path_q)
+    assert got == bag(bgp_q), (shape, text)
+
+    terms = [s for s, _, _ in edges] + [o for _, _, o in edges]
+    impure = {v for v, kind in terms if kind != "named"}
+    bound = {"bound_s": {x}, "bound_o": {y}, "both": {x, y}}.get(shape, set())
+    if bound & impure:
+        return
+    value_edges = [(s, p, o) for (s, _), p, (o, _) in edges]
+    pairs = naive(expr, value_edges)
+    assert set(got) == _naive_rows(shape, pairs, value_edges, x, y), (shape, text)
+
