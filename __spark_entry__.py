@@ -75,12 +75,12 @@ def _last_green_round() -> dict[str, int]:
 def ordered_defs() -> list:
     """Registry entries in certification-priority order. The driver
     certifies only the FIRST 50 entries of ``queries()`` per round, so
-    with 200+ registered queries a fixed order would starve the tail
-    forever. Three priority bands (tiering policy, r8):
+    with more queries registered than that a fixed order would starve the
+    tail forever. Three priority bands:
 
     1. NEVER-CERTIFIED queries — a new query always lands in its first
        round's window (there are at most a handful per round);
-    2. HEADLINE queries (registry.HEADLINE — the bench throughput set)
+    2. HEADLINE queries (registry.HEADLINE — one per RDF-store family)
        whose staleness is ≥ 2 rounds — jumping the recency queue caps
        headline staleness at ~2 in steady state (budget 3,
        registry.STALENESS_BUDGET), so the queries whose wall-times are
@@ -116,8 +116,9 @@ def ordered_defs() -> list:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2, rotated so
-    the least-certified queries land inside the driver's window."""
+    """One entry per registered RDF-store query, rotated so the
+    least-certified queries land inside the 50-query certification
+    window."""
     return {q.name: q.fn for q in ordered_defs()}
 
 

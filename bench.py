@@ -36,8 +36,8 @@ def _minhash_lsh_bench(spark, sf_dir):
     path alone (identical params to the certified query's LSH side),
     keeping the `dedup_minhash_lsh` bench key comparable round-over-round.
     """
-    from rippledb_spark.operators import dedup as DD
-    from rippledb_spark.tables import load
+    from rippledb_engine.operators import dedup as DD
+    from rippledb_engine.tables import load
 
     d = load(spark, sf_dir, "documents")
     return DD.minhash_lsh_pairs(
@@ -56,8 +56,8 @@ def _semdedup_fast_bench(spark, sf_dir):
     (kmeans_assignments_fast — same init/rounding/tie-break contract),
     and the per-cluster matmul pair gate (semantic_dedup_pairs_fast) —
     pytest pins all three equal to the certified forms on this corpus."""
-    from rippledb_spark.operators import semdedup as SD
-    from rippledb_spark.tables import load
+    from rippledb_engine.operators import semdedup as SD
+    from rippledb_engine.tables import load
 
     e = load(spark, sf_dir, "embeddings")
     return SD.semantic_dedup_summary_fast(e, "embedding", "vec_id", k=16).orderBy(
@@ -84,9 +84,9 @@ def _ann_phase_split(spark, sf_dir) -> dict[str, dict[str, float]]:
     pq.ivfpq_query_topk) at the registered queries' exact index params —
     train = fit + materialize the index, query = answer the 3 registered
     queries off the frozen state."""
-    from rippledb_spark.functions.vector import as_double_array
-    from rippledb_spark.operators import pq as PQ
-    from rippledb_spark.tables import load
+    from rippledb_engine.functions.vector import as_double_array
+    from rippledb_engine.operators import pq as PQ
+    from rippledb_engine.tables import load
 
     e = load(spark, sf_dir, "embeddings")
     queries = (
@@ -134,7 +134,7 @@ def _ann_phase_split(spark, sf_dir) -> dict[str, dict[str, float]]:
     # ADC shortlist (R=15) and the exact re-rank of the nq·R fetched
     # vectors — the nq·R-bounded stage whose regression previously hid
     # inside the registered key's lump wall.
-    from rippledb_spark.operators.pq import ADC_DP, _dist2
+    from rippledb_engine.operators.pq import ADC_DP, _dist2
     from pyspark.sql import Window as _Wnd
 
     full = e.select(
@@ -176,11 +176,11 @@ def _bpe_phase_split(spark, sf_dir) -> dict[str, float]:
     a bench that silently measured two different trajectories would be
     meaningless) in fewer pair-count jobs. Reported: each wall and the
     batched job count (sequential's is merges+1 by construction)."""
-    from rippledb_spark.operators.bpe import (
+    from rippledb_engine.operators.bpe import (
         learn_bpe_merges,
         learn_bpe_merges_batched,
     )
-    from rippledb_spark.tables import load
+    from rippledb_engine.tables import load
 
     d = load(spark, sf_dir, "documents")
     t0 = time.perf_counter()
@@ -311,9 +311,9 @@ def _scale_probe(spark, sf_dir: str, mult: int = 16) -> dict:
     seconds then carry a meaningful ratio. Derived in-session from the
     parquet inputs every run (nothing cached or persisted across runs);
     failures are recorded, never fatal."""
-    from rippledb_spark.operators import imagehash as IH
-    from rippledb_spark.operators import multimodal as MM
-    from rippledb_spark.tables import load
+    from rippledb_engine.operators import imagehash as IH
+    from rippledb_engine.operators import multimodal as MM
+    from rippledb_engine.tables import load
 
     out: dict = {"mult": mult}
     ids = (
@@ -424,7 +424,7 @@ def main() -> None:
     # RDD the query persisted is unreachable by construction — so the
     # session frees them deterministically, the way a long-lived serving
     # session should after each request.
-    from rippledb_spark.operators._itergc import (
+    from rippledb_engine.operators._itergc import (
         persistent_rdd_ids,
         unpersist_rdd_ids,
     )

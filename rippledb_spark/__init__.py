@@ -1,18 +1,16 @@
-"""rippledb_spark — a PySpark-native analytics engine with the query and
-data-processing capabilities of GGabi/RippleDB (reference: /root/reference,
-Rust), re-expressed Spark-first.
+"""rippledb_spark — an RDF triple store on Spark with the surface of
+GGabi/RippleDB's ``Graph`` (reference ``src/datastore/graph.rs``): load RDF,
+answer SPARQL, apply SPARQL UPDATE, persist and restore snapshots.
 
-Two tiers (SURVEY.md §2):
-
-- **Parity tier**: the RDF triple-store surface (load / DML / BGP query /
-  persist / export) of the reference's ``Graph`` type
-  (reference ``src/datastore/graph.rs``), built on plain DataFrames:
-  :mod:`rippledb_spark.store`, :mod:`rippledb_spark.plans.sparql`.
-- **Engine tier**: the relational / streaming / pipeline operator surface
-  (joins, aggregations, windows, dedup, similarity search, text analysis,
-  multimodal plumbing) the reference lacks, declared in SURVEY.md §2.4:
-  :mod:`rippledb_spark.queries`, :mod:`rippledb_spark.operators`,
-  :mod:`rippledb_spark.streaming`.
+- :mod:`rippledb_spark.store` / :mod:`rippledb_spark.quadstore` — the
+  triple store and the named-graph dataset, each a plain DataFrame;
+- :mod:`rippledb_spark.plans` — the SPARQL parser and planner (BGP joins,
+  property paths, filters, updates, GRAPH);
+- :mod:`rippledb_spark.sources` — the RDF readers and writers (N-Triples,
+  RDF/XML, Turtle, TriG, N-Quads, RDF/JSON, JSON-LD, the reference's backup
+  format);
+- :mod:`rippledb_spark.queries` — the oracle-checked query pack behind
+  ``__spark_entry__.py``.
 
 Everything is declarative DataFrame code — Catalyst owns physical planning.
 """

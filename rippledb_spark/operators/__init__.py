@@ -1,2 +1,2 @@
-"""Engine operators: triple-pattern access, BGP planning, DML, dedup,
-similarity search — each a pure DataFrame→DataFrame function."""
+"""Triple-pattern access (``triple_patterns``) and the session helpers for
+the iterative property-path closure (``_itergc``)."""

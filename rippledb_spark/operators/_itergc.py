@@ -1,21 +1,19 @@
-"""Block-manager garbage release for iterative DataFrame loops.
+"""Session helpers for iterative DataFrame loops (the property-path
+closure in ``plans/paths.py``).
 
-Every iterative trainer in this engine ends each round with a
-``localCheckpoint`` — the idiomatic lineage-truncation step for a
-DataFrame loop. Each checkpoint caches an RDD with no public unpersist
-handle; the context cleaner only reclaims them after a *driver* GC, and
-Python holds the references until collection. Left alone, a long
-analytics session that runs several iterative operators accumulates dead
-blocks and per-call latency drifts up 2-3× (measured first on the graph
-loops; BENCH_r12 showed the same signature on the trainer keys —
-``quality_classifier_accounting``'s warm runs were SLOWER than its cold
-run, the tell that session garbage, not the plan, owned the number).
+Each closure round ends with a ``localCheckpoint`` — the idiomatic
+lineage-truncation step for a DataFrame loop. Each checkpoint caches an
+RDD with no public unpersist handle; the context cleaner only reclaims
+them after a *driver* GC, and Python holds the references until
+collection. Left alone, a long session that runs many closures
+accumulates dead blocks and per-call latency drifts up.
+``release_iteration_garbage`` releases them on the way out — one explicit
+collection costs ~100 ms and keeps steady-state flat for whatever runs
+next in the session.
 
-Shared here so *every* iterative operator (graph loops, logistic /
-softmax GD, unigram hard-EM, OPQ alternation, PCA power iteration,
-Lloyd's k-means, HyperBall) releases its own garbage on the way out —
-one explicit collection costs ~100 ms and keeps steady-state flat for
-whatever runs next in the session.
+The derived triple/quad stores persist a cross-query cache; they pin its
+blocks (``pin_persisted``) so the per-query block sweeps of the engine
+tier (``rippledb_engine.operators._itergc``) never free it.
 """
 
 from __future__ import annotations
@@ -27,25 +25,24 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 
 
-def iteration_partitions(
-    spark, n_rows: int, rows_per_partition: int = 2_000_000
-) -> int:
+ROWS_PER_PARTITION = 2_000_000
+
+
+def iteration_partitions(spark, n_rows: int) -> int:
     """Shuffle-partition count for an iterative loop over ``n_rows`` rows:
     cardinality-proportional, floored at defaultParallelism/4 so a small
     graph still spreads over the cluster."""
     floor = max(4, spark.sparkContext.defaultParallelism // 4)
-    return max(floor, -(-n_rows // rows_per_partition))
+    return max(floor, -(-n_rows // ROWS_PER_PARTITION))
 
 
 @contextmanager
-def iteration_conf(spark, n_rows: int, rows_per_partition: int = 2_000_000):
+def iteration_conf(spark, n_rows: int):
     """Tune the session for a fixed-shape iterative loop, restoring on exit.
 
     Two per-iteration constant factors dominate iterative DataFrame loops
-    on small-to-medium state (measured on the sf0.1 pagerank: 3.3 s → 1.8 s
-    for 6 iterations; lived in operators/graph.py until r15 — shared here
-    so the GD/power-iteration trainers run their loops under the same
-    conf):
+    on small-to-medium state (measured on an sf0.1 pagerank loop: 3.3 s →
+    1.8 s for 6 iterations):
 
     - **AQE off**: adaptive execution re-plans and materializes query
       stages every iteration, but the loop body's shape never changes —
@@ -54,7 +51,7 @@ def iteration_conf(spark, n_rows: int, rows_per_partition: int = 2_000_000):
     - **Shuffle partitions sized to the data**: the default partition
       count is sized for the session's general workload; an iteration's
       shuffle state is exactly ``n_rows`` rows, so partitions =
-      ``n_rows / rows_per_partition`` (floored at defaultParallelism/4 so
+      ``n_rows / ROWS_PER_PARTITION`` (floored at defaultParallelism/4 so
       a small graph still spreads over the cluster). At 100 TB the same
       formula scales the count UP — this is a cardinality rule, not a
       small-cluster constant.
@@ -62,10 +59,10 @@ def iteration_conf(spark, n_rows: int, rows_per_partition: int = 2_000_000):
     Session-global confs are mutated for the loop's duration (Spark reads
     them at action time); restored in ``finally``. Callers running
     concurrent queries on the same session during an iterative call would
-    see the tuned values — acceptable for a batch analytics engine.
+    see the tuned values.
     """
     conf = spark.conf
-    parts = iteration_partitions(spark, n_rows, rows_per_partition)
+    parts = iteration_partitions(spark, n_rows)
     old_aqe = conf.get("spark.sql.adaptive.enabled", "true")
     old_sp = conf.get("spark.sql.shuffle.partitions", "200")
     try:
@@ -76,15 +73,16 @@ def iteration_conf(spark, n_rows: int, rows_per_partition: int = 2_000_000):
         conf.set("spark.sql.adaptive.enabled", old_aqe)
         conf.set("spark.sql.shuffle.partitions", old_sp)
 
+
 # Minimum spacing between the System.gc() calls WE trigger. The Python
 # collect below is cheap (~10-50 ms) and is the load-bearing step: it
 # drops the Py4J proxies so the JVM side becomes weakly reachable — after
 # that, EITHER our next System.gc() or the session's periodic cleaner GC
 # (spark.cleaner.periodicGC.interval = 2min, session.py) reclaims the
-# blocks. A full System.gc() on a busy multi-GB heap costs 0.5-2 s, and
-# r13 measured that paying it on EVERY trainer exit added ~45 s to a
-# 57-query bench pass — so the JVM side is rate-limited; staleness is
-# bounded by max(this interval, the periodic cleaner) either way.
+# blocks. A full System.gc() on a busy multi-GB heap costs 0.5-2 s, so
+# paying it on EVERY loop exit would dominate short queries — the JVM side
+# is rate-limited; staleness is bounded by max(this interval, the
+# periodic cleaner) either way.
 _JVM_GC_MIN_INTERVAL_S = 60.0
 _last_jvm_gc = 0.0
 
@@ -123,85 +121,6 @@ def pin_persisted(spark, df) -> None:
     df.count()
     PINNED_RDD_IDS.update(persistent_rdd_ids(spark) - before)
 
-
-def unpersist_rdd_ids(spark, ids: set[int]) -> None:
-    """Explicitly unpersist the given RDD ids (non-blocking). The public
-    handle ``localCheckpoint`` lacks: a checkpointed DataFrame's blocks
-    CAN be freed deterministically through the persistent-RDD registry —
-    the frame is unusable afterwards, so this must only ever see
-    SUPERSEDED frames (a prior iterate, a consumed ephemeral) — never
-    the pinned session-lifetime store caches (``PINNED_RDD_IDS``)."""
-    ids = ids - PINNED_RDD_IDS
-    if not ids:
-        return
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in ids:
-            rdd = jmap.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
-    except Exception:
-        pass  # non-JVM-backed session: the context cleaner handles it
-
-
-class CheckpointRotator:
-    """Deterministic block release for per-iteration ``localCheckpoint``
-    loops (r14 — the residual behind BENCH_r13's ``steady_state: false``
-    respread flags: the r13 gc.collect()+rate-limited System.gc() path
-    frees trainer garbage only when a JVM GC happens to run, so
-    late-session solo runs still paid 35-45% over the in-pass median).
-
-    Usage::
-
-        rot = CheckpointRotator(df.sparkSession)
-        for _ in range(iterations):
-            frame = rot.rotate(frame)        # checkpoint + free the
-                                             # PREVIOUS round's blocks
-        rot.close()                          # free pre-loop scratch
-                                             # (keeps the last rotate)
-
-    ``rotate`` eagerly checkpoints its argument(s) and unpersists the
-    blocks of the frames IT checkpointed on the previous call — which
-    are superseded by construction. ``close`` additionally frees every
-    other RDD persisted since the rotator was built (pre-loop feature
-    checkpoints) EXCEPT the last rotate's output, which the caller
-    returns. Driver-side single-threaded usage only: the created-id
-    diff would misattribute blocks persisted concurrently by another
-    thread."""
-
-    def __init__(self, spark):
-        self._spark = spark
-        self._base = persistent_rdd_ids(spark)
-        self._live: set[int] = set()  # last rotate's still-needed ids
-        self._scratch: set[int] = set()  # everything else created since
-
-    def rotate(self, *dfs: DataFrame):
-        before = persistent_rdd_ids(self._spark)
-        out = [df.localCheckpoint(eager=True) for df in dfs]
-        created = persistent_rdd_ids(self._spark) - before
-        # anything persisted since the last rotate that ISN'T this
-        # round's checkpoint (e.g. an in-loop eager side-frame) becomes
-        # scratch, freed at close; the previous round's frames are
-        # superseded NOW
-        unpersist_rdd_ids(self._spark, self._live)
-        self._scratch |= (before - self._base) - self._live
-        self._base = before | created
-        self._live = created
-        return out[0] if len(out) == 1 else tuple(out)
-
-    def close(self) -> None:
-        """Free pre-loop/scratch blocks; the last rotate's output stays."""
-        now = persistent_rdd_ids(self._spark)
-        self._scratch |= now - self._base
-        unpersist_rdd_ids(self._spark, self._scratch - self._live)
-        self._scratch = set()
-        # the unpersists above cover CHECKPOINT blocks deterministically;
-        # per-iteration BROADCASTS (the GD loops broadcast their iterate
-        # every round) still need the context cleaner, which needs the
-        # Python proxies dropped first — the same cheap collect the r13
-        # release path did (the JVM side is then reclaimed by the
-        # session's periodic cleaner GC)
-        gc.collect()
 
 
 def release_iteration_garbage(df: DataFrame) -> None:

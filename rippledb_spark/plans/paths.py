@@ -45,8 +45,8 @@ source-seed DataFrame is supplied (the bound-subject case), zero-length
 pairs restrict to the seeds, matching the spec's evaluation from a bound
 end.
 
-Scale shape: closure is evaluated like :func:`operators.graph.bfs_reachability`
-— each round joins ONLY the frontier against the (cached) step relation
+Scale shape: closure is a semi-naive breadth-first fixpoint — each round
+joins ONLY the frontier against the (cached) step relation
 (frontier×degree work, never accumulated-pairs×edges), then folds the grown
 pairs into the checkpoint-truncated accumulator with a min-aggregate (the
 dedup pass is O(accumulated pairs) per round — the standard semi-naive
@@ -67,10 +67,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
 from rippledb_spark.errors import QueryError
-from rippledb_spark.operators.graph import (
-    _iteration_conf,
-    _release_iteration_garbage,
-    _truncate,
+from rippledb_spark.operators._itergc import (
+    iteration_conf,
+    iteration_partitions,
+    release_iteration_garbage,
 )
 
 
@@ -361,7 +361,6 @@ def _seed(pairs: DataFrame, srcs: DataFrame | None) -> DataFrame:
 def _closure(
     step: DataFrame,
     srcs: DataFrame | None,
-    checkpoint_dir: str | None,
     max_iterations: int | None,
 ) -> DataFrame:
     """Distinct transitive closure of the ``step`` pair relation, optionally
@@ -372,17 +371,14 @@ def _closure(
     # The step relation is probed once per round — cache it so round k
     # doesn't recompute the (possibly join-heavy) step plan k times. The
     # count materializes the cache AND sizes the round shuffles
-    # (graph._iteration_conf: AQE off + cardinality-derived partitions
-    # for the loop's duration). The probed copy is then re-cached
-    # HASH-PARTITIONED ON src — the frontier-join key — so every round
-    # shuffles only the frontier, never the step relation (see
-    # graph.pagerank's e2 rationale).
+    # (iteration_conf: AQE off + cardinality-derived partitions for the
+    # loop's duration). The probed copy is then re-cached HASH-PARTITIONED
+    # ON src — the frontier-join key — so every round shuffles only the
+    # frontier, never the step relation.
     base.persist()
     n_base = base.count()
-    from rippledb_spark.operators.graph import _iteration_partitions
-
     repart = base.repartition(
-        _iteration_partitions(step.sparkSession, n_base), "src"
+        iteration_partitions(step.sparkSession, n_base), "src"
     ).persist()
     repart.count()  # materialize from the cached distinct, then drop it
     base.unpersist(blocking=False)
@@ -391,17 +387,15 @@ def _closure(
     # pair set carries the round each pair was first derived in, so the
     # next round's frontier is a FILTER on the accumulator (pairs with
     # r == current round) instead of a growing anti-join — each round
-    # ships one join + one min-aggregate, the same union/groupBy/checkpoint
-    # shape as operators.graph.bfs_reachability. Fixpoint is exact: when a
+    # ships one join + one min-aggregate, then a localCheckpoint that
+    # truncates the accumulator's lineage. Fixpoint is exact: when a
     # round adds no first-seen pairs the frontier empties and the loop
     # stops; cyclic data terminates because the distinct pair set is
     # finite and monotone.
-    acc = _truncate(
-        _seed(base, srcs).distinct().withColumn("r", F.lit(0)), checkpoint_dir
-    )
+    acc = _seed(base, srcs).distinct().withColumn("r", F.lit(0)).localCheckpoint()
     frontier = acc
     rounds = 0
-    with _iteration_conf(step.sparkSession, n_base):
+    with iteration_conf(step.sparkSession, n_base):
         while True:
             if max_iterations is not None and rounds >= max_iterations:
                 break
@@ -415,16 +409,18 @@ def _closure(
                     F.lit(rounds).alias("r"),
                 )
             )
-            acc = _truncate(
-                acc.unionByName(grown).groupBy("src", "dst").agg(F.min("r").alias("r")),
-                checkpoint_dir,
+            acc = (
+                acc.unionByName(grown)
+                .groupBy("src", "dst")
+                .agg(F.min("r").alias("r"))
+                .localCheckpoint()
             )
             frontier = acc.filter(F.col("r") == F.lit(rounds))
             if frontier.limit(1).count() == 0:
                 break
     base.unpersist(blocking=False)
     out = acc.select("src", "dst")
-    _release_iteration_garbage(out)
+    release_iteration_garbage(out)
     return out
 
 
@@ -432,7 +428,6 @@ def path_pairs(
     triples: DataFrame,
     path: PathExpr | str,
     srcs: DataFrame | None = None,
-    checkpoint_dir: str | None = None,
     max_iterations: int | None = None,
 ) -> DataFrame:
     """Evaluate ``path`` over the store → DataFrame(src, dst).
@@ -503,10 +498,10 @@ def path_pairs(
             return acc
         if isinstance(expr, Plus):
             step = ev(expr.inner, None)
-            return _closure(step, seeds, checkpoint_dir, max_iterations)
+            return _closure(step, seeds, max_iterations)
         if isinstance(expr, Star):
             step = ev(expr.inner, None)
-            plus = _closure(step, seeds, checkpoint_dir, max_iterations)
+            plus = _closure(step, seeds, max_iterations)
             return plus.unionByName(_zero_length(triples, seeds)).distinct()
         if isinstance(expr, Maybe):
             one = ev(expr.inner, seeds).distinct()

@@ -1,14 +1,14 @@
-"""Named query pack — the judged operator surface (SURVEY.md §2).
+"""Named query pack over the RDF store — the oracle-checked surface behind
+``__spark_entry__.py``.
 
 Modules register into :mod:`rippledb_spark.registry` at import time:
 
-- ``relational``      — scans, filters, joins (broadcast/sort-merge/semi/anti),
-                        aggregations, rollup/cube, windows, sort/limit/top-k,
-                        set ops, scalar functions (engine tier, §2.4)
-- ``triples``         — the reference-parity BGP surface over a derived
-                        triples table (Q1-Q12 of SURVEY §2.3)
-- ``pipeline``        — dedup (exact/minhash/simhash/jaccard), similarity
-                        search, text analysis over documents/embeddings
-- ``streaming_batch`` — batch-equivalent forms of the streaming windows
-                        (tumbling/sliding/session) so they oracle-check
+- ``triples``  — the reference-parity BGP surface over a triples graph
+                 derived from the relational testdata (Q1-Q13 of SURVEY
+                 §2.3), DML, and the serializer sinks
+- ``triples2`` — property paths, SPARQL text (OPTIONAL/MINUS/VALUES/
+                 EXISTS/BIND/aggregates/subqueries), DESCRIBE, CONSTRUCT
+                 and SPARQL UPDATE over the same graph
+- ``quads``    — the named-graph dataset (QuadStore): GRAPH, FROM/FROM
+                 NAMED, graph-scoped updates, N-Quads export
 """

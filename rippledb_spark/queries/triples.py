@@ -26,9 +26,6 @@ absorbs it.
 
 from __future__ import annotations
 
-import os
-import shutil
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
@@ -186,11 +183,11 @@ def _store(spark: SparkSession, sf_dir: str) -> TripleStore:
     key = (id(spark), sf_dir)
     if key not in _STORE_CACHE:
         df = derive_triples(spark, sf_dir).persist()
-        # Pin against the per-query block sweeps (bench.py/opt_measure):
-        # this cache IS reachable across queries by design, and an
-        # unpinned sweep would not just drop it but set its storage
-        # level to NONE so it never re-caches (r15 measurement: every
-        # later store query then re-derives per reference).
+        # Pin against the per-query block sweeps (bench.py): this cache
+        # IS reachable across queries by design, and an unpinned sweep
+        # would not just drop it but set its storage level to NONE so it
+        # never re-caches (r15 measurement: every later store query then
+        # re-derives per reference).
         pin_persisted(spark, df)
         _STORE_CACHE[key] = df
     return TripleStore(spark, _STORE_CACHE[key])
@@ -596,131 +593,6 @@ def bgp_spo_point(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Graph analytics (engine tier — absent from the reference, SURVEY §2.4)
-# ---------------------------------------------------------------------------
-
-
-@query(
-    "graph_degrees",
-    oracle=f"""
-    WITH {TRIPLES_CTE.strip()},
-    edges AS (SELECT s, o_value FROM triples WHERE o_kind = 'named'),
-    outd AS (SELECT s AS node, COUNT(*) AS out_degree FROM edges GROUP BY 1),
-    ind  AS (SELECT o_value AS node, COUNT(*) AS in_degree FROM edges GROUP BY 1)
-    SELECT COALESCE(outd.node, ind.node) AS node,
-           COALESCE(out_degree, 0) AS out_degree,
-           COALESCE(in_degree, 0)  AS in_degree
-    FROM outd FULL OUTER JOIN ind ON outd.node = ind.node
-    ORDER BY node
-    """,
-)
-def graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Degree centrality over the entity graph (named→named edges only)."""
-    from rippledb_spark.operators.graph import degrees
-
-    st = _store(spark, sf_dir)
-    return degrees(st.df).orderBy("node")
-
-
-@query(
-    "graph_pagerank",
-    oracle="""
-    WITH RECURSIVE
-    edges AS (SELECT DISTINCT 'order:' || CAST(l_orderkey AS VARCHAR) AS src,
-                              'part:' || CAST(l_partkey AS VARCHAR) AS dst FROM lineitem),
-    nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-    outd AS (SELECT src, COUNT(*) AS od FROM edges GROUP BY 1),
-    contrib_edges AS (
-      SELECT src, dst, 1.0 AS w FROM edges
-      UNION ALL
-      SELECT node, node, 0.0 FROM nodes
-    ),
-    pr AS (
-      SELECT node, CAST(1.0 AS DOUBLE) AS rank, 0 AS iter FROM nodes
-      UNION ALL
-      SELECT ce.dst,
-             0.15 + 0.85 * SUM(ce.w * p.rank / COALESCE(o.od, 1)),
-             ANY_VALUE(p.iter) + 1
-      FROM pr p
-      JOIN contrib_edges ce ON p.node = ce.src
-      LEFT JOIN outd o ON ce.src = o.src
-      WHERE p.iter < 6
-      GROUP BY ce.dst
-    )
-    SELECT node, ROUND(rank, 4) AS rank FROM pr WHERE iter = 6
-    ORDER BY rank DESC, node LIMIT 100
-    """,
-)
-def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank (6 iterations, d=0.85) over the order→part containment
-    graph — the iterative-DataFrame operator class (SURVEY §2.4 engine
-    tier). Oracle: a DuckDB recursive CTE with zero-weight self-edges so
-    every node survives each iteration (contribution-less nodes keep the
-    teleport term)."""
-    from rippledb_spark.operators.graph import pagerank
-
-    st = _store(spark, sf_dir)
-    edges = st.pattern(None, "contains_part", None).select(
-        F.col("s").alias("src"), F.col("o_value").alias("dst")
-    )
-    return (
-        pagerank(edges, iterations=6)
-        .select("node", F.round("rank", 4).alias("rank"))
-        .orderBy(F.desc("rank"), F.asc("node"))
-        .limit(100)
-    )
-
-
-@query(
-    "graph_connected_components",
-    oracle="""
-    WITH RECURSIVE
-    raw_edges AS (
-      SELECT 'customer:' || CAST(c_custkey AS VARCHAR) AS a,
-             'nation:' || CAST(c_nationkey AS VARCHAR) AS b FROM customer
-      UNION ALL
-      SELECT 'supplier:' || CAST(s_suppkey AS VARCHAR),
-             'nation:' || CAST(s_nationkey AS VARCHAR) FROM supplier
-      UNION ALL
-      SELECT 'nation:' || CAST(n_nationkey AS VARCHAR),
-             'region:' || CAST(n_regionkey AS VARCHAR) FROM nation
-    ),
-    und AS (SELECT a, b FROM raw_edges UNION ALL SELECT b, a FROM raw_edges),
-    nodes AS (SELECT DISTINCT a AS node FROM und),
-    -- self-loops let the recursive term reference cc exactly once while
-    -- still folding each node's own label into the min (cf. pagerank CTE)
-    edges2 AS (SELECT a, b FROM und UNION ALL SELECT node, node FROM nodes),
-    cc AS (
-      SELECT node, node AS comp, 0 AS iter FROM nodes
-      UNION ALL
-      SELECT e.a, MIN(c.comp), ANY_VALUE(c.iter) + 1
-      FROM cc c JOIN edges2 e ON c.node = e.b
-      WHERE c.iter < 8
-      GROUP BY e.a
-    )
-    SELECT comp, COUNT(*) AS n_nodes FROM cc WHERE iter = 8
-    GROUP BY comp ORDER BY comp
-    """,
-)
-def graph_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components (8 rounds of min-label propagation) over the
-    undirected membership graph (customers/suppliers–nations–regions) —
-    converges to one component per region."""
-    from rippledb_spark.operators.graph import connected_components
-
-    st = _store(spark, sf_dir)
-    edges = st.df.filter(
-        F.col("p").isin("in_nation", "in_region") & (F.col("o_kind") == "named")
-    ).select(F.col("s").alias("src"), F.col("o_value").alias("dst"))
-    return (
-        connected_components(edges, iterations=8)
-        .groupBy("comp")
-        .agg(F.count(F.lit(1)).alias("n_nodes"))
-        .orderBy("comp")
-    )
-
-
-# ---------------------------------------------------------------------------
 # Distributed export sink accounting — the N-Triples line formatting that
 # write_ntriples streams to files, verified value-for-value by the oracle
 # ---------------------------------------------------------------------------
@@ -776,40 +648,6 @@ def ntriples_export_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("p")
     )
-
-
-@query(
-    "graph_reachability",
-    oracle=f"""
-    WITH RECURSIVE {TRIPLES_CTE.strip()},
-    redges AS (
-      SELECT o_value AS a, s AS b FROM triples WHERE o_kind = 'named'
-    ),
-    reach AS (
-      SELECT 'region:0' AS node, 0 AS dist, 0 AS iter
-      UNION ALL
-      SELECT e.b, MIN(r.dist) + 1, ANY_VALUE(r.iter) + 1
-      FROM reach r JOIN redges e ON r.node = e.a
-      WHERE r.iter < 8
-      GROUP BY e.b
-    )
-    SELECT node, CAST(MIN(dist) AS BIGINT) AS dist
-    FROM reach GROUP BY node ORDER BY node
-    """,
-)
-def graph_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multi-hop reachability (BFS transitive closure) from region:0 over
-    the REVERSED entity graph: region → its nations → their customers and
-    suppliers → those customers' orders, with exact hop distances — the
-    iterative-join tier beside pagerank/connected_components, hash-matched
-    against a DuckDB recursive CTE."""
-    from rippledb_spark.operators.graph import bfs_reachability
-
-    st = _store(spark, sf_dir)
-    redges = st.df.filter(F.col("o_kind") == "named").select(
-        F.col("o_value").alias("src"), F.col("s").alias("dst")
-    )
-    return bfs_reachability(redges, ["region:0"], iterations=8).orderBy("node")
 
 
 @query(

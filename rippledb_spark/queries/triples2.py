@@ -666,55 +666,6 @@ def sparql_update_modify_accounting(spark: SparkSession, sf_dir: str) -> DataFra
 
 
 @query(
-    "graph_triangles_part_cooccurrence",
-    oracle="""
-    WITH pp AS (
-      SELECT DISTINCT 'order:' || CAST(l_orderkey AS VARCHAR) AS g,
-                      'part:' || CAST(l_partkey AS VARCHAR) AS i
-      FROM lineitem
-    ),
-    ok AS (SELECT g FROM pp GROUP BY g HAVING COUNT(*) <= 64),
-    pp2 AS (SELECT pp.g, pp.i FROM pp JOIN ok USING (g)),
-    e AS (
-      SELECT DISTINCT a.i AS a, b.i AS b
-      FROM pp2 a JOIN pp2 b ON a.g = b.g AND a.i < b.i
-    ),
-    nn AS (
-      SELECT COUNT(*) AS n_nodes FROM (
-        SELECT a AS x FROM e UNION SELECT b FROM e
-      )
-    ),
-    ne AS (SELECT COUNT(*) AS n_edges FROM e),
-    nt AS (
-      SELECT COUNT(*) AS n_triangles
-      FROM e e1
-      JOIN e e2 ON e2.a = e1.b
-      JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-    )
-    SELECT n_nodes, CAST(n_edges AS BIGINT) AS n_edges,
-           CAST(n_triangles AS BIGINT) AS n_triangles
-    FROM nn, ne, nt
-    """,
-)
-def graph_triangles_part_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Triangle census over the part co-occurrence projection (parts
-    sharing an order — graph.cooccurrence_edges with the group-size cap
-    that keeps the projection non-quadratic at corpus scale, then
-    graph.triangle_count's ordered-wedge two-join plan, each triangle
-    counted once via a < b < c). Widens the graph-analytics family
-    (degrees/pagerank/CC/BFS) with the standard clustering primitive;
-    oracle = the identical ordered joins in DuckDB."""
-    from rippledb_spark.operators.graph import cooccurrence_edges, triangle_count
-
-    st = _store(spark, sf_dir)
-    containment = st.pattern(None, "contains_part", None).select(
-        F.col("s").alias("g"), F.col("o_value").alias("i")
-    )
-    edges = cooccurrence_edges(containment, "g", "i", max_group_size=64)
-    return triangle_count(edges, src="a", dst="b")
-
-
-@query(
     "bgp_optional_path_coorders",
     oracle=f"""
     WITH {TRIPLES_CTE.strip()},
@@ -750,79 +701,6 @@ def bgp_optional_path_coorders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KCORE_K = 2  # peel threshold for the entity-graph core query
-_KCORE_STAGES = 4  # unrolled oracle peel stages (fixpoint observed at 2)
-
-
-def _kcore_oracle(k: int = KCORE_K, stages: int = _KCORE_STAGES) -> str:
-    """Unrolled-peeling DuckDB twin of graph.k_core (the BPE-style
-    unrolled-stage pattern, MATERIALIZED so DuckDB does not re-inline the
-    chain exponentially): each stage keeps nodes with >= k surviving
-    neighbors; the final stage must equal the one before it (converged),
-    certifying that the bounded unroll reached the true fixpoint."""
-    parts = [
-        f"WITH {TRIPLES_CTE.strip()},",
-        """
-    fwd AS MATERIALIZED (
-      SELECT DISTINCT s AS u, o_value AS v FROM triples
-      WHERE o_kind = 'named' AND s <> o_value
-    ),
-    e0 AS MATERIALIZED (
-      SELECT u, v FROM fwd UNION SELECT v, u FROM fwd
-    ),
-    s0 AS MATERIALIZED (SELECT DISTINCT u FROM e0)""",
-    ]
-    for i in range(1, stages + 1):
-        parts.append(f""",
-    s{i} AS MATERIALIZED (
-      SELECT u FROM (
-        SELECT e.u, COUNT(*) AS d FROM e0 e
-        WHERE e.u IN (SELECT u FROM s{i - 1})
-          AND e.v IN (SELECT u FROM s{i - 1})
-        GROUP BY e.u
-      ) WHERE d >= {k}
-    )""")
-    parts.append(f"""
-    SELECT CAST((SELECT COUNT(*) FROM s{stages}) AS BIGINT) AS n_core_nodes,
-           (SELECT md5(string_agg(u, '' ORDER BY u)) FROM s{stages}) AS core_md5,
-           (SELECT COUNT(*) FROM s{stages}) = (SELECT COUNT(*) FROM s{stages - 1})
-             AS converged""")
-    return "".join(parts)
-
-
-@query("graph_kcore_entity", oracle=_kcore_oracle())
-def graph_kcore_entity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-core decomposition (operators/graph.k_core, r6) of the entity
-    graph at k={}: iterative peeling to the exact fixpoint, certified
-    against an unrolled-stage DuckDB twin whose final stage must both
-    match the Spark survivor set (ordered md5 over node ids) AND equal
-    its predecessor (the converged flag proving the bounded unroll
-    reached the same fixpoint the loop did). The tree-shaped containment
-    edges peel away layer by layer; the cyclic order/part neighborhood
-    survives.""".format(KCORE_K)
-    from rippledb_spark.operators.graph import k_core
-
-    st = _store(spark, sf_dir)
-    edges = st.df.filter(F.col("o_kind") == "named").select(
-        F.col("s").alias("src"), F.col("o_value").alias("dst")
-    )
-    core = k_core(edges, KCORE_K)
-    return core.agg(
-        F.count(F.lit(1)).alias("n_core_nodes"),
-        F.md5(
-            F.concat_ws("", F.array_sort(F.collect_list("node"))).cast("binary")
-        ).alias("core_md5"),
-        F.lit(True).alias("converged"),
-    ).select(
-        "n_core_nodes",
-        # an EMPTY core must hash as NULL on both sides: DuckDB's
-        # string_agg over zero rows is NULL (md5(NULL) = NULL) while
-        # concat_ws over an empty list is '' — align to the oracle
-        F.when(F.col("n_core_nodes") > 0, F.col("core_md5")).alias("core_md5"),
-        "converged",
-    )
-
-
 @query(
     "describe_where_urgent_orders",
     oracle=f"""
@@ -852,204 +730,4 @@ def describe_where_urgent_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("s", "p", "o_value")
         .dropDuplicates()
         .orderBy("s", "p", "o_value")
-    )
-
-
-_LPA_ROUNDS = 3  # fixed synchronous rounds (both engines unroll the same)
-
-
-def _lpa_oracle(rounds: int = _LPA_ROUNDS) -> str:
-    """Unrolled-stage DuckDB twin of graph.label_propagation over the
-    entity graph: per stage, neighbor-label counts → per-node argmax
-    (count desc, label asc — the deterministic tie-break) → coalesce
-    with the previous label."""
-    parts = [
-        f"WITH {TRIPLES_CTE.strip()},",
-        """
-    fwd AS MATERIALIZED (
-      SELECT DISTINCT s AS u, o_value AS v FROM triples
-      WHERE o_kind = 'named' AND s <> o_value
-    ),
-    e0 AS MATERIALIZED (SELECT u, v FROM fwd UNION SELECT v, u FROM fwd),
-    l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS label FROM e0)""",
-    ]
-    for i in range(1, rounds + 1):
-        parts.append(f""",
-    c{i} AS MATERIALIZED (
-      SELECT e.u AS node, l.label, COUNT(*) AS c
-      FROM e0 e JOIN l{i - 1} l ON l.node = e.v
-      GROUP BY e.u, l.label
-    ),
-    b{i} AS MATERIALIZED (
-      SELECT node, label FROM (
-        SELECT node, label,
-               ROW_NUMBER() OVER (PARTITION BY node
-                                  ORDER BY c DESC, label) AS rn
-        FROM c{i}
-      ) WHERE rn = 1
-    ),
-    l{i} AS MATERIALIZED (
-      SELECT p.node, COALESCE(b.label, p.label) AS label
-      FROM l{i - 1} p LEFT JOIN b{i} b ON b.node = p.node
-    )""")
-    parts.append(f"""
-    SELECT label AS community, CAST(COUNT(*) AS BIGINT) AS n_members
-    FROM l{rounds} GROUP BY label
-    ORDER BY n_members DESC, community LIMIT 20""")
-    return "".join(parts)
-
-
-@query("graph_label_propagation", oracle=_lpa_oracle())
-def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic label-propagation communities
-    (graph.label_propagation, r6) over the entity graph, fixed at
-    {} synchronous rounds so the DuckDB twin unrolls the identical
-    computation — top-20 communities by size. Beside
-    connected_components this finds FINER structure (majority vote
-    splits what mere connectivity merges); the min-struct argmax keeps
-    every round shuffle-shaped (no per-node window on the Spark
-    side).""".format(_LPA_ROUNDS)
-    from rippledb_spark.operators.graph import label_propagation
-
-    st = _store(spark, sf_dir)
-    edges = st.df.filter(F.col("o_kind") == "named").select(
-        F.col("s").alias("src"), F.col("o_value").alias("dst")
-    )
-    return (
-        label_propagation(edges, rounds=_LPA_ROUNDS)
-        .groupBy(F.col("label").alias("community"))
-        .agg(F.count(F.lit(1)).alias("n_members"))
-        .orderBy(F.desc("n_members"), "community")
-        .limit(20)
-    )
-
-
-@query(
-    "graph_clustering_coefficient",
-    oracle="""
-    WITH pp AS (
-      SELECT DISTINCT 'order:' || CAST(l_orderkey AS VARCHAR) AS g,
-                      'part:' || CAST(l_partkey AS VARCHAR) AS i
-      FROM lineitem
-    ),
-    ok AS (SELECT g FROM pp GROUP BY g HAVING COUNT(*) <= 64),
-    pp2 AS (SELECT pp.g, pp.i FROM pp JOIN ok USING (g)),
-    e AS (
-      SELECT DISTINCT a.i AS a, b.i AS b
-      FROM pp2 a JOIN pp2 b ON a.g = b.g AND a.i < b.i
-    ),
-    und AS (SELECT a AS u, b AS v FROM e UNION ALL SELECT b, a FROM e),
-    deg AS (SELECT u, COUNT(*) AS d FROM und GROUP BY u),
-    nw AS (SELECT SUM(d * (d - 1) / 2) AS n_wedges FROM deg),
-    nt AS (
-      SELECT COUNT(*) AS n_triangles
-      FROM e e1
-      JOIN e e2 ON e2.a = e1.b
-      JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-    )
-    SELECT CAST(n_triangles AS BIGINT) AS n_triangles,
-           CAST(n_wedges AS BIGINT) AS n_wedges,
-           CAST(ROUND(3.0 * n_triangles / n_wedges, 6) AS DOUBLE)
-             AS clustering_coeff
-    FROM nt, nw
-    """,
-)
-def graph_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global clustering coefficient (transitivity) of the part
-    co-occurrence graph: 3 × triangles / wedges, where wedges =
-    Σ C(deg, 2) is one degree aggregate — no second join. Combines the
-    degree-oriented triangle count with the degree table it already
-    builds; the spec quantity behind 'how clique-ish is this graph',
-    the summary statistic small-world analyses report."""
-    from rippledb_spark.operators.graph import cooccurrence_edges, triangle_count
-
-    st = _store(spark, sf_dir)
-    containment = st.pattern(None, "contains_part", None).select(
-        F.col("s").alias("g"), F.col("o_value").alias("i")
-    )
-    edges = cooccurrence_edges(containment, "g", "i", max_group_size=64)
-    und = edges.select(F.col("a").alias("u"), F.col("b").alias("v"))
-    und = und.unionByName(und.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    wedges = (
-        und.groupBy("u")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .agg(F.sum(F.col("d") * (F.col("d") - 1) / 2).alias("n_wedges"))
-    )
-    tri = triangle_count(edges, src="a", dst="b").select("n_triangles")
-    return (
-        tri.crossJoin(F.broadcast(wedges))
-        .select(
-            "n_triangles",
-            F.col("n_wedges").cast("bigint").alias("n_wedges"),
-            F.round(3.0 * F.col("n_triangles") / F.col("n_wedges"), 6).alias(
-                "clustering_coeff"
-            ),
-        )
-    )
-
-
-@query(
-    "graph_personalized_pagerank",
-    oracle="""
-    WITH RECURSIVE
-    edges AS (SELECT DISTINCT 'order:' || CAST(l_orderkey AS VARCHAR) AS src,
-                              'part:' || CAST(l_partkey AS VARCHAR) AS dst
-              FROM lineitem),
-    nodes AS (SELECT src AS node FROM edges UNION SELECT dst FROM edges),
-    seed AS (SELECT 'order:' || CAST(MIN(l_orderkey) AS VARCHAR) AS node
-             FROM lineitem),
-    outd AS (SELECT src, COUNT(*) AS od FROM edges GROUP BY 1),
-    ce AS (
-      SELECT src, dst, 1.0 AS w FROM edges
-      UNION ALL
-      SELECT node, node, 0.0 FROM nodes
-    ),
-    pr AS (
-      SELECT node,
-             CAST(CASE WHEN node = (SELECT node FROM seed)
-                  THEN 1.0 ELSE 0.0 END AS DOUBLE) AS rank,
-             0 AS iter
-      FROM nodes
-      UNION ALL
-      SELECT ce.dst,
-             0.15 * CASE WHEN ce.dst = (SELECT node FROM seed)
-                    THEN 1.0 ELSE 0.0 END
-               + 0.85 * SUM(ce.w * p.rank / COALESCE(o.od, 1)),
-             ANY_VALUE(p.iter) + 1
-      FROM pr p
-      JOIN ce ON p.node = ce.src
-      LEFT JOIN outd o ON ce.src = o.src
-      WHERE p.iter < 6
-      GROUP BY ce.dst
-    )
-    SELECT node, ROUND(rank, 6) AS rank FROM pr
-    WHERE iter = 6 AND ROUND(rank, 6) > 0
-    ORDER BY rank DESC, node LIMIT 50
-    """,
-)
-def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Personalized PageRank (graph.personalized_pagerank, r6): teleport
-    mass returns to ONE seed order (the smallest orderkey — computed
-    identically in both engines), so ranks measure relatedness to that
-    order through the order→part containment graph — the
-    similar-entities / recommendation primitive. 6 fixed iterations;
-    oracle = the recursive CTE with zero-weight self-edges and the
-    seed-only teleport term; top-50 by (rounded rank, node)."""
-    from rippledb_spark.operators.graph import personalized_pagerank
-    from rippledb_spark.tables import load as _load
-
-    st = _store(spark, sf_dir)
-    edges = st.pattern(None, "contains_part", None).select(
-        F.col("s").alias("src"), F.col("o_value").alias("dst")
-    )
-    min_key = (
-        _load(spark, sf_dir, "lineitem").agg(F.min("l_orderkey")).collect()[0][0]
-    )
-    seeds = [f"order:{min_key}"]
-    return (
-        personalized_pagerank(edges, seeds, iterations=6)
-        .select("node", F.round("rank", 6).alias("rank"))
-        .filter(F.col("rank") > 0)
-        .orderBy(F.desc("rank"), "node")
-        .limit(50)
     )

@@ -10,13 +10,12 @@ row-count + schema + order-insensitive value hash, so:
   differ in the last ulps). Identical rounding is still not sufficient when
   a group's sum lands within an ulp of a rounding boundary: ROUND then
   amplifies the ulp to a full unit-in-last-place of the rounded scale
-  (q9_product_profit hit this at sf0.001). For NEW queries prefer returning
+  (a relational revenue sum hit this at sf0.001). For NEW queries prefer returning
   the RAW sum — the gate's 1e-9 relative tolerance absorbs ulp noise that
   rounding would amplify;
 - DuckDB-specific type quirks (HUGEINT sums) are cast back in the SQL.
 
-Queries with ``oracle=None`` (streaming, iterative, RNG-free approximations)
-get the driver's weaker rows-only check.
+Queries with ``oracle=None`` get only a rows-only check.
 """
 
 from __future__ import annotations
@@ -39,146 +38,28 @@ class QueryDef:
 
 REGISTRY: dict[str, QueryDef] = {}
 
-# --- tier metadata (r8) ------------------------------------------------------
-# HEADLINE is the bench's round-over-round throughput set: one query per
-# operator family, timed every round by bench.py (which imports this tuple —
-# single source of truth). Everything else registered is the LONG TAIL:
-# certified on the same oracle gate but not individually timed each round.
-# The tiers drive certification scheduling (__spark_entry__.ordered_defs
-# re-certifies a stale headline query ahead of its recency cohort) and the
-# ledger's staleness report (tools/certification_ledger.py). Budgets are in
-# DRIVER ROUNDS of staleness (current round − last hash-green round):
-# headline ≤ 3 (the jump-the-queue rule re-certifies at staleness 2 in
-# steady state, +1 slack); long tail ≤ 6 (201 queries / 50-query window is
-# a ~5-round rotation, +1 slack).
+# --- tier metadata -----------------------------------------------------------
+# HEADLINE is one representative query per RDF-store family: BGP access
+# paths and joins, OPTIONAL, property paths (sequence, closure, bounded
+# quantifier), SPARQL text aggregation and builtins, GRAPH ?g over the
+# quad store, and the serializers. Everything else registered is the LONG
+# TAIL: certified on the same oracle gate. The tiers drive certification
+# scheduling (__spark_entry__.ordered_defs re-certifies a stale headline
+# query ahead of its recency cohort) and the ledger's staleness report
+# (tools/certification_ledger.py). Budgets are in certification rounds
+# of staleness (current round − last hash-green round).
 HEADLINE: tuple[str, ...] = (
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "q6_forecast_revenue",
-    "top3_customers_per_nation",
-    "topk_parts_by_revenue",
     "bgp_get_building_in_nation0",
     "bgp_get_dup_preserving",
     "bgp_join_urgent_building_orders",
     "triples_stats",
-    "dedup_documents_exact",
-    "dedup_minhash_lsh",
-    "knn_bruteforce_cosine",
-    "knn_blocked_top1",
-    "text_doc_stats",
-    "text_bpe_token_estimate",
-    "sessionize_events",
-    "window_tumbling_events",
-    "asof_error_to_click",
-    "graph_pagerank",
-    "udaf_weighted_avg_price",
-    # round-3 additions: 7-table star (broadcast-chain family) and
-    # window-pass sequence packing (LLM-pipeline batch construction)
-    "q8_market_share",
-    "pack_documents_token_budget",
-    # round-4 additions: SPARQL OPTIONAL (left-outer BGP superset) and the
-    # bucketed distribution-window composition (no single-partition window)
     "bgp_optional_order_parts",
-    "percentile_rank_customers_bucketed",
-    # property-path transitive closure (iterative fixpoint family, beside
-    # graph_pagerank) — times the semi-naive frontier loop end to end
     "path_within_closure",
-    # round-5 additions: SPARQL aggregation through the text frontend,
-    # the real PNG/WAV decode kernel (Arrow mapInPandas family), and the
-    # distributed RDF/XML serialization expression
     "sparql_agg_members_per_nation",
-    "multimodal_features",
     "rdfxml_export_accounting",
-    "chunk_documents_overlapping",
-    # round-6 additions: PII scrub (codegen regexp family), line-level
-    # boilerplate removal, GIF frame walk (Arrow expansion), bounded path
-    # quantifier (structural level bound vs the closure family), and the
-    # builtins/ORDER-BY-expression SPARQL surface. The backup-migration
-    # query is deliberately NOT here: its sink targets the reference's
-    # single-node format (head.json holds the whole term dictionary), so
-    # its wall time is dominated by that format's inherent driver-side
-    # serialization, not by engine throughput.
-    "pii_scrub_accounting",
-    "clean_frequent_line_removal",
-    "multimodal_frames",
     "path_quantified_containment",
     "sparql_builtins_order_expr",
-    # dataset tier: GRAPH ?g as a distributed join dimension (the quad
-    # join-chain family — one aggregation over the labeled quads frame)
     "sparql_graph_var_membership",
-    # Gopher repetition/quality gate (explode + doc-keyed hash-agg family)
-    "gopher_repetition_accounting",
-    # SemDeDup semantic dedup (Lloyd k-means + within-cluster cosine gate)
-    "dedup_semantic_embedding",
-    # fractional-epoch mixture upsampling (projection + explode family)
-    "mixture_epochs_applied",
-    # WARC container round-trip (Common Crawl ingest/egress family)
-    "warc_roundtrip_accounting",
-    # HTML -> text extraction (codegen regexp-chain family)
-    "html_text_extraction",
-    # URL canonicalization + crawl-frontier dedup (short-key double agg)
-    "url_dedup_accounting",
-    # real pixel decode (zlib inflate + unfilter) + nearest resize
-    "image_resize_accounting",
-    # round-8 additions: AVI video frame extraction (RIFF walk + DIB/RLE8
-    # pixel decode, the Arrow frame-expansion family's video member) and
-    # exact-substring dedup (Lee et al. 2021: window-fingerprint seeds +
-    # gaps-and-islands stitching — the fp-keyed window-count family)
-    "avi_frame_accounting",
-    "dedup_exact_substring_runs",
-    # round-9 additions (r8 verdict ask #8 — round-over-round-interesting
-    # operator families that were long-tail-only): PQ/ADC vector search,
-    # BM25 ranking, the closure-based SCC, SCD2 dimension construction;
-    # plus the new composed IVF-PQ index (its wall time is the one to
-    # watch as the ANN story matures)
-    "pq_ann_topk",
-    "bm25_top_documents",
-    "graph_scc_event_transitions",
-    "scd2_customer_priority",
-    "ivfpq_ann_topk",
-    # the whole pretraining recipe composed end to end (gate → dedup →
-    # temperature mixture → epoch shuffle → packing) — the single wall
-    # that moves when ANY pipeline stage regresses
-    "pretraining_pipeline_accounting",
-    # round-10 addition: two-stage retrieval (ADC shortlist → exact
-    # re-rank) — the production ANN answer shape; its wall vs
-    # ivfpq_ann_topk's measures what the refine step costs
-    "ivfpq_rerank_topk",
-    # round-10 additions: one representative per new operator family —
-    # the deterministic-sketch tier (HLL is its cheapest member), the
-    # linear-algebra tier (deflated PCA + projection — the O(n·d²)
-    # covariance pass is the wall to watch), and CCNet paragraph dedup
-    # (a different shuffle shape than the document-level dedups)
-    "hll_distinct_tokens",
-    "pca_top2_projection_embeddings",
-    "paragraph_dedup_accounting",
-    # round-11 addition: the trained-model tier's representative — full
-    # corpus featurization + 16 broadcast-GD passes; the wall to watch
-    # as the learned-gate story matures
-    "quality_classifier_accounting",
-    # round-11 addition: real MPEG-1 I-frame decode (the video member of
-    # the Arrow frame-expansion family with actual entropy coding + IDCT)
-    "mpeg1_frame_accounting",
-    # round-12 addition: the multiclass trained-model representative —
-    # char-bigram featurization + K-class softmax GD; one wall for the
-    # whole lang-ID train+serve story (the binary twin is
-    # quality_classifier_accounting)
-    "langid_classifier_accounting",
-    # round-13 addition: perceptual image near-dup (real PNG decode →
-    # aHash column expressions → banded Hamming blocking) — one wall for
-    # the new multimodal-dedup family (audio fingerprints share the
-    # blocking operator, so this key times it for both modalities)
-    "image_phash_dedup_accounting",
-    # round-14 additions: the DCT pHash family (Arrow int64 matmul +
-    # shared banded blocking) and the dual audio fingerprint (finer-grid
-    # post-filter on the blocked candidates). The heavier r14 rows
-    # (mixed-format 5-container decode ~55 s, the sink-composition
-    # accounting ~105 s, MPEG-1 fingerprint ~28 s at sf0.1) certify on
-    # the oracle gate but stay long-tail: their walls are synthesis +
-    # pure-Python container decode, not engine throughput.
-    "dct_phash_pairs",
-    "audio_dual_dedup",
 )
 
 _HEADLINE_SET = frozenset(HEADLINE)
@@ -187,7 +68,7 @@ STALENESS_BUDGET: dict[str, int] = {"headline": 3, "long_tail": 6}
 
 
 def tier(name: str) -> str:
-    """``"headline"`` (bench throughput set) or ``"long_tail"``."""
+    """``"headline"`` (one query per store family) or ``"long_tail"``."""
     return "headline" if name in _HEADLINE_SET else "long_tail"
 
 
@@ -229,32 +110,9 @@ def _load_query_modules() -> None:
     if _LOADED:
         return
     # Import order = registration order = the tiebreak inside the
-    # rotation's least-certified-first sort (__spark_entry__.ordered_defs). Keep the
-    # modules whose queries have waited longest for a driver row AHEAD of
-    # newly added modules, so a round's new queries never starve the
-    # existing certification backlog out of the 50-query window.
-    import rippledb_spark.queries.relational  # noqa: F401
-    import rippledb_spark.queries.relational2  # noqa: F401
-    import rippledb_spark.queries.relational3  # noqa: F401
+    # rotation's least-certified-first sort (__spark_entry__.ordered_defs).
     import rippledb_spark.queries.triples  # noqa: F401
-    import rippledb_spark.queries.pipeline  # noqa: F401
-    import rippledb_spark.queries.pipeline2  # noqa: F401
-    import rippledb_spark.queries.streaming_batch  # noqa: F401
-    import rippledb_spark.queries.relational4  # noqa: F401
-    import rippledb_spark.queries.pipeline3  # noqa: F401
-    import rippledb_spark.queries.pipeline4  # noqa: F401
-    import rippledb_spark.queries.relational5  # noqa: F401
     import rippledb_spark.queries.triples2  # noqa: F401
-    import rippledb_spark.queries.relational6  # noqa: F401
     import rippledb_spark.queries.quads  # noqa: F401
-    import rippledb_spark.queries.pipeline5  # noqa: F401
-    import rippledb_spark.queries.pipeline6  # noqa: F401
-    import rippledb_spark.queries.pipeline7  # noqa: F401
-    import rippledb_spark.queries.pipeline8  # noqa: F401
-    import rippledb_spark.queries.pipeline9  # noqa: F401
-    import rippledb_spark.queries.pipeline10  # noqa: F401
-    import rippledb_spark.queries.pipeline11  # noqa: F401
-    import rippledb_spark.queries.pipeline12  # noqa: F401
-    import rippledb_spark.queries.pipeline13  # noqa: F401
 
     _LOADED = True

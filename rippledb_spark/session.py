@@ -63,7 +63,7 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         # local[N] runs one JVM over small test files: with the stock
         # 128 MiB split every sf≤1 table is a SINGLE scan task, so
-        # CPU-bound scan-side work (gram explode, regex scrub, shingling)
+        # CPU-bound scan-side work (RDF parsing, serializer expressions)
         # serializes onto one core while 31 idle. 1 MiB splits spread it
         # across the box (measured 10-40% on the scan-bound headline
         # queries). A cluster deployment overrides this back to the
@@ -75,14 +75,10 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"),
         )
         .config("spark.sql.files.openCostInBytes", "131072")
-        # testdata events.parquet carries TIMESTAMP(NANOS) — read as long,
-        # converted back to timestamp in tables.load (truncation to micros
-        # matches DuckDB's ns→us handling).
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Iterative operators (pagerank, connected components) leave
-        # unreferenced localCheckpoint blocks behind; the context cleaner
-        # only frees them after a driver GC, and the default periodic GC is
-        # 30 min — far too lazy for a long-lived analytics session.
+        # Property-path closures (plans/paths.py) leave unreferenced
+        # localCheckpoint blocks behind; the context cleaner only frees
+        # them after a driver GC, and the default periodic GC is 30 min —
+        # far too lazy for a long-lived store session.
         .config("spark.cleaner.periodicGC.interval", "2min")
         .config("spark.ui.enabled", "false")
         # local[N] drives executor + driver work from one JVM: long

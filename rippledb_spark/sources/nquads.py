@@ -64,9 +64,8 @@ def parse_nquads_line(line: str) -> Optional[tuple]:
 
 def nquads_parse_batch(batches):
     """Arrow kernel: batches of text lines → QUADS_SCHEMA frames
-    (malformed/blank lines skipped). Stateless, so it serves both the
-    batch reader here and the streaming reader
-    (streaming/rdf_stream.read_nquads_stream)."""
+    (malformed/blank lines skipped). Stateless, so it runs per batch on
+    the executors."""
     import pandas as pd
 
     cols = [f.name for f in model.QUADS_SCHEMA.fields]

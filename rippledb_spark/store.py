@@ -252,7 +252,7 @@ class TripleStore:
         remaining = _anti_triples(self.df, hint(del_df))
         return TripleStore(self.spark, remaining)
 
-    # -- graph set algebra (engine tier: set ops over whole graphs) ---------
+    # -- graph set algebra (set ops over whole graphs) ----------------------
 
     def union(self, other: "TripleStore") -> "TripleStore":
         """Graph merge — set semantics (dedup on full identity)."""
@@ -269,12 +269,11 @@ class TripleStore:
         """Triples in this graph but not in ``other`` (≡ bulk remove)."""
         return TripleStore(self.spark, self.df.exceptAll(other.df).distinct())
 
-    # -- snapshot diff / change-data-feed (r11) -----------------------------
-    # Closes the version-history loop the r4 CDC fold consumes: immutable
-    # snapshots (persist_version) → a change feed (diff) → incremental
-    # downstream application (apply_diff). The reference has no version
-    # surface at all (its persist is destructive single-slot,
-    # graph.rs:665-680), so this is engine-tier.
+    # -- snapshot diff / change-data-feed ------------------------------------
+    # Closes the version-history loop: immutable snapshots
+    # (persist_version) → a change feed (diff) → incremental downstream
+    # application (apply_diff). The reference has no version surface at
+    # all (its persist is destructive single-slot, graph.rs:665-680).
 
     def diff(self, other: "TripleStore") -> DataFrame:
         """Change feed turning THIS snapshot into ``other``:
@@ -307,8 +306,7 @@ class TripleStore:
     ) -> DataFrame:
         """Change feed between two persisted snapshots (see :meth:`diff`):
         the CDC export of the version store — what downstream incremental
-        consumers (the relational CDC fold, streaming sinks) apply instead
-        of re-reading the whole new snapshot."""
+        consumers apply instead of re-reading the whole new snapshot."""
         a = cls.from_version(spark, base_path, v_from)
         b = cls.from_version(spark, base_path, v_to)
         return a.diff(b)
@@ -394,8 +392,7 @@ class TripleStore:
         then join EXCHANGE-FREE: every pattern's scan of the same table
         carries identical hash-partitioning on ``s``, so the shuffle
         happened once at write time and is amortized over every later
-        query (the relational analogue is operators.skew.bucketed_table;
-        the reference has no cross-pattern co-location at all — each
+        query (the reference has no cross-pattern co-location at all — each
         K²-Tree probe is independent, graph.rs:854-1009). Predicate
         partitioning (pruning) is preserved: layout is one directory per
         predicate × ``n_buckets`` files."""

@@ -15,55 +15,22 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+# The relational tables the derived triples/quads graphs and their DuckDB
+# oracles read (queries/triples.TRIPLES_CTE, queries/quads.QUADS_CTE).
 TABLE_NAMES = [
     "region",
     "nation",
     "customer",
     "supplier",
-    "part",
     "orders",
     "lineitem",
-    "events",
-    "documents",
-    "embeddings",
 ]
-
-# Dimension tables small enough to broadcast at any realistic scale factor
-# (region: 5 rows, nation: 25 rows — fixed-size in TPC-H-style generators).
-BROADCAST_TABLES = {"region", "nation"}
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; have {TABLE_NAMES}")
-    if name == "events":
-        # The driver may hand us a session built WITHOUT this flag; it is
-        # runtime-settable, and without it the NANOS timestamp column makes
-        # the read throw PARQUET_TYPE_ILLEGAL.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        # events.ts is TIMESTAMP(NANOS) in parquet; with
-        # spark.sql.legacy.parquet.nanosAsLong it arrives as long ns since
-        # epoch. Truncate to micros (what DuckDB does too) and restore the
-        # timestamp type.
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
-
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            # Rebuild as TIMESTAMP_NTZ by pure arithmetic: integer DIV (a
-            # double intermediate loses precision at 1e18 ns) added onto an
-            # NTZ epoch literal — timezone-independent, so the result
-            # matches DuckDB's naive timestamps even if the driver's session
-            # timezone is not UTC, and the column type lines up with the
-            # other tables' NTZ timestamps.
-            df = df.withColumn(
-                "ts",
-                F.expr(
-                    "timestampadd(MICROSECOND, ts DIV 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                ),
-            )
-    return df
+    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 _SCRATCH_DIRS: set[str] = set()
@@ -78,15 +45,15 @@ def _cleanup_scratch() -> None:
 
 def scratch_dir(prefix: str, sf_dir: str) -> str:
     """Process-scoped scratch directory under /tmp for round-trip queries
-    (WARC, crawl, backup migration) that write eagerly and read back
+    (backup migration, JSON-LD export) that write eagerly and read back
     lazily.
 
-    The PID is in the key so concurrent processes (bench + gate, two
+    The PID is in the key so concurrent processes (two gates, two
     checkouts) never rmtree each other's scratch between one run's write
     and its lazy read-back, and a process-local sequence number makes
     every CALL unique, so two builds of the same query inside one
     process (two SparkSessions, or one session building the plan twice)
-    cannot rmtree each other's dir either (r7 ADVICE #9). That same
+    cannot rmtree each other's dir either. That same
     read-back laziness means the dir cannot be removed at the end of the
     query function — so every dir is registered here and removed at
     interpreter exit (atexit), closing the leak of one corpus-sized
@@ -100,12 +67,3 @@ def scratch_dir(prefix: str, sf_dir: str) -> str:
     _SCRATCH_DIRS.add(d)
     return d
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {n: load(spark, sf_dir, n) for n in TABLE_NAMES}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql(...) queries."""
-    for n in TABLE_NAMES:
-        load(spark, sf_dir, n).createOrReplaceTempView(n)

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
-from rippledb_spark.operators.asof import asof_join
+from rippledb_engine.operators.asof import asof_join
 
 
 def _ts(s: str) -> datetime:
@@ -76,7 +76,7 @@ def test_asof_tolerance_nulls_stale_matches(spark):
     an in-gap one must match, equal-ts still matches (gap 0)."""
     import pyspark.sql.functions as F
 
-    from rippledb_spark.operators.asof import asof_join
+    from rippledb_engine.operators.asof import asof_join
 
     left = spark.createDataFrame(
         [(1, "k", 100.0), (2, "k", 500.0), (3, "k", 1000.0)],
@@ -98,7 +98,7 @@ def test_asof_tolerance_nulls_stale_matches(spark):
 def test_asof_forward_direction(spark):
     """forward: earliest right at-or-after; equal ts matches; tolerance
     measures the forward gap."""
-    from rippledb_spark.operators.asof import asof_join
+    from rippledb_engine.operators.asof import asof_join
 
     left = spark.createDataFrame(
         [(1, "k", 100.0), (2, "k", 450.0), (3, "k", 2000.0)], ["lid", "k", "lts"]
@@ -126,7 +126,7 @@ def test_asof_forward_direction(spark):
 
 
 def test_asof_nearest_and_strict(spark):
-    from rippledb_spark.operators.asof import asof_join
+    from rippledb_engine.operators.asof import asof_join
 
     left = spark.createDataFrame(
         [(1, "k", 100.0), (2, "k", 490.0), (3, "k", 300.0)], ["lid", "k", "lts"]
@@ -162,7 +162,7 @@ def test_asof_nearest_and_strict(spark):
 def test_asof_composite_keys(spark):
     """on=[...] (merge_asof by=[...]): matches partition on the composite
     key — same-key1 rows with different key2 never match."""
-    from rippledb_spark.operators.asof import asof_join
+    from rippledb_engine.operators.asof import asof_join
 
     left = spark.createDataFrame(
         [(1, "a", "x", 100.0), (2, "a", "y", 100.0)], ["lid", "k1", "k2", "lts"]

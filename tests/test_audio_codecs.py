@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from rippledb_spark.operators.multimodal import (
+from rippledb_engine.operators.multimodal import (
     alaw_decode_byte,
     decode_wav_samples,
     encode_wav_g711,
@@ -99,7 +99,7 @@ def test_synth_params_cover_all_codecs_and_are_deterministic():
 
 
 def test_packbits_roundtrip_and_spec_cases():
-    from rippledb_spark.operators.multimodal import (
+    from rippledb_engine.operators.multimodal import (
         packbits_decode,
         packbits_encode,
     )
@@ -124,7 +124,7 @@ def test_packbits_roundtrip_and_spec_cases():
 
 
 def test_tiff_roundtrip_all_profile_corners():
-    from rippledb_spark.operators.multimodal import decode_tiff, encode_tiff
+    from rippledb_engine.operators.multimodal import decode_tiff, encode_tiff
 
     pix = bytes((3 * k) % 256 for k in range(7 * 5))
     for packbits in (False, True):
@@ -144,7 +144,7 @@ def test_tiff_refusals():
 
     import pytest as _pt
 
-    from rippledb_spark.operators.multimodal import decode_tiff, encode_tiff
+    from rippledb_engine.operators.multimodal import decode_tiff, encode_tiff
 
     with _pt.raises(ValueError, match="byte-order"):
         decode_tiff(b"XX\x2a\x00")
@@ -167,7 +167,7 @@ def test_tiff_lzw_stream_roundtrip_and_width_schedule():
     """TIFF 6.0 §13 LZW: MSB-first codes, EARLY width changes, table
     reset via ClearCode at 4094 — exercised by a stream long enough to
     cross every width bump and force a reset."""
-    from rippledb_spark.operators.multimodal import (
+    from rippledb_engine.operators.multimodal import (
         tiff_lzw_decode,
         tiff_lzw_encode,
     )
@@ -196,7 +196,7 @@ def test_tiff_lzw_stream_roundtrip_and_width_schedule():
 
 
 def test_tiff_lzw_roundtrip_all_profile_corners():
-    from rippledb_spark.operators.multimodal import decode_tiff, encode_tiff
+    from rippledb_engine.operators.multimodal import decode_tiff, encode_tiff
 
     pix = bytes((3 * k) % 256 for k in range(7 * 5))
     for pred in (1, 2):
@@ -223,7 +223,7 @@ def test_tiff_lzw_roundtrip_all_profile_corners():
 
 
 def test_bmp_roundtrip_all_storage_orders():
-    from rippledb_spark.operators.multimodal import decode_bmp, encode_bmp
+    from rippledb_engine.operators.multimodal import decode_bmp, encode_bmp
 
     pal = [(i, (3 * i) % 256, (7 * i) % 256) for i in range(256)]
     idx = bytes((5 * k) % 256 for k in range(6 * 4))
@@ -239,7 +239,7 @@ def test_bmp_refusals():
 
     import pytest as _pt
 
-    from rippledb_spark.operators.multimodal import decode_bmp, encode_bmp
+    from rippledb_engine.operators.multimodal import decode_bmp, encode_bmp
 
     pal = [(0, 0, 0)] * 256
     with _pt.raises(ValueError, match="always bottom-up"):

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from rippledb_spark.operators.bpe import (
+from rippledb_engine.operators.bpe import (
     SEP,
     learn_bpe_merges,
     learn_bpe_merges_batched,
@@ -39,7 +39,7 @@ def _assert_equal_trajectory(spark, texts, n_merges, scan=32, min_pair_count=2):
 
 
 def test_batched_equals_sequential_documents_corpus(spark, sf_dir):
-    from rippledb_spark.tables import load
+    from rippledb_engine.tables import load
 
     d = load(spark, sf_dir, "documents")
     seq_merges, _ = learn_bpe_merges(d, "text", n_merges=8, min_pair_count=2)
@@ -139,7 +139,7 @@ def test_greedy_mode_equals_sequential_when_conflict_free(spark):
 
 
 def test_greedy_mode_batches_wide_on_natural_text(spark, sf_dir):
-    from rippledb_spark.tables import load
+    from rippledb_engine.tables import load
 
     d = load(spark, sf_dir, "documents")
     greedy, words, rounds = learn_bpe_merges_batched(
@@ -214,7 +214,7 @@ def test_greedy_mode_matches_pure_python_reference(spark, sf_dir):
     # cross-engine pin for the greedy trajectory itself (the exact mode
     # has the DuckDB sequential oracle; greedy gets this independent
     # dict-based replay)
-    from rippledb_spark.tables import load
+    from rippledb_engine.tables import load
 
     d = load(spark, sf_dir, "documents")
     texts = [r["text"] for r in d.select("text").collect()]

@@ -6,7 +6,7 @@ import pytest
 
 from rippledb_spark import Sparql, TripleStore
 from rippledb_spark.errors import QueryError
-from rippledb_spark.operators.cdc import apply_changes, apply_changes_guarded, scd2
+from rippledb_engine.operators.cdc import apply_changes, apply_changes_guarded, scd2
 
 
 @pytest.fixture(scope="module")

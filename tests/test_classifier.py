@@ -8,13 +8,13 @@ import duckdb
 import pytest
 import pyspark.sql.functions as F
 
-from rippledb_spark.operators.classifier import (
+from rippledb_engine.operators.classifier import (
     logistic_metrics,
     logistic_predict,
     logistic_train,
     logistic_train_sql,
 )
-from rippledb_spark.tables import load
+from rippledb_engine.tables import load
 
 
 def _toy(spark):
@@ -78,7 +78,7 @@ def test_refusals(spark):
 def test_planted_rule_recovery_certificate(spark, sf_dir):
     """The registered query's accuracy column ≥ 0.9 with both classes
     populated — the self-verifying certificate VERDICT asked for."""
-    from rippledb_spark.queries.pipeline9 import (
+    from rippledb_engine.queries.pipeline9 import (
         quality_classifier_accounting,
     )
 
@@ -91,7 +91,7 @@ def test_planted_rule_recovery_certificate(spark, sf_dir):
 
 
 def test_classifier_gate_composes_into_pipeline(spark, sf_dir):
-    from rippledb_spark.queries.pipeline9 import (
+    from rippledb_engine.queries.pipeline9 import (
         pretraining_classifier_gate_accounting,
     )
 
@@ -104,7 +104,7 @@ def test_classifier_gate_composes_into_pipeline(spark, sf_dir):
 
 
 def test_model_save_load_serve_roundtrip(spark, tmp_path):
-    from rippledb_spark.operators.classifier import (
+    from rippledb_engine.operators.classifier import (
         load_model,
         logistic_predict,
         save_model,
@@ -126,7 +126,7 @@ def test_threshold_sweep_monotone_and_consistent(spark, sf_dir):
     """r11: the evaluation sweep — recall non-increasing in the
     threshold, tp+fn constant (= the positive count), and the t=0 row
     consistent with the certified accuracy query's positive class."""
-    from rippledb_spark.queries.pipeline9 import classifier_threshold_sweep
+    from rippledb_engine.queries.pipeline9 import classifier_threshold_sweep
 
     rows = classifier_threshold_sweep(spark, sf_dir).collect()
     assert [r["threshold"] for r in rows] == [-1.0, -0.5, 0.0, 0.5, 1.0]

@@ -5,7 +5,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from rippledb_spark.operators import clustering as KM
+from rippledb_engine.operators import clustering as KM
 
 
 def _df(spark, rows):

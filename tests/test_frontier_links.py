@@ -10,7 +10,7 @@ from __future__ import annotations
 import duckdb
 import pyspark.sql.functions as F
 
-from rippledb_spark.operators.frontier import (
+from rippledb_engine.operators.frontier import (
     extract_frontier_links,
     resolve_link,
     resolve_link_sql,

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 
 from rippledb_spark import TripleStore
-from rippledb_spark.operators.graph import degrees, pagerank
+from rippledb_engine.operators.graph import degrees, pagerank
 
 
 def test_degrees_counts_named_edges_only(spark):
@@ -47,8 +47,8 @@ def test_pagerank_sink_and_hub(spark):
 def test_ivf_topk_contains_self(spark):
     import pyspark.sql.functions as F
 
-    from rippledb_spark.operators.similarity import ivf_topk
-    from rippledb_spark.tables import load
+    from rippledb_engine.operators.similarity import ivf_topk
+    from rippledb_engine.tables import load
 
     e = load(spark, "/root/testdata/sf0.001", "embeddings")
     qv = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("q"))
@@ -58,7 +58,7 @@ def test_ivf_topk_contains_self(spark):
 
 
 def test_connected_components_two_islands(spark):
-    from rippledb_spark.operators.graph import connected_components
+    from rippledb_engine.operators.graph import connected_components
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], ["src", "dst"]
@@ -69,7 +69,7 @@ def test_connected_components_two_islands(spark):
 
 
 def test_bfs_reachability_distances(spark):
-    from rippledb_spark.operators.graph import bfs_reachability
+    from rippledb_engine.operators.graph import bfs_reachability
 
     # diamond + unreachable island; shortest path wins (s->d is 2 via
     # either arm, not 3), cycle back-edge does not inflate distances
@@ -83,7 +83,7 @@ def test_bfs_reachability_distances(spark):
 
 
 def test_bfs_multi_source(spark):
-    from rippledb_spark.operators.graph import bfs_reachability
+    from rippledb_engine.operators.graph import bfs_reachability
 
     edges = spark.createDataFrame([("a", "b"), ("b", "c"), ("z", "c")], ["src", "dst"])
     got = {r["node"]: r["dist"] for r in bfs_reachability(edges, ["a", "z"], iterations=4).collect()}
@@ -95,7 +95,7 @@ def test_iterative_ops_reliable_checkpoint_mode(spark, tmp_path):
     results must be identical in both modes and checkpoint files written."""
     import os
 
-    from rippledb_spark.operators.graph import (
+    from rippledb_engine.operators.graph import (
         bfs_reachability,
         connected_components,
         pagerank,
@@ -134,7 +134,7 @@ def test_connected_components_converges_past_small_iteration_default(spark):
     bound would silently return partial labels (ADVICE r3)."""
     import random
 
-    from rippledb_spark.operators.graph import connected_components
+    from rippledb_engine.operators.graph import connected_components
 
     rng = random.Random(7)
     path = [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(20)]
@@ -178,7 +178,7 @@ def test_connected_components_converges_past_small_iteration_default(spark):
 
 
 def test_triangle_count_k4_plus_pendant(spark):
-    from rippledb_spark.operators.graph import triangle_count
+    from rippledb_engine.operators.graph import triangle_count
 
     edges = spark.createDataFrame(
         [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
@@ -190,7 +190,7 @@ def test_triangle_count_k4_plus_pendant(spark):
 
 
 def test_triangle_count_triangle_free(spark):
-    from rippledb_spark.operators.graph import triangle_count
+    from rippledb_engine.operators.graph import triangle_count
 
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "d")], ["src", "dst"]
@@ -199,7 +199,7 @@ def test_triangle_count_triangle_free(spark):
 
 
 def test_cooccurrence_edges_projection_and_cap(spark):
-    from rippledb_spark.operators.graph import cooccurrence_edges
+    from rippledb_engine.operators.graph import cooccurrence_edges
 
     df = spark.createDataFrame(
         [("g1", "x"), ("g1", "y"), ("g1", "z"), ("g2", "x"), ("g2", "y"),
@@ -215,7 +215,7 @@ def test_cooccurrence_edges_projection_and_cap(spark):
 def test_shortest_paths_weighted(spark):
     """Bellman-Ford relaxation: cheaper multi-hop beats expensive direct
     edge; multi-source takes the nearest origin; fixpoint is exact."""
-    from rippledb_spark.operators.graph import shortest_paths
+    from rippledb_engine.operators.graph import shortest_paths
 
     edges = spark.createDataFrame(
         [
@@ -237,7 +237,7 @@ def test_shortest_paths_weighted(spark):
 
 
 def test_shortest_paths_cycle_terminates(spark):
-    from rippledb_spark.operators.graph import shortest_paths
+    from rippledb_engine.operators.graph import shortest_paths
 
     edges = spark.createDataFrame(
         [("a", "b", 1.0), ("b", "c", 1.0), ("c", "a", 1.0)], ["src", "dst", "w"]
@@ -247,7 +247,7 @@ def test_shortest_paths_cycle_terminates(spark):
 
 
 def test_k_core_peels_to_exact_core(spark):
-    from rippledb_spark.operators.graph import k_core
+    from rippledb_engine.operators.graph import k_core
 
     # triangle with a 2-node tail: 2-core = triangle, 3-core = empty
     edges = spark.createDataFrame(
@@ -265,7 +265,7 @@ def test_k_core_deep_peeling_chain(spark):
     import pytest as _pytest
 
     from rippledb_spark.errors import QueryError
-    from rippledb_spark.operators.graph import k_core
+    from rippledb_engine.operators.graph import k_core
 
     chain = [(f"n{i}", f"n{i+1}") for i in range(12)]
     edges = spark.createDataFrame(chain, ["src", "dst"])
@@ -277,7 +277,7 @@ def test_k_core_deep_peeling_chain(spark):
 def test_label_propagation_separates_cliques(spark):
     """Two 4-cliques with one bridge: majority vote keeps each clique on
     its own min label; the bridge endpoints stay with their majority."""
-    from rippledb_spark.operators.graph import label_propagation
+    from rippledb_engine.operators.graph import label_propagation
 
     def clique(prefix):
         nodes = [f"{prefix}{i}" for i in range(4)]
@@ -292,7 +292,7 @@ def test_label_propagation_separates_cliques(spark):
 
 
 def test_label_propagation_deterministic(spark):
-    from rippledb_spark.operators.graph import label_propagation
+    from rippledb_engine.operators.graph import label_propagation
 
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{(i * 7 + 3) % 20}") for i in range(20)], ["src", "dst"]
@@ -303,7 +303,7 @@ def test_label_propagation_deterministic(spark):
 
 
 def test_personalized_pagerank_localizes_to_seed(spark):
-    from rippledb_spark.operators.graph import personalized_pagerank
+    from rippledb_engine.operators.graph import personalized_pagerank
 
     edges = spark.createDataFrame(
         [("s", "a"), ("a", "b"), ("b", "s"), ("x", "y")], ["src", "dst"]
@@ -322,7 +322,7 @@ def test_personalized_pagerank_localizes_to_seed(spark):
 
 def test_shortest_paths_refuses_partial_result(spark):
     from rippledb_spark.errors import QueryError
-    from rippledb_spark.operators.graph import shortest_paths
+    from rippledb_engine.operators.graph import shortest_paths
 
     edges = spark.createDataFrame(
         [("a", "b", 1.0), ("b", "c", 1.0), ("c", "d", 1.0), ("d", "e", 1.0)],
@@ -342,7 +342,7 @@ def test_shortest_paths_budget_equal_to_hop_depth(spark):
     """The frontier only provably empties one round AFTER the last
     improvement — a budget equal to the exact hop depth must still
     succeed via the post-budget relaxation check (r6 ADVICE)."""
-    from rippledb_spark.operators.graph import shortest_paths
+    from rippledb_engine.operators.graph import shortest_paths
 
     edges = spark.createDataFrame(
         [("a", "b", 1.0), ("b", "c", 1.0), ("c", "d", 1.0), ("d", "e", 1.0)],
@@ -356,7 +356,7 @@ def test_shortest_paths_budget_equal_to_hop_depth(spark):
 
 
 def test_strongly_connected_components(spark):
-    from rippledb_spark.operators.graph import strongly_connected_components
+    from rippledb_engine.operators.graph import strongly_connected_components
 
     edges = [
         ("a", "b"), ("b", "c"), ("c", "a"),  # 3-cycle
@@ -376,7 +376,7 @@ def test_strongly_connected_components(spark):
 
 
 def test_scc_handles_self_loops_and_isolated_edges(spark):
-    from rippledb_spark.operators.graph import strongly_connected_components
+    from rippledb_engine.operators.graph import strongly_connected_components
 
     edges = [("x", "x"), ("x", "y")]  # self-loop dropped; y is a sink
     df = spark.createDataFrame(edges, "src string, dst string")
@@ -388,7 +388,7 @@ def test_scc_handles_self_loops_and_isolated_edges(spark):
 def test_dag_longest_path_layers_and_cycle_refusal(spark):
     import pytest
 
-    from rippledb_spark.operators.graph import dag_longest_path_layers
+    from rippledb_engine.operators.graph import dag_longest_path_layers
 
     # diamond + tail: converging paths take the LONGEST, not the first
     edges = [("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"), ("d", "e"),
@@ -407,7 +407,7 @@ def test_dag_longest_path_layers_and_cycle_refusal(spark):
 def test_scc_closure_form_raises_on_nonconvergence(spark):
     """r8 ADVICE fix: hitting max_iterations with a live frontier must
     raise, never return components from a partial closure."""
-    from rippledb_spark.operators.graph import strongly_connected_components
+    from rippledb_engine.operators.graph import strongly_connected_components
 
     # a 6-chain into a 2-cycle needs >2 closure rounds
     edges = [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e"), ("e", "f"),
@@ -424,7 +424,7 @@ def test_scc_closure_form_raises_on_nonconvergence(spark):
 def test_scc_forward_backward_agrees_with_closure_form(spark):
     """r9 (verdict ask #4): the FW-BW coloring variant must produce the
     IDENTICAL deterministic min-node labeling as the closure form."""
-    from rippledb_spark.operators.graph import (
+    from rippledb_engine.operators.graph import (
         scc_forward_backward,
         strongly_connected_components,
     )
@@ -451,7 +451,7 @@ def test_scc_forward_backward_agrees_with_closure_form(spark):
 def test_scc_forward_backward_giant_cycle_single_round(spark):
     """A single giant SCC resolves in ONE FW-BW round (F = B = the whole
     color) — the case whose closure would be quadratic."""
-    from rippledb_spark.operators.graph import scc_forward_backward
+    from rippledb_engine.operators.graph import scc_forward_backward
 
     n = 12
     edges = [(f"n{i:02d}", f"n{(i + 1) % n:02d}") for i in range(n)]
@@ -462,7 +462,7 @@ def test_scc_forward_backward_giant_cycle_single_round(spark):
 
 
 def test_scc_forward_backward_raises_on_bounds(spark):
-    from rippledb_spark.operators.graph import scc_forward_backward
+    from rippledb_engine.operators.graph import scc_forward_backward
 
     n = 12
     edges = [(f"n{i:02d}", f"n{(i + 1) % n:02d}") for i in range(n)]
@@ -479,7 +479,7 @@ def test_scc_driver_path_matches_distributed(spark):
     driver_max_edges=0."""
     import pytest
 
-    from rippledb_spark.operators.graph import strongly_connected_components
+    from rippledb_engine.operators.graph import strongly_connected_components
 
     edges = [
         ("b", "a"), ("a", "b"),            # 2-cycle

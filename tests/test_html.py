@@ -5,7 +5,7 @@ from __future__ import annotations
 import duckdb
 import pyspark.sql.functions as F
 
-from rippledb_spark.functions import html as H
+from rippledb_engine.functions import html as H
 
 CASES = [
     # script content dropped whole, even with tags-in-strings inside

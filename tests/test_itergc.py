@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from rippledb_spark.operators._itergc import (
+from rippledb_engine.operators._itergc import (
     PINNED_RDD_IDS,
     CheckpointRotator,
     persistent_rdd_ids,

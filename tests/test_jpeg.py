@@ -7,14 +7,14 @@ import struct
 import numpy as np
 import pytest
 
-from rippledb_spark.operators.jpeg import (
+from rippledb_engine.operators.jpeg import (
     AC_BITS,
     AC_VALUES,
     DC_BITS,
     decode_jpeg_gray,
     encode_jpeg_gray,
 )
-from rippledb_spark.operators.multimodal import (
+from rippledb_engine.operators.multimodal import (
     decode_avi_frames,
     encode_avi,
     synth_mjpeg_dims,
@@ -93,7 +93,7 @@ def test_decoder_refusals_are_loud():
     with pytest.raises(ValueError, match="truncated JPEG SOF"):
         decode_jpeg_gray(bytes(multi))
     # SOF/SOS component-count mismatch (partial scan) refuses too
-    from rippledb_spark.operators.jpeg import encode_jpeg_color as _ejc
+    from rippledb_engine.operators.jpeg import encode_jpeg_color as _ejc
 
     color_ok = _ejc(8, 8, bytes(64), bytes(64), bytes(64), sampling=(1, 1))
     sos_at = color_ok.index(b"\xff\xda")
@@ -105,7 +105,7 @@ def test_decoder_refusals_are_loud():
     with pytest.raises(ValueError, match="partial-scan"):
         decode_jpeg_gray(bytes(partial))
     # decode_jpeg_gray on a genuine color stream points at the color API
-    from rippledb_spark.operators.jpeg import encode_jpeg_color
+    from rippledb_engine.operators.jpeg import encode_jpeg_color
 
     color = encode_jpeg_color(
         8, 8, bytes(64), bytes(64), bytes(64), sampling=(1, 1)
@@ -140,7 +140,7 @@ def test_mjpeg_frame_dims_must_match_container():
 # color / sampling / restart (r8 generalization)
 # ---------------------------------------------------------------------------
 
-from rippledb_spark.operators.jpeg import (  # noqa: E402
+from rippledb_engine.operators.jpeg import (  # noqa: E402
     decode_jpeg_planes,
     encode_jpeg_color,
     jpeg_to_rgb,
@@ -257,7 +257,7 @@ def test_progressive_decodes_identically_to_baseline_gray():
     """Progressive transmission re-orders the SAME quantized
     coefficients, so progressive and baseline encodes of one field must
     decode BIT-IDENTICALLY — any content, any quant table."""
-    from rippledb_spark.operators.jpeg import encode_jpeg_gray_progressive
+    from rippledb_engine.operators.jpeg import encode_jpeg_gray_progressive
 
     rng = np.random.default_rng(11)
     for w, h in ((8, 8), (24, 17), (64, 48), (7, 5)):
@@ -269,7 +269,7 @@ def test_progressive_decodes_identically_to_baseline_gray():
 
 
 def test_progressive_decodes_identically_to_baseline_color():
-    from rippledb_spark.operators.jpeg import (
+    from rippledb_engine.operators.jpeg import (
         decode_jpeg_planes,
         encode_jpeg_color,
         encode_jpeg_color_progressive,
@@ -294,7 +294,7 @@ def test_progressive_decodes_identically_to_baseline_color():
 def test_progressive_eobrun_and_restart_paths():
     """Flat and sparse content drives long EOBn runs; a restart interval
     drives RSTn handling inside every progressive scan type."""
-    from rippledb_spark.operators.jpeg import encode_jpeg_gray_progressive
+    from rippledb_engine.operators.jpeg import encode_jpeg_gray_progressive
 
     flat = bytes([128]) * (64 * 64)
     assert decode_jpeg_gray(
@@ -318,7 +318,7 @@ def test_progressive_block_constant_exact():
     """The oracle class: block-constant + all-ones quant is numerically
     lossless through BOTH stream shapes — the planted claim of
     progressive_jpeg_phash_accounting."""
-    from rippledb_spark.operators.jpeg import encode_jpeg_gray_progressive
+    from rippledb_engine.operators.jpeg import encode_jpeg_gray_progressive
 
     w, h = 32, 24
     px = bytes(
@@ -332,7 +332,7 @@ def test_progressive_block_constant_exact():
 
 
 def test_progressive_scan_refusals():
-    from rippledb_spark.operators.jpeg import (
+    from rippledb_engine.operators.jpeg import (
         decode_jpeg_planes,
         encode_jpeg_color_progressive,
     )

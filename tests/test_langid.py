@@ -8,7 +8,7 @@ import duckdb
 import pytest
 import pyspark.sql.functions as F
 
-from rippledb_spark.operators.langid import (
+from rippledb_engine.operators.langid import (
     char_ngram_hash_features,
     char_ngram_hash_features_sql,
     softmax_metrics,
@@ -136,7 +136,7 @@ def test_softmax_model_save_load_serve_roundtrip(spark, tmp_path):
     """The generic classifier save/load persists the flat K·d softmax
     weight row too — frozen lang-ID serving after a reload must equal
     in-memory serving (the train-once / gate-forever pattern)."""
-    from rippledb_spark.operators.classifier import load_model, save_model
+    from rippledb_engine.operators.classifier import load_model, save_model
 
     feats = _feats(spark, n=40).localCheckpoint(eager=True)
     w = softmax_train(feats, "x", "y", 16, 4, iterations=4, lr=2.0)
@@ -156,7 +156,7 @@ def test_registered_query_recovers_planted_languages(spark, sf_dir):
     """The certified query itself (train on the balanced half, score
     the WHOLE corpus) must recover the planted languages — the ≥0.9
     accuracy certificate the registry row rides."""
-    from rippledb_spark.queries.pipeline10 import langid_classifier_accounting
+    from rippledb_engine.queries.pipeline10 import langid_classifier_accounting
 
     rows = langid_classifier_accounting(spark, sf_dir).collect()
     assert len(rows) == 4

@@ -5,7 +5,7 @@ from __future__ import annotations
 import duckdb
 import pyspark.sql.functions as F
 
-from rippledb_spark.operators import mixture as MX
+from rippledb_engine.operators import mixture as MX
 
 
 def _df(spark, rows):
@@ -73,7 +73,7 @@ def test_temperature_mixture_weights_flattens_head(spark):
     """r9: α<1 upweights small sources per-row; α=1 is proportional
     (epochs all equal); α=0 is uniform across sources. Budget converts
     p to epochs exactly: sum over sources of epochs·n == budget."""
-    from rippledb_spark.operators.mixture import temperature_mixture_weights
+    from rippledb_engine.operators.mixture import temperature_mixture_weights
 
     rows = [("big", 400), ("mid", 100), ("small", 4)]
     df = spark.createDataFrame(rows, "src string, n long")
@@ -104,7 +104,7 @@ def test_temperature_mixture_weights_flattens_head(spark):
 def test_temperature_mixture_sql_twin(spark):
     import duckdb
 
-    from rippledb_spark.operators.mixture import (
+    from rippledb_engine.operators.mixture import (
         temperature_mixture_sql,
         temperature_mixture_weights,
     )
@@ -132,7 +132,7 @@ def test_temperature_mixture_sql_twin(spark):
 def test_temperature_mixture_refuses_negative_alpha(spark):
     import pytest
 
-    from rippledb_spark.operators.mixture import (
+    from rippledb_engine.operators.mixture import (
         temperature_mixture_sql,
         temperature_mixture_weights,
     )
@@ -145,7 +145,7 @@ def test_temperature_mixture_refuses_negative_alpha(spark):
 
 
 def test_epoch_shuffle_reseeds_and_is_deterministic(spark):
-    from rippledb_spark.operators.packing import epoch_shuffle_shards
+    from rippledb_engine.operators.packing import epoch_shuffle_shards
 
     df = spark.range(200).select(F.col("id").alias("doc_id"))
     a = {r["id"]: (r["shard"], r["pos"])

@@ -7,7 +7,7 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from rippledb_spark.operators.mpeg1 import (
+from rippledb_engine.operators.mpeg1 import (
     _AC_EOB,
     _AC_TABLE,
     _Bits,
@@ -81,7 +81,7 @@ def test_ac_path_matches_independent_idct(run, level):
     """The AC dequant + zigzag + IDCT chain checked against a from-
     scratch numpy reference (NOT jpeg.py's matrix — an independent
     derivation of the 8x8 DCT-II basis)."""
-    from rippledb_spark.operators.jpeg import _Z
+    from rippledb_engine.operators.jpeg import _Z
 
     qscale = 8
     es = _handmade_stream_with_ac(run, level, qscale)
@@ -142,8 +142,8 @@ def test_refusals():
 def test_custom_intra_matrix_roundtrip():
     """load_intra_quantizer_matrix parses (DC-only content is matrix-
     independent, so the round-trip stays exact)."""
-    from rippledb_spark.operators.jpeg import _Z
-    from rippledb_spark.operators.mpeg1 import _Bits as B
+    from rippledb_engine.operators.jpeg import _Z
+    from rippledb_engine.operators.mpeg1 import _Bits as B
 
     w, h = 16, 16
     frames = [_const_planes(w, h, lambda b: 50 + b)]
@@ -165,8 +165,8 @@ def test_custom_intra_matrix_roundtrip():
 
 
 def test_spark_frame_stats_surface(spark, sf_dir):
-    from rippledb_spark.operators import multimodal as MM
-    from rippledb_spark.tables import load
+    from rippledb_engine.operators import multimodal as MM
+    from rippledb_engine.tables import load
 
     d = load(spark, sf_dir, "documents").filter("doc_id % 4 = 2").limit(6)
     media = MM.synthesize_mpeg1_streams(d, "doc_id")
@@ -195,7 +195,7 @@ def test_p_picture_mc_shift_and_skip_exact():
     halving, MV differential wrap — all numerically exact."""
     import numpy as np
 
-    from rippledb_spark.operators.mpeg1 import encode_mpeg1_ip
+    from rippledb_engine.operators.mpeg1 import encode_mpeg1_ip
 
     w, h = 48, 32
     Y = _bc_plane(w, h, lambda b: 30 + 13 * b)
@@ -219,7 +219,7 @@ def test_p_picture_mc_shift_and_skip_exact():
 
 
 def test_p_picture_refusals():
-    from rippledb_spark.operators.mpeg1 import _Bits, encode_mpeg1_ip
+    from rippledb_engine.operators.mpeg1 import _Bits, encode_mpeg1_ip
 
     w, h = 32, 32
     Y = _bc_plane(w, h, lambda b: 100)
@@ -274,7 +274,7 @@ def test_p_residual_dc_and_ac_matches_independent_idct():
     prediction — all against an independent numpy mirror."""
     import numpy as np
 
-    from rippledb_spark.operators.mpeg1 import (
+    from rippledb_engine.operators.mpeg1 import (
         _Z,
         _dct_matrix,
         _dequant_non_intra,
@@ -330,7 +330,7 @@ def test_p_residual_dc_and_ac_matches_independent_idct():
 def test_non_intra_dequant_rules():
     """§2.4.4.2 fine print: truncation toward ZERO, oddification
     toward zero, ±2048 clamp, zero passthrough."""
-    from rippledb_spark.operators.mpeg1 import _dequant_non_intra
+    from rippledb_engine.operators.mpeg1 import _dequant_non_intra
 
     assert _dequant_non_intra(0, 8, 16) == 0
     # (2·3+1)·8·16/16 = 56 even → 55
@@ -351,7 +351,7 @@ def test_motion_f_code2_sign_before_residual():
     and round-trip an f_code=2 stream whose vectors need residuals."""
     import numpy as np
 
-    from rippledb_spark.operators.mpeg1 import (
+    from rippledb_engine.operators.mpeg1 import (
         _Bits,
         _decode_motion,
         _encode_motion,
@@ -390,7 +390,7 @@ def test_motion_f_code2_sign_before_residual():
 
 
 def test_cbp_table_is_prefix_free_and_complete():
-    from rippledb_spark.operators.mpeg1 import _CBP_TABLE
+    from rippledb_engine.operators.mpeg1 import _CBP_TABLE
 
     assert sorted(_CBP_TABLE) == list(range(1, 64))
     codes = sorted(_CBP_TABLE.values(), key=len)
@@ -404,7 +404,7 @@ def test_intra_refresh_inside_p_picture():
     predictors while its neighbors skip-copy."""
     import numpy as np
 
-    from rippledb_spark.operators.mpeg1 import (
+    from rippledb_engine.operators.mpeg1 import (
         _Bits,
         _DC_SIZE_CHROMA,
         _DC_SIZE_LUMA,
@@ -456,7 +456,7 @@ def test_half_pel_and_odd_vector_mc_matches_independent_mirror():
     averages."""
     import numpy as np
 
-    from rippledb_spark.operators.mpeg1 import encode_mpeg1_ip
+    from rippledb_engine.operators.mpeg1 import encode_mpeg1_ip
 
     w, h = 32, 16
     Y = _bc_plane(w, h, lambda b: 37 + 23 * b)
@@ -521,7 +521,7 @@ def test_b_pictures_decode_with_display_reorder():
     against numpy mirrors of §2.4.4.3's (f+b+1)>>1 average."""
     import numpy as np
 
-    from rippledb_spark.operators.mpeg1 import (
+    from rippledb_engine.operators.mpeg1 import (
         _Z,
         _dct_matrix,
         _dequant_non_intra,
@@ -595,7 +595,7 @@ def test_b_picture_fwd_only_and_two_anchor_bookkeeping():
     display order must interleave correctly."""
     import numpy as np
 
-    from rippledb_spark.operators.mpeg1 import encode_mpeg1_ipb
+    from rippledb_engine.operators.mpeg1 import encode_mpeg1_ipb
 
     w, h = 32, 16
     Y = _bc_plane(w, h, lambda b: 25 + 31 * b)
@@ -632,7 +632,7 @@ def test_d_pictures_decode_exactly():
     macroblock code and the end_of_macroblock bit — round-trip exactly
     on block-constant content, completing the picture-type surface
     (I/P/B/D all decode; only invalid type codes refuse)."""
-    from rippledb_spark.operators.mpeg1 import _Bits, encode_mpeg1_d
+    from rippledb_engine.operators.mpeg1 import _Bits, encode_mpeg1_d
 
     w, h = 32, 16
     frames = [
@@ -649,7 +649,7 @@ def test_d_pictures_decode_exactly():
         assert v["frames"][f] == frames[f]
     # a D macroblock without its end_of_macroblock bit refuses loudly:
     # hand-write one MB whose end bit is 0
-    from rippledb_spark.operators.mpeg1 import (
+    from rippledb_engine.operators.mpeg1 import (
         _DC_SIZE_CHROMA,
         _DC_SIZE_LUMA,
         _MBA_TABLE,
@@ -709,7 +709,7 @@ def test_stream_info_header_walk():
     """mpeg1_stream_info (r15): shape fields from the sequence header +
     a picture-start-code count — no pixel decode — and loud refusals on
     streams the feature stage must not mis-shape."""
-    from rippledb_spark.operators.mpeg1 import mpeg1_stream_info
+    from rippledb_engine.operators.mpeg1 import mpeg1_stream_info
 
     es = encode_mpeg1_intra(32, 48, [(
         _const_planes(32, 48, lambda b: 40 + b)[0],
@@ -734,8 +734,8 @@ def test_dc_only_idct_shortcut_bitexact():
     for a dense dcv sweep (positive, negative, clipped, zero)."""
     import numpy as np
 
-    from rippledb_spark.operators.mpeg1 import _DC_C0, _dc_only_pix
-    from rippledb_spark.operators.jpeg import _dct_matrix
+    from rippledb_engine.operators.mpeg1 import _DC_C0, _dc_only_pix
+    from rippledb_engine.operators.jpeg import _dct_matrix
 
     M = _dct_matrix()
     assert all(M[0, x] == _DC_C0 for x in range(8))
@@ -753,7 +753,7 @@ def test_fast_bit_reader_matches_serial_semantics():
     interleaved write-then-read invalidation."""
     import pytest
 
-    from rippledb_spark.operators.mpeg1 import _Bits
+    from rippledb_engine.operators.mpeg1 import _Bits
 
     b = _Bits(bytes([0b10110100, 0b01111111, 0xFF]))
     assert b.bit() == 1

@@ -6,7 +6,7 @@ import struct
 
 import pytest
 
-from rippledb_spark.operators.multimodal import (
+from rippledb_engine.operators.multimodal import (
     avi_frame_pixel_stats,
     decode_avi_frames,
     encode_avi,
@@ -142,7 +142,7 @@ def test_wav_sample_round_trip_and_refusals():
     import numpy as np
     import pytest as _pt
 
-    from rippledb_spark.operators.multimodal import (
+    from rippledb_engine.operators.multimodal import (
         decode_wav_samples,
         encode_wav,
         synth_pcm_samples,
@@ -164,7 +164,7 @@ def test_wav_sample_round_trip_and_refusals():
 def test_wav_audio_stats_match_closed_form(spark):
     import pyspark.sql.functions as F
 
-    from rippledb_spark.operators.multimodal import (
+    from rippledb_engine.operators.multimodal import (
         synth_audio,
         synth_pcm_samples,
         synthesize_pcm_wavs,

@@ -8,7 +8,7 @@ import math
 import duckdb
 import pytest
 
-from rippledb_spark.operators.pca import (
+from rippledb_engine.operators.pca import (
     covariance_matrix,
     pca_top_component,
     pca_top_component_sql,
@@ -137,7 +137,7 @@ def _planted2(spark, n=500):
 
 
 def test_pca_two_components_match_twin_and_are_orthogonal(spark):
-    from rippledb_spark.operators.pca import (
+    from rippledb_engine.operators.pca import (
         pca_top_components,
         pca_top_components_sql,
     )
@@ -177,7 +177,7 @@ def test_pca_two_components_match_twin_and_are_orthogonal(spark):
 def test_pca_projection_variance_equals_eigenvalue(spark):
     import pyspark.sql.functions as F
 
-    from rippledb_spark.operators.pca import pca_project, pca_top_components
+    from rippledb_engine.operators.pca import pca_project, pca_top_components
 
     _, df = _planted2(spark)
     comps = pca_top_components(
@@ -207,7 +207,7 @@ def test_pca_projection_variance_equals_eigenvalue(spark):
 
 
 def test_pca_components_param_refusal(spark):
-    from rippledb_spark.operators.pca import (
+    from rippledb_engine.operators.pca import (
         pca_top_components,
         pca_top_components_sql,
     )
@@ -225,8 +225,8 @@ def test_driver_iteration_matches_distributed_bitexact(spark, monkeypatch):
     distributed JVM loop — same fold order, same per-round 6dp rounding
     (_round6_py ≡ F.round), same certificate tail — on real planted
     corpora, including the full deflation sequence."""
-    from rippledb_spark.operators import pca as pca_mod
-    from rippledb_spark.operators.pca import pca_top_components
+    from rippledb_engine.operators import pca as pca_mod
+    from rippledb_engine.operators.pca import pca_top_components
 
     for planted in (_planted, _planted2):
         _, df = planted(spark)
@@ -249,7 +249,7 @@ def test_round6_py_matches_jvm_round(spark):
     boundaries, negatives, and shortest-repr edge cases."""
     import pyspark.sql.functions as F
 
-    from rippledb_spark.operators.pca import _round6_py
+    from rippledb_engine.operators.pca import _round6_py
 
     vals = []
     # 6dp half boundaries and near-boundaries, both signs
@@ -272,7 +272,7 @@ def test_round6_py_matches_jvm_round(spark):
 def test_power_iteration_ragged_matrix_falls_back(spark):
     """A cov frame that is not dense d×d must keep the distributed
     path's semantics (the driver path refuses and falls back)."""
-    from rippledb_spark.operators.pca import (
+    from rippledb_engine.operators.pca import (
         _collect_dense_matrix,
         power_iteration_top,
     )

@@ -9,8 +9,8 @@ import pytest
 
 import pyspark.sql.functions as F
 
-from rippledb_spark.operators import audiohash as AH
-from rippledb_spark.operators import imagehash as IH
+from rippledb_engine.operators import audiohash as AH
+from rippledb_engine.operators import imagehash as IH
 
 
 def _ids_df(spark, n=40):
@@ -319,9 +319,9 @@ def test_decode_image_pixels_dispatch_exact_all_formats():
     block-constant content, GIF LZW indices through the identity-gray
     table, BMP BI_RGB and BI_RLE8 via palette luma, TIFF strips with
     and without LZW."""
-    from rippledb_spark.operators.imagehash import decode_image_pixels
-    from rippledb_spark.operators.jpeg import encode_jpeg_gray
-    from rippledb_spark.operators.multimodal import (
+    from rippledb_engine.operators.imagehash import decode_image_pixels
+    from rippledb_engine.operators.jpeg import encode_jpeg_gray
+    from rippledb_engine.operators.multimodal import (
         encode_bmp,
         encode_gif_gray,
         encode_png,
@@ -345,7 +345,7 @@ def test_decode_image_pixels_dispatch_exact_all_formats():
 
 
 def test_decode_image_pixels_unknown_type_refuses():
-    from rippledb_spark.operators.imagehash import decode_image_pixels
+    from rippledb_engine.operators.imagehash import decode_image_pixels
 
     with pytest.raises(ValueError, match="no image decoder"):
         decode_image_pixels(b"\x00" * 32, "image/webp")
@@ -354,7 +354,7 @@ def test_decode_image_pixels_unknown_type_refuses():
 def test_palette_luma_weights():
     """Non-identity palettes go through integer Rec.601 luma (exact for
     identity-gray by weight-sum-1000 construction)."""
-    from rippledb_spark.operators.imagehash import _palette_luma
+    from rippledb_engine.operators.imagehash import _palette_luma
 
     pal = [(255, 0, 0), (0, 255, 0), (0, 0, 255)] + [(7, 7, 7)] * 253
     out = _palette_luma(bytes([0, 1, 2, 3]), pal)
@@ -432,7 +432,7 @@ def test_mpeg1_video_ahash_matches_naive(spark):
 
 
 def test_video_dispatch_unknown_and_corrupt(spark):
-    from rippledb_spark.operators.imagehash import decode_video_gray_frames
+    from rippledb_engine.operators.imagehash import decode_video_gray_frames
 
     with pytest.raises(ValueError, match="no video decoder"):
         decode_video_gray_frames(b"\x00" * 16, "video/webm")
@@ -504,7 +504,7 @@ def test_audio_dual_pairs_gate_and_recall(spark):
 def test_dct_phash_matches_naive(spark):
     """The Arrow-stage integer DCT (T @ px @ T.T) + JVM median/packing
     must land the pure-Python closed-form hash bit for bit."""
-    from rippledb_spark.operators import dctphash as DP
+    from rippledb_engine.operators import dctphash as DP
 
     ids = [0, 5, 49, 123, 250]
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
@@ -536,9 +536,9 @@ def test_dct_phash_matches_naive(spark):
 def test_dct_phash_corrupt_and_formats(spark):
     """Corrupt rows drop; the DCT tier rides the SAME format dispatch
     as the aHash tier (a JPEG and a PNG of one field hash identically)."""
-    from rippledb_spark.operators import dctphash as DP
-    from rippledb_spark.operators.jpeg import encode_jpeg_gray
-    from rippledb_spark.operators.multimodal import encode_png
+    from rippledb_engine.operators import dctphash as DP
+    from rippledb_engine.operators.jpeg import encode_jpeg_gray
+    from rippledb_engine.operators.multimodal import encode_png
 
     w, h, px = _mixed_field(3)
     media = spark.createDataFrame(
@@ -584,8 +584,8 @@ def test_animated_gif_partial_frame_composites(spark):
     """r15: a partial second frame COMPOSITES over the logical screen
     (the r14 refusal is gone) — both displayed frames come back at
     screen dims, the smaller update overlaid on the persisted canvas."""
-    from rippledb_spark.operators.imagehash import decode_video_gray_frames
-    from rippledb_spark.operators.multimodal import encode_gif_frames
+    from rippledb_engine.operators.imagehash import decode_video_gray_frames
+    from rippledb_engine.operators.multimodal import encode_gif_frames
 
     ident = [(i, i, i) for i in range(256)]
     base = bytes((11 * k) % 256 for k in range(12))
@@ -609,8 +609,8 @@ def test_gif_compositor_palettes_disposal_transparency():
     leave the canvas, disposal 2 restores the rect to background and
     3 to the pre-frame canvas, and never-painted areas show the
     background color."""
-    from rippledb_spark.operators.imagehash import composite_gif_luma_frames
-    from rippledb_spark.operators.multimodal import encode_gif_frames
+    from rippledb_engine.operators.imagehash import composite_gif_luma_frames
+    from rippledb_engine.operators.multimodal import encode_gif_frames
 
     ident = [(i, i, i) for i in range(256)]
     base = bytes((7 * k) % 256 for k in range(12 * 8))
@@ -655,8 +655,8 @@ def test_gif_compositor_refusals():
     flagged as violated by the silent global-palette fallback)."""
     import pytest
 
-    from rippledb_spark.operators.imagehash import composite_gif_luma_frames
-    from rippledb_spark.operators.multimodal import encode_gif_frames
+    from rippledb_engine.operators.imagehash import composite_gif_luma_frames
+    from rippledb_engine.operators.multimodal import encode_gif_frames
 
     ident = [(i, i, i) for i in range(256)]
     small = [(0, 0, 0), (255, 255, 255)]
@@ -687,7 +687,7 @@ def test_gif_compositor_refusals():
         # hand-made frame: easier — encode with indices in range, then
         # decode a stream built directly with a 2-entry table and a
         # field of 3s through the raw fixed-width encoder
-        from rippledb_spark.operators.multimodal import _gif_lzw_fixed
+        from rippledb_engine.operators.multimodal import _gif_lzw_fixed
         import struct as _s
 
         raw = bytearray(b"GIF89a") + _s.pack("<HH", 2, 2)
@@ -763,8 +763,8 @@ def test_near_dup_drops_dual_gate_semantics(spark):
 
 
 def test_media_confirm_radii_match_source_constants():
-    from rippledb_spark.operators.audiohash import MAX_HAMMING2
-    from rippledb_spark.operators.dctphash import DCT_CONFIRM_MAX_HAMMING
+    from rippledb_engine.operators.audiohash import MAX_HAMMING2
+    from rippledb_engine.operators.dctphash import DCT_CONFIRM_MAX_HAMMING
 
     assert IH.MEDIA_CONFIRM_RADII == {
         "image": DCT_CONFIRM_MAX_HAMMING,

@@ -9,10 +9,10 @@ import hashlib
 import pytest
 import pyspark.sql.functions as F
 
-from rippledb_spark.functions import text as TX
-from rippledb_spark.operators import dedup as DD
-from rippledb_spark.operators import multimodal as MM
-from rippledb_spark.operators import similarity as SIM
+from rippledb_engine.functions import text as TX
+from rippledb_engine.operators import dedup as DD
+from rippledb_engine.operators import multimodal as MM
+from rippledb_engine.operators import similarity as SIM
 
 DOCS = [
     (1, "the quick brown fox jumps over the lazy dog near the river bank"),
@@ -118,7 +118,7 @@ def test_simhash_identical_zero_distance(docs):
 def test_simhash_multirotation_catches_boundary_pair(spark):
     """Signatures differing ONLY in the top bit sit in different top-16-bit
     blocks — the single-blocking miss. A rotated view must catch them."""
-    from rippledb_spark.operators.dedup import simhash_pairs_from_sigs
+    from rippledb_engine.operators.dedup import simhash_pairs_from_sigs
 
     sigs = spark.createDataFrame(
         [(1, -(2**63)), (2, 0), (3, 0x0000FFFF00000000)],  # 1 vs 2: hamming 1
@@ -205,7 +205,7 @@ def test_blocked_top1_chunked_matches_unchunked(spark):
 def test_ivf_bounded_sample_fit(spark):
     """When the corpus exceeds max_train the quantizer fits on a bounded,
     value-deterministic sample — and the probe output is stable."""
-    from rippledb_spark.operators.similarity import ivf_topk
+    from rippledb_engine.operators.similarity import ivf_topk
 
     rows = [(i, [float((i * 7 + j) % 13) for j in range(4)]) for i in range(300)]
     e = spark.createDataFrame(rows, ["vec_id", "embedding"])
@@ -352,7 +352,7 @@ def test_multimodal_frame_sampling(spark, docs):
 
 
 def test_merge_upsert_routing(spark):
-    from rippledb_spark.operators.merge import merge_upsert
+    from rippledb_engine.operators.merge import merge_upsert
 
     target = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)], ["id", "tag", "v"]
@@ -372,7 +372,7 @@ def test_merge_upsert_routing(spark):
 def test_resample_fill_forward_fills_gaps(spark):
     from datetime import datetime
 
-    from rippledb_spark.operators.timeseries import resample_fill
+    from rippledb_engine.operators.timeseries import resample_fill
 
     rows = [
         ("k1", datetime(2024, 1, 1, 10, 15), 4.0),
@@ -401,7 +401,7 @@ class TestPacking:
 
     @pytest.fixture(scope="class")
     def packs(self, spark):
-        from rippledb_spark.operators.packing import pack_by_token_budget
+        from rippledb_engine.operators.packing import pack_by_token_budget
 
         rows = [(i, "en" if i % 3 else "de", 10 + (i * 7) % 50) for i in range(1, 101)]
         df = spark.createDataFrame(rows, ["doc_id", "lang", "n_tok"])
@@ -445,7 +445,7 @@ def test_near_dup_cluster_transitivity(spark):
     """Pair-level dedup misses A~B~C transitivity; the cluster op must
     collapse the planted trio (1 exact-dup-of-2, 3 near-dup-of-1) into
     ONE cluster with doc 1 canonical."""
-    from rippledb_spark.operators.graph import connected_components
+    from rippledb_engine.operators.graph import connected_components
 
     docs = spark.createDataFrame(DOCS, ["doc_id", "text"])
     pairs = DD.ngram_jaccard_pairs(docs, "text", "doc_id", threshold=0.3)
@@ -460,7 +460,7 @@ def test_near_dup_cluster_transitivity(spark):
 
 
 def test_chunk_by_tokens_windows_and_overlap(spark):
-    from rippledb_spark.operators.chunking import chunk_by_tokens
+    from rippledb_engine.operators.chunking import chunk_by_tokens
 
     text = " ".join(f"t{i}" for i in range(10))  # 10 tokens
     df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
@@ -477,7 +477,7 @@ def test_chunk_by_tokens_windows_and_overlap(spark):
 
 
 def test_chunk_by_tokens_short_doc_single_chunk(spark):
-    from rippledb_spark.operators.chunking import chunk_by_tokens
+    from rippledb_engine.operators.chunking import chunk_by_tokens
 
     df = spark.createDataFrame([(1, "a b"), (2, "x")], ["doc_id", "text"])
     rows = chunk_by_tokens(df, "text", "doc_id", 8, 2).collect()
@@ -488,7 +488,7 @@ def test_chunk_by_tokens_short_doc_single_chunk(spark):
 
 
 def test_chunk_by_tokens_exact_multiple_no_empty_tail(spark):
-    from rippledb_spark.operators.chunking import chunk_by_tokens
+    from rippledb_engine.operators.chunking import chunk_by_tokens
 
     text = " ".join(f"t{i}" for i in range(8))
     df = spark.createDataFrame([(1, text)], ["doc_id", "text"])
@@ -498,7 +498,7 @@ def test_chunk_by_tokens_exact_multiple_no_empty_tail(spark):
 
 
 def test_chunk_by_tokens_validates_params(spark):
-    from rippledb_spark.operators.chunking import chunk_by_tokens
+    from rippledb_engine.operators.chunking import chunk_by_tokens
 
     df = spark.createDataFrame([(1, "a")], ["doc_id", "text"])
     with pytest.raises(ValueError):
@@ -511,7 +511,7 @@ def test_chunk_by_tokens_validates_params(spark):
 
 
 def test_remove_frequent_spans_cuts_boilerplate(spark):
-    from rippledb_spark.operators.cleaning import remove_frequent_ngram_spans
+    from rippledb_engine.operators.cleaning import remove_frequent_ngram_spans
 
     rows = [
         (1, "terms of service apply alpha beta gamma"),
@@ -535,7 +535,7 @@ def test_remove_frequent_spans_cuts_boilerplate(spark):
 
 
 def test_remove_frequent_spans_overlapping_coverage(spark):
-    from rippledb_spark.operators.cleaning import remove_frequent_ngram_spans
+    from rippledb_engine.operators.cleaning import remove_frequent_ngram_spans
 
     # the frequent bigram 'x x' overlaps itself inside 'x x x' — covered
     # positions union, tokens are not double-removed or miscounted
@@ -547,7 +547,7 @@ def test_remove_frequent_spans_overlapping_coverage(spark):
 
 
 def test_remove_frequent_spans_no_frequent_is_identity(spark):
-    from rippledb_spark.operators.cleaning import remove_frequent_ngram_spans
+    from rippledb_engine.operators.cleaning import remove_frequent_ngram_spans
 
     rows = [(1, "a b c"), (2, "d e f")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
@@ -560,7 +560,7 @@ def test_remove_frequent_spans_fully_covered_doc_survives(spark):
     """A document whose EVERY token sits inside frequent spans must still
     yield an output row (n_kept=0, cleaned_text='') — corpus accounting
     never silently loses documents (r6 contract fix)."""
-    from rippledb_spark.operators.cleaning import remove_frequent_ngram_spans
+    from rippledb_engine.operators.cleaning import remove_frequent_ngram_spans
 
     rows = [(i, "legal boilerplate") for i in range(4)] + [
         (9, "legal boilerplate plus real content")
@@ -701,7 +701,7 @@ def test_gif_frame_sampling_real(spark, docs):
 
 
 def test_pii_scrub_masks_and_counts(spark):
-    from rippledb_spark.operators import pii
+    from rippledb_engine.operators import pii
 
     rows = [
         (1, "mail bob.smith+x@corp.example.org now"),
@@ -724,7 +724,7 @@ def test_pii_scrub_masks_and_counts(spark):
 def test_pii_placeholders_not_rematched(spark):
     """A later pattern in the chain must never match an earlier pattern's
     placeholder (tokens contain no digits/'@')."""
-    from rippledb_spark.operators import pii
+    from rippledb_engine.operators import pii
 
     df = spark.createDataFrame([(1, "x 1.2.3.4 y 555-123-4567")], ["doc_id", "text"])
     r = pii.scrub_pii(df, "text", "doc_id").collect()[0]
@@ -733,7 +733,7 @@ def test_pii_placeholders_not_rematched(spark):
 
 
 def test_remove_frequent_lines(spark):
-    from rippledb_spark.operators.cleaning import remove_frequent_lines
+    from rippledb_engine.operators.cleaning import remove_frequent_lines
 
     rows = [
         (1, "Cookie notice\nreal content one\nCopyright Footer"),
@@ -755,7 +755,7 @@ def test_remove_frequent_lines(spark):
 
 
 def test_remove_frequent_lines_fully_boilerplate_doc_survives(spark):
-    from rippledb_spark.operators.cleaning import remove_frequent_lines
+    from rippledb_engine.operators.cleaning import remove_frequent_lines
 
     rows = [(i, "menu\nlogin") for i in range(4)] + [(9, "menu\nreal stuff")]
     df = spark.createDataFrame(rows, ["doc_id", "text"])
@@ -771,7 +771,7 @@ def test_remove_frequent_lines_fully_boilerplate_doc_survives(spark):
 
 def test_bpe_learns_classic_merges(spark):
     """The Sennrich toy corpus: merges es → est → lo → low in order."""
-    from rippledb_spark.operators.bpe import SEP, learn_bpe_merges
+    from rippledb_engine.operators.bpe import SEP, learn_bpe_merges
 
     text = " ".join(
         ["low"] * 5 + ["lower"] * 2 + ["newest"] * 6 + ["widest"] * 3
@@ -791,7 +791,7 @@ def test_bpe_merge_is_boundary_safe(spark):
     """A learned symbol must not merge across other symbols' boundaries:
     with words 'ba b ab', merging (a, b) must touch only a⋄b adjacencies,
     never the 'a' inside 'ba'."""
-    from rippledb_spark.operators.bpe import SEP, learn_bpe_merges
+    from rippledb_engine.operators.bpe import SEP, learn_bpe_merges
 
     df = spark.createDataFrame([("ab ab ab ba ba b",)], ["text"])
     merges, words = learn_bpe_merges(df, "text", n_merges=1)
@@ -802,7 +802,7 @@ def test_bpe_merge_is_boundary_safe(spark):
 
 
 def test_bpe_early_stop_below_min_count(spark):
-    from rippledb_spark.operators.bpe import learn_bpe_merges
+    from rippledb_engine.operators.bpe import learn_bpe_merges
 
     df = spark.createDataFrame([("xy",)], ["text"])
     merges, _ = learn_bpe_merges(df, "text", n_merges=5, min_pair_count=2)
@@ -814,7 +814,7 @@ def test_bigram_lm_scores(spark):
     the corpus-trained model; probabilities follow add-k arithmetic."""
     import math
 
-    from rippledb_spark.operators.lm import bigram_lm_scores
+    from rippledb_engine.operators.lm import bigram_lm_scores
 
     rows = [
         (1, "a a a a a a a a"),          # one dominant bigram
@@ -835,7 +835,7 @@ def test_bigram_lm_scores(spark):
 
 
 def test_prefix_containment_pairs(spark):
-    from rippledb_spark.operators.dedup import prefix_containment_pairs
+    from rippledb_engine.operators.dedup import prefix_containment_pairs
 
     long = " ".join(f"w{i}" for i in range(30))
     prefix20 = " ".join(f"w{i}" for i in range(20))
@@ -858,7 +858,7 @@ def test_bigram_lm_heldout_unseen_mass(spark):
     scores k/(kV) = 1/V."""
     import math
 
-    from rippledb_spark.operators.lm import bigram_lm_scores
+    from rippledb_engine.operators.lm import bigram_lm_scores
 
     train = spark.createDataFrame([(0, "a b a b c d")], ["doc_id", "text"])
     held = spark.createDataFrame(
@@ -1069,7 +1069,7 @@ def test_apply_bpe_merges_frozen_list(spark):
     """r9: the frozen-merges encode path — greedy left-to-right merge
     application per word, word boundaries never merged, token counts and
     the symbol digest exact."""
-    from rippledb_spark.operators.bpe import apply_bpe_merges
+    from rippledb_engine.operators.bpe import apply_bpe_merges
 
     rows = [(0, "abab ab"), (1, "aaa"), (2, ""), (3, "xy")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
@@ -1097,7 +1097,7 @@ def test_dedup_paragraphs_first_occurrence_semantics(spark):
     ONLY the lowest-(doc, position) occurrence; empty paragraphs are
     always kept (formatting); within-doc repeats dedup too; every doc
     yields exactly one row."""
-    from rippledb_spark.operators.cleaning import dedup_paragraphs
+    from rippledb_engine.operators.cleaning import dedup_paragraphs
 
     rows = [
         (0, "alpha\nShared Par\nbeta"),
@@ -1129,7 +1129,7 @@ def test_content_defined_chunks_resync_and_twin(spark):
     hashes; tokens are conserved; the DuckDB twin replays exactly."""
     import duckdb as _dd
 
-    from rippledb_spark.operators.chunking import (
+    from rippledb_engine.operators.chunking import (
         content_defined_chunks,
         content_defined_chunks_sql,
     )

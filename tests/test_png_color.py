@@ -8,7 +8,7 @@ import zlib
 import numpy as np
 import pytest
 
-from rippledb_spark.operators.multimodal import (
+from rippledb_engine.operators.multimodal import (
     _PNG_SIG,
     _png_chunk,
     decode_png_any,
@@ -157,7 +157,7 @@ def test_synth_fixtures_match_their_formulas():
 
 def test_palette_trns_expands_to_rgba():
     """r11: tRNS alpha — short table, opaque tail, RGBA expansion."""
-    from rippledb_spark.operators.multimodal import (
+    from rippledb_engine.operators.multimodal import (
         decode_png_any,
         encode_png_palette,
     )
@@ -181,7 +181,7 @@ def test_palette_trns_expands_to_rgba():
 def test_trns_refusals():
     import pytest as _pytest
 
-    from rippledb_spark.operators.multimodal import encode_png_palette
+    from rippledb_engine.operators.multimodal import encode_png_palette
 
     palette = bytes(range(48))
     idx = bytes([0] * 24)

@@ -5,7 +5,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from rippledb_spark.operators import pq as PQ
+from rippledb_engine.operators import pq as PQ
 
 
 def _clustered_corpus(spark, n_per=6, dims=8):
@@ -99,7 +99,7 @@ def test_dims_divisibility_refusal(spark):
 def test_quantize_int8_bounds_and_zero_vector(spark):
     import pyspark.sql.functions as F
 
-    from rippledb_spark.functions.vector import as_double_array, quantize_int8
+    from rippledb_engine.functions.vector import as_double_array, quantize_int8
 
     rows = [
         (0, [0.5, -1.0, 0.25, 1.0]),
@@ -136,7 +136,7 @@ def test_quantize_int8_bounds_and_zero_vector(spark):
 def test_bm25_ranking_properties(spark):
     import duckdb as _dd
 
-    from rippledb_spark.operators.retrieval import bm25_topk, bm25_topk_sql
+    from rippledb_engine.operators.retrieval import bm25_topk, bm25_topk_sql
 
     rows = [
         (0, "apple banana apple apple"),      # tf-heavy on apple
@@ -171,7 +171,7 @@ def test_bm25_ranking_properties(spark):
 
 
 def test_scd2_collapse_and_intervals(spark):
-    from rippledb_spark.operators.scd import scd2_from_changes
+    from rippledb_engine.operators.scd import scd2_from_changes
 
     rows = [
         (1, 10, "A"), (1, 20, "A"),   # no-op change collapses
@@ -196,7 +196,7 @@ def test_scd2_null_valued_history(spark):
     NULL out against a NULL prev and DROP the row, collapsing a
     non-NULL→NULL→non-NULL history; eqNullSafe + the row_number=1 first
     marker keep all three intervals — in BOTH twins."""
-    from rippledb_spark.operators.scd import (
+    from rippledb_engine.operators.scd import (
         scd2_from_changes,
         scd2_from_changes_sql,
     )
@@ -232,7 +232,7 @@ def test_scd2_null_valued_history(spark):
 
 
 def test_pq_encode_reproduces_training_codes_and_places_new_vectors(spark):
-    from rippledb_spark.operators.pq import pq_codes, pq_encode
+    from rippledb_engine.operators.pq import pq_codes, pq_encode
 
     df = _clustered_corpus(spark)
     codes, books = PQ.pq_codes(df, "vec", "pid", dims=8, m=2, k=4)
@@ -326,7 +326,7 @@ def test_ivfpq_dims_divisibility_refusal(spark):
 
 
 def test_ivfpq_encode_reproduces_index_and_routes_new_vectors(spark):
-    from rippledb_spark.operators.pq import ivfpq_encode, ivfpq_index
+    from rippledb_engine.operators.pq import ivfpq_encode, ivfpq_index
 
     df = _clustered_corpus(spark)
     assign, coarse, codes, books = PQ.ivfpq_index(
@@ -430,7 +430,7 @@ def test_ivfpq_save_load_roundtrip_query_identical(spark, tmp_path):
     path = str(tmp_path / "ivfpq_store")
     PQ.save_index(path, assign, coarse, codes, books)
     lcoarse, lbooks, lcellcodes = PQ.load_index(spark, path)
-    from rippledb_spark.functions.vector import as_double_array
+    from rippledb_engine.functions.vector import as_double_array
 
     queries = (
         df.select(F.col("pid").alias("q_pid"),
@@ -463,7 +463,7 @@ def test_bm25_batch_matches_single_query_form(spark):
     """r9: the batched form must reproduce the single-query operator for
     each query id, and a WindowGroupLimit rank-pushdown must appear in
     the plan (the partitioned-top-k shape PLANS.md documents)."""
-    from rippledb_spark.operators.retrieval import bm25_topk, bm25_topk_batch
+    from rippledb_engine.operators.retrieval import bm25_topk, bm25_topk_batch
 
     rows = [
         (0, "apple banana apple apple"),
@@ -497,7 +497,7 @@ def test_rotated_pq_beats_plain_on_anisotropic_corpus(spark, sf_dir):
     """r11 (OPQ-lite): on the planted anisotropic corpus the PCA-rotated
     PQ's original-space recall must strictly beat plain PQ's — the
     measurable Ge et al. 2013 claim the registered row carries."""
-    from rippledb_spark.queries.pipeline9 import pq_rotated_topk
+    from rippledb_engine.queries.pipeline9 import pq_rotated_topk
 
     rows = pq_rotated_topk(spark, sf_dir).collect()
     assert len(rows) == 15
@@ -512,8 +512,8 @@ def test_rotated_pq_beats_plain_on_anisotropic_corpus(spark, sf_dir):
 def test_rotate_vectors_shape_and_determinism(spark, sf_dir):
     """The rotation frame: one R-dim 6dp vector per input id, stable
     across runs (replayable-iteration contract)."""
-    from rippledb_spark.operators.opq import rotate_vectors
-    from rippledb_spark.tables import load
+    from rippledb_engine.operators.opq import rotate_vectors
+    from rippledb_engine.tables import load
 
     e = load(spark, sf_dir, "embeddings")
     a = rotate_vectors(e, "embedding", "vec_id", 64, r=4, pca_iterations=3)
@@ -527,8 +527,8 @@ def test_rotate_vectors_shape_and_determinism(spark, sf_dir):
 def test_pq_rotated_refuses_bad_split(spark, sf_dir):
     import pytest as _pytest
 
-    from rippledb_spark.operators.opq import pq_rotated_topk as op
-    from rippledb_spark.tables import load
+    from rippledb_engine.operators.opq import pq_rotated_topk as op
+    from rippledb_engine.tables import load
 
     e = load(spark, sf_dir, "embeddings")
     with _pytest.raises(ValueError, match="subspaces"):
@@ -540,14 +540,14 @@ def test_rotated_index_save_load_serve_roundtrip(spark, sf_dir, tmp_path_factory
     frames, reload, serve original-space queries; results identical to
     serving off the in-memory frames (and the rotation uses the
     TRAINING means, not query-batch means)."""
-    from rippledb_spark.operators.opq import (
+    from rippledb_engine.operators.opq import (
         load_rotated_index,
         rotated_query_topk,
         save_rotated_index,
         train_rotated_index,
     )
-    from rippledb_spark.functions.vector import as_double_array
-    from rippledb_spark.tables import load
+    from rippledb_engine.functions.vector import as_double_array
+    from rippledb_engine.tables import load
     import pyspark.sql.functions as F
 
     e = load(spark, sf_dir, "embeddings")
@@ -578,7 +578,7 @@ def test_rotated_index_save_load_serve_roundtrip(spark, sf_dir, tmp_path_factory
 
 
 def test_givens_schedule_covers_all_pairs_disjointly():
-    from rippledb_spark.operators.opq import givens_schedule
+    from rippledb_engine.operators.opq import givens_schedule
 
     for r in (4, 8):
         steps = givens_schedule(r)
@@ -599,7 +599,7 @@ def test_polar_sweep_increases_trace_and_stays_orthogonal():
     """The Givens coordinate-descent Procrustes step: trace(G·M) must
     not decrease, and G must stay orthogonal to within the 6dp cos/sin
     grid (r steps × 1e-6 per entry)."""
-    from rippledb_spark.operators.opq import givens_schedule, polar_sweeps
+    from rippledb_engine.operators.opq import givens_schedule, polar_sweeps
 
     # a deliberately non-symmetric moment matrix
     M = [
@@ -639,14 +639,14 @@ def test_opq_alternation_distortion_chain_is_monotone(spark, sf_dir):
     plain PQ's recall (the Ge et al. claim)."""
     import pyspark.sql.functions as F
 
-    from rippledb_spark.operators.opq import (
+    from rippledb_engine.operators.opq import (
         opq_alternating_rotate,
         pq_distortion_grid,
         rotate_vectors,
     )
-    from rippledb_spark.queries.pipeline9 import _aniso_vectors
-    from rippledb_spark.queries.pipeline10 import pq_opq_alternating_topk
-    from rippledb_spark.tables import load
+    from rippledb_engine.queries.pipeline9 import _aniso_vectors
+    from rippledb_engine.queries.pipeline10 import pq_opq_alternating_topk
+    from rippledb_engine.tables import load
 
     e = load(spark, sf_dir, "embeddings")
     av = _aniso_vectors(e).localCheckpoint(eager=True)
@@ -684,8 +684,8 @@ def test_alternating_index_save_load_serve_roundtrip(spark, sf_dir, tmp_path_fac
     coordinates exactly (codes were built from them)."""
     import pyspark.sql.functions as F
 
-    from rippledb_spark.functions.vector import as_double_array
-    from rippledb_spark.operators.opq import (
+    from rippledb_engine.functions.vector import as_double_array
+    from rippledb_engine.operators.opq import (
         alternating_query_topk,
         apply_frozen_rotations,
         load_alternating_index,
@@ -693,7 +693,7 @@ def test_alternating_index_save_load_serve_roundtrip(spark, sf_dir, tmp_path_fac
         save_alternating_index,
         train_alternating_index,
     )
-    from rippledb_spark.tables import load
+    from rippledb_engine.tables import load
 
     e = load(spark, sf_dir, "embeddings")
     means, comps, givens, codes, books = train_alternating_index(
@@ -733,7 +733,7 @@ def test_alternating_index_save_load_serve_roundtrip(spark, sf_dir, tmp_path_fac
     )
     got = {r["pid"]: list(r["rv"]) for r in rv_serve.collect()}
     # training-time rotated vectors for the same pids
-    from rippledb_spark.operators.opq import opq_alternating_rotate, rotate_vectors
+    from rippledb_engine.operators.opq import opq_alternating_rotate, rotate_vectors
 
     rdf = rotate_vectors(e, "embedding", "vec_id", 64, 4, pca_iterations=3)
     full = opq_alternating_rotate(

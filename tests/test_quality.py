@@ -5,7 +5,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from rippledb_spark.operators import quality as Q
+from rippledb_engine.operators import quality as Q
 
 
 def _metrics(spark, rows):

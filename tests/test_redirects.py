@@ -5,7 +5,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from rippledb_spark.operators.redirects import (
+from rippledb_engine.operators.redirects import (
     resolve_redirect_chains,
     resolve_redirect_chains_sql,
 )

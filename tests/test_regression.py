@@ -7,7 +7,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from rippledb_spark.operators.regression import (
+from rippledb_engine.operators.regression import (
     least_squares_3,
     least_squares_3_sql,
 )

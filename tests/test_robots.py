@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import duckdb
 
-from rippledb_spark.functions.robots import (
+from rippledb_engine.functions.robots import (
     robots_decisions,
     robots_decisions_sql,
     robots_rules,

@@ -7,8 +7,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from rippledb_spark.operators.skew import bucketed_table, salted_join, two_phase_agg
-from rippledb_spark.tables import load
+from rippledb_engine.operators.skew import bucketed_table, salted_join, two_phase_agg
+from rippledb_engine.tables import load
 
 
 @pytest.fixture(scope="module")
@@ -80,7 +80,7 @@ def test_bucketed_percent_rank_exact_with_duplicates(spark):
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from rippledb_spark.operators.distribution import bucketed_percent_rank
+    from rippledb_engine.operators.distribution import bucketed_percent_rank
 
     rows = [(i, float(v)) for i, v in enumerate([5, 5, 5, 1, 2, 2, 9, 9, 9, 9, 3, 7] * 5)]
     df = spark.createDataFrame(rows, ["id", "v"])
@@ -108,7 +108,7 @@ def test_banded_range_count_matches_window(spark):
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from rippledb_spark.operators.distribution import banded_range_count
+    from rippledb_engine.operators.distribution import banded_range_count
 
     vals = [0.0, 10.0, 10.0, 49.9, 50.0, 50.1, 99.9, 100.0, 150.0, 155.5, 250.0]
     df = spark.createDataFrame(
@@ -130,8 +130,8 @@ def test_scaled_compositions_have_no_single_partition_exchange(spark):
     """Plan-shape regression guard: the r4 scaled compositions exist
     precisely to avoid the global-window SinglePartition exchange — lock
     that property so a refactor can't silently reintroduce it."""
-    from rippledb_spark.queries.pipeline4 import pack_documents_token_budget
-    from rippledb_spark.queries.relational5 import (
+    from rippledb_engine.queries.pipeline4 import pack_documents_token_budget
+    from rippledb_engine.queries.relational5 import (
         percentile_rank_customers_bucketed,
         price_band_neighbors_banded,
     )
@@ -152,7 +152,7 @@ def test_banded_range_count_negative_values(spark):
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from rippledb_spark.operators.distribution import banded_range_count
+    from rippledb_engine.operators.distribution import banded_range_count
 
     vals = [-120.0, -50.0, -49.9, -0.1, 0.0, 0.1, 49.9, 50.0, 120.0]
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], ["id", "v"])
@@ -175,7 +175,7 @@ def test_bucketed_percent_rank_random_seeds(spark):
     import pyspark.sql.functions as F
     from pyspark.sql import Window
 
-    from rippledb_spark.operators.distribution import bucketed_percent_rank
+    from rippledb_engine.operators.distribution import bucketed_percent_rank
 
     for seed in range(3):
         rng = random.Random(seed)
@@ -272,7 +272,7 @@ def test_substring_dedup_plan_shape(spark):
     """r8 exact-substring dedup: the duplicate gate must stay ONE
     fp-keyed window (no groupBy-plus-join recompute of the positions),
     nothing cartesian, and no single-partition exchange."""
-    from rippledb_spark.operators.dedup import duplicated_substring_runs
+    from rippledb_engine.operators.dedup import duplicated_substring_runs
 
     d = load(spark, "/root/testdata/sf0.001", "documents")
     plan = (
@@ -294,7 +294,7 @@ def test_bm25_topk_plan_shape(spark):
     partition ever carries more than topk candidate rows. The old form
     relied on Spark 4.x's InferWindowGroupLimit rescuing a rank-filtered
     unpartitioned window; this pins the scale-safe shape explicitly."""
-    from rippledb_spark.operators.retrieval import bm25_topk
+    from rippledb_engine.operators.retrieval import bm25_topk
 
     d = load(spark, "/root/testdata/sf0.001", "documents")
     q = bm25_topk(d, "text", "doc_id", ["the", "data"], topk=10)
@@ -312,7 +312,7 @@ def test_bm25_topk_batch_plan_shape(spark):
     batch form genuinely depends on this optimizer rule, so a silent
     plan-shape regression here is exactly what the r8 BM25 finding was
     about."""
-    from rippledb_spark.operators.retrieval import bm25_topk_batch
+    from rippledb_engine.operators.retrieval import bm25_topk_batch
 
     d = load(spark, "/root/testdata/sf0.001", "documents")
     q = spark.createDataFrame(
@@ -334,7 +334,7 @@ def test_bm25_topk_batch_plan_shape(spark):
 def test_pq_query_path_broadcasts_lookup_table(spark):
     """r8 PQ/ADC: the corpus-side join against the lookup table must be
     a broadcast join (the lt is nq·m·k rows), never a cartesian."""
-    from rippledb_spark.operators.pq import pq_adc_topk
+    from rippledb_engine.operators.pq import pq_adc_topk
 
     df = spark.range(0, 64).select(
         F.col("id").alias("pid"),
@@ -356,7 +356,7 @@ def test_ivfpq_query_path_broadcasts_and_never_cartesians_the_corpus(spark):
     that key — and nothing in the query path may cartesian the corpus
     (the only cross joins are against broadcast 1-row/k-row frames and
     the bounded exact-twin certification block)."""
-    from rippledb_spark.operators.pq import ivfpq_topk
+    from rippledb_engine.operators.pq import ivfpq_topk
 
     df = spark.range(0, 64).select(
         F.col("id").alias("pid"),
@@ -380,7 +380,7 @@ def test_sketch_topk_windows_plan_as_window_group_limit(spark):
     rows per group, and nothing cartesians."""
     import pyspark.sql.functions as F2
 
-    from rippledb_spark.operators.sketches import (
+    from rippledb_engine.operators.sketches import (
         kmv_distinct_by_group,
         weighted_sample_by_group,
     )
@@ -405,7 +405,7 @@ def test_ivfpq_rerank_fetch_is_broadcast_never_cartesian(spark):
     join of the nq·R shortlist against the corpus — the exact-distance
     arithmetic runs on R·nq rows, never corpus×queries. The only
     non-equi join allowed is the bounded certification twin."""
-    from rippledb_spark.operators.pq import ivfpq_rerank_topk
+    from rippledb_engine.operators.pq import ivfpq_rerank_topk
 
     df = spark.range(0, 64).select(
         F.col("id").alias("pid"),
@@ -429,7 +429,7 @@ def test_pretraining_pipeline_single_partition_only_for_scalar_aggs(spark):
     per-language PARTIAL rows — bounded by #languages × #tasks, the
     standard scalar-agg shape); a refactor reintroducing a global
     window or sort would trip this."""
-    from rippledb_spark.queries.pipeline7 import (
+    from rippledb_engine.queries.pipeline7 import (
         pretraining_pipeline_accounting,
     )
 
@@ -457,7 +457,7 @@ def test_saved_index_query_path_prunes_partitions(spark, tmp_path_factory):
     as PartitionFilters — the executors never open files outside the
     probed cells. The bigint cast load_index applies must not break the
     pruning (Catalyst unwraps it)."""
-    from rippledb_spark.operators.pq import (
+    from rippledb_engine.operators.pq import (
         ivfpq_index,
         ivfpq_query_topk,
         load_index,
@@ -497,7 +497,7 @@ def test_classifier_serving_is_broadcast_shuffle_free(spark):
     """r11: logistic_predict must plan as one broadcast of the 1-row
     weight vector against the corpus — NO shuffle exchange anywhere
     (the exp-free serving contract in operators/classifier.py)."""
-    from rippledb_spark.operators.classifier import (
+    from rippledb_engine.operators.classifier import (
         logistic_predict,
         logistic_train,
     )
@@ -525,7 +525,7 @@ def test_unigram_serving_join_is_broadcastable(spark):
     """r11: unigram_doc_tokens joins the corpus word stream to the
     (small) word→segmentation table — the broadcast side must be the
     segmentation table, never the corpus."""
-    from rippledb_spark.operators.unigram import (
+    from rippledb_engine.operators.unigram import (
         distinct_words,
         seed_vocab,
         viterbi_segment,
@@ -556,7 +556,7 @@ def test_phash_hamming_pairs_plan_shape(spark):
     """r13 perceptual-hash blocking: the pair stage must be the banded
     EQUI-join (hash-partitionable on (band, bv)) — never a cartesian or
     nested-loop product, and no single-partition exchange anywhere."""
-    from rippledb_spark.operators.imagehash import hamming_pairs
+    from rippledb_engine.operators.imagehash import hamming_pairs
 
     hashes = spark.range(64).select(
         F.col("id").alias("media_id"),
@@ -581,7 +581,7 @@ def test_near_dup_drops_decodes_once(spark):
     plan — each union branch reads the one materialized frame instead
     of re-deriving it (pre-fix the groupBy over the decode ran once per
     branch)."""
-    from rippledb_spark.operators import imagehash as IH
+    from rippledb_engine.operators import imagehash as IH
 
     media = IH.synthesize_group_pngs(
         spark.range(8).select(F.col("id").alias("doc_id")), "doc_id"
@@ -603,8 +603,8 @@ def test_media_synthesizers_spread_across_cores(spark):
     run in ONE task because the id table is a single parquet split. The
     spread must (a) yield defaultParallelism partitions, and (b) change
     no payload byte (hash placement only re-routes rows)."""
-    from rippledb_spark.operators import multimodal as MM
-    from rippledb_spark.operators.mpeg1 import encode_mpeg1_intra
+    from rippledb_engine.operators import multimodal as MM
+    from rippledb_engine.operators.mpeg1 import encode_mpeg1_intra
 
     big = spark.range(16000).select(F.col("id").alias("doc_id")).coalesce(1)
     media = MM.synthesize_mpeg1_streams(big, "doc_id")
@@ -631,8 +631,8 @@ def test_spread_gates_on_estimated_input_size(spark):
     exchange outright (identity plan), an unknown-size frame keeps the
     full width, and the sf0.1-scale estimate keeps the measured r15
     widths."""
-    from rippledb_spark.operators.multimodal import spread_media_ids
-    from rippledb_spark.operators.skew import (
+    from rippledb_engine.operators.multimodal import spread_media_ids
+    from rippledb_engine.operators.skew import (
         _estimated_rows,
         spread_for_compute,
     )

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import duckdb
 
-from rippledb_spark.operators import semdedup as SD
+from rippledb_engine.operators import semdedup as SD
 
 
 def _df(spark, rows):

@@ -19,8 +19,8 @@ import math
 
 import pytest
 
-from rippledb_spark.operators import semdedup as SD
-from rippledb_spark.operators.clustering import (
+from rippledb_engine.operators import semdedup as SD
+from rippledb_engine.operators.clustering import (
     kmeans_assignments,
     kmeans_assignments_fast,
 )
@@ -102,7 +102,7 @@ def test_summary_fast_matches_certified_query(spark):
     """The pin the bench relies on: `semantic_dedup_summary_fast` (what
     bench.py times under the dedup_semantic_embedding key, same k=16)
     row-for-row equals the REGISTERED certified query's aggregation."""
-    from rippledb_spark.registry import all_queries
+    from rippledb_engine.registry import all_queries
 
     certified = all_queries()["dedup_semantic_embedding"](spark, SF001).collect()
     fast = (

@@ -7,7 +7,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from rippledb_spark.operators import sketches as SK
+from rippledb_engine.operators import sketches as SK
 
 
 def _corpus(spark, n=2000, card=97, groups=3):
@@ -268,7 +268,7 @@ def test_hyperball_matches_twin_and_tracks_exact(spark):
     the exact bounded closure on a known graph, and is monotone in t."""
     import duckdb as _dd
 
-    from rippledb_spark.operators.hyperball import (
+    from rippledb_engine.operators.hyperball import (
         exact_neighborhood_function,
         hyperball_neighborhood_function,
         hyperball_sql,
@@ -321,7 +321,7 @@ def test_hyperball_matches_twin_and_tracks_exact(spark):
 def test_hyperball_rounds_refusal(spark):
     import pytest as _pt
 
-    from rippledb_spark.operators.hyperball import (
+    from rippledb_engine.operators.hyperball import (
         hyperball_neighborhood_function,
         hyperball_sql,
     )
@@ -339,7 +339,7 @@ def test_feature_hash_vectors_twin_and_contracts(spark):
     token scale its cell by k)."""
     import duckdb as _dd
 
-    from rippledb_spark.operators.sketches import (
+    from rippledb_engine.operators.sketches import (
         feature_hash_vectors,
         feature_hash_vectors_sql,
     )

@@ -9,7 +9,7 @@ import json
 import pytest
 import pyspark.sql.functions as F
 
-from rippledb_spark.streaming import windows as SW
+from rippledb_engine.streaming import windows as SW
 
 EVENTS = [
     # (event_id, ts, user_id, event_type, value, props)
@@ -101,7 +101,7 @@ def test_sliding_stream_total(spark, stream_dir):
 
 
 def test_stateful_running_user_stats(spark, stream_dir):
-    from rippledb_spark.streaming.stateful import running_user_stats
+    from rippledb_engine.streaming.stateful import running_user_stats
 
     out = _run_stream(
         spark, running_user_stats(_read_stream(spark, stream_dir)), "t_state", mode="update"
@@ -218,7 +218,7 @@ def test_foreachbatch_upsert_parquet_sink(spark, tmp_path):
     import os
     import time
 
-    from rippledb_spark.streaming.sinks import start_upsert_parquet_sink
+    from rippledb_engine.streaming.sinks import start_upsert_parquet_sink
 
     d = tmp_path / "sink_src"
     d.mkdir()
@@ -267,7 +267,7 @@ def test_foreachbatch_upsert_sink_replay_idempotent(spark, tmp_path):
     import os
     import time
 
-    from rippledb_spark.streaming.sinks import start_upsert_parquet_sink
+    from rippledb_engine.streaming.sinks import start_upsert_parquet_sink
 
     d = tmp_path / "replay_src"
     d.mkdir()
@@ -318,7 +318,7 @@ def test_windowed_topk_sink_matches_batch(spark, tmp_path):
     import time
 
     from pyspark.sql import Window as W
-    from rippledb_spark.streaming.windows import start_windowed_topk_sink
+    from rippledb_engine.streaming.windows import start_windowed_topk_sink
 
     d = tmp_path / "topk_src"
     d.mkdir()
@@ -388,7 +388,7 @@ def test_snapshot_ready_treats_torn_overwrite_as_absent(spark, tmp_path):
     rebuilds it instead of failing forever (ADVICE r3)."""
     import os
 
-    from rippledb_spark.streaming.sinks import snapshot_ready
+    from rippledb_engine.streaming.sinks import snapshot_ready
 
     p = str(tmp_path / "snap")
     assert not snapshot_ready(spark, p)  # truly absent
@@ -407,7 +407,7 @@ def test_ntriples_stream_into_queryable_store(spark, tmp_path):
 
     from rippledb_spark import TripleStore
     from rippledb_spark.plans.sparql import Sparql
-    from rippledb_spark.streaming.rdf_stream import (
+    from rippledb_engine.streaming.rdf_stream import (
         read_ntriples_stream,
         start_store_append_sink,
     )
@@ -461,7 +461,7 @@ def test_nquads_stream_into_queryable_dataset(spark, tmp_path):
     import os
 
     from rippledb_spark.quadstore import QuadStore
-    from rippledb_spark.streaming.rdf_stream import (
+    from rippledb_engine.streaming.rdf_stream import (
         read_nquads_stream,
         start_store_append_sink,
     )
@@ -503,8 +503,8 @@ def test_upsert_sink_recovers_from_torn_overwrite(spark, tmp_path):
     import os
     import time
 
-    from rippledb_spark.streaming import windows as SW
-    from rippledb_spark.streaming.sinks import start_upsert_parquet_sink
+    from rippledb_engine.streaming import windows as SW
+    from rippledb_engine.streaming.sinks import start_upsert_parquet_sink
 
     d = tmp_path / "torn_src"
     d.mkdir()
@@ -562,7 +562,7 @@ def test_foreachbatch_cdc_sink_folds_change_feed(spark, tmp_path):
     import os
     import time
 
-    from rippledb_spark.streaming.sinks import start_cdc_parquet_sink
+    from rippledb_engine.streaming.sinks import start_cdc_parquet_sink
 
     d = tmp_path / "cdc_src"
     d.mkdir()
@@ -638,7 +638,7 @@ def test_foreachbatch_cdc_sink_discards_cross_batch_straggler(spark, tmp_path):
     import os
     import time
 
-    from rippledb_spark.streaming.sinks import start_cdc_parquet_sink
+    from rippledb_engine.streaming.sinks import start_cdc_parquet_sink
 
     d = tmp_path / "cdc_ooo_src"
     d.mkdir()
@@ -678,7 +678,7 @@ def test_streaming_chunking_matches_batch(spark, tmp_path):
     a continuous training-data pipeline. Checked against the batch run."""
     import json as _json
 
-    from rippledb_spark.operators.chunking import chunk_by_tokens
+    from rippledb_engine.operators.chunking import chunk_by_tokens
 
     docs = [
         {"doc_id": 1, "text": " ".join(f"w{i}" for i in range(11))},
@@ -710,7 +710,7 @@ def test_streaming_pii_scrub_matches_batch(spark, tmp_path):
     stateful stage. Checked against the batch run."""
     import json as _json
 
-    from rippledb_spark.operators.pii import scrub_pii
+    from rippledb_engine.operators.pii import scrub_pii
 
     docs = [
         {"doc_id": 1, "text": "mail a@b.io and 10.0.0.1"},
@@ -745,7 +745,7 @@ def test_streaming_url_dedup_matches_batch(spark, tmp_path):
     within the watermark collapse to a single row."""
     import json as _json
 
-    from rippledb_spark.functions.url import url_normalize
+    from rippledb_engine.functions.url import url_normalize
 
     fetches = [
         {"ts": "2024-01-01T00:00:01", "url": "https://Example.com/a?x=1&y=2"},
@@ -832,14 +832,14 @@ def test_streaming_crawl_pipeline_matches_batch(spark, tmp_path):
     batch twin over the same fixture — corpus rows AND per-host
     accounting. maxFilesPerTrigger=1 forces multiple micro-batches, so
     the cross-batch upsert path is exercised, not just a single batch."""
-    from rippledb_spark.sources.warc import read_warc
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.sources.warc import read_warc
+    from rippledb_engine.streaming import crawl as SC
 
     warc_dir = _warc_fixture(tmp_path)
     snap = str(tmp_path / "corpus_snapshot")
     ckpt = str(tmp_path / "ckpt")
 
-    from rippledb_spark.sources.warc import WARC_SCHEMA, warc_pandas_batches
+    from rippledb_engine.sources.warc import WARC_SCHEMA, warc_pandas_batches
 
     stream = (
         spark.readStream.format("binaryFile")
@@ -874,8 +874,8 @@ def test_streaming_crawl_cross_batch_duplicate_latest_fetch_wins(spark, tmp_path
     later-listed member holding the EARLIER fetch — the adversarial
     ordering for an upsert sink. The struct-max merge must still land on
     the latest fetch, equal to the batch twin (ADVICE r7)."""
-    from rippledb_spark.sources.warc import WARC_SCHEMA, read_warc, warc_pandas_batches
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.sources.warc import WARC_SCHEMA, read_warc, warc_pandas_batches
+    from rippledb_engine.streaming import crawl as SC
 
     def record(uri, html, date):
         payload = html.encode()
@@ -929,13 +929,13 @@ def test_streaming_crawl_extracts_jsonld_graph_matching_batch(spark, tmp_path):
     produce the exact triple set of the batch twin; junk pages' islands
     are gated out; malformed islands drop without killing the stream;
     the snapshot is TripleStore-queryable."""
-    from rippledb_spark.sources.warc import (
+    from rippledb_engine.sources.warc import (
         WARC_SCHEMA,
         read_warc,
         warc_pandas_batches,
     )
     from rippledb_spark.store import TripleStore
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.streaming import crawl as SC
 
     def record(uri, html):
         payload = html.encode()
@@ -1021,19 +1021,19 @@ def test_streaming_crawl_media_features_match_batch(spark, tmp_path):
     (PNG/GIF/JPEG/WAV/AVI by Content-Type) into a feature snapshot;
     stream (one file per batch) must equal the batch twin, corrupt
     payloads surface as decode_ok=false rows, non-media types pass by."""
-    from rippledb_spark.operators.jpeg import encode_jpeg_gray
-    from rippledb_spark.operators.multimodal import (
+    from rippledb_engine.operators.jpeg import encode_jpeg_gray
+    from rippledb_engine.operators.multimodal import (
         encode_avi,
         encode_gif,
         encode_png,
         encode_wav,
     )
-    from rippledb_spark.sources.warc import (
+    from rippledb_engine.sources.warc import (
         WARC_SCHEMA,
         read_warc,
         warc_pandas_batches,
     )
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.streaming import crawl as SC
 
     def record(uri, ctype, payload: bytes):
         return (
@@ -1045,7 +1045,7 @@ def test_streaming_crawl_media_features_match_batch(spark, tmp_path):
             b"\r\n" + payload + b"\r\n\r\n"
         )
 
-    from rippledb_spark.operators.mpeg1 import encode_mpeg1_intra
+    from rippledb_engine.operators.mpeg1 import encode_mpeg1_intra
 
     png = encode_png(6, 4, bytes(range(24)))
     gif = encode_gif([(4, 3, 10), (4, 3, 20)])
@@ -1109,8 +1109,8 @@ def test_streaming_crawl_media_features_match_batch(spark, tmp_path):
 def test_streaming_crawl_reader_matches_batch_reader(spark, tmp_path):
     """read_warc_stream shares the batch reader's parser — record sets
     must be identical over the same members."""
-    from rippledb_spark.sources.warc import read_warc
-    from rippledb_spark.streaming.crawl import read_warc_stream
+    from rippledb_engine.sources.warc import read_warc
+    from rippledb_engine.streaming.crawl import read_warc_stream
 
     warc_dir = _warc_fixture(tmp_path)
     out = _run_stream(
@@ -1135,13 +1135,13 @@ def test_streaming_crawl_incremental_pq_codes_match_batch(spark, tmp_path):
     incremental path across multiple batches (including a cross-batch
     duplicate fetch of one URI), so the touched-URI code replacement is
     exercised, not just a single-shot encode."""
-    from rippledb_spark.operators.pq import pq_encode
-    from rippledb_spark.sources.warc import (
+    from rippledb_engine.operators.pq import pq_encode
+    from rippledb_engine.sources.warc import (
         WARC_SCHEMA,
         read_warc,
         warc_pandas_batches,
     )
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.streaming import crawl as SC
 
     warc_dir = _warc_fixture(tmp_path)
     snap = str(tmp_path / "pq_corpus")
@@ -1189,7 +1189,7 @@ def test_streaming_crawl_incremental_pq_codes_match_batch(spark, tmp_path):
 def test_crawl_sink_pq_path_requires_books(spark, tmp_path):
     import pytest
 
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.streaming import crawl as SC
 
     dummy = spark.readStream.format("rate").load()
     with pytest.raises(ValueError, match="pq_path requires pq_books"):
@@ -1206,13 +1206,13 @@ def test_streaming_crawl_incremental_ivfpq_codes_match_batch(spark, tmp_path):
     through the first-class index store (pq.save_cellcodes layout), so
     pq.load_index serves it back directly — codes partitioned by cell,
     frozen coarse/books beside them."""
-    from rippledb_spark.operators.pq import ivfpq_encode, load_index
-    from rippledb_spark.sources.warc import (
+    from rippledb_engine.operators.pq import ivfpq_encode, load_index
+    from rippledb_engine.sources.warc import (
         WARC_SCHEMA,
         read_warc,
         warc_pandas_batches,
     )
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.streaming import crawl as SC
 
     warc_dir = _warc_fixture(tmp_path)
     snap = str(tmp_path / "ivfpq_corpus")
@@ -1278,18 +1278,18 @@ def test_streaming_crawl_frontier_snapshot_matches_batch(spark, tmp_path):
     (loops dropped), robots gates the finals, and the allowed (host,
     url) set merges idempotently. Equal to the batch composition over
     all fetches at once, including a duplicate fetch spanning files."""
-    from rippledb_spark.functions.url import url_host, url_normalize
-    from rippledb_spark.operators.frontier import (
+    from rippledb_engine.functions.url import url_host, url_normalize
+    from rippledb_engine.operators.frontier import (
         extract_frontier_links,
         gate_frontier,
         resolve_frontier,
     )
-    from rippledb_spark.sources.warc import (
+    from rippledb_engine.sources.warc import (
         WARC_SCHEMA,
         read_warc,
         warc_pandas_batches,
     )
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.streaming import crawl as SC
 
     def record(uri, html):
         payload = html.encode()
@@ -1396,12 +1396,12 @@ def test_streaming_incremental_hll_matches_batch(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    from rippledb_spark.operators.sketches import (
+    from rippledb_engine.operators.sketches import (
         hll_estimate_from_registers,
         hll_merge_registers,
         hll_registers,
     )
-    from rippledb_spark.streaming.sinks import snapshot_ready
+    from rippledb_engine.streaming.sinks import snapshot_ready
 
     d = tmp_path / "hll_stream"
     d.mkdir()
@@ -1467,8 +1467,8 @@ def test_streaming_incremental_anomaly_matches_batch(spark, tmp_path):
 
     import pyspark.sql.functions as F
 
-    from rippledb_spark.operators.anomaly import daily_counts, rolling_zscores
-    from rippledb_spark.streaming.sinks import (
+    from rippledb_engine.operators.anomaly import daily_counts, rolling_zscores
+    from rippledb_engine.streaming.sinks import (
         daily_counts_from_snapshot,
         start_daily_count_sink,
     )
@@ -1517,7 +1517,7 @@ def test_streaming_incremental_anomaly_matches_batch(spark, tmp_path):
 
     # replay-idempotency: re-running the LAST batch's merge must leave
     # the snapshot unchanged (foreachBatch's failure contract)
-    from rippledb_spark.streaming.sinks import snapshot_ready
+    from rippledb_engine.streaming.sinks import snapshot_ready
 
     assert snapshot_ready(spark, snap)
     last_batch = spark.read.parquet(snap).agg(
@@ -1543,17 +1543,17 @@ def test_streaming_crawl_classifier_gate_matches_batch(spark, tmp_path):
     over the batch corpus) decides keep per micro-batch; the drained
     snapshot equals the batch twin (gate + apply_classifier_gate), and
     the decision differs from the Gopher rule where the model says so."""
-    from rippledb_spark.operators.classifier import (
+    from rippledb_engine.operators.classifier import (
         TEXT_FEATURE_DIMS,
         hashed_text_features,
         logistic_train,
     )
-    from rippledb_spark.sources.warc import (
+    from rippledb_engine.sources.warc import (
         WARC_SCHEMA,
         read_warc,
         warc_pandas_batches,
     )
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.streaming import crawl as SC
 
     import pyspark.sql.functions as F
 
@@ -1606,7 +1606,7 @@ def test_streaming_triple_cdc_sink_matches_batch_apply_diff(spark, tmp_path):
     import pyspark.sql.functions as F
 
     from rippledb_spark.store import TripleStore
-    from rippledb_spark.streaming.sinks import start_triple_cdc_sink
+    from rippledb_engine.streaming.sinks import start_triple_cdc_sink
 
     v0 = TripleStore.from_rows(
         spark,
@@ -1740,14 +1740,14 @@ def test_streaming_crawl_rotated_pq_serving_matches_batch(spark, tmp_path):
     load_rotated_index(pq_path) identically to the batch rotated-ADC
     over the same snapshot — proving the rotation survives the
     save/load/serve path inside the streaming pipeline."""
-    from rippledb_spark.operators.opq import (
+    from rippledb_engine.operators.opq import (
         load_rotated_index,
         rotate_with_frozen,
         rotated_query_topk,
     )
-    from rippledb_spark.operators.pq import pq_encode, pq_query_topk
-    from rippledb_spark.sources.warc import WARC_SCHEMA, read_warc, warc_pandas_batches
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.operators.pq import pq_encode, pq_query_topk
+    from rippledb_engine.sources.warc import WARC_SCHEMA, read_warc, warc_pandas_batches
+    from rippledb_engine.streaming import crawl as SC
 
     warc_dir = _warc_fixture_rich(tmp_path)
     snap = str(tmp_path / "rpq_corpus")
@@ -1814,12 +1814,12 @@ def test_streaming_crawl_langid_gate_matches_batch(spark, tmp_path):
     softmax model ANDs its language decision into keep per micro-batch;
     the drained snapshot must equal the batch twin (gate_crawl_records
     → apply_langid_gate) row for row."""
-    from rippledb_spark.operators.langid import (
+    from rippledb_engine.operators.langid import (
         char_ngram_hash_features,
         softmax_train,
     )
-    from rippledb_spark.sources.warc import WARC_SCHEMA, read_warc, warc_pandas_batches
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.sources.warc import WARC_SCHEMA, read_warc, warc_pandas_batches
+    from rippledb_engine.streaming import crawl as SC
 
     # planted 4-language trainer (the certified query's fixture shape)
     words = [
@@ -1882,15 +1882,15 @@ def test_streaming_crawl_alternating_pq_serving_matches_batch(spark, tmp_path):
     rotate→replay→encode of the final corpus snapshot, and (b) serve
     alternating_query_topk off load_alternating_index(pq_path)
     identically to the batch alternating ADC on the same snapshot."""
-    from rippledb_spark.operators.opq import (
+    from rippledb_engine.operators.opq import (
         alternating_query_topk,
         apply_frozen_rotations,
         load_alternating_index,
         rotate_with_frozen,
     )
-    from rippledb_spark.operators.pq import pq_encode, pq_query_topk
-    from rippledb_spark.sources.warc import WARC_SCHEMA, read_warc, warc_pandas_batches
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.operators.pq import pq_encode, pq_query_topk
+    from rippledb_engine.sources.warc import WARC_SCHEMA, read_warc, warc_pandas_batches
+    from rippledb_engine.streaming import crawl as SC
 
     warc_dir = _warc_fixture_rich(tmp_path)
     snap = str(tmp_path / "apq_corpus")
@@ -1963,15 +1963,15 @@ def test_streaming_media_dedup_matches_batch(spark, tmp_path):
     CROSS-FORMAT image duplicate (same pixels as PNG and JPEG) and a
     cross-BATCH exact audio duplicate; min-URI-keeps picks the
     lexicographically first URI."""
-    from rippledb_spark.operators.imagehash import near_dup_drops_by_kind
-    from rippledb_spark.operators.jpeg import encode_jpeg_gray
-    from rippledb_spark.operators.multimodal import encode_png, encode_wav
-    from rippledb_spark.sources.warc import (
+    from rippledb_engine.operators.imagehash import near_dup_drops_by_kind
+    from rippledb_engine.operators.jpeg import encode_jpeg_gray
+    from rippledb_engine.operators.multimodal import encode_png, encode_wav
+    from rippledb_engine.sources.warc import (
         WARC_SCHEMA,
         read_warc,
         warc_pandas_batches,
     )
-    from rippledb_spark.streaming import crawl as SC
+    from rippledb_engine.streaming import crawl as SC
     import struct
 
     def record(uri, ctype, payload: bytes):

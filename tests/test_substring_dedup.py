@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import duckdb
 
-from rippledb_spark.operators.dedup import (
+from rippledb_engine.operators.dedup import (
     duplicated_substring_runs,
     duplicated_substring_runs_sql,
 )

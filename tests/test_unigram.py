@@ -7,7 +7,7 @@ from __future__ import annotations
 import pytest
 import pyspark.sql.functions as F
 
-from rippledb_spark.operators.unigram import (
+from rippledb_engine.operators.unigram import (
     distinct_words,
     seed_vocab,
     unigram_train,
@@ -75,7 +75,7 @@ def test_single_char_coverage_floor(spark):
 
 
 def test_registered_query_certificate(spark, sf_dir):
-    from rippledb_spark.queries.pipeline9 import unigram_tokenize_accounting
+    from rippledb_engine.queries.pipeline9 import unigram_tokenize_accounting
 
     rows = unigram_tokenize_accounting(spark, sf_dir).collect()
     assert [r["round"] for r in rows] == [1, 2]

@@ -5,7 +5,7 @@ from __future__ import annotations
 import duckdb
 import pyspark.sql.functions as F
 
-from rippledb_spark.functions import url as U
+from rippledb_engine.functions import url as U
 
 CASES = [
     # case noise in scheme+host, default port, fragment, unsorted params

@@ -5,7 +5,7 @@ from __future__ import annotations
 import gzip
 import os
 
-from rippledb_spark.sources import warc as W
+from rippledb_engine.sources import warc as W
 
 
 def _record(uri: str, payload: bytes, extra: bytes = b"") -> bytes:

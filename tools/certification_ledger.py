@@ -5,7 +5,7 @@ rounds plus the local-gate waiver status:
 
 - GREEN      driver hash_match=true in some round
 - ROWS-ONLY  driver rows-only pass AND the query is registered oracle=None
-             (documented waiver: streaming/approx/iterative, see registry)
+             (documented waiver, see registry)
 - FAILED     latest driver row was red (hash mismatch or error)
 - QUEUED     never had a driver row; the registry rotation
              (__spark_entry__.ordered_defs) pushes these into the next round's

@@ -1,5 +1,6 @@
-"""Print formatted physical plans for the headline queries (the source of
-docs/PLANS.md). Usage: python tools/show_plans.py [query ...]"""
+"""Print formatted physical plans for the headline queries
+(registry.HEADLINE; the source of docs/PLANS.md).
+Usage: python tools/show_plans.py [query ...]"""
 
 from __future__ import annotations
 
@@ -8,62 +9,13 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from rippledb_spark.registry import all_queries
+from rippledb_spark.registry import HEADLINE, all_queries
 from rippledb_spark.session import get_spark
-
-DEFAULT = [
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "q5_local_supplier_volume",
-    "bgp_get_building_in_nation0",
-    "dedup_minhash_lsh",
-    "knn_blocked_top1",
-    "asof_error_to_click",
-    # round-3 representatives (receipts in docs/PLANS.md §round-3)
-    "q8_market_share",
-    "q21_waiting_suppliers",
-    "embedding_near_dup_pairs",
-    "char_trigram_lang_profile",
-    "q13_customer_order_distribution",
-    "pack_documents_token_budget",
-    # round-4 representatives
-    "path_order_to_region",
-    # round-6 representatives (receipts in docs/PLANS.md §round-6)
-    "pii_scrub_accounting",
-    "clean_frequent_line_removal",
-    "path_quantified_containment",
-    "path_within_closure",
-    "cdc_latest_user_state",
-    "scd2_purchase_history",
-    "sparql_text_building_regions",
-    # round-5 representatives
-    "sparql_agg_members_per_nation",
-    "sparql_text_filter_customers",
-    "sparql_exists_no_urgent_customers",
-    "path_negated_nation_edges",
-    "rdfxml_export_accounting",
-    # SemDeDup composition (clustering + within-cluster cosine gate)
-    "dedup_semantic_embedding",
-    # crawl tier: codegen strip chain + mixture explode
-    "html_text_extraction",
-    "mixture_epochs_applied",
-    # dataset tier (receipts in docs/PLANS.md §round-6 dataset section)
-    "sparql_graph_var_membership",
-    "sparql_graph_cross_default_join",
-    # r8: substring dedup (fp-window + doc-window, 2 shuffles) and the
-    # AVI frame expansion (Arrow mapInPandas + media-keyed hash-agg)
-    "dedup_exact_substring_runs",
-    "avi_frame_accounting",
-    "sparql_graph_var_closure",
-    # crawl tier round-6 tail: URL canonicalization + pixel resize
-    "url_dedup_accounting",
-    "image_resize_accounting",
-]
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    names = sys.argv[1:] or DEFAULT
+    names = sys.argv[1:] or list(HEADLINE)
     spark = get_spark(app_name="show_plans")
     qs = all_queries()
     for name in names:
