@@ -49,6 +49,22 @@ Scale shape: every form is DataFrame algebra end to end — pattern scans,
 semi-joins, one anti-join for deletion, union+dedup for insertion. No
 driver-side row loops; DATA forms parse on the driver (they are literal
 text) into one small local DataFrame.
+
+A snapshot whose plan reads its parent more than once is materialised
+(:func:`materialised`): the WHERE forms — DELETE WHERE, the modify form
+and its quad-pattern variant — plan the parent in the matched set or the
+solutions, again in the anti-join and again in the CONSTRUCT, so a chain
+of k lazy snapshots would re-run every earlier update several times over
+and grow its plan geometrically. Checkpointed, each snapshot is computed
+once — its shuffle stages when it is built (adaptive execution plans
+stage by stage), its last stage by the first action on it, which stores
+the rows — and the next update, read or write scans it as one in-memory
+relation: jobs and exchanges per operation stay
+flat with depth. The price is one copy of each live snapshot in executor
+storage (memory, spilling to disk); the context cleaner frees it once the
+snapshot is unreferenced (``spark.cleaner.periodicGC.interval``,
+session.py). The DATA forms, graph management and LOAD read their parent
+once and stay lazy.
 """
 
 from __future__ import annotations
@@ -461,6 +477,13 @@ def parse_update(text: str, quads: bool = False) -> UpdateForm:
 # ---------------------------------------------------------------------------
 
 
+def materialised(store):
+    """``store`` (a TripleStore or QuadStore) over a lazily local-checkpointed
+    copy of its frame: the WHERE-form snapshot contract (module docstring,
+    "Scale shape")."""
+    return type(store)(store.spark, store.df.localCheckpoint(eager=False))
+
+
 def apply_quads(store, form: UpdateForm):
     """Apply one parsed quads-mode update to a QuadStore → new QuadStore.
 
@@ -531,8 +554,8 @@ def apply_quads(store, form: UpdateForm):
     if isinstance(form, DeleteWhere):
         target = store.graph(form.graph) if form.graph else store.default_graph()
         matched = matched_triples(target.df, form.query)
-        return store.remove(
-            matched.withColumn("g", F.lit(form.graph).cast("string"))
+        return materialised(
+            store.remove(matched.withColumn("g", F.lit(form.graph).cast("string")))
         )
 
     if isinstance(form, ModifyQuads):
@@ -635,7 +658,7 @@ def apply_quads(store, form: UpdateForm):
                 F.lit(None).cast("string").alias("o_datatype"),
             )
             out_store = out_store.insert(rows)
-        return out_store
+        return materialised(out_store)
 
     if isinstance(form, Modify):
         from rippledb_spark.plans import bgp as _bgp
@@ -686,7 +709,7 @@ def apply_quads(store, form: UpdateForm):
         if form.insert_template:
             ins = _bgp.construct(where_triples, form.query, form.insert_template)
             result = result.insert(ins.withColumn("g", tmpl_g))
-        return result
+        return materialised(result)
 
     raise QueryError(f"unhandled update form {form!r}")
 

@@ -75,7 +75,8 @@ def get_spark(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "1m"),
         )
         .config("spark.sql.files.openCostInBytes", "131072")
-        # Property-path closures (plans/paths.py) leave unreferenced
+        # Property-path closures (plans/paths.py) and superseded update
+        # snapshots (the WHERE forms of plans/update.py) leave unreferenced
         # localCheckpoint blocks behind; the context cleaner only frees
         # them after a driver GC, and the default periodic GC is 30 min —
         # far too lazy for a long-lived store session.

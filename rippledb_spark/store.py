@@ -178,7 +178,13 @@ class TripleStore:
         whole slice (backup ≈ 0.4× source; tools/bench_backup.py). At
         100 TB the same repartition is what bounds file counts; AQE
         coalesces the small-slice partitions."""
-        self.df.repartition("p").write.mode("overwrite").partitionBy("p").parquet(path)
+        self._write_by_predicate(path, "overwrite")
+
+    def _write_by_predicate(self, path: str, mode: str) -> None:
+        """The one write path of persisted snapshots (:meth:`persist_to`,
+        :meth:`persist_version`): colocate on ``p``, one directory per
+        predicate."""
+        self.df.repartition("p").write.mode(mode).partitionBy("p").parquet(path)
 
     # -- versioned persistence (extension over the reference's single-slot
     #    backup: snapshots are immutable, so versions are free) -------------
@@ -200,13 +206,13 @@ class TripleStore:
 
         The reference's backup is destructive single-slot (persist wipes and
         rewrites, graph.rs:665-680); with immutable snapshots, retaining
-        history costs only storage — the natural extension.
+        history costs only storage — the natural extension. Writes the
+        same layout as :meth:`persist_to`; an existing ``v{n}`` is an
+        error, never overwritten.
         """
         versions = self.list_versions(base_path)
         n = (versions[-1] + 1) if versions else 1
-        self.df.write.mode("errorifexists").partitionBy("p").parquet(
-            f"{base_path}/v{n}"
-        )
+        self._write_by_predicate(f"{base_path}/v{n}", "errorifexists")
         return n
 
     @classmethod
@@ -450,7 +456,22 @@ class TripleStore:
         :meth:`insert` / :meth:`remove` (the reference's mutation surface
         is programmatic only, graph.rs:420-523 — this is its text form).
         Per spec the modify form deletes before inserting, evaluated
-        against the PRE-update state."""
+        against the PRE-update state.
+
+        The two WHERE forms (DELETE WHERE, modify) plan their parent
+        several times — the matched set or solutions, the anti-join, the
+        CONSTRUCT — so their snapshot is materialised once
+        (``localCheckpoint(eager=False)``): adaptive execution runs the
+        plan's shuffle stages here, the first action on the snapshot (such
+        as the caller's acknowledging ``count()``) runs the last stage and
+        stores the rows, and later updates, reads and writes scan that one
+        relation instead of re-running the chain (the reference's ``Graph`` updates in
+        place, graph.rs:414-629). The cost is one copy of the snapshot in
+        executor storage (memory, spilling to disk) until the snapshot is
+        unreferenced and the context cleaner frees it. The DATA forms read
+        their parent once and stay lazy, like :meth:`insert` and
+        :meth:`remove`; a modify whose ground WHERE matches nothing returns
+        ``self``."""
         from rippledb_spark.plans.update import (
             DeleteData,
             DeleteWhere,
@@ -458,6 +479,7 @@ class TripleStore:
             Modify,
             _bound_solutions,
             instantiated_values,
+            materialised,
             matched_triples,
             parse_update,
         )
@@ -471,7 +493,7 @@ class TripleStore:
         if isinstance(form, DeleteWhere):
             # remove() does the null-safe anti-join (o_lang/o_datatype are
             # NULL for plain terms; a name-list join would never match them)
-            return self.remove(matched_triples(self.df, form.query))
+            return materialised(self.remove(matched_triples(self.df, form.query)))
         assert isinstance(form, Modify)
         if not form.delete_template and not form.insert_template:
             raise QueryError("the modify form needs a DELETE or INSERT clause")
@@ -502,7 +524,7 @@ class TripleStore:
         if form.insert_template:
             ins = bgp.construct(self.df, form.query, form.insert_template)
             store = store.insert(ins)
-        return store
+        return materialised(store)
 
     def sparql(self, text: str, use_stats: bool = False) -> DataFrame:
         """Evaluate a SPARQL query STRING (the text frontend —

@@ -429,6 +429,33 @@ def test_delete_where_quad_pattern(qs):
     assert left.default_graph().df.count() == 3  # default untouched
 
 
+def test_with_where_chain_materialises_each_snapshot(qs):
+    """Scoped WHERE-form updates return materialised snapshots, like
+    TripleStore.update: the depth-3 plan is one in-memory relation."""
+    default = [("", "n1", "in_region", "r1"), ("", "n2", "in_region", "r1"),
+               ("", "n3", "in_region", "r2")]
+    chain = [
+        ("WITH <g:cust> DELETE WHERE { c1 ?p ?o }",
+         [("g:cust", "c2", "in_nation", "n1"), ("g:cust", "c3", "in_nation", "n3"),
+          ("g:supp", "s1", "in_nation", "n1"), ("g:supp", "s2", "in_nation", "n2")]),
+        ("WITH <g:cust> DELETE { ?m in_nation n3 } INSERT { ?m moved_to n3 } "
+         "WHERE { ?m in_nation n3 }",
+         [("g:cust", "c2", "in_nation", "n1"), ("g:cust", "c3", "moved_to", "n3"),
+          ("g:supp", "s1", "in_nation", "n1"), ("g:supp", "s2", "in_nation", "n2")]),
+        ("WITH <g:supp> DELETE WHERE { ?m in_nation n1 }",
+         [("g:cust", "c2", "in_nation", "n1"), ("g:cust", "c3", "moved_to", "n3"),
+          ("g:supp", "s2", "in_nation", "n2")]),
+    ]
+    st, leaves = qs, []
+    for text, named in chain:
+        st = st.update(text)
+        got = sorted((r["g"] or "", r["s"], r["p"], r["o_value"]) for r in st.df.collect())
+        assert got == sorted(default + named), text
+        plan = st.df._jdf.queryExecution().optimizedPlan().collectLeaves()
+        leaves.append([plan.apply(i).nodeName() for i in range(plan.size())])
+    assert leaves[0] == leaves[-1] == ["LogicalRDD"]
+
+
 def test_load_into_graph(qs, tmp_path):
     nt = tmp_path / "inc.nt"
     nt.write_text("<u:a> <u:p> <u:b> .\n<u:a> <u:p> \"lit\" .\n")

@@ -305,6 +305,24 @@ def test_versioned_persistence(spark, store, tmp_path):
         TripleStore.from_version(spark, base, 99)
 
 
+def test_persist_to_and_persist_version_write_one_layout(store, tmp_path):
+    """One write path: the same predicate directories, each holding the
+    same number of data files."""
+    store.persist_to(str(tmp_path / "backup"))
+    v = store.persist_version(str(tmp_path / "versions"))
+
+    def layout(root):
+        return {
+            d.name: len(list(d.glob("part-*.parquet")))
+            for d in root.iterdir()
+            if d.is_dir()
+        }
+
+    backup = layout(tmp_path / "backup")
+    assert len(backup) == store.df.select("p").distinct().count()
+    assert layout(tmp_path / "versions" / f"v{v}") == backup
+
+
 def test_diff_versions_cdc_feed(spark, store, tmp_path):
     """r11: snapshot diff — the change feed between persisted versions,
     with null-safe identity (lang-tagged/typed literals carry NULLs)."""

@@ -3,10 +3,14 @@ parser, all four forms, literal syntax, immutability, loud errors."""
 
 from __future__ import annotations
 
+import gc
+import uuid
+
 import pytest
 
 from rippledb_spark import TripleStore
 from rippledb_spark.errors import QueryError
+from rippledb_spark.operators._itergc import release_iteration_garbage
 from rippledb_spark.plans.update import (
     DeleteData,
     DeleteWhere,
@@ -25,6 +29,31 @@ def store(spark):
 
 def rows(st):
     return sorted(map(tuple, st.df.collect()))
+
+
+def named(*triples):
+    """Hand-written (s, p, o) triples of named nodes as sorted store rows."""
+    return sorted((s, "named", p, o, "named", None, None) for s, p, o in triples)
+
+
+def plan_leaves(df):
+    """The leaf nodes (JVM objects) of ``df``'s optimized logical plan."""
+    leaves = df._jdf.queryExecution().optimizedPlan().collectLeaves()
+    return [leaves.apply(i) for i in range(leaves.size())]
+
+
+def jobs_of(spark, action) -> int:
+    """Spark jobs ``action()`` runs, counted by a job group of its own."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 # -- parser -----------------------------------------------------------------
@@ -100,6 +129,14 @@ def test_modify_renames_predicate(store):
     assert sorted(r[2] for r in rows(st2)) == ["likes", "met", "met"]
     # original snapshot untouched (immutability)
     assert sorted(r[2] for r in rows(store)) == ["knows", "knows", "likes"]
+    # the change feed holds exactly the deleted and the inserted triples
+    feed = sorted(
+        (r["op"], r["s"], r["p"], r["o_value"]) for r in store.diff(st2).collect()
+    )
+    assert feed == [
+        ("delete", "a", "knows", "b"), ("delete", "b", "knows", "c"),
+        ("insert", "a", "met", "b"), ("insert", "b", "met", "c"),
+    ]
 
 
 def test_modify_insert_only_and_delete_only(store):
@@ -130,3 +167,63 @@ def test_modify_ground_where_gates(store):
     assert rows(st3) == rows(store)
     st4 = store.update('DELETE { a knows b } WHERE { zz p qq }')
     assert rows(st4) == rows(store)
+
+
+# -- snapshot contract of the WHERE forms -----------------------------------
+
+CHAIN = [
+    (
+        "DELETE WHERE { ?x likes ?y }",
+        named(("a", "knows", "b"), ("b", "knows", "c")),
+    ),
+    (
+        "DELETE { ?x knows ?y } INSERT { ?y met ?x } WHERE { ?x knows ?y }",
+        named(("b", "met", "a"), ("c", "met", "b")),
+    ),
+    (
+        "DELETE WHERE { c met ?y }",
+        named(("b", "met", "a")),
+    ),
+    (
+        "DELETE { ?x met ?y } INSERT { ?x likes ?y . ?y likes ?x } WHERE { ?x met ?y }",
+        named(("b", "likes", "a"), ("a", "likes", "b")),
+    ),
+]
+
+
+def test_where_chain_lineage_stays_bounded(spark, store):
+    """Each WHERE-form snapshot is materialised once: at depth 4 the plan
+    is one in-memory relation, not the chain replayed from the base
+    store, and counting it costs what counting depth 1 does."""
+    snaps = []
+    st = store
+    for text, want in CHAIN:
+        st = st.update(text)
+        assert rows(st) == want, text
+        snaps.append(st)
+    base_rdds = {
+        leaf.rdd().id()
+        for leaf in plan_leaves(store.df)
+        if leaf.nodeName() == "LogicalRDD"
+    }
+    leaves = plan_leaves(snaps[-1].df)
+    assert [leaf.nodeName() for leaf in leaves] == ["LogicalRDD"]
+    assert leaves[0].rdd().id() not in base_rdds
+    assert jobs_of(spark, snaps[-1].count) == jobs_of(spark, snaps[0].count)
+
+
+def test_modify_reinserting_a_deleted_triple_keeps_it(store):
+    # both templates instantiate against the PRE-update state (SPARQL 1.1
+    # Update §3.1.3): the INSERT puts back what the DELETE removed
+    st2 = store.update(
+        "DELETE { ?x knows ?y } INSERT { ?x knows ?y } WHERE { ?x knows ?y }"
+    )
+    assert rows(st2) == rows(store)
+
+
+def test_referenced_snapshot_survives_garbage_release(store):
+    st2 = store.update("DELETE WHERE { ?x knows ?y }")
+    assert st2.count() == 1
+    gc.collect()
+    release_iteration_garbage(st2.df)
+    assert rows(st2) == named(("c", "likes", "a"))
