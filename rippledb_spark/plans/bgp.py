@@ -682,8 +682,8 @@ def ask_ground(triples: DataFrame, query: Sparql) -> DataFrame:
         raise QueryError("ask_ground() evaluates ground patterns and paths only")
     if getattr(query, "graph_groups", []):
         # single-graph evaluation must not silently widen a GRAPH scope to
-        # the whole store; the dataset path (quadstore.sparql) strips the
-        # graph groups and gates them against their named graphs itself
+        # the whole store; the dataset gate (graphs.ask_ground_dataset)
+        # strips the graph groups and gates them against their named graphs
         raise QueryError(
             "query has GRAPH groups; evaluate it over a QuadStore"
         )

@@ -103,6 +103,42 @@ def _const_filter_gate(spark, filters: list) -> DataFrame | None:
     return gate
 
 
+def ask_ground_dataset(
+    default: DataFrame, named: DataFrame | None, query: Sparql
+) -> DataFrame:
+    """Variable-free ASK over a dataset — the ground-ASK query form and
+    the ground-WHERE gate of SPARQL UPDATE's modify form: ground patterns
+    and paths gate on ``default``, each GRAPH <iri> group on its graph in
+    ``named``, constant FILTERs fold in. 0 or 1 rows, column ``ask``."""
+    if not query.graph_groups:
+        return bgp.ask_ground(default, query)
+    if (
+        query.optionals
+        or query.minuses
+        or query.values_blocks
+        or query.exists_groups
+        or query.binds
+        or query.subqueries
+    ):
+        raise QueryError(
+            "ground ASK with GRAPH scopes supports triple, path, and FILTER "
+            "patterns only"
+        )
+    core = Sparql()
+    core.conds = list(query.conds)
+    core.paths = list(query.paths)
+    ask = bgp.ask_ground(default, core) if (core.conds or core.paths) else None
+    for gterm, group in query.graph_groups:
+        gate = _named_graph_plan(named, gterm.value, group).select(
+            F.lit(True).alias("ask")
+        )
+        ask = gate if ask is None else ask.intersect(gate)
+    fg = _const_filter_gate(default.sparkSession, query.filters)
+    if fg is not None:
+        ask = ask.intersect(fg.limit(1).select(F.lit(True).alias("ask")))
+    return ask.limit(1)
+
+
 def _named_graph_plan(named_quads: DataFrame, iri: str, group: Sparql) -> DataFrame:
     """GRAPH <iri> { group }: the scope is a filter, then the ordinary
     single-graph evaluator runs the whole group (patterns, paths,

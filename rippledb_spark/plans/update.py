@@ -1,4 +1,4 @@
-"""SPARQL 1.1 Update text forms → TripleStore DML (engine-tier superset).
+"""SPARQL 1.1 Update text forms → store DML (engine-tier superset).
 
 The reference's mutation surface is programmatic insert/remove only
 (src/datastore/graph.rs:420-523); this module gives those operations the
@@ -16,10 +16,10 @@ Triple statements are ``s p o .`` (the final dot optional before ``}``);
 literals take ``"lit"``, ``"lit"@lang``, and ``"lit"^^<datatype>`` forms;
 ``_:name`` terms are blank nodes.
 
-Two modes share the parser. The TripleStore path (``parse_update(text)``)
-is single-graph like the reference: GRAPH/WITH/USING and graph management
-raise QueryError. The QuadStore path (``parse_update(text, quads=True)``
-+ :func:`apply_quads`) adds the dataset-tier forms::
+Two modes share the parser and the evaluator. ``parse_update(text)`` is
+single-graph like the reference: GRAPH/WITH/USING and graph management
+raise QueryError. ``parse_update(text, quads=True)`` adds the
+dataset-tier forms::
 
     INSERT/DELETE DATA { ... GRAPH <iri> { ... } ... }   -- QuadData
     WITH <iri> DELETE/INSERT ... WHERE { ... }           -- scoped modify
@@ -31,6 +31,14 @@ raise QueryError. The QuadStore path (``parse_update(text, quads=True)``
     MOVE/COPY/ADD [SILENT] (GRAPH <iri>|DEFAULT) TO (GRAPH <iri>|DEFAULT)
     LOAD [SILENT] <file> [INTO GRAPH <iri>]              -- .nt/.ttl/.rdf
 
+:func:`apply` evaluates a parsed form against either store:
+``TripleStore.update`` parses in the single-graph mode,
+``QuadStore.update`` in quads mode, and both hand the form to it. A
+TripleStore is the frame with no
+``g`` column — its one graph is the default graph, and its delete keys
+and inserted rows carry no label — and the single-graph modify form is
+the quad-pattern one with every template pattern in the WITH graph.
+
 Semantics notes (the engine's flattened-model conventions, shared with
 plans.bgp):
 
@@ -38,12 +46,17 @@ plans.bgp):
   matches are semi-joined against the group's solutions, so kinds/lang/
   datatype are exact, and bound values match named nodes only
   (pattern_filter's rule, graph.rs:1031-1033).
-- The modify form's DELETE template instantiates per solution and
-  removes store rows matching on (s, p, o_value) regardless of object
+- The modify form plans its WHERE group once; both templates
+  instantiate per solution of that one frame. The DELETE template
+  removes store rows matching on (g, s, p, o_value) regardless of object
   kind — solutions carry values, not kinds (the same flattening that
-  makes CONSTRUCT lift terms as named nodes). INSERT templates
-  instantiate via the CONSTRUCT machinery (named-node lift,
-  unbound-template-var rows skipped per spec).
+  makes CONSTRUCT lift terms as named nodes); the INSERT template lifts
+  every instantiated term as a named node (src/lib.rs:17-19). A solution
+  leaving a template variable unbound skips that pattern, per spec; a
+  template variable the WHERE group never binds is an error, even when
+  the WHERE matches nothing. A ground WHERE gates the whole modify
+  (graphs.ask_ground_dataset): one empty solution if it matches, else
+  the store itself comes back.
 
 Scale shape: every form is DataFrame algebra end to end — pattern scans,
 semi-joins, one anti-join for deletion, union+dedup for insertion. No
@@ -53,9 +66,9 @@ text) into one small local DataFrame.
 A snapshot whose plan reads its parent more than once is materialised
 (:func:`materialised`): the WHERE forms — DELETE WHERE, the modify form
 and its quad-pattern variant — plan the parent in the matched set or the
-solutions, again in the anti-join and again in the CONSTRUCT, so a chain
-of k lazy snapshots would re-run every earlier update several times over
-and grow its plan geometrically. Checkpointed, each snapshot is computed
+solutions and again in the anti-join, so a chain of k lazy snapshots
+would re-run every earlier update several times over and grow its plan
+geometrically. Checkpointed, each snapshot is computed
 once — its shuffle stages when it is built (adaptive execution plans
 stage by stage), its last stage by the first action on it, which stores
 the rows — and the next update, read or write scans it as one in-memory
@@ -69,6 +82,7 @@ once and stay lazy.
 
 from __future__ import annotations
 
+import copy
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
@@ -77,8 +91,10 @@ from pyspark.sql import DataFrame
 from rippledb_spark import model
 from rippledb_spark.errors import QueryError
 from rippledb_spark.operators.triple_patterns import pattern_filter, position_column
-from rippledb_spark.plans.sparql import Sparql, Var, parse_unit
-from rippledb_spark.plans.text import _Tokens, _is_kw
+from rippledb_spark.plans import bgp
+from rippledb_spark.plans import graphs as G
+from rippledb_spark.plans.sparql import Sparql, Val, Var, parse_unit
+from rippledb_spark.plans.text import _is_kw, _pattern_vars, _Tokens
 
 
 @dataclass(frozen=True)
@@ -112,12 +128,8 @@ class ModifyQuads:
     and/or WHERE — quads mode only). Templates are (g, [s, p, o]) pairs
     where ``g`` is None (the WITH graph, or default), an IRI, or
     ``'$var'``; the WHERE group's GRAPH blocks live in ``query``'s
-    graph_groups. Deletion matches on (g, s, p, o_value) — the
-    flattened-model value identity, like the single-graph modify form —
-    and INSERT templates lift every instantiated term as a NAMED node
-    (the engine-wide CONSTRUCT convention, src/lib.rs:17-19: solution
-    rows carry values, not kinds, so a literal binding re-materializes
-    as a named node — identical to TripleStore's modify INSERT)."""
+    graph_groups. Evaluated exactly like :class:`Modify` (module
+    docstring), which :func:`apply` lifts to this shape."""
 
     delete_template: list[tuple]  # [(g, [s,p,o]), ...]; [] = no DELETE
     insert_template: list[tuple]
@@ -484,17 +496,26 @@ def materialised(store):
     return type(store)(store.spark, store.df.localCheckpoint(eager=False))
 
 
-def apply_quads(store, form: UpdateForm):
-    """Apply one parsed quads-mode update to a QuadStore → new QuadStore.
+def _graph_df(store, iri: str | None) -> DataFrame:
+    """The triples of graph ``iri`` (None = the default graph). A
+    TripleStore's frame has no ``g`` column: it is its one graph."""
+    if "g" not in store.df.columns:
+        return store.df
+    return (store.graph(iri) if iri else store.default_graph()).df
+
+
+def apply(store, form: UpdateForm):
+    """Apply one parsed update to a TripleStore or a QuadStore → a new
+    snapshot of the same type (the forms and their semantics are in the
+    module docstring).
 
     Every form is DataFrame algebra: DATA forms are one small local frame
-    + union/anti-join; the WITH/USING modify forms run the single-graph
-    machinery against the scoped graph's triples and re-tag the results;
-    graph management is predicate rewrites over the ``g`` column (MOVE =
+    + union/anti-join; the WHERE forms plan their group once and
+    instantiate both templates from that one solution frame; graph
+    management is predicate rewrites over the ``g`` column (MOVE =
     retag + drop, never a per-graph loop)."""
-    from rippledb_spark.quadstore import QuadStore
-
     spark, df = store.spark, store.df
+    new = type(store)
 
     if isinstance(form, InsertData):
         return store.insert(form.rows)
@@ -509,12 +530,12 @@ def apply_quads(store, form: UpdateForm):
             return store
         if form.op in ("clear", "drop"):
             if form.scope == "graph":
-                return QuadStore(spark, df.filter(~g.eqNullSafe(F.lit(form.src))))
+                return new(spark, df.filter(~g.eqNullSafe(F.lit(form.src))))
             if form.scope == "default":
-                return QuadStore(spark, df.filter(g.isNotNull()))
+                return new(spark, df.filter(g.isNotNull()))
             if form.scope == "named":
-                return QuadStore(spark, df.filter(g.isNull()))
-            return QuadStore.empty(spark)  # ALL
+                return new(spark, df.filter(g.isNull()))
+            return new.empty(spark)  # ALL
         # MOVE/COPY/ADD — src/dst None = the default graph
         src_match = g.eqNullSafe(F.lit(form.src))
         dst_lit = F.lit(form.dst).cast("string")
@@ -529,7 +550,7 @@ def apply_quads(store, form: UpdateForm):
             out = (
                 df.filter(~g.eqNullSafe(dst_lit) & ~src_match).unionByName(moved)
             )
-        return QuadStore(spark, out.dropDuplicates(model.QUAD_KEY))
+        return new(spark, out.dropDuplicates(model.QUAD_KEY))
 
     if isinstance(form, Load):
         from rippledb_spark.store import TripleStore
@@ -551,183 +572,91 @@ def apply_quads(store, form: UpdateForm):
         add = ts.df.withColumn("g", F.lit(form.graph).cast("string"))
         return store.insert(add)
 
+    quads = "g" in df.columns
     if isinstance(form, DeleteWhere):
-        target = store.graph(form.graph) if form.graph else store.default_graph()
-        matched = matched_triples(target.df, form.query)
-        return materialised(
-            store.remove(matched.withColumn("g", F.lit(form.graph).cast("string")))
-        )
-
-    if isinstance(form, ModifyQuads):
-        from rippledb_spark.plans import graphs as G
-        from rippledb_spark.plans.sparql import Var, parse_unit
-
-        if not form.delete_template and not form.insert_template:
-            raise QueryError("the modify form needs a DELETE or INSERT clause")
-        # WHERE dataset: USING overrides WITH overrides the true default.
-        # USING behaves like FROM (§3.1.3): it REPLACES the dataset, so
-        # with USING given the named-graph set is empty — GRAPH groups in
-        # the WHERE then match nothing, exactly like FROM without
-        # FROM NAMED.
-        where_g = form.using if form.using is not None else form.graph
-        default_part = (
-            (store.graph(where_g) if where_g else store.default_graph())
-            .df.withColumn("g", F.lit(None).cast("string"))
-            .select(*model.QUAD_KEY)
-        )
-        named_part = (
-            df.limit(0) if form.using is not None else df.filter(F.col("g").isNotNull())
-        )
-        quads_view = named_part.unionByName(default_part)
-
-        q = form.query
-        names: list[str] = []
-        for cond in q.conds:
-            for u in cond:
-                if isinstance(u, Var) and u.name not in names:
-                    names.append(u.name)
-        for gterm, grp in q.graph_groups:
-            if isinstance(gterm, Var) and gterm.name not in names:
-                names.append(gterm.name)
-            for cond in grp.conds:
-                for u in cond:
-                    if isinstance(u, Var) and u.name not in names:
-                        names.append(u.name)
-        # static validation FIRST: an unbound template variable is an
-        # error regardless of whether the WHERE happens to match
-        bound = set(names)
-        for g, pat in form.delete_template + form.insert_template:
-            tvars = [g[1:]] if (g or "").startswith("$") else []
-            tvars += [parse_unit(x).name for x in pat if isinstance(parse_unit(x), Var)]
-            for name in tvars:
-                if name not in bound:
-                    raise QueryError(
-                        f"template variable ${name} is not bound by the WHERE group"
-                    )
-
-        sol = None
-        if names:
-            q.select([f"${n}" for n in names])
-            sol = G.select_dataset(quads_view, q)
-        else:
-            # ground WHERE (patterns AND graph scopes all ground): one
-            # empty solution iff every part matches, else a no-op. Gates
-            # compose lazily (intersect) and evaluate as ONE job, the
-            # same shape as quadstore.sparql's ground-ASK branch.
-            from rippledb_spark.plans import bgp as _bgp
-
-            core = Sparql()
-            core.conds = list(q.conds)
-            gate = (
-                _bgp.ask_ground(default_part.select(*model.TRIPLE_KEY), core)
-                if core.conds
-                else None
-            )
-            for gterm, grp in q.graph_groups:
-                gg = G._named_graph_plan(named_part, gterm.value, grp).select(
-                    F.lit(True).alias("ask")
-                )
-                gate = gg if gate is None else gate.intersect(gg)
-            if gate is not None and gate.count() == 0:
-                return store
-
-        out_store = store
-        if form.delete_template:
-            dels = instantiated_quad_values(
-                sol, spark, form.delete_template, form.graph
-            )
-            cond = (
-                df["g"].eqNullSafe(dels["g"])
-                & (df["s"] == dels["s"])
-                & (df["p"] == dels["p"])
-                & (df["o_value"] == dels["o_value"])
-            )
-            out_store = QuadStore(spark, df.join(dels, on=cond, how="left_anti"))
-        if form.insert_template:
-            ins = instantiated_quad_values(
-                sol, spark, form.insert_template, form.graph
-            )
-            rows = ins.select(
-                F.col("g"),
-                F.col("s"),
-                F.lit(model.NAMED).alias("s_kind"),
-                F.col("p"),
-                F.col("o_value"),
-                F.lit(model.NAMED).alias("o_kind"),
-                F.lit(None).cast("string").alias("o_lang"),
-                F.lit(None).cast("string").alias("o_datatype"),
-            )
-            out_store = out_store.insert(rows)
-        return materialised(out_store)
+        matched = matched_triples(_graph_df(store, form.graph), form.query)
+        if quads:
+            matched = matched.withColumn("g", F.lit(form.graph).cast("string"))
+        return materialised(store.remove(matched))
 
     if isinstance(form, Modify):
-        from rippledb_spark.plans import bgp as _bgp
-        from rippledb_spark.plans.sparql import Var, parse_unit
-
-        if not form.delete_template and not form.insert_template:
-            raise QueryError("the modify form needs a DELETE or INSERT clause")
-        # WHERE scope: USING overrides WITH overrides the default graph
-        where_g = form.using if form.using is not None else form.graph
-        where_triples = (
-            store.graph(where_g) if where_g else store.default_graph()
-        ).df
-        # template scope: always the WITH graph (or default)
-        tmpl_g = F.lit(form.graph).cast("string")
-        # static validation FIRST: an unbound template variable is an
-        # error regardless of whether the WHERE happens to match
-        bound = {
-            u.name
-            for cond in form.query.conds
-            for u in cond
-            if isinstance(u, Var)
-        }
-        for pat in form.delete_template + form.insert_template:
-            for raw in pat:
-                u = parse_unit(raw)
-                if isinstance(u, Var) and u.name not in bound:
-                    raise QueryError(
-                        f"template variable ${u.name} is not bound by the "
-                        f"WHERE group"
-                    )
-        sol = _bound_solutions(where_triples, form.query)
-        if sol is None:
-            # ground WHERE: one empty solution iff every pattern matches,
-            # else the whole modify is a no-op (store.py's gate, mirrored)
-            if _bgp.ask_ground(where_triples, form.query).count() == 0:
-                return store
-        out = df
-        if form.delete_template:
-            dels = instantiated_values(sol, spark, form.delete_template)
-            cond = (
-                df["g"].eqNullSafe(tmpl_g)
-                & (df["s"] == dels["s"])
-                & (df["p"] == dels["p"])
-                & (df["o_value"] == dels["o_value"])
-            )
-            out = df.join(dels, on=cond, how="left_anti")
-        result = QuadStore(spark, out)
-        if form.insert_template:
-            ins = _bgp.construct(where_triples, form.query, form.insert_template)
-            result = result.insert(ins.withColumn("g", tmpl_g))
-        return materialised(result)
-
-    raise QueryError(f"unhandled update form {form!r}")
-
-
-def _bound_solutions(triples: DataFrame, q: Sparql) -> DataFrame | None:
-    """Solutions of the update's WHERE group projecting every variable;
-    None when the group is ground (zero variables)."""
-    from rippledb_spark.plans.bgp import select_join
-
-    names: list[str] = []
-    for cond in q.conds:
-        for u in cond:
+        # single-graph templates: every pattern targets the WITH graph
+        form = ModifyQuads(
+            [(None, pat) for pat in form.delete_template],
+            [(None, pat) for pat in form.insert_template],
+            form.query, graph=form.graph, using=form.using,
+        )
+    if not isinstance(form, ModifyQuads):
+        raise QueryError(f"unhandled update form {form!r}")
+    if not form.delete_template and not form.insert_template:
+        raise QueryError("the modify form needs a DELETE or INSERT clause")
+    q = form.query
+    names = _pattern_vars(q, required=False)
+    # static validation FIRST: an unbound template variable is an error
+    # regardless of whether the WHERE happens to match
+    for g, pat in form.delete_template + form.insert_template:
+        for u in [parse_unit(x) for x in ([g] if g else []) + pat]:
             if isinstance(u, Var) and u.name not in names:
-                names.append(u.name)
-    if not names:
-        return None
-    q.select([f"${n}" for n in names])
-    return select_join(triples, q)
+                raise QueryError(
+                    f"template variable ${u.name} is not bound by the WHERE group"
+                )
+    # WHERE dataset: USING overrides WITH overrides the true default.
+    # USING behaves like FROM (§3.1.3): it REPLACES the dataset, so with
+    # USING given the named-graph set is empty — GRAPH groups in the
+    # WHERE then match nothing, exactly like FROM without FROM NAMED.
+    default = _graph_df(store, form.using if form.using is not None else form.graph)
+    named = None
+    if q.graph_groups:
+        named = (
+            df.limit(0) if form.using is not None else df.filter(F.col("g").isNotNull())
+        )
+    if names:
+        sol = _solutions(default, q, names, named)
+    elif G.ask_ground_dataset(default, named, q).count() == 0:
+        return store  # a ground WHERE that does not match: a no-op
+    else:
+        sol = spark.range(1).drop("id")  # its one empty solution
+    out = store
+    if form.delete_template:
+        dels = _instantiated(sol, form.delete_template, form.graph, quads)
+        cond = (
+            (df["s"] == dels["s"])
+            & (df["p"] == dels["p"])
+            & (df["o_value"] == dels["o_value"])
+        )
+        if quads:
+            cond = df["g"].eqNullSafe(dels["g"]) & cond
+        out = new(spark, df.join(dels, on=cond, how="left_anti"))
+    if form.insert_template:
+        ins = _instantiated(sol, form.insert_template, form.graph, quads)
+        null_s = F.lit(None).cast("string")
+        out = out.insert(
+            ins.select(
+                *ins.columns,
+                F.lit(model.NAMED).alias("s_kind"),
+                F.lit(model.NAMED).alias("o_kind"),
+                null_s.alias("o_lang"),
+                null_s.alias("o_datatype"),
+            )
+        )
+    return materialised(out)
+
+
+def _solutions(
+    triples: DataFrame, q: Sparql, names: list[str], named: DataFrame | None = None
+) -> DataFrame:
+    """Solutions of an update's WHERE group projecting ``names``, planned
+    on a copy of ``q`` so the parsed form stays as parsed. GRAPH groups
+    resolve against ``named`` (quads), plain patterns against ``triples``."""
+    plan = copy.copy(q)
+    plan.vars = []
+    plan.select([f"${n}" for n in names])
+    if named is None:
+        return bgp.select_join(triples, plan)
+    view = named.unionByName(
+        triples.withColumn("g", F.lit(None).cast("string")).select(*model.QUAD_KEY)
+    )
+    return G.select_dataset(view, plan)
 
 
 def matched_triples(triples: DataFrame, q: Sparql) -> DataFrame:
@@ -735,7 +664,8 @@ def matched_triples(triples: DataFrame, q: Sparql) -> DataFrame:
     solutions — full TRIPLE_KEY rows (exact kinds), the DELETE WHERE
     delete set. Each pattern's scan semi-joins the solution bindings on
     its variable positions."""
-    sol = _bound_solutions(triples, q)
+    names = _pattern_vars(q, required=False)
+    sol = _solutions(triples, q, names) if names else None
     parts: list[DataFrame] = []
     for cond in q.conds:
         bounds = tuple(None if isinstance(u, Var) else u.value for u in cond)
@@ -757,93 +687,27 @@ def matched_triples(triples: DataFrame, q: Sparql) -> DataFrame:
     return out.dropDuplicates(model.TRIPLE_KEY)
 
 
-def instantiated_quad_values(
-    sol: DataFrame | None, spark, template: list[tuple], default_g: str | None
+def _instantiated(
+    sol: DataFrame, template: list[tuple], graph: str | None, quads: bool
 ) -> DataFrame:
-    """Quad templates × solutions → DataFrame(g, s, p, o_value). A
-    template's ``g`` of None falls back to ``default_g`` (the WITH graph;
-    None = the default graph), ``'$var'`` takes the solution binding,
-    anything else is a ground label. Rows with an unbound triple-term
-    variable are skipped per spec; an unbound GRAPH variable skips too
-    (no graph to target)."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [T.StructField(c, T.StringType()) for c in ("g", "s", "p", "o_value")]
-    )
-    null_g = F.lit(default_g).cast("string")
-
-    def gexpr(g: str | None) -> F.Column:
-        if g is None:
-            return null_g
-        if g.startswith("$"):
-            return F.col(g[1:])
-        return F.lit(g)
-
+    """Quad templates × solutions → distinct (g, s, p, o_value) keys,
+    without ``g`` for a triple store. A template's ``g`` of None is
+    ``graph`` (the WITH graph; None = the default graph), ``'$var'`` takes
+    the solution binding, anything else is a ground label. A row with an
+    unbound variable — GRAPH variable included — is skipped, per spec."""
     parts = []
     for g, pat in template:
-        units = tuple(parse_unit(x) for x in pat)
-        if sol is None:
-            if any(isinstance(u, Var) for u in units) or (g or "").startswith("$"):
-                raise QueryError(
-                    "template variables need a WHERE group that binds them"
-                )
-            parts.append(
-                spark.createDataFrame(
-                    [(default_g if g is None else g, *[u.value for u in units])],
-                    schema,
-                )
-            )
-            continue
-        term = lambda u: F.col(u.name) if isinstance(u, Var) else F.lit(u.value)  # noqa: E731
-        row = sol.select(
-            gexpr(g).alias("g"),
-            term(units[0]).alias("s"),
-            term(units[1]).alias("p"),
-            term(units[2]).alias("o_value"),
+        units = dict(zip(("s", "p", "o_value"), map(parse_unit, pat)))
+        if quads:
+            units = {"g": Val(graph) if g is None else parse_unit(g), **units}
+        term = lambda u: (  # noqa: E731
+            F.col(u.name) if isinstance(u, Var) else F.lit(u.value).cast("string")
         )
-        keep = (
-            F.col("s").isNotNull()
-            & F.col("p").isNotNull()
-            & F.col("o_value").isNotNull()
-        )
-        if g is not None and g.startswith("$"):
-            keep = keep & F.col("g").isNotNull()
-        parts.append(row.filter(keep))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.dropDuplicates()
-
-
-def instantiated_values(sol: DataFrame | None, spark, template: list[list[str]]) -> DataFrame:
-    """Template patterns × solutions → DataFrame(s, p, o_value) of
-    instantiated value-triples (the modify form's flattened delete set);
-    rows with an unbound template variable are skipped, per spec."""
-    from pyspark.sql import types as T
-
-    units = [tuple(parse_unit(x) for x in pat) for pat in template]
-    schema = T.StructType([T.StructField(c, T.StringType()) for c in ("s", "p", "o_value")])
-    parts = []
-    for s_u, p_u, o_u in units:
-        if sol is None:
-            if any(isinstance(u, Var) for u in (s_u, p_u, o_u)):
-                raise QueryError(
-                    "template variables need a WHERE group that binds them"
-                )
-            parts.append(
-                spark.createDataFrame([(s_u.value, p_u.value, o_u.value)], schema)
-            )
-            continue
-        term = lambda u: F.col(u.name) if isinstance(u, Var) else F.lit(u.value)  # noqa: E731
-        row = sol.select(
-            term(s_u).alias("s"), term(p_u).alias("p"), term(o_u).alias("o_value")
-        )
-        parts.append(
-            row.filter(
-                F.col("s").isNotNull() & F.col("p").isNotNull() & F.col("o_value").isNotNull()
-            )
-        )
+        row = sol.select(*[term(u).alias(c) for c, u in units.items()])
+        for c, u in units.items():
+            if isinstance(u, Var):
+                row = row.filter(F.col(c).isNotNull())
+        parts.append(row)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

@@ -257,40 +257,7 @@ class QuadStore:
             names = _pattern_vars(inner, required=False)
             if not names:
                 default, named = graphs.dataset_frames(self.df, inner)
-                if inner.graph_groups:
-                    if (
-                        inner.optionals
-                        or inner.minuses
-                        or inner.values_blocks
-                        or inner.exists_groups
-                        or inner.binds
-                        or inner.subqueries
-                    ):
-                        raise QueryError(
-                            "ground ASK with GRAPH scopes supports triple, "
-                            "path, and FILTER patterns only"
-                        )
-                    # ground patterns/paths + GRAPH scopes: every part gates
-                    core = Sparql()
-                    core.conds = list(inner.conds)
-                    core.paths = list(inner.paths)
-                    ask = (
-                        bgp.ask_ground(default, core)
-                        if (core.conds or core.paths)
-                        else None
-                    )
-                    for gterm, group in inner.graph_groups:
-                        gate = graphs._named_graph_plan(
-                            named, gterm.value, group
-                        ).select(F.lit(True).alias("ask"))
-                        ask = gate if ask is None else ask.intersect(gate)
-                    fg = graphs._const_filter_gate(self.spark, inner.filters)
-                    if fg is not None:
-                        ask = ask.intersect(
-                            fg.limit(1).select(F.lit(True).alias("ask"))
-                        )
-                    return ask.limit(1)
-                return bgp.ask_ground(default, inner)
+                return graphs.ask_ground_dataset(default, named, inner)
             inner.select([f"${n}" for n in names])
             sols = self.select_dataset(inner)
             return sols.limit(1).select(F.lit(True).alias("ask"))
@@ -318,11 +285,8 @@ class QuadStore:
     # -- SPARQL Update ------------------------------------------------------
 
     def update(self, text: str) -> "QuadStore":
-        """Apply one SPARQL 1.1 Update request with graph support
-        (plans/update.py quads mode): DATA forms with GRAPH blocks, the
-        WITH/USING modify forms, and graph management (CLEAR/DROP/CREATE/
-        MOVE/COPY/ADD). Returns a new snapshot."""
-        from rippledb_spark.plans import update as U
+        """Apply one SPARQL 1.1 Update request in quads mode → a new
+        snapshot; forms and semantics: plans/update.py's docstring."""
+        from rippledb_spark.plans.update import apply, parse_update
 
-        form = U.parse_update(text, quads=True)
-        return U.apply_quads(self, form)
+        return apply(self, parse_update(text, quads=True))

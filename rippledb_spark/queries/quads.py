@@ -372,8 +372,8 @@ def update_quad_template_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     named-graph membership row is re-materialized into an audit graph as
     ``?m was_in ?g`` (the template's object takes the WHERE's graph
     binding), then per-graph accounting is hash-checked. Certifies the
-    ModifyQuads path end to end (plans/update.py:instantiated_quad_values
-    + the dataset WHERE evaluation)."""
+    quad-pattern modify end to end (plans/update.py's template
+    instantiation + the dataset WHERE evaluation)."""
     qs = _qstore(spark, sf_dir).update(
         "INSERT { GRAPH <graph:audit> { ?m was_in ?g } } "
         "WHERE { GRAPH ?g { ?m in_nation ?n } }"

@@ -655,7 +655,7 @@ def sparql_update_modify_accounting(spark: SparkSession, sf_dir: str) -> DataFra
     graph.rs:420-523): rename every has_priority edge to priority_was via
     DELETE {} INSERT {} WHERE {}, then account the post-update store per
     predicate. The whole update is DataFrame algebra — solutions once,
-    one value anti-join for the deletion, construct+union+dedup for the
+    one value anti-join for the deletion, named-lift+union+dedup for the
     insertion — against the immutable pre-update snapshot."""
     st = _store(spark, sf_dir)
     st2 = st.update(

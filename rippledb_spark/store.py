@@ -449,82 +449,11 @@ class TripleStore:
         )
 
     def update(self, text: str) -> "TripleStore":
-        """Evaluate a SPARQL 1.1 UPDATE string (plans/update.py subset:
-        INSERT DATA, DELETE DATA, DELETE WHERE, and the
-        DELETE {...} INSERT {...} WHERE {...} modify form) → a NEW
-        TripleStore snapshot, same immutable-snapshot contract as
-        :meth:`insert` / :meth:`remove` (the reference's mutation surface
-        is programmatic only, graph.rs:420-523 — this is its text form).
-        Per spec the modify form deletes before inserting, evaluated
-        against the PRE-update state.
+        """Apply one SPARQL 1.1 Update request (single-graph mode) → a new
+        snapshot; forms and semantics: plans/update.py's docstring."""
+        from rippledb_spark.plans.update import apply, parse_update
 
-        The two WHERE forms (DELETE WHERE, modify) plan their parent
-        several times — the matched set or solutions, the anti-join, the
-        CONSTRUCT — so their snapshot is materialised once
-        (``localCheckpoint(eager=False)``): adaptive execution runs the
-        plan's shuffle stages here, the first action on the snapshot (such
-        as the caller's acknowledging ``count()``) runs the last stage and
-        stores the rows, and later updates, reads and writes scan that one
-        relation instead of re-running the chain (the reference's ``Graph`` updates in
-        place, graph.rs:414-629). The cost is one copy of the snapshot in
-        executor storage (memory, spilling to disk) until the snapshot is
-        unreferenced and the context cleaner frees it. The DATA forms read
-        their parent once and stay lazy, like :meth:`insert` and
-        :meth:`remove`; a modify whose ground WHERE matches nothing returns
-        ``self``."""
-        from rippledb_spark.plans.update import (
-            DeleteData,
-            DeleteWhere,
-            InsertData,
-            Modify,
-            _bound_solutions,
-            instantiated_values,
-            materialised,
-            matched_triples,
-            parse_update,
-        )
-        from rippledb_spark.plans.sparql import Var, parse_unit
-
-        form = parse_update(text)
-        if isinstance(form, InsertData):
-            return self.insert(form.rows)
-        if isinstance(form, DeleteData):
-            return self.remove(form.rows)
-        if isinstance(form, DeleteWhere):
-            # remove() does the null-safe anti-join (o_lang/o_datatype are
-            # NULL for plain terms; a name-list join would never match them)
-            return materialised(self.remove(matched_triples(self.df, form.query)))
-        assert isinstance(form, Modify)
-        if not form.delete_template and not form.insert_template:
-            raise QueryError("the modify form needs a DELETE or INSERT clause")
-        sol = _bound_solutions(self.df, form.query)
-        if sol is None:
-            # Ground WHERE group: zero variables → it contributes one empty
-            # solution IF every pattern matches, else zero solutions and
-            # the whole modify is a no-op (spec semantics — templates
-            # instantiate once per solution).
-            if bgp.ask_ground(self.df, form.query).count() == 0:
-                return self
-        bound = set(sol.columns) if sol is not None else set()
-        for pat in form.delete_template + form.insert_template:
-            for raw in pat:
-                u = parse_unit(raw)
-                if isinstance(u, Var) and u.name not in bound:
-                    raise QueryError(
-                        f"template variable ${u.name} is not bound by the "
-                        f"WHERE group"
-                    )
-        out = self.df
-        if form.delete_template:
-            dels = instantiated_values(sol, self.spark, form.delete_template)
-            # flattened-model deletion: match on (s, p, o_value) — see
-            # plans/update.py semantics notes
-            out = out.join(dels, on=["s", "p", "o_value"], how="left_anti")
-        store = TripleStore(self.spark, out)
-        if form.insert_template:
-            ins = bgp.construct(self.df, form.query, form.insert_template)
-            store = store.insert(ins)
-        return materialised(store)
+        return apply(self, parse_update(text))
 
     def sparql(self, text: str, use_stats: bool = False) -> DataFrame:
         """Evaluate a SPARQL query STRING (the text frontend —
