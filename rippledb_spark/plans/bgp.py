@@ -18,7 +18,10 @@ Two evaluators:
 
 - :func:`select_join` — the documented multi-variable superset (SURVEY
   §4.2): chained inner equi-joins over shared variables, SPARQL-style
-  bag semantics.
+  bag semantics. Its group evaluator is the one SPARQL query planner of
+  both stores: a TripleStore is the dataset with no named graphs, and a
+  QuadStore's GRAPH groups are planned where they occur, as ordinary
+  groups over the named graphs (plans.graphs.select_dataset).
 
 Physical notes: candidate sets are usually small relative to the store, so
 each semi-join broadcasts the candidate side when Spark's size estimate
@@ -34,6 +37,7 @@ import itertools
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
+from rippledb_spark import model
 from rippledb_spark.errors import QueryError
 from rippledb_spark.operators.triple_patterns import pattern_filter, position_column
 from rippledb_spark.plans.sparql import Sparql, SparqlUnion, Val, Var
@@ -213,165 +217,38 @@ def select_join(
     order-independent, so this changes the plan, never the answer. Pass
     optimize=False for the reference's literal textual order.
     """
-    paths = list(getattr(query, "paths", []))
-    subqueries = list(getattr(query, "subqueries", []))
-    prejoined = list(getattr(query, "prejoined", []))
-    if getattr(query, "graph_groups", []) and not prejoined:
-        # GRAPH scopes need a dataset (QuadStore / plans.graphs); evaluating
-        # them against a bare triples frame would silently widen the match
-        # to the whole store. select_dataset lowers each group to a
-        # prejoined plan before delegating here.
-        raise QueryError(
-            "query has GRAPH groups; evaluate it over a QuadStore "
-            "(plans.graphs.select_dataset), not a single-graph store"
-        )
-    if not query.conds and not paths and not subqueries and not prejoined:
+    return _select(triples, None, query, optimize, stats)
+
+
+def _select(
+    triples: DataFrame,
+    named: DataFrame | None,
+    query: Sparql,
+    optimize: bool,
+    stats: dict[str, int] | None,
+) -> DataFrame:
+    """The SPARQL query evaluator of both stores: the solutions of
+    ``query``'s group (:func:`_solve`) over the default graph ``triples``,
+    then aggregation, projection and the solution modifiers. ``named`` is
+    the named graphs' quads that GRAPH groups match (None for a
+    TripleStore, the dataset with no named graphs)."""
+    if not (query.conds or query.paths or query.subqueries or query.graph_groups):
         raise QueryError("select_join requires at least one pattern")
-
-    if query.conds:
-        conds = _order_patterns(query.conds, stats) if optimize else list(query.conds)
-        acc = _join_group(triples, conds)
-    else:
-        acc = None
-
-    # Nested SELECTs (SPARQL §12): each evaluates bottom-up to its own
-    # projected solution set (its aggregates/modifiers are internal), then
-    # joins the group on shared variable names — exactly the relational
-    # derived-table shape, so Catalyst plans it like any subquery join.
-    for sub in subqueries:
-        splan = select_join(triples, sub, optimize=optimize, stats=stats)
-        if acc is None:
-            acc = splan
-            continue
-        shared = sorted(set(acc.columns) & set(splan.columns))
-        acc = acc.join(splan, on=shared, how="inner") if shared else acc.crossJoin(splan)
-
-    # Pre-evaluated plans (plans.graphs lowers each GRAPH group to one):
-    # join on shared variable names exactly like subquery solution sets.
-    # A variable-free group arrives as a 0/1-row gate frame (__gate).
-    for pdf in prejoined:
-        if "__gate" in pdf.columns:
-            gate = F.broadcast(pdf.limit(1))
-            acc = gate.drop("__gate") if acc is None else acc.crossJoin(gate).drop("__gate")
-            continue
-        if acc is None:
-            acc = pdf
-            continue
-        shared = sorted(set(acc.columns) & set(pdf.columns))
-        acc = acc.join(pdf, on=shared, how="inner") if shared else acc.crossJoin(pdf)
-
-    # Property-path patterns (SPARQL 1.1 superset): a closure-free path
-    # plans as the BGP of its §18.2.2.4 translation; any other evaluates
-    # to a plans.paths (src, dst) pair set, renamed/filtered to its
-    # variable bindings. Either joins like any other pattern group. A
-    # bound subject becomes the closure's seed set (frontier-only
-    # expansion).
-    acc = _apply_paths(triples, acc, paths)
-
-    # OPTIONAL groups (SPARQL superset — the reference is conjunctive-only):
-    # each group is evaluated as its own plan (triple patterns + property
-    # paths), then LEFT-OUTER joined onto the required solution on the
-    # shared variables; unmatched rows NULL-extend the group's variables.
-    # A group may arrive as a pre-evaluated DataFrame (plans.graphs lowers
-    # OPTIONAL/MINUS/EXISTS groups containing GRAPH scopes before
-    # delegating here) — use it as the group plan directly.
-    for group in getattr(query, "optionals", []):
-        gplan = (
-            group
-            if isinstance(group, DataFrame)
-            else _group_plan(triples, group, optimize, stats)
-        )
-        shared = sorted(set(acc.columns) & set(gplan.columns))
-        if not shared:
-            raise QueryError(
-                "OPTIONAL group shares no variable with the required patterns"
-            )
-        acc = acc.join(gplan, on=shared, how="left_outer")
-
-    # VALUES blocks (SPARQL §10.2): join the solutions against inline
-    # bindings. Rows are grouped by their UNDEF mask — each group joins on
-    # its DEFINED columns only (UNDEF is compatible with anything);
-    # variables not bound by any pattern extend the solutions.
-    for names, vrows in getattr(query, "values_blocks", []):
-        acc = _values_join(triples.sparkSession, acc, names, vrows)
-
-    # MINUS groups (SPARQL §8.3): drop solutions with a compatible match
-    # on the shared variables — a LEFT ANTI join, the same EXISTS engine
-    # as get()'s pruning but negated. A group sharing no variable removes
-    # nothing (per spec), so it's skipped rather than an error.
-    for group in getattr(query, "minuses", []):
-        gplan = (
-            group
-            if isinstance(group, DataFrame)
-            else _group_plan(triples, group, optimize, stats)
-        )
-        shared = sorted(set(acc.columns) & set(gplan.columns))
-        if not shared:
-            continue
-        acc = acc.join(gplan.select(*shared), on=shared, how="left_anti")
-
-    # BIND extensions (SPARQL §10.1): computed columns over the solution
-    # set — available to EXISTS/FILTER/GROUP BY/ORDER BY below. Rebinding
-    # is a spec error; unbound references are too.
-    for alias, vexpr in getattr(query, "binds", []):
-        from rippledb_spark.plans.filters import filter_vars, value_to_column
-
-        if alias in acc.columns:
-            raise QueryError(f"BIND would rebind already-bound variable ${alias}")
-        unbound = sorted(v for v in filter_vars(vexpr) if v not in acc.columns)
-        if unbound:
-            raise QueryError(f"BIND references unbound variables {unbound}")
-        acc = acc.withColumn(alias, value_to_column(vexpr))
-
-    # FILTER EXISTS / NOT EXISTS groups (SPARQL §8.1): a LEFT SEMI / LEFT
-    # ANTI join on the shared variables — the same EXISTS engine as get()'s
-    # pruning. A group sharing NO variable is a GLOBAL gate (survive iff
-    # the group matches anything / nothing) — the documented divergence
-    # from MINUS (spec §8.3.3), expressed as a constant-true join
-    # condition so the anti/semi forms stay symmetric.
-    for positive, group in getattr(query, "exists_groups", []):
-        gplan = (
-            group
-            if isinstance(group, DataFrame)
-            else _group_plan(triples, group, optimize, stats)
-        )
-        shared = sorted(set(acc.columns) & set(gplan.columns))
-        how = "left_semi" if positive else "left_anti"
-        if shared:
-            acc = acc.join(gplan.select(*shared), on=shared, how=how)
-        else:
-            gate = F.broadcast(gplan.limit(1).select(F.lit(1).alias("__gate")))
-            acc = acc.join(gate, on=F.lit(True), how=how)
-
-    # FILTER constraints (SPARQL §17, engine-tier superset — plans.filters):
-    # applied to the group's full solution set (after OPTIONAL/VALUES/MINUS,
-    # per the spec's group scoping), before projection so they may reference
-    # non-projected variables. Lowering is an ordinary Catalyst predicate —
-    # pushed through the join chain like a hand-written DataFrame.filter.
-    for fexpr in getattr(query, "filters", []):
-        from rippledb_spark.plans.filters import filter_vars, to_column
-
-        unbound = sorted(v for v in filter_vars(fexpr) if v not in acc.columns)
-        if unbound:
-            raise QueryError(f"FILTER references unbound variables {unbound}")
-        acc = acc.filter(to_column(fexpr))
+    acc = _solve(triples, named, query, optimize, stats)
 
     # GROUP BY + aggregates (SPARQL §11, engine-tier superset): one
     # hash-aggregate over the solution set — map-side combinable, the
     # same physical shape as any relational groupBy. HAVING is a filter
     # over the aggregated frame (aliases are ordinary columns by then).
-    group_vars = getattr(query, "group_vars", [])
-    aggregates = getattr(query, "aggregates", [])
+    group_vars, aggregates = query.group_vars, query.aggregates
     if group_vars or aggregates:
-        acc = _aggregate_solutions(acc, group_vars, aggregates)
-        for hexpr in getattr(query, "having", []):
-            from rippledb_spark.plans.filters import filter_vars, to_column
+        from rippledb_spark.plans.filters import to_column
 
-            unbound = sorted(v for v in filter_vars(hexpr) if v not in acc.columns)
-            if unbound:
-                raise QueryError(f"HAVING references unbound variables {unbound}")
+        acc = _aggregate_solutions(acc, group_vars, aggregates)
+        for hexpr in query.having:
+            _check_bound(hexpr, acc.columns, "HAVING references unbound variables {}")
             acc = acc.filter(to_column(hexpr))
-    elif getattr(query, "having", []):
+    elif query.having:
         raise QueryError("HAVING requires GROUP BY or aggregates")
 
     names = query.var_names()
@@ -387,9 +264,9 @@ def select_join(
 
     # Solution modifiers (SPARQL §15, engine-tier superset), in spec order:
     # DISTINCT on the projected solutions, then ORDER BY, then OFFSET/LIMIT.
-    if getattr(query, "is_distinct", False):
+    if query.is_distinct:
         out = out.dropDuplicates()
-    order_keys = getattr(query, "order_keys", [])
+    order_keys = query.order_keys
     if order_keys:
         from rippledb_spark.plans.filters import filter_vars, value_to_column
 
@@ -408,79 +285,225 @@ def select_join(
         out = out.orderBy(
             *[c.desc() if d else c.asc() for c, (_, d) in zip(cols, order_keys)]
         )
-    if getattr(query, "row_offset", 0):
+    if query.row_offset:
         out = out.offset(query.row_offset)
-    if getattr(query, "row_limit", None) is not None:
+    if query.row_limit is not None:
         out = out.limit(query.row_limit)
     return out
 
 
-def _apply_paths(triples: DataFrame, acc: DataFrame | None, paths: list) -> DataFrame:
+_FILTER_UNBOUND = "FILTER references unbound variables {}"
+
+
+def _solve(
+    triples: DataFrame,
+    named: DataFrame | None,
+    group: Sparql,
+    optimize: bool,
+    stats: dict[str, int] | None,
+    graph_var: str | None = None,
+    filter_msg: str = _FILTER_UNBOUND,
+) -> DataFrame:
+    """One group's solutions, one column per variable it binds — the
+    evaluator of the WHERE group and of every group nested in it.
+
+    A GRAPH group is this same evaluation over the named graphs (SPARQL
+    1.1 §13.3), planned where it occurs: ``GRAPH <iri>`` over that
+    graph's triples; ``GRAPH ?g`` over all named quads with ``graph_var``
+    set, so every triple pattern also projects its ``g`` column as the
+    graph variable and the chain joins within one graph, and paths run
+    the graph-tagged route (plans.graphs._var_graph_path_plan). An
+    OPTIONAL, MINUS or EXISTS group inside it inherits ``graph_var``."""
+    acc = None
+    if group.conds:
+        conds = _order_patterns(group.conds, stats) if optimize else list(group.conds)
+        acc = _join_group(triples, conds, graph_var)
+
+    # Nested SELECTs (SPARQL §12): each evaluates bottom-up to its own
+    # projected solution set (its aggregates/modifiers are internal), then
+    # joins the group on shared variable names — exactly the relational
+    # derived-table shape, so Catalyst plans it like any subquery join.
+    for sub in group.subqueries:
+        acc = _join(acc, _select(triples, named, sub, optimize, stats))
+
+    # GRAPH groups join in like any other solution set (the spec's
+    # join-of-multisets).
+    for gterm, ggroup in group.graph_groups:
+        gvar = gterm.name if isinstance(gterm, Var) else None
+        gplan = _solve(_graph_frame(named, gterm), None, ggroup, optimize, stats, gvar)
+        acc = _join(acc, gplan)
+
+    # Property-path patterns (SPARQL 1.1 superset): a closure-free path
+    # plans as the BGP of its §18.2.2.4 translation; any other evaluates
+    # to a plans.paths (src, dst) pair set, renamed/filtered to its
+    # variable bindings. Either joins like any other pattern group. A
+    # bound subject becomes the closure's seed set (frontier-only
+    # expansion).
+    acc = _apply_paths(triples, acc, group.paths, graph_var)
+    if acc is None:
+        raise QueryError("empty pattern group")
+
+    # OPTIONAL groups (SPARQL superset — the reference is conjunctive-only):
+    # each group is evaluated as its own plan, then LEFT-OUTER joined onto
+    # the required solution on the shared variables; unmatched rows
+    # NULL-extend the group's variables.
+    for g in group.optionals:
+        gplan = _group_plan(triples, named, g, optimize, stats, graph_var)
+        acc = _join(acc, gplan, "optional")
+
+    # VALUES blocks (SPARQL §10.2): join the solutions against inline
+    # bindings. Rows are grouped by their UNDEF mask — each group joins on
+    # its DEFINED columns only (UNDEF is compatible with anything);
+    # variables not bound by any pattern extend the solutions.
+    for names, vrows in group.values_blocks:
+        acc = _values_join(triples.sparkSession, acc, names, vrows)
+
+    # MINUS groups (SPARQL §8.3): drop solutions with a compatible match
+    # on the shared variables — a LEFT ANTI join, the same EXISTS engine
+    # as get()'s pruning but negated.
+    for g in group.minuses:
+        gplan = _group_plan(triples, named, g, optimize, stats, graph_var)
+        acc = _join(acc, gplan, "minus")
+
+    # BIND extensions (SPARQL §10.1): computed columns over the solution
+    # set — available to EXISTS/FILTER/GROUP BY/ORDER BY below. Rebinding
+    # is a spec error; unbound references are too.
+    for alias, vexpr in group.binds:
+        from rippledb_spark.plans.filters import value_to_column
+
+        if alias in acc.columns:
+            raise QueryError(f"BIND would rebind already-bound variable ${alias}")
+        _check_bound(vexpr, acc.columns, "BIND references unbound variables {}")
+        acc = acc.withColumn(alias, value_to_column(vexpr))
+
+    # FILTER EXISTS / NOT EXISTS groups (SPARQL §8.1): a LEFT SEMI / LEFT
+    # ANTI join on the shared variables — the same EXISTS engine as get()'s
+    # pruning.
+    for positive, g in group.exists_groups:
+        gplan = _group_plan(triples, named, g, optimize, stats, graph_var)
+        acc = _join(acc, gplan, "exists" if positive else "not_exists")
+
+    # FILTER constraints (SPARQL §17, engine-tier superset — plans.filters):
+    # applied to the group's full solution set (after OPTIONAL/VALUES/MINUS,
+    # per the spec's group scoping), before projection so they may reference
+    # non-projected variables. Lowering is an ordinary Catalyst predicate —
+    # pushed through the join chain like a hand-written DataFrame.filter.
+    for fexpr in group.filters:
+        from rippledb_spark.plans.filters import to_column
+
+        _check_bound(fexpr, acc.columns, filter_msg)
+        acc = acc.filter(to_column(fexpr))
+    return acc
+
+
+def _group_plan(
+    triples: DataFrame,
+    named: DataFrame | None,
+    group,
+    optimize: bool,
+    stats: dict[str, int] | None,
+    graph_var: str | None,
+) -> DataFrame:
+    """One OPTIONAL/MINUS/EXISTS group → its solutions. ``group`` is a
+    plain pattern list (the conjunctive-only historical form) or a Sparql
+    group (patterns, paths, GRAPH scopes, group-scoped FILTERs). A FILTER
+    inside the group constrains the GROUP's solutions before the outer
+    join — per spec §8 group scoping this differs from filtering
+    afterwards (an optional row failing its inner filter NULL-extends
+    instead of dropping the required row)."""
+    if not isinstance(group, Sparql):
+        conds, group = group, Sparql()
+        group.conds = list(conds)
+    return _solve(
+        triples, named, group, optimize, stats, graph_var,
+        "group FILTER references variables {} not bound in the group",
+    )
+
+
+def _graph_frame(named: DataFrame | None, gterm) -> DataFrame:
+    """The frame a GRAPH group matches in: all named quads for ``GRAPH
+    ?g``, one named graph's triples for ``GRAPH <iri>``."""
+    if named is None:
+        # a single-graph store has no named graphs; evaluating the group
+        # against its triples would silently widen the scope to the store
+        raise QueryError(
+            "query has GRAPH groups; evaluate it over a QuadStore "
+            "(plans.graphs.select_dataset), not a single-graph store"
+        )
+    if isinstance(gterm, Var):
+        return named
+    return named.filter(F.col("g") == F.lit(gterm.value)).select(*model.TRIPLE_KEY)
+
+
+def _join(acc: DataFrame | None, plan: DataFrame, kind: str = "join") -> DataFrame:
+    """Join ``plan`` into the solutions ``acc`` on their shared variables.
+
+    - ``join`` (patterns, paths, subqueries, GRAPH groups): a 0/1-row gate
+      (a ``__gate`` column) broadcast-crossjoins; plans sharing no
+      variable cross-join.
+    - ``optional``: a LEFT OUTER join; the group must share a variable.
+    - ``minus``: a LEFT ANTI join; a group sharing no variable removes
+      nothing (spec §8.3) and is skipped.
+    - ``exists`` / ``not_exists``: a LEFT SEMI / LEFT ANTI join; a group
+      sharing NO variable is a GLOBAL gate (survive iff the group matches
+      anything / nothing) — the documented divergence from MINUS (spec
+      §8.3.3), expressed as a constant-true join condition so the
+      anti/semi forms stay symmetric."""
+    if acc is None:
+        return plan
+    if kind == "join" and "__gate" in plan.columns:
+        return acc.crossJoin(F.broadcast(plan)).drop("__gate")
+    shared = sorted(set(acc.columns) & set(plan.columns))
+    if kind == "join":
+        return acc.join(plan, on=shared, how="inner") if shared else acc.crossJoin(plan)
+    if kind == "optional":
+        if not shared:
+            raise QueryError(
+                "OPTIONAL group shares no variable with the required patterns "
+                "(it must bind at least one of their variables)"
+            )
+        return acc.join(plan, on=shared, how="left_outer")
+    how = "left_semi" if kind == "exists" else "left_anti"
+    if shared:
+        return acc.join(plan.select(*shared), on=shared, how=how)
+    if kind == "minus":
+        return acc
+    gate = F.broadcast(plan.limit(1).select(F.lit(1).alias("__gate")))
+    return acc.join(gate, on=F.lit(True), how=how)
+
+
+def _check_bound(expr, columns: list[str], msg: str) -> None:
+    """Raise ``msg`` (formatted with the names) when a FILTER, BIND or
+    HAVING expression references a variable not among ``columns``."""
+    from rippledb_spark.plans.filters import filter_vars
+
+    unbound = sorted(v for v in filter_vars(expr) if v not in columns)
+    if unbound:
+        raise QueryError(msg.format(unbound))
+
+
+def _apply_paths(
+    triples: DataFrame, acc: DataFrame | None, paths: list, graph_var: str | None = None
+) -> DataFrame | None:
     """Fold property-path patterns into the accumulated plan: each path
     evaluates to a variable-column plan (:func:`_path_plan`) and joins on
     shared variables; when ``acc`` already binds the path's subject
     variable, those bindings SEED the closure evaluator so closures
     expand only from reachable nodes (the same seeding Seq applies
-    internally). Closure-free paths plan as BGP joins and ignore them."""
+    internally). Closure-free paths plan as BGP joins and ignore them.
+    Under ``GRAPH ?g`` (``graph_var``) each path runs the graph-tagged
+    route over the named quads instead."""
     for s_u, expr, o_u in paths:
-        seeds = None
-        if acc is not None and isinstance(s_u, Var) and s_u.name in acc.columns:
-            seeds = acc.select(F.col(s_u.name).alias("node")).distinct()
-        plan = _path_plan(triples, s_u, expr, o_u, seeds=seeds)
-        if acc is None:
-            acc = plan
-            continue
-        if "__gate" in plan.columns:
-            acc = acc.crossJoin(F.broadcast(plan.limit(1))).drop("__gate")
-            continue
-        shared = sorted(set(acc.columns) & set(plan.columns))
-        acc = acc.join(plan, on=shared, how="inner") if shared else acc.crossJoin(plan)
-    return acc
+        if graph_var is not None:
+            from rippledb_spark.plans.graphs import _var_graph_path_plan
 
-
-def _group_plan(
-    triples: DataFrame, group, optimize: bool, stats: dict[str, int] | None
-) -> DataFrame:
-    """Evaluate one OPTIONAL/MINUS/EXISTS group → a variable-column plan.
-    ``group`` is a plain pattern list (the conjunctive-only historical
-    form) or a Sparql carrying patterns AND property paths (the r5
-    superset — paths in negation/optional groups); anything else on a
-    Sparql group (nested modifiers etc.) was rejected at build time."""
-    if isinstance(group, Sparql):
-        if getattr(group, "graph_groups", []):
-            # dataset scope inside a single-graph evaluation would silently
-            # widen to the whole store; plans.graphs pre-lowers such groups
-            # to DataFrames before select_join sees them
-            raise QueryError(
-                "group has GRAPH scopes; evaluate over a QuadStore "
-                "(plans.graphs.select_dataset)"
-            )
-        conds, paths = list(group.conds), list(group.paths)
-    else:
-        conds, paths = list(group), []
-    if conds:
-        ordered = _order_patterns(conds, stats) if optimize else conds
-        acc = _join_group(triples, ordered)
-    else:
-        acc = None
-    if paths:
-        acc = _apply_paths(triples, acc, paths)
-    if acc is None:
-        raise QueryError("empty pattern group")
-    # Group-scoped FILTERs (r6): a FILTER inside an OPTIONAL/MINUS group
-    # constrains the GROUP's solutions BEFORE the outer join — per spec
-    # §8 group scoping this differs from filtering afterwards (an
-    # optional row failing its inner filter NULL-extends instead of
-    # dropping the required row).
-    for fexpr in getattr(group, "filters", []) if isinstance(group, Sparql) else []:
-        from rippledb_spark.plans.filters import filter_vars, to_column
-
-        unbound = sorted(v for v in filter_vars(fexpr) if v not in acc.columns)
-        if unbound:
-            raise QueryError(
-                f"group FILTER references variables {unbound} not bound in the group"
-            )
-        acc = acc.filter(to_column(fexpr))
+            plan = _var_graph_path_plan(triples, graph_var, s_u, expr, o_u)
+        else:
+            seeds = None
+            if acc is not None and isinstance(s_u, Var) and s_u.name in acc.columns:
+                seeds = acc.select(F.col(s_u.name).alias("node")).distinct()
+            plan = _path_plan(triples, s_u, expr, o_u, seeds=seeds)
+        acc = _join(acc, plan)
     return acc
 
 
@@ -544,6 +567,16 @@ def select_union(
     unionByName concatenates — no shuffle beyond what the arms need.
     All arms must project identical variable sets; N-ary unions arrive
     as left-nested SparqlUnion pairs and evaluate recursively."""
+    return _union(triples, None, query, optimize, stats)
+
+
+def _union(
+    triples: DataFrame,
+    named: DataFrame | None,
+    query: SparqlUnion,
+    optimize: bool,
+    stats: dict[str, int] | None,
+) -> DataFrame:
     lnames, rnames = query.left.var_names(), query.right.var_names()
     if set(lnames) != set(rnames):
         raise QueryError(
@@ -552,8 +585,8 @@ def select_union(
 
     def ev(q) -> DataFrame:
         if isinstance(q, SparqlUnion):
-            return select_union(triples, q, optimize=optimize, stats=stats)
-        return select_join(triples, q, optimize=optimize, stats=stats)
+            return _union(triples, named, q, optimize, stats)
+        return _select(triples, named, q, optimize, stats)
 
     return ev(query.left).unionByName(ev(query.right))
 
@@ -612,7 +645,6 @@ def construct(
     OPTIONAL) skip that template pattern for that solution, per spec.
     The plan is the solution join followed by one projection per template
     pattern, one union, and one set-dedup shuffle."""
-    from rippledb_spark import model
     from rippledb_spark.plans.sparql import parse_unit
 
     units = []
@@ -629,9 +661,9 @@ def construct(
     q.vars = list(query.vars)
     for v in sorted(tmpl_vars - set(query.var_names())):
         q.vars.append(Var(v))
-    # ``solver`` overrides the solution evaluator (the dataset tier passes
-    # plans.graphs.select_dataset so GRAPH groups in the WHERE resolve
-    # against named graphs; the template still materializes plain triples).
+    # ``solver`` overrides the solution evaluator (a QuadStore's passes its
+    # dataset so GRAPH groups in the WHERE resolve against named graphs;
+    # the template still materializes plain triples).
     if solver is not None:
         sol = solver(q)
     else:
@@ -671,37 +703,51 @@ def ask_ground(triples: DataFrame, query: Sparql) -> DataFrame:
     0/1-row gate; the ASK holds iff every gate holds. Returns the engine's
     ASK convention: 0 or 1 rows, column ``ask`` = true. An empty group
     matches with one empty solution (SPARQL spec), i.e. ask = true."""
+    return _ask_ground(triples, None, query)
+
+
+def _ask_ground(
+    triples: DataFrame, named: DataFrame | None, query: Sparql
+) -> DataFrame:
+    """:func:`ask_ground` over a dataset — the ground-ASK query form of
+    both stores and the ground-WHERE gate of SPARQL UPDATE's modify form.
+    Ground patterns and paths gate on ``triples``, each GRAPH group on
+    its graphs in ``named``, and a constant FILTER is a gate of its own."""
     if (
-        getattr(query, "optionals", [])
-        or getattr(query, "minuses", [])
-        or getattr(query, "values_blocks", [])
-        or getattr(query, "filters", [])
-        or getattr(query, "exists_groups", [])
-        or getattr(query, "subqueries", [])
+        query.optionals
+        or query.minuses
+        or query.values_blocks
+        or query.exists_groups
+        or query.binds
+        or query.subqueries
     ):
-        raise QueryError("ask_ground() evaluates ground patterns and paths only")
-    if getattr(query, "graph_groups", []):
-        # single-graph evaluation must not silently widen a GRAPH scope to
-        # the whole store; the dataset gate (graphs.ask_ground_dataset)
-        # strips the graph groups and gates them against their named graphs
         raise QueryError(
-            "query has GRAPH groups; evaluate it over a QuadStore"
+            "ask_ground() evaluates ground patterns, paths, GRAPH groups "
+            "and FILTERs only"
         )
+
+    def ask(df: DataFrame) -> DataFrame:
+        return df.limit(1).select(F.lit(True).alias("ask"))
+
     gates: list[DataFrame] = []
     for cond in query.conds:
         if _var_positions(cond):
             raise QueryError(f"ask_ground() requires fully-bound patterns: {cond!r}")
-        gates.append(
-            pattern_filter(triples, *_bounds(cond)).limit(1).select(F.lit(True).alias("ask"))
-        )
-    for s_u, expr, o_u in getattr(query, "paths", []):
+        gates.append(ask(pattern_filter(triples, *_bounds(cond))))
+    for s_u, expr, o_u in query.paths:
         if isinstance(s_u, Var) or isinstance(o_u, Var):
             raise QueryError(f"ask_ground() requires fully-bound path ends: {expr!r}")
-        gates.append(
-            _path_plan(triples, s_u, expr, o_u).limit(1).select(F.lit(True).alias("ask"))
-        )
-    if not gates:
-        return triples.sparkSession.createDataFrame([(True,)], "ask boolean")
+        gates.append(ask(_path_plan(triples, s_u, expr, o_u)))
+    for gterm, group in query.graph_groups:
+        gates.append(_ask_ground(_graph_frame(named, gterm), None, group))
+    if query.filters or not gates:
+        from rippledb_spark.plans.filters import to_column
+
+        one = triples.sparkSession.createDataFrame([(True,)], "ask boolean")
+        for fexpr in query.filters:
+            _check_bound(fexpr, [], _FILTER_UNBOUND)
+            one = one.filter(to_column(fexpr))
+        gates.append(one)
     out = gates[0]
     for g in gates[1:]:
         out = out.intersect(g)
@@ -721,8 +767,6 @@ def _named_node_gate(triples: DataFrame, value: str) -> DataFrame:
     have to thread o_kind through every closure round. Closure-free paths
     lower to triple patterns (:func:`_lower_path`), where the rule holds
     per edge."""
-    from rippledb_spark import model
-
     return (
         triples.filter(
             (F.col("s") == F.lit(value))
@@ -833,42 +877,33 @@ def _path_plan(
     return pairs.limit(1).select(F.lit(1).alias("__gate"))
 
 
-def _join_group(triples: DataFrame, conds: list) -> DataFrame:
+def _join_group(
+    triples: DataFrame, conds: list, graph_var: str | None = None
+) -> DataFrame:
     """Inner equi-join chain for one pattern group (shared-variable
-    columns join; gates broadcast; disconnected patterns cross-join)."""
+    columns join; gates broadcast; disconnected patterns cross-join).
+    With ``graph_var`` (``GRAPH ?g``) ``triples`` is the named quads and
+    each pattern also projects its ``g`` column as that variable, so the
+    chain joins within one graph."""
     if not conds:
         raise QueryError("empty pattern group")
-    plans: list[DataFrame] = []
+    acc = None
     for cond in conds:
         ci = pattern_filter(triples, *_bounds(cond))
-        vpos = _var_positions(cond)
-        if not vpos:
-            # Fully-bound pattern acts as a gate (see get()).
-            plans.append(ci.limit(1).select(F.lit(1).alias("__gate")))
-            continue
-        # Same var twice in one pattern (e.g. [$x, p, $x]) → equality filter.
-        seen: dict[str, int] = {}
-        for i, name in vpos:
-            if name in seen:
-                ci = ci.filter(
-                    F.col(position_column(seen[name])) == F.col(position_column(i))
-                )
+        # Same var twice in one pattern (e.g. [$x, p, $x]), or the graph
+        # variable in a pattern position (GRAPH ?g { ?g ?p ?o }) →
+        # equality filter.
+        cols = {} if graph_var is None else {graph_var: "g"}
+        for i, name in _var_positions(cond):
+            if name in cols:
+                ci = ci.filter(F.col(cols[name]) == F.col(position_column(i)))
             else:
-                seen[name] = i
-        plans.append(
-            ci.select(*[F.col(position_column(i)).alias(n) for n, i in seen.items()])
-        )
-
-    acc = plans[0]
-    for nxt in plans[1:]:
-        if "__gate" in nxt.columns:
-            acc = acc.crossJoin(F.broadcast(nxt)).drop("__gate")
+                cols[name] = position_column(i)
+        if not cols:
+            # Fully-bound pattern acts as a gate (see get()).
+            acc = _join(acc, ci.limit(1).select(F.lit(1).alias("__gate")))
             continue
-        shared = sorted(set(acc.columns) & set(nxt.columns))
-        if shared:
-            acc = acc.join(nxt, on=shared, how="inner")
-        else:
-            acc = acc.crossJoin(nxt)
+        acc = _join(acc, ci.select(*[F.col(c).alias(n) for n, c in cols.items()]))
     if "__gate" in acc.columns:
         acc = acc.drop("__gate")
     return acc

@@ -66,8 +66,9 @@ class Sparql:
         self.subqueries: list["Sparql"] = []  # nested SELECTs (spec §12)
         # GRAPH groups (SPARQL 1.1 §13.3, dataset-tier): (gterm, group)
         # where gterm is a Var (ranges over named graphs) or a Val (one
-        # named graph). Evaluated by plans.graphs.select_dataset over a
-        # QuadStore; plain triple evaluation refuses them loudly.
+        # named graph). Planned where they occur by plans.bgp's group
+        # evaluator over a QuadStore's named graphs; a TripleStore has
+        # none and refuses them loudly.
         self.graph_groups: list[tuple[QueryUnit, "Sparql"]] = []
         # FROM / FROM NAMED dataset clauses (§13.2): IRIs selecting the
         # query's default graph (RDF merge of from_graphs) and its named
@@ -342,9 +343,8 @@ class Sparql:
             or group.row_limit is not None
             or group.row_offset
         ):
-            # the evaluator (plans.graphs) builds the group plan from
-            # conds/paths/filters only — anything else would be silently
-            # dropped, so refuse here (the text parser enforces the same)
+            # GRAPH groups are the triple/path/FILTER subset (the text
+            # parser enforces the same)
             raise QueryError(
                 "GRAPH groups support triple, path, and FILTER patterns only"
             )
@@ -355,7 +355,7 @@ class Sparql:
 
     def from_graph(self, iri: str, named: bool = False) -> "Sparql":
         """FROM / FROM NAMED dataset clause (§13.2): restrict the query's
-        dataset. Applied by plans.graphs.select_dataset."""
+        dataset. Applied by plans.graphs.dataset_frames."""
         (self.from_named if named else self.from_graphs).append(iri)
         return self
 

@@ -363,7 +363,8 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
                 )
             if _is_kw(tok, "GRAPH"):
                 # GRAPH ?g { group } / GRAPH <iri> { group } (§13.3) —
-                # dataset-tier: evaluated by plans.graphs over a QuadStore
+                # dataset-tier: planned by plans.bgp over a QuadStore's
+                # named graphs
                 t.take()
                 gterm = term(t.take())
                 t.expect("{")
@@ -586,7 +587,7 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
             parse_group(sub)
             if t.peek() is not None:
                 raise QueryError(f"trailing tokens after DESCRIBE: {t.toks[t.i:]}")
-            sub.select([f"${n}" for n in _pattern_vars(sub)])
+            sub.select([f"${raw[1:]}"])  # the described variable only
             return SparqlDescribe(None, var=raw[1:], query=sub)
         node = term(raw)
         if t.peek() is not None:
@@ -659,9 +660,8 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
 
     # FROM / FROM NAMED dataset clauses (§13.2) — dataset-tier: applied
     # by plans.graphs.dataset_frames when the query runs over a QuadStore
-    # (a single-graph TripleStore has no named graphs to select from, so
-    # select_join refuses GRAPH groups and FROM is surfaced via the
-    # QuadStore.sparql path).
+    # (a single-graph TripleStore has no named graphs to select from: it
+    # refuses GRAPH groups and ignores FROM).
     from_graphs: list[str] = []
     from_named: list[str] = []
     while _is_kw(t.peek(), "FROM"):

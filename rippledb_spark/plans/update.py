@@ -55,7 +55,7 @@ plans.bgp):
   leaving a template variable unbound skips that pattern, per spec; a
   template variable the WHERE group never binds is an error, even when
   the WHERE matches nothing. A ground WHERE gates the whole modify
-  (graphs.ask_ground_dataset): one empty solution if it matches, else
+  (bgp.ask_ground): one empty solution if it matches, else
   the store itself comes back.
 
 Scale shape: every form is DataFrame algebra end to end — pattern scans,
@@ -92,7 +92,6 @@ from rippledb_spark import model
 from rippledb_spark.errors import QueryError
 from rippledb_spark.operators.triple_patterns import pattern_filter, position_column
 from rippledb_spark.plans import bgp
-from rippledb_spark.plans import graphs as G
 from rippledb_spark.plans.sparql import Sparql, Val, Var, parse_unit
 from rippledb_spark.plans.text import _is_kw, _pattern_vars, _Tokens
 
@@ -606,13 +605,13 @@ def apply(store, form: UpdateForm):
     # WHERE then match nothing, exactly like FROM without FROM NAMED.
     default = _graph_df(store, form.using if form.using is not None else form.graph)
     named = None
-    if q.graph_groups:
+    if quads:
         named = (
             df.limit(0) if form.using is not None else df.filter(F.col("g").isNotNull())
         )
     if names:
         sol = _solutions(default, q, names, named)
-    elif G.ask_ground_dataset(default, named, q).count() == 0:
+    elif bgp._ask_ground(default, named, q).count() == 0:
         return store  # a ground WHERE that does not match: a no-op
     else:
         sol = spark.range(1).drop("id")  # its one empty solution
@@ -647,16 +646,14 @@ def _solutions(
 ) -> DataFrame:
     """Solutions of an update's WHERE group projecting ``names``, planned
     on a copy of ``q`` so the parsed form stays as parsed. GRAPH groups
-    resolve against ``named`` (quads), plain patterns against ``triples``."""
+    resolve against ``named`` (quads; None for a TripleStore), plain
+    patterns against ``triples``."""
     plan = copy.copy(q)
     plan.vars = []
     plan.select([f"${n}" for n in names])
     if named is None:
         return bgp.select_join(triples, plan)
-    view = named.unionByName(
-        triples.withColumn("g", F.lit(None).cast("string")).select(*model.QUAD_KEY)
-    )
-    return G.select_dataset(view, plan)
+    return bgp._select(triples, named, plan, True, None)
 
 
 def matched_triples(triples: DataFrame, q: Sparql) -> DataFrame:

@@ -30,10 +30,10 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from rippledb_spark import model
-from rippledb_spark.errors import QueryError, SchemaError
-from rippledb_spark.plans import bgp, graphs
+from rippledb_spark.errors import SchemaError
+from rippledb_spark.plans import graphs
 from rippledb_spark.plans.sparql import Sparql
-from rippledb_spark.store import TripleStore
+from rippledb_spark.store import TripleStore, _answer
 
 QuadLike = tuple | list
 
@@ -238,49 +238,11 @@ class QuadStore:
     def sparql(self, text: str) -> DataFrame:
         """Evaluate a SPARQL query string over the DATASET: plain patterns
         match the default graph, GRAPH groups match named graphs, FROM /
-        FROM NAMED select the dataset (plans/graphs.py semantics). Query
-        forms without graph features behave exactly like
+        FROM NAMED select the dataset (plans/graphs.py semantics). The
+        dispatcher and evaluator are TripleStore.sparql's, so query forms
+        without graph features behave exactly like
         ``default_graph().sparql(text)``."""
-        from rippledb_spark.plans.text import (
-            SparqlAsk,
-            SparqlConstruct,
-            SparqlDescribe,
-            _pattern_vars,
-            parse_sparql,
-        )
-
-        q = parse_sparql(text)
-        if isinstance(q, Sparql):
-            return self.select_dataset(q)
-        if isinstance(q, SparqlAsk):
-            inner = q.query
-            names = _pattern_vars(inner, required=False)
-            if not names:
-                default, named = graphs.dataset_frames(self.df, inner)
-                return graphs.ask_ground_dataset(default, named, inner)
-            inner.select([f"${n}" for n in names])
-            sols = self.select_dataset(inner)
-            return sols.limit(1).select(F.lit(True).alias("ask"))
-        if isinstance(q, SparqlConstruct):
-            # GRAPH groups in the WHERE resolve against named graphs; the
-            # template materializes a plain RDF graph (§16.2 — a CONSTRUCT
-            # result is a graph, not a dataset)
-            default, _ = graphs.dataset_frames(self.df, q.query)
-            return bgp.construct(
-                default, q.query, q.template,
-                solver=lambda plan: graphs.select_dataset(self.df, plan),
-            )
-        if isinstance(q, SparqlDescribe):
-            if q.var is None:
-                # node description reads the DEFAULT graph (the dataset's
-                # shared facts; per-graph CBDs via graph(iri).describe)
-                return self.default_graph().describe(q.node)
-            sols = self.select_dataset(q.query)
-            if q.var not in sols.columns:
-                raise QueryError(f"DESCRIBE variable ?{q.var} not bound by the group")
-            return self.default_graph().describe_bindings(sols.select(q.var))
-        # SparqlUnion: arms evaluate with full GRAPH/FROM support
-        return graphs.select_union_dataset(self.df, q)
+        return _answer(self, text)
 
     # -- SPARQL Update ------------------------------------------------------
 

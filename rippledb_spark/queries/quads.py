@@ -215,7 +215,7 @@ def sparql_graph_var_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GRAPH ?g as a distributed join dimension: membership counts per
     named graph through the text frontend — the graph variable is bound
     from the quads frame's label column inside ONE aggregation, no
-    per-graph loop (plans/graphs.py:_var_graph_plan)."""
+    per-graph loop (plans/bgp.py:_join_group with the graph variable)."""
     return _qstore(spark, sf_dir).sparql(
         "SELECT ?g (COUNT(?m) AS ?n_members) (COUNT(DISTINCT ?n) AS ?n_nations) "
         "WHERE { GRAPH ?g { ?m in_nation ?n } } GROUP BY ?g ORDER BY ?g"
@@ -340,7 +340,7 @@ def sparql_optional_graph_members(spark: SparkSession, sf_dir: str) -> DataFrame
     """OPTIONAL { GRAPH <iri> { ... } }: default-graph nations LEFT-OUTER
     extended by one named graph's membership (nations with no customers
     survive as NULL rows — COUNT(?m) counts bound rows only), certifying
-    the pre-lowered-group join path (plans/graphs.py:_lower_group)
+    the GRAPH group planned inside the OPTIONAL group (plans/bgp.py:_solve)
     against the SQL LEFT JOIN twin."""
     return _qstore(spark, sf_dir).sparql(
         "SELECT ?n (COUNT(?m) AS ?n_customers) WHERE { "

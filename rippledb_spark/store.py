@@ -38,7 +38,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Row, SparkSession
 
 from rippledb_spark import model
-from rippledb_spark.errors import QueryError, SchemaError
+from rippledb_spark.errors import SchemaError
 from rippledb_spark.operators.triple_patterns import pattern_filter
 from rippledb_spark.plans import bgp
 from rippledb_spark.plans.sparql import Sparql
@@ -365,89 +365,6 @@ class TripleStore:
         stats = self.analyze() if use_stats else None
         return bgp.select_union(self.df, query, stats=stats)
 
-    def _location_tracked(self, db: str, path: str) -> bool:
-        """True if any live catalog table in ``db`` resolves to ``path``
-        (guards the leftover-directory scrub in persist_bucketed against
-        deleting a directory some OTHER table — e.g. an external one —
-        still points at)."""
-        from urllib.parse import unquote, urlparse
-
-        want = path.rstrip("/")
-        try:
-            tables = self.spark.catalog.listTables(db)
-        except Exception:
-            return False
-        for t in tables:
-            if t.tableType == "TEMPORARY":
-                continue
-            try:
-                rows = self.spark.sql(f"DESCRIBE EXTENDED {db}.{t.name}").collect()
-            except Exception:
-                continue
-            loc = next((r.data_type for r in rows if r.col_name == "Location"), None)
-            if loc and unquote(urlparse(loc).path).rstrip("/") == want:
-                return True
-        return False
-
-    def persist_bucketed(
-        self, table_name: str, n_buckets: int = 64
-    ) -> "TripleStore":
-        """Persist as a SUBJECT-BUCKETED (+ predicate-partitioned) table
-        and return a store reading from it. Star-shaped BGPs — multiple
-        patterns sharing the subject variable, the dominant SPARQL shape —
-        then join EXCHANGE-FREE: every pattern's scan of the same table
-        carries identical hash-partitioning on ``s``, so the shuffle
-        happened once at write time and is amortized over every later
-        query (the reference has no cross-pattern co-location at all — each
-        K²-Tree probe is independent, graph.rs:854-1009). Predicate
-        partitioning (pruning) is preserved: layout is one directory per
-        predicate × ``n_buckets`` files."""
-        # A managed table's LOCATION can outlive the catalog entry (a new
-        # session starts with a fresh in-memory catalog but the warehouse
-        # directory persists) — Spark then refuses the saveAsTable with
-        # LOCATION_ALREADY_EXISTS even under mode("overwrite"). Make the
-        # persist idempotent across sessions WITHOUT path guessing:
-        #
-        # 1. If the catalog tracks the table, plain DROP is the whole
-        #    cleanup — the catalog resolves the real location (managed
-        #    files are deleted wherever they live; an EXTERNAL table's
-        #    files are the user's and are left alone).
-        # 2. Then scrub the DEFAULT managed location this saveAsTable will
-        #    write to — '<db location>/<tbl>' (for qualified names that is
-        #    '<warehouse>/<db>.db/<tbl>', NOT '<warehouse>/<name>') — but
-        #    only when no live catalog entry still points at that path
-        #    (another table parked there would otherwise be destroyed).
-        import os
-        import shutil
-        from urllib.parse import unquote, urlparse
-
-        parts = [p for p in table_name.split(".") if p]
-        tbl = parts[-1].lower()
-        db = parts[-2].lower() if len(parts) >= 2 else self.spark.catalog.currentDatabase()
-
-        if self.spark.catalog.tableExists(table_name):
-            self.spark.sql(f"DROP TABLE {table_name}")
-
-        try:
-            db_loc = urlparse(self.spark.catalog.getDatabase(db).locationUri)
-        except Exception:
-            db_loc = None  # unknown database: let saveAsTable raise its own error
-        if db_loc is not None and db_loc.scheme in ("", "file"):
-            leftover = os.path.join(unquote(db_loc.path), tbl)
-            if os.path.exists(leftover) and not self._location_tracked(db, leftover):
-                shutil.rmtree(leftover, ignore_errors=True)
-        (
-            self.df.write.mode("overwrite")
-            .format("parquet")
-            .partitionBy("p")
-            .bucketBy(n_buckets, "s")
-            .sortBy("s")
-            .saveAsTable(table_name)
-        )
-        return TripleStore(
-            self.spark, self.spark.table(table_name).select(*model.TRIPLE_KEY)
-        )
-
     def update(self, text: str) -> "TripleStore":
         """Apply one SPARQL 1.1 Update request (single-graph mode) → a new
         snapshot; forms and semantics: plans/update.py's docstring."""
@@ -459,38 +376,9 @@ class TripleStore:
         """Evaluate a SPARQL query STRING (the text frontend —
         plans/text.py; grammar subset documented there). The reference's
         text surface is an unimplemented macro stub (query.rs:74-77), so
-        this completes it: parse → Sparql builder → select_join /
-        select_union."""
-        from rippledb_spark.plans.text import (
-            SparqlAsk,
-            SparqlConstruct,
-            SparqlDescribe,
-            _pattern_vars,
-            parse_sparql,
-        )
-
-        q = parse_sparql(text)
-        if isinstance(q, SparqlDescribe):
-            if q.var is not None:
-                return self.describe_where("$" + q.var, q.query, use_stats=use_stats)
-            return self.describe(q.node)
-        if isinstance(q, SparqlConstruct):
-            return self.construct(q.query, q.template, use_stats=use_stats).df
-        if isinstance(q, SparqlAsk):
-            inner = q.query
-            names = _pattern_vars(inner, required=False)
-            if not names:
-                # Variable-free ASK ('ASK { a next b }') — select_join would
-                # reject the empty projection; evaluate the ground patterns
-                # directly as gates (bgp.ask_ground).
-                return bgp.ask_ground(self.df, inner)
-            inner.select([f"${n}" for n in names])
-            sols = self.select_join(inner, use_stats=use_stats)
-            # the engine's ASK convention: 0/1 rows, column ask = true
-            return sols.limit(1).select(F.lit(True).alias("ask"))
-        if isinstance(q, Sparql):
-            return self.select_join(q, use_stats=use_stats)
-        return self.select_union(q, use_stats=use_stats)
+        this completes it: parse → Sparql builder → the query-form
+        dispatcher both stores share (:func:`_answer`)."""
+        return _answer(self, text, self.analyze() if use_stats else None)
 
     def describe(self, node: str) -> DataFrame:
         """SPARQL DESCRIBE (superset; completes the SELECT / ASK /
@@ -520,18 +408,6 @@ class TripleStore:
             b, self.df["o_value"] == b["node"], "left_semi"
         )
         return on_s.unionByName(on_o).dropDuplicates(model.TRIPLE_KEY)
-
-    def describe_where(
-        self, var: str, query: Sparql, use_stats: bool = False
-    ) -> DataFrame:
-        """``DESCRIBE ?v WHERE {{ group }}`` (spec §16.4 — the variable
-        form; the reference's describe takes one bound node): evaluate
-        the group, take ?v's distinct bindings, and describe them all."""
-        name = var.lstrip("?$")
-        sols = self.select_join(query, use_stats=use_stats)
-        if name not in sols.columns:
-            raise QueryError(f"DESCRIBE variable ?{name} not bound by the group")
-        return self.describe_bindings(sols.select(name))
 
     def construct(
         self, query: Sparql, template: list[list[str]], use_stats: bool = False
@@ -639,3 +515,47 @@ class TripleStore:
         returns (graph.rs:1010)."""
         row = self.footprint().agg(F.sum("payload_bytes").alias("b")).collect()[0]
         return int(row["b"] or 0)
+
+
+def _answer(store, text: str, stats: dict[str, int] | None = None) -> DataFrame:
+    """The query-form dispatcher of both stores. A TripleStore is the
+    dataset with no named graphs; a QuadStore's quads split into the
+    query's default and named graphs (plans.graphs.dataset_frames). Every
+    form runs plans.bgp's group evaluator; DESCRIBE reads the default graph."""
+    from rippledb_spark.plans.graphs import dataset_frames
+    from rippledb_spark.plans.text import (
+        SparqlAsk,
+        SparqlConstruct,
+        SparqlDescribe,
+        _pattern_vars,
+        parse_sparql,
+    )
+
+    q = parse_sparql(text)
+    if isinstance(store, TripleStore):
+        default, named = store.df, None
+    else:
+        default, named = dataset_frames(store.df, getattr(q, "query", q))
+
+    def solve(query: Sparql) -> DataFrame:
+        return bgp._select(default, named, query, True, stats)
+
+    if isinstance(q, SparqlDescribe):
+        graph = store if named is None else store.default_graph()
+        if q.var is None:
+            return graph.describe(q.node)
+        return graph.describe_bindings(solve(q.query))
+    if isinstance(q, SparqlConstruct):
+        return bgp.construct(default, q.query, q.template, solver=solve)
+    if isinstance(q, SparqlAsk):
+        inner = q.query
+        names = _pattern_vars(inner, required=False)
+        if not names:
+            # variable-free ASK ('ASK { a next b }'): a ground gate
+            return bgp._ask_ground(default, named, inner)
+        inner.select([f"${n}" for n in names])
+        # the engine's ASK convention: 0/1 rows, column ask = true
+        return solve(inner).limit(1).select(F.lit(True).alias("ask"))
+    if isinstance(q, Sparql):
+        return solve(q)
+    return bgp._union(default, named, q, True, stats)

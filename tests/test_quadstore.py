@@ -4,6 +4,7 @@ plans/graphs.py, plans/update.py quads mode, sources/nquads.py)."""
 
 from __future__ import annotations
 
+import copy
 import os
 
 import pytest
@@ -223,6 +224,18 @@ def test_ground_group_constant_filters_gate(qs):
     # unbound-variable filter in a ground group refuses loudly
     with pytest.raises(QueryError, match="unbound"):
         qs.sparql('ASK { GRAPH <g:supp> { s2 in_nation n2 . FILTER(?z = 1) } }')
+
+
+@pytest.mark.parametrize("kind", ["triples", "quads"])
+def test_ground_ask_constant_filter(spark, kind):
+    # a constant FILTER in a ground ASK is a gate of its own, on both stores
+    ts = TripleStore.from_rows(spark, [("a", "p", "b")])
+    st = ts if kind == "triples" else QuadStore.from_triplestores(spark, default=ts)
+    assert rows(st.sparql("ASK { a p b FILTER(1 = 1) }"), "ask") == [(True,)]
+    assert st.sparql("ASK { a p b FILTER(1 = 2) }").count() == 0
+    assert st.sparql("ASK { a p c FILTER(1 = 1) }").count() == 0
+    with pytest.raises(QueryError, match="FILTER references unbound variables"):
+        st.sparql("ASK { a p b FILTER(?z = 1) }")
 
 
 def test_template_validation_precedes_ground_gate(qs):
@@ -630,6 +643,17 @@ def test_graph_var_as_path_end(qs):
     assert rows(df, "g", "s") == []
 
 
+def fields(q):
+    """A Sparql's attributes, nested groups included, as comparable values."""
+    from rippledb_spark.plans.sparql import Sparql
+
+    if isinstance(q, Sparql):
+        return {k: fields(v) for k, v in vars(q).items()}
+    if isinstance(q, (list, tuple)):
+        return type(q)(fields(v) for v in q)
+    return q
+
+
 def test_select_dataset_restores_query_on_lowering_error(qs):
     from rippledb_spark.plans.sparql import Sparql
 
@@ -643,15 +667,18 @@ def test_select_dataset_restores_query_on_lowering_error(qs):
     outer.graph("g:cust", [["$c", "in_nation", "$n"]])
     outer.optional_group(bad_opt)
     outer.select(["$n", "$r"])
+    before = copy.deepcopy(outer)
     with pytest.raises(QueryError, match="bind at least one"):
         qs.select_dataset(outer)
-    # the failed lowering must not leave pre-lowered state behind
-    assert outer.prejoined == []
+    # the failed evaluation must not leave planning state behind
+    assert fields(outer) == fields(before)
     assert len(outer.optionals) == 1 and isinstance(outer.optionals[0], Sparql)
     # the object is still reusable once the bad group is removed
     outer.optionals = []
+    before = copy.deepcopy(outer)
     got = rows(qs.select_dataset(outer), "n", "r")
     assert ("n1", "r1") in got
+    assert fields(outer) == fields(before)
 
 
 def test_graph_scope_prunes_graph_partitions(spark, qs, tmp_path_factory):

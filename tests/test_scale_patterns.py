@@ -202,72 +202,6 @@ def test_bucketed_percent_rank_random_seeds(spark):
             assert abs(got[k][1] - want[k][1]) < 1e-12, (seed, k)
 
 
-def test_bucketed_store_star_bgp_exchange_free(spark):
-    """A subject-bucketed store evaluates star BGPs (patterns sharing the
-    subject var) without a hash-partitioning exchange feeding the join —
-    the write-time shuffle is amortized across queries."""
-    from rippledb_spark import Sparql, TripleStore
-
-    spark.sql("DROP TABLE IF EXISTS b_triples")
-    rows = []
-    for i in range(200):
-        rows.append((f"e{i}", "type", f"t{i % 3}"))
-        rows.append((f"e{i}", "in_group", f"g{i % 7}"))
-    st = TripleStore.from_rows(spark, rows)
-    bst = st.persist_bucketed("b_triples", n_buckets=4)
-
-    q = (
-        Sparql()
-        .select(["$s", "$t", "$g"])
-        .filter([["$s", "type", "$t"], ["$s", "in_group", "$g"]])
-    )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        # force a non-broadcast join so co-location is what's under test
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = bst.select_join(q)
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan
-        # results identical to the unbucketed store
-        assert sorted(map(tuple, joined.collect())) == sorted(
-            map(tuple, st.select_join(q).collect())
-        )
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS b_triples")
-
-
-def test_persist_bucketed_qualified_names_and_zombie_location(spark):
-    """persist_bucketed is idempotent for database-qualified names (real
-    managed location is <warehouse>/<db>.db/<tbl>, not <warehouse>/<name>)
-    and recovers when a prior session's files outlive the catalog entry
-    (r6 fix — the old cleanup path-math missed both cases)."""
-    import os
-    import shutil
-
-    from rippledb_spark import TripleStore
-
-    rows = [("a", "p", "b"), ("b", "p", "c"), ("c", "q", "a")]
-    st = TripleStore.from_rows(spark, rows)
-    spark.sql("CREATE DATABASE IF NOT EXISTS r6db")
-    try:
-        st.persist_bucketed("r6db.t_persist", n_buckets=2)
-        # repeat persist over a live catalog entry: plain overwrite
-        assert st.persist_bucketed("r6db.t_persist", n_buckets=2).df.count() == 3
-        # zombie location: drop the entry, leave files behind, persist again
-        desc = spark.sql("DESCRIBE EXTENDED r6db.t_persist").collect()
-        loc = next(r.data_type for r in desc if r.col_name == "Location")
-        path = loc.replace("file:", "")
-        spark.sql("DROP TABLE r6db.t_persist")
-        os.makedirs(path, exist_ok=True)
-        with open(os.path.join(path, "zombie"), "w") as f:
-            f.write("x")
-        assert st.persist_bucketed("r6db.t_persist", n_buckets=2).df.count() == 3
-    finally:
-        spark.sql("DROP TABLE IF EXISTS r6db.t_persist")
-        spark.sql("DROP DATABASE IF EXISTS r6db")
-
-
 def test_substring_dedup_plan_shape(spark):
     """r8 exact-substring dedup: the duplicate gate must stay ONE
     fp-keyed window (no groupBy-plus-join recompute of the positions),

@@ -304,6 +304,49 @@ def test_join_keeps_typed_and_plain_literals_apart(spark, kind):
     assert st.sparql("SELECT ?x ?y WHERE { ?x lbl ?v . ?y age ?v }").count() == 0
 
 
+# Query constants are flattened to bare values by the text parser, so a
+# literal, an IRI and a '$'-string with the same text are one term. These
+# pin the defects until the parser emits typed terms.
+
+
+@pytest.mark.xfail(
+    strict=True, raises=AssertionError, reason="literal constants match named nodes only"
+)
+@pytest.mark.parametrize("kind", KINDS)
+def test_literal_constant_finds_the_plain_literal(spark, kind):
+    st = as_store(spark, kind, [PLAIN_5])
+    assert st.sparql('SELECT ?s WHERE { ?s lbl "5" }').collect() == [("s",)]
+
+
+@pytest.mark.xfail(
+    strict=True, raises=AssertionError, reason="a literal constant matches the IRI <5>"
+)
+@pytest.mark.parametrize("kind", KINDS)
+def test_literal_constant_spares_the_iri(spark, kind):
+    st = as_store(spark, kind, [("a", model.NAMED, "knows", "5", model.NAMED, None, None)])
+    assert st.sparql('SELECT ?s WHERE { ?s knows "5" }').count() == 0
+
+
+@pytest.mark.xfail(
+    strict=True, raises=QueryError, reason="typed literal constants do not parse"
+)
+@pytest.mark.parametrize("kind", KINDS)
+def test_typed_literal_constant_parses(spark, kind):
+    st = as_store(spark, kind, [TYPED_5])
+    text = f'SELECT ?s WHERE {{ ?s age "5"^^<{XSD_INT}> }}'
+    assert st.sparql(text).collect() == [("s",)]
+
+
+@pytest.mark.xfail(
+    strict=True, raises=QueryError, reason='the template literal "$x" reads as ?x'
+)
+@pytest.mark.parametrize("kind", KINDS)
+def test_template_dollar_literal_is_inserted(spark, kind):
+    st = as_store(spark, kind, [("a", model.NAMED, "p", "b", model.NAMED, None, None)])
+    out = st.update('INSERT { a q "$x" } WHERE { a p b }')
+    assert ("a", "q", "$x") in {(r[0], r[2], r[3]) for r in default_rows(out)}
+
+
 # -- one evaluator: TripleStore and QuadStore agree -----------------------------
 
 _SUBJECTS = [("a", model.NAMED), ("b", model.NAMED), ("_:b1", model.BLANK)]

@@ -24,7 +24,6 @@ def main() -> int:
     # the examples must have produced live results
     assert ns["people"].count() >= 0
     assert ns["closure"].count() > 0
-    ns["spark"].sql("DROP TABLE IF EXISTS usage_bucketed")
     print("usage examples: all blocks ran")
     return 0
 
