@@ -13,10 +13,13 @@ paths physically:
                      ≡ row/column probes on the bitmap
 - nothing bound   → full scan (___, graph.rs:993-1009)
 
-Semantics fine print (must-match, SURVEY §2.3 #4): a BOUND value matches
-only ``named`` nodes — the reference converts every bound pattern element
-with ``to_named_node`` (graph.rs:1031-1033), so literals/blank nodes are
-unreachable by value in queries while still appearing in results.
+Term identity: a constant matches the stored term with the same value
+and kind, and for a language-tagged or typed literal the same tag or
+datatype — the reference's dictionary key is the whole ``RdfNode``
+(PAPER.md §1.3). The builder's ``$``-strings are named nodes by
+construction (``to_named_node``, graph.rs:1031-1033), so a builder query
+reaches literals and blank nodes only through variables; the SPARQL text
+front end writes literals and blank nodes as constants too.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
 from rippledb_spark import model
+from rippledb_spark.plans.sparql import Val
 
 # pattern position → (value column, kind column or None)
 _POS_COLS = {0: ("s", "s_kind"), 1: ("p", None), 2: ("o_value", "o_kind")}
@@ -35,17 +39,24 @@ def position_column(pos: int) -> str:
     return _POS_COLS[pos][0]
 
 
-def pattern_condition(s: str | None, p: str | None, o: str | None) -> Column | None:
-    """Filter Column for one (s, p, o) pattern; None = unconstrained."""
+def pattern_condition(s, p, o) -> Column | None:
+    """Filter Column for one (s, p, o) pattern of units; a ``Val`` is a
+    constant, anything else (a ``Var`` or None) is unconstrained, and None
+    comes back when nothing is."""
     conds: list[Column] = []
-    for pos, bound in ((0, s), (1, p), (2, o)):
-        if bound is None:
+    for pos, u in enumerate((s, p, o)):
+        if not isinstance(u, Val):
             continue
         val_col, kind_col = _POS_COLS[pos]
-        c = F.col(val_col) == F.lit(bound)
+        c = F.col(val_col) == F.lit(u.value)
         if kind_col is not None:
-            # Named-only matching (graph.rs:1031-1033).
-            c = c & (F.col(kind_col) == F.lit(model.NAMED))
+            c = c & (F.col(kind_col) == F.lit(u.kind))
+        elif u.kind != model.NAMED:
+            c = F.lit(False)  # predicates are IRIs
+        if u.lang is not None:
+            c = c & (F.col("o_lang") == F.lit(u.lang))
+        if u.datatype is not None:
+            c = c & (F.col("o_datatype") == F.lit(u.datatype))
         conds.append(c)
     if not conds:
         return None
@@ -55,9 +66,7 @@ def pattern_condition(s: str | None, p: str | None, o: str | None) -> Column | N
     return out
 
 
-def pattern_filter(
-    triples: DataFrame, s: str | None, p: str | None, o: str | None
-) -> DataFrame:
+def pattern_filter(triples: DataFrame, s, p, o) -> DataFrame:
     """All 8 access paths of graph.rs:842-853 as one declarative filter."""
     cond = pattern_condition(s, p, o)
     return triples if cond is None else triples.filter(cond)

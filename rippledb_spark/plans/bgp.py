@@ -11,7 +11,8 @@ Two evaluators:
      multiplying them (graph.rs:369-403);
   3. duplicates from pattern₀'s multiplicity are PRESERVED (the memo set at
      graph.rs:371-387 dedups probe work, not output);
-  4. bound values match only named nodes (graph.rs:1031-1033);
+  4. the builder's bound values are named nodes, so they match only
+     named nodes (graph.rs:1031-1033);
   5. a zero-variable query is ASK-style: 0 or 1 row, column ``ask`` = true
      (the reference's usize::MAX degenerate case, graph.rs:361-368,
      defined cleanly here per SURVEY §2.3 #6).
@@ -39,12 +40,12 @@ from pyspark.sql import DataFrame
 
 from rippledb_spark import model
 from rippledb_spark.errors import QueryError
-from rippledb_spark.operators.triple_patterns import pattern_filter, position_column
+from rippledb_spark.operators.triple_patterns import (
+    pattern_condition,
+    pattern_filter,
+    position_column,
+)
 from rippledb_spark.plans.sparql import Sparql, SparqlUnion, Val, Var
-
-
-def _bounds(cond: tuple) -> tuple[str | None, str | None, str | None]:
-    return tuple(u.value if isinstance(u, Val) else None for u in cond)  # type: ignore[return-value]
 
 
 def _var_positions(cond: tuple) -> list[tuple[int, str]]:
@@ -106,14 +107,14 @@ def get(triples: DataFrame, query: Sparql) -> DataFrame:
         return triples.select(F.col("s").alias(name)).limit(0)
 
     first = query.conds[0]
-    p0 = pattern_filter(triples, *_bounds(first))
+    p0 = pattern_filter(triples, *first)
     vpos = _var_positions(first)
 
     if not vpos:
         # ASK-style: every pattern fully bound → 0/1 rows.
         ask = p0.limit(1).select(F.lit(True).alias("ask"))
         for cond in query.conds[1:]:
-            ci = pattern_filter(triples, *_bounds(cond)).limit(1).select(F.lit(True).alias("ask"))
+            ci = pattern_filter(triples, *cond).limit(1).select(F.lit(True).alias("ask"))
             ask = ask.intersect(ci)
         return ask
 
@@ -121,7 +122,7 @@ def get(triples: DataFrame, query: Sparql) -> DataFrame:
     cand = p0.select(F.col(position_column(pos0)).alias(var0))
 
     for cond in query.conds[1:]:
-        ci = pattern_filter(triples, *_bounds(cond))
+        ci = pattern_filter(triples, *cond)
         positions = [(i, v) for i, v in _var_positions(cond) if v == var0]
         if not positions:
             # Pattern without the driving var: global gate — survives iff the
@@ -293,6 +294,11 @@ def _select(
 
 
 _FILTER_UNBOUND = "FILTER references unbound variables {}"
+# A FILTER inside an OPTIONAL/MINUS/EXISTS group constrains the GROUP's
+# solutions before the outer join — per spec §8 group scoping this differs
+# from filtering afterwards (an optional row failing its inner filter
+# NULL-extends instead of dropping the required row).
+_GROUP_UNBOUND = "group FILTER references variables {} not bound in the group"
 
 
 def _solve(
@@ -348,7 +354,7 @@ def _solve(
     # the required solution on the shared variables; unmatched rows
     # NULL-extend the group's variables.
     for g in group.optionals:
-        gplan = _group_plan(triples, named, g, optimize, stats, graph_var)
+        gplan = _solve(triples, named, g, optimize, stats, graph_var, _GROUP_UNBOUND)
         acc = _join(acc, gplan, "optional")
 
     # VALUES blocks (SPARQL §10.2): join the solutions against inline
@@ -362,7 +368,7 @@ def _solve(
     # on the shared variables — a LEFT ANTI join, the same EXISTS engine
     # as get()'s pruning but negated.
     for g in group.minuses:
-        gplan = _group_plan(triples, named, g, optimize, stats, graph_var)
+        gplan = _solve(triples, named, g, optimize, stats, graph_var, _GROUP_UNBOUND)
         acc = _join(acc, gplan, "minus")
 
     # BIND extensions (SPARQL §10.1): computed columns over the solution
@@ -380,7 +386,7 @@ def _solve(
     # ANTI join on the shared variables — the same EXISTS engine as get()'s
     # pruning.
     for positive, g in group.exists_groups:
-        gplan = _group_plan(triples, named, g, optimize, stats, graph_var)
+        gplan = _solve(triples, named, g, optimize, stats, graph_var, _GROUP_UNBOUND)
         acc = _join(acc, gplan, "exists" if positive else "not_exists")
 
     # FILTER constraints (SPARQL §17, engine-tier superset — plans.filters):
@@ -394,30 +400,6 @@ def _solve(
         _check_bound(fexpr, acc.columns, filter_msg)
         acc = acc.filter(to_column(fexpr))
     return acc
-
-
-def _group_plan(
-    triples: DataFrame,
-    named: DataFrame | None,
-    group,
-    optimize: bool,
-    stats: dict[str, int] | None,
-    graph_var: str | None,
-) -> DataFrame:
-    """One OPTIONAL/MINUS/EXISTS group → its solutions. ``group`` is a
-    plain pattern list (the conjunctive-only historical form) or a Sparql
-    group (patterns, paths, GRAPH scopes, group-scoped FILTERs). A FILTER
-    inside the group constrains the GROUP's solutions before the outer
-    join — per spec §8 group scoping this differs from filtering
-    afterwards (an optional row failing its inner filter NULL-extends
-    instead of dropping the required row)."""
-    if not isinstance(group, Sparql):
-        conds, group = group, Sparql()
-        group.conds = list(conds)
-    return _solve(
-        triples, named, group, optimize, stats, graph_var,
-        "group FILTER references variables {} not bound in the group",
-    )
 
 
 def _graph_frame(named: DataFrame | None, gterm) -> DataFrame:
@@ -441,7 +423,10 @@ def _join(acc: DataFrame | None, plan: DataFrame, kind: str = "join") -> DataFra
     - ``join`` (patterns, paths, subqueries, GRAPH groups): a 0/1-row gate
       (a ``__gate`` column) broadcast-crossjoins; plans sharing no
       variable cross-join.
-    - ``optional``: a LEFT OUTER join; the group must share a variable.
+    - ``optional``: a LEFT OUTER join (§18.5 LeftJoin); a group sharing
+      no variable left-joins on true (the cross product with its
+      solutions, or the required rows alone when it has none), and a
+      ground gate group returns the required rows unchanged.
     - ``minus``: a LEFT ANTI join; a group sharing no variable removes
       nothing (spec §8.3) and is skipped.
     - ``exists`` / ``not_exists``: a LEFT SEMI / LEFT ANTI join; a group
@@ -457,12 +442,9 @@ def _join(acc: DataFrame | None, plan: DataFrame, kind: str = "join") -> DataFra
     if kind == "join":
         return acc.join(plan, on=shared, how="inner") if shared else acc.crossJoin(plan)
     if kind == "optional":
-        if not shared:
-            raise QueryError(
-                "OPTIONAL group shares no variable with the required patterns "
-                "(it must bind at least one of their variables)"
-            )
-        return acc.join(plan, on=shared, how="left_outer")
+        if not set(plan.columns) - {"__gate"}:
+            return acc
+        return acc.join(plan, on=shared or F.lit(True), how="left_outer")
     how = "left_semi" if kind == "exists" else "left_anti"
     if shared:
         return acc.join(plan.select(*shared), on=shared, how=how)
@@ -628,32 +610,18 @@ def _values_join(spark, acc: DataFrame, names: list[str], rows: list[tuple]) -> 
 def construct(
     triples: DataFrame,
     query: Sparql,
-    template: list[list[str]],
+    template: list[tuple],
     optimize: bool = True,
     stats: dict[str, int] | None = None,
     solver=None,
 ) -> DataFrame:
     """SPARQL CONSTRUCT (engine-tier superset): instantiate ``template``
-    triple patterns once per solution of ``query``, returning a
-    triples-schema DataFrame with set semantics (a CONSTRUCT result is an
-    RDF graph — W3C SPARQL 1.1 §16.2).
-
-    Terms are lifted as named nodes — the reference's own plain-string
-    lift (``triple_into_rdf``, src/lib.rs:17-19) — since solution rows
-    carry values, not kinds (the engine-wide flattened-model convention).
-    Solutions leaving a template variable unbound (possible under
-    OPTIONAL) skip that template pattern for that solution, per spec.
-    The plan is the solution join followed by one projection per template
-    pattern, one union, and one set-dedup shuffle."""
-    from rippledb_spark.plans.sparql import parse_unit
-
-    units = []
-    for pat in template:
-        if len(pat) != 3:
-            raise QueryError(f"template pattern must be [s, p, o], got {pat!r}")
-        units.append(tuple(parse_unit(x) for x in pat))
-
-    tmpl_vars = {u.name for t in units for u in t if isinstance(u, Var)}
+    (s, p, o) unit triples once per solution of ``query``
+    (:func:`_instantiate`), returning a triples-schema DataFrame with set
+    semantics (a CONSTRUCT result is an RDF graph — W3C SPARQL 1.1
+    §16.2). The plan is the solution join followed by one projection per
+    template pattern, one union, and one set-dedup shuffle."""
+    tmpl_vars = {u.name for t in template for u in t if isinstance(u, Var)}
     # Project every template var (without mutating the caller's query).
     import copy
 
@@ -668,33 +636,54 @@ def construct(
         sol = solver(q)
     else:
         sol = select_join(triples, q, optimize=optimize, stats=stats)
+    return _instantiate(sol, [(None, t) for t in template])
 
-    def term(u) -> F.Column:
-        return F.col(u.name) if isinstance(u, Var) else F.lit(u.value)
 
-    null_s = F.lit(None).cast("string")
+def _instantiate(
+    sol: DataFrame, template: list[tuple], graph: str | None = None, quads: bool = False
+) -> DataFrame:
+    """Template × solutions → distinct store rows: TRIPLE_KEY, or QUAD_KEY
+    with ``quads``. The template of CONSTRUCT and of SPARQL UPDATE's
+    DELETE/INSERT forms, as (g, (s, p, o)) unit pairs; a pair's ``g`` of
+    None is ``graph`` (the WITH graph; None = the default graph), a
+    ``Var`` takes its binding. A variable's value lifts as a named node —
+    solutions carry values, not kinds (the reference's plain-string lift,
+    src/lib.rs:17-19) — while a constant keeps its kind, language tag and
+    datatype. A solution leaving a variable of a pattern unbound (possible
+    under OPTIONAL), GRAPH variable included, skips that pattern, per
+    spec."""
+
+    def lit(x) -> F.Column:
+        return F.lit(x).cast("string")
+
+    def value(u) -> F.Column:
+        return F.col(u.name) if isinstance(u, Var) else lit(u.value)
+
     parts = []
-    for s_u, p_u, o_u in units:
+    for g, (s, p, o) in template:
+        units = {"s": s, "p": p, "o_value": o}
+        if quads:
+            units = {"g": Val(graph) if g is None else g, **units}
+        # a variable lifts as a named node
+        s_kind = model.NAMED if isinstance(s, Var) else s.kind
+        o_kind, o_lang, o_datatype = (
+            (model.NAMED, None, None) if isinstance(o, Var) else (o.kind, o.lang, o.datatype)
+        )
         row = sol.select(
-            term(s_u).alias("s"),
-            F.lit(model.NAMED).alias("s_kind"),
-            term(p_u).alias("p"),
-            term(o_u).alias("o_value"),
-            F.lit(model.NAMED).alias("o_kind"),
-            null_s.alias("o_lang"),
-            null_s.alias("o_datatype"),
+            *[value(u).alias(c) for c, u in units.items()],
+            lit(s_kind).alias("s_kind"),
+            lit(o_kind).alias("o_kind"),
+            lit(o_lang).alias("o_lang"),
+            lit(o_datatype).alias("o_datatype"),
         )
-        parts.append(
-            row.filter(
-                F.col("s").isNotNull()
-                & F.col("p").isNotNull()
-                & F.col("o_value").isNotNull()
-            )
-        )
+        for c, u in units.items():
+            if isinstance(u, Var):
+                row = row.filter(F.col(c).isNotNull())
+        parts.append(row.select(*(model.QUAD_KEY if quads else model.TRIPLE_KEY)))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    return out.dropDuplicates(["s", "p", "o_value"])
+    return out.dropDuplicates()
 
 
 def ask_ground(triples: DataFrame, query: Sparql) -> DataFrame:
@@ -733,7 +722,7 @@ def _ask_ground(
     for cond in query.conds:
         if _var_positions(cond):
             raise QueryError(f"ask_ground() requires fully-bound patterns: {cond!r}")
-        gates.append(ask(pattern_filter(triples, *_bounds(cond))))
+        gates.append(ask(pattern_filter(triples, *cond)))
     for s_u, expr, o_u in query.paths:
         if isinstance(s_u, Var) or isinstance(o_u, Var):
             raise QueryError(f"ask_ground() requires fully-bound path ends: {expr!r}")
@@ -754,30 +743,23 @@ def _ask_ground(
     return out
 
 
-def _named_node_gate(triples: DataFrame, value: str) -> DataFrame:
-    """0/1-row gate: does ``value`` denote a NAMED node in the store (it
-    appears as some subject, or as an object with o_kind = named)?  Bound
-    pattern values match named nodes only (``pattern_filter``'s rule,
-    graph.rs:1031-1033); this extends the same rule to the bound ends of
-    closure paths, which the fixpoint evaluator compares by string value
-    alone. Residual, closure paths only: the check is per-NODE, not
-    per-edge — if the same string occurs both as a named node and as a
-    literal object on a matched predicate (pathological in RDF), a closure
-    ending at the literal twin still matches; exact per-edge kind would
-    have to thread o_kind through every closure round. Closure-free paths
-    lower to triple patterns (:func:`_lower_path`), where the rule holds
-    per edge."""
-    return (
-        triples.filter(
-            (F.col("s") == F.lit(value))
-            | (
-                (F.col("o_value") == F.lit(value))
-                & (F.col("o_kind") == F.lit(model.NAMED))
-            )
-        )
-        .limit(1)
-        .select(F.lit(1).alias("__ng"))
-    )
+def _node_rows(triples: DataFrame, u: Val) -> DataFrame:
+    """Rows where the constant ``u`` is the subject or the object, by the
+    pattern rule (``pattern_condition``): the bound ends of closure paths,
+    which the fixpoint evaluator compares by value alone, must name a
+    node of the store with ``u``'s kind."""
+    return triples.filter(pattern_condition(u, None, None) | pattern_condition(None, None, u))
+
+
+def _named_node_gate(triples: DataFrame, u: Val) -> DataFrame:
+    """0/1-row gate: does the store hold the node ``u``? Residual,
+    closure paths only: the check is per-NODE, not per-edge — if the same
+    value occurs as ``u`` and as another kind of term on a matched
+    predicate, a closure ending at the twin still matches; exact per-edge
+    kind would have to thread o_kind through every closure round.
+    Closure-free paths lower to triple patterns (:func:`_lower_path`),
+    where terms match per edge."""
+    return _node_rows(triples, u).limit(1).select(F.lit(1).alias("__ng"))
 
 
 def _lower_path(expr, s_u, o_u, fresh) -> list[tuple] | None:
@@ -814,7 +796,7 @@ def _path_plan(
     A closure-free path (predicates, inverses and sequences of them)
     lowers to ordinary triple patterns (:func:`_lower_path`) and plans as
     a BGP join projected to the path's end variables — the same route,
-    gates and named-only rule as any other pattern group. Its hidden
+    gates and term matching as any other pattern group. Its hidden
     joint variables are prefixed so they never collide with the end
     variables, the only columns the plan keeps.
 
@@ -827,8 +809,8 @@ def _path_plan(
     from the bound end instead of materializing the global relation (the
     symmetric optimization; a post-filter on the forward evaluation would
     be a full-closure scan at 100 TB). Both ends bound → a gate row, like
-    a fully-bound triple pattern. Bound ends follow the engine's
-    named-only matching rule via :func:`_named_node_gate`."""
+    a fully-bound triple pattern. Bound ends must name a node of the
+    store with their kind (:func:`_named_node_gate`)."""
     from rippledb_spark.plans.paths import parse_path, path_pairs, reverse_path
 
     ends = list(dict.fromkeys(u.name for u in (s_u, o_u) if isinstance(u, Var)))
@@ -848,18 +830,18 @@ def _path_plan(
     gates: list[DataFrame] = []
     if isinstance(s_u, Val):
         srcs = spark.createDataFrame([(s_u.value,)], ["node"])
-        gates.append(_named_node_gate(triples, s_u.value))
+        gates.append(_named_node_gate(triples, s_u))
     if isinstance(o_u, Val) and srcs is None:
         dsts = spark.createDataFrame([(o_u.value,)], ["node"])
         pairs = path_pairs(triples, reverse_path(path), srcs=dsts).select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
         )
-        gates.append(_named_node_gate(triples, o_u.value))
+        gates.append(_named_node_gate(triples, o_u))
     else:
         pairs = path_pairs(triples, path, srcs=srcs)
         if isinstance(o_u, Val):
             pairs = pairs.filter(F.col("dst") == F.lit(o_u.value))
-            gates.append(_named_node_gate(triples, o_u.value))
+            gates.append(_named_node_gate(triples, o_u))
     for g in gates:
         pairs = pairs.crossJoin(F.broadcast(g)).drop("__ng")
     if isinstance(s_u, Var) and isinstance(o_u, Var):
@@ -889,7 +871,7 @@ def _join_group(
         raise QueryError("empty pattern group")
     acc = None
     for cond in conds:
-        ci = pattern_filter(triples, *_bounds(cond))
+        ci = pattern_filter(triples, *cond)
         # Same var twice in one pattern (e.g. [$x, p, $x]), or the graph
         # variable in a pattern position (GRAPH ?g { ?g ?p ?o }) →
         # equality filter.

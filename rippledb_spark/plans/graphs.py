@@ -92,18 +92,10 @@ def _tagged_triples(named_quads: DataFrame) -> DataFrame:
     )
 
 
-def _named_gate_graphs(named_quads: DataFrame, value: str) -> DataFrame:
-    """DataFrame(g) of graphs where ``value`` denotes a NAMED node — the
-    per-graph form of bgp._named_node_gate (bound path ends match named
-    nodes only, graph.rs:1031-1033)."""
-    return (
-        named_quads.filter(
-            (F.col("s") == F.lit(value))
-            | ((F.col("o_value") == F.lit(value)) & (F.col("o_kind") == model.NAMED))
-        )
-        .select("g")
-        .distinct()
-    )
+def _named_gate_graphs(named_quads: DataFrame, u: Val) -> DataFrame:
+    """DataFrame(g) of graphs holding the node ``u`` — the per-graph form
+    of bgp._named_node_gate (bound closure-path ends)."""
+    return bgp._node_rows(named_quads, u).select("g").distinct()
 
 
 def _var_graph_path_plan(
@@ -126,12 +118,12 @@ def _var_graph_path_plan(
     gate_gs: list[DataFrame] = []
     if isinstance(s_u, Val):
         pairs = path_pairs(tagged, expr, srcs=seed_frame(s_u.value))
-        gate_gs.append(_named_gate_graphs(named_quads, s_u.value))
+        gate_gs.append(_named_gate_graphs(named_quads, s_u))
     elif isinstance(o_u, Val):
         pairs = path_pairs(tagged, reverse_path(expr), srcs=seed_frame(o_u.value)).select(
             F.col("dst").alias("src"), F.col("src").alias("dst")
         )
-        gate_gs.append(_named_gate_graphs(named_quads, o_u.value))
+        gate_gs.append(_named_gate_graphs(named_quads, o_u))
     else:
         pairs = path_pairs(tagged, expr)
 

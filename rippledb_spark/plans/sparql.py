@@ -2,16 +2,22 @@
 
 Mirrors the reference's ``Sparql`` builder (src/rdf/query.rs:27-63):
 ``$``-prefixed strings are variables (src/rdf/query.rs:8-25), everything else
-is a literal value; ``select`` declares projection variables, ``filter`` adds
+is a named node; ``select`` declares projection variables, ``filter`` adds
 basic graph patterns. The reference PANICS on a pattern variable that wasn't
 declared in ``select`` (query.rs:50-59); we raise ``ValueError`` instead —
 same contract, recoverable.
+
+Patterns hold units: a :class:`Var` or a :class:`Val`, which carries the
+whole RDF term (value, kind, language tag, datatype). The builder's strings
+become named nodes only (:func:`parse_unit`); the SPARQL text front end
+(plans.text) writes every kind of constant.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
+from rippledb_spark import model
 from rippledb_spark.errors import QueryError
 
 
@@ -23,13 +29,16 @@ class Var:
 @dataclass(frozen=True)
 class Val:
     value: str
+    kind: str = model.NAMED
+    lang: str | None = None
+    datatype: str | None = None
 
 
 QueryUnit = Var | Val
 
 
 def parse_unit(raw: str) -> QueryUnit:
-    """'$x' → Var('x'); anything else → Val (src/rdf/query.rs:8-25)."""
+    """'$x' → Var('x'); anything else → a named node (src/rdf/query.rs:8-25)."""
     if raw.startswith("$"):
         name = raw[1:]
         if not name:
@@ -55,14 +64,14 @@ class Sparql:
         self.strict = strict
         self.vars: list[Var] = []
         self.conds: list[tuple[QueryUnit, QueryUnit, QueryUnit]] = []
-        self.optionals: list[list[tuple[QueryUnit, QueryUnit, QueryUnit]]] = []
+        self.optionals: list["Sparql"] = []  # OPTIONAL groups
         self.paths: list[tuple[QueryUnit, str, QueryUnit]] = []
-        self.minuses: list[list[tuple[QueryUnit, QueryUnit, QueryUnit]]] = []
+        self.minuses: list["Sparql"] = []  # MINUS groups
         self.values_blocks: list[tuple[list[str], list[tuple]]] = []
         self.filters: list = []  # FilterExpr ASTs (plans.filters)
         self.binds: list[tuple[str, object]] = []  # (alias, ValueExpr)
-        # (positive, patterns): FILTER EXISTS / FILTER NOT EXISTS groups
-        self.exists_groups: list[tuple[bool, list]] = []
+        # (positive, group): FILTER EXISTS / FILTER NOT EXISTS groups
+        self.exists_groups: list[tuple[bool, "Sparql"]] = []
         self.subqueries: list["Sparql"] = []  # nested SELECTs (spec §12)
         # GRAPH groups (SPARQL 1.1 §13.3, dataset-tier): (gterm, group)
         # where gterm is a Var (ranges over named graphs) or a Val (one
@@ -97,21 +106,34 @@ class Sparql:
         return self
 
     def filter(self, patterns: list[list[str]]) -> "Sparql":
+        self.conds.extend(self._units(patterns))
+        return self
+
+    def _units(self, patterns: list[list[str]]) -> list[tuple]:
+        """'$'-string patterns → unit triples. Strict mode refuses a
+        variable not declared in select() (the reference panics,
+        query.rs:50-59)."""
         declared = {v.name for v in self.vars}
+        out = []
         for pat in patterns:
             if len(pat) != 3:
                 raise QueryError(f"pattern must be [s, p, o], got {pat!r}")
             units = tuple(parse_unit(x) for x in pat)
             if self.strict:
                 for u in units:
-                    # Undeclared pattern var is an error (reference panics,
-                    # query.rs:50-59).
                     if isinstance(u, Var) and u.name not in declared:
                         raise QueryError(
                             f"pattern variable ${u.name} not declared in select()"
                         )
-            self.conds.append(units)  # type: ignore[arg-type]
-        return self
+            out.append(units)
+        return out
+
+    def _group(self, patterns: list[list[str]]) -> "Sparql":
+        """A pattern list as a group of its own (OPTIONAL, MINUS, EXISTS,
+        GRAPH)."""
+        group = Sparql()
+        group.conds = self._units(patterns)
+        return group
 
     def optional(self, patterns: list[list[str]]) -> "Sparql":
         """Add an OPTIONAL group: its patterns left-outer-join onto the
@@ -121,7 +143,7 @@ class Sparql:
         conjunctive-only (query.rs:27-63). Only the multi-var evaluator
         (plans.bgp.select_join) honors optionals; ``get`` raises on them
         (graph.rs parity — it must not silently drop a group)."""
-        self.optionals.append(self._pattern_group(patterns))
+        self.optionals.append(self._group(patterns))
         return self
 
     def optional_group(self, group: "Sparql") -> "Sparql":
@@ -147,24 +169,8 @@ class Sparql:
         compatible match on the shared variables (a LEFT ANTI join). Per
         spec §8.3, a group sharing NO variable with the solution removes
         nothing. Only the multi-var evaluator honors it; ``get`` raises."""
-        self.minuses.append(self._pattern_group(patterns))
+        self.minuses.append(self._group(patterns))
         return self
-
-    def _pattern_group(self, patterns: list[list[str]]) -> list:
-        group: list[tuple[QueryUnit, QueryUnit, QueryUnit]] = []
-        declared = {v.name for v in self.vars}
-        for pat in patterns:
-            if len(pat) != 3:
-                raise QueryError(f"pattern must be [s, p, o], got {pat!r}")
-            units = tuple(parse_unit(x) for x in pat)
-            if self.strict:
-                for u in units:
-                    if isinstance(u, Var) and u.name not in declared:
-                        raise QueryError(
-                            f"pattern variable ${u.name} not declared in select()"
-                        )
-            group.append(units)  # type: ignore[arg-type]
-        return group
 
     def exists(self, patterns: list[list[str]]) -> "Sparql":
         """SPARQL FILTER EXISTS (spec §8.1 — engine-tier superset): keep
@@ -173,7 +179,7 @@ class Sparql:
         group sharing NO variable acts as a global gate: solutions
         survive iff the group matches anything at all (the two negation
         forms' documented divergence, spec §8.3.3)."""
-        self.exists_groups.append((True, self._pattern_group(patterns)))
+        self.exists_groups.append((True, self._group(patterns)))
         return self
 
     def not_exists(self, patterns: list[list[str]]) -> "Sparql":
@@ -182,7 +188,7 @@ class Sparql:
         variables; with no shared variable, solutions survive iff the
         group matches nothing (contrast minus(), which removes nothing
         then)."""
-        self.exists_groups.append((False, self._pattern_group(patterns)))
+        self.exists_groups.append((False, self._group(patterns)))
         return self
 
     def values(self, variables: list[str], rows: list[tuple | list]) -> "Sparql":
@@ -311,19 +317,20 @@ class Sparql:
 
     def graph(self, gterm: str, group: "Sparql | list[list[str]]") -> "Sparql":
         """GRAPH block (SPARQL 1.1 §13.3 — dataset-tier superset): match
-        ``group`` inside a named graph. ``gterm`` is ``'$g'`` (the group
+        ``group`` (a Sparql group, or a pattern list) inside a named
+        graph. ``gterm`` is ``'$g'`` (the group
         joins every named graph, binding the graph IRI to the variable)
         or a graph IRI string (the group evaluates against that one named
         graph only). Evaluated by plans.graphs.select_dataset over a
         QuadStore; plain single-graph evaluation (select_join on a
         TripleStore) refuses queries carrying GRAPH groups loudly rather
         than silently ignoring the graph scope."""
-        if isinstance(group, list):
-            g = Sparql()
-            g.filter(group)
-            group = g
         if not isinstance(group, Sparql):
-            raise QueryError(f"graph() takes a Sparql group or patterns, got {group!r}")
+            group = self._group(group)
+        return self._graph(parse_unit(gterm), group)
+
+    def _graph(self, gterm: QueryUnit, group: "Sparql") -> "Sparql":
+        """Add the GRAPH group ``group`` scoped by the unit ``gterm``."""
         if group.graph_groups:
             raise QueryError("GRAPH groups do not nest")
         if (
@@ -343,14 +350,13 @@ class Sparql:
             or group.row_limit is not None
             or group.row_offset
         ):
-            # GRAPH groups are the triple/path/FILTER subset (the text
-            # parser enforces the same)
+            # GRAPH groups are the triple/path/FILTER subset
             raise QueryError(
                 "GRAPH groups support triple, path, and FILTER patterns only"
             )
         if not group.conds and not group.paths:
             raise QueryError("GRAPH group is empty")
-        self.graph_groups.append((parse_unit(gterm), group))
+        self.graph_groups.append((gterm, group))
         return self
 
     def from_graph(self, iri: str, named: bool = False) -> "Sparql":

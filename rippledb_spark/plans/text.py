@@ -11,7 +11,8 @@ Supported grammar (W3C SPARQL 1.1 subset)::
     PREFIX pname: <iri>                       -- prologue, any number
     ASK [WHERE] { group }                     -- 0/1 rows, column ask=true
     CONSTRUCT { triples } WHERE { group }     -- derived graph (plain
-                                              -- triples in the template)
+                                              -- triples in the template;
+                                              -- constants keep their kind)
     DESCRIBE <node> | DESCRIBE ?v WHERE {...} -- node / binding-set CBDs
     SELECT [DISTINCT] (?v... | *) WHERE {
         triple blocks:  s p o .               -- ';' predicate lists and
@@ -35,11 +36,15 @@ Supported grammar (W3C SPARQL 1.1 subset)::
 SELECT lists also take aggregate projections ``(COUNT([DISTINCT] ?v | *)
 AS ?alias)`` (COUNT/SUM/AVG/MIN/MAX/SAMPLE/GROUP_CONCAT — spec §11).
 
-Terms: ``?var``/``$var``, ``<iri>``, ``prefix:local`` (expanded via the
-prologue), ``"literal"``, bare tokens (kept verbatim — the engine's node
-values are plain strings). Engine conventions apply: bound values match
-named nodes only (graph.rs:1031-1033) and literals are matched by their
-string value. FILTER/BIND expression grammar and typing rules live in
+Terms (one lexer, :func:`_term`, shared with plans.update):
+``?var``/``$var``, ``<iri>``, ``prefix:local`` (expanded via the
+prologue), ``"lit"``, ``"lit"@lang``, ``"lit"^^<datatype>`` and
+``"lit"^^prefix:local`` literals, ``_:name`` blank nodes, and bare tokens
+(named nodes kept verbatim, as is an undeclared ``prefix:local``; ``5`` is
+the named node ``5``, not a number). ``a`` in predicate position is
+``rdf:type``. A constant matches the stored term with the same value,
+kind, language tag and datatype; VALUES cells and FILTER/BIND operands
+are compared by value. FILTER/BIND expression grammar and typing rules live in
 plans.filters (comparisons, + - * / arithmetic, CONCAT/STR/STRLEN/UCASE/
 LCASE/SUBSTR/IF, plus the r6 additions: STRSTARTS/STRENDS/CONTAINS,
 COALESCE/ABS/ROUND/CEIL/FLOOR, STRBEFORE/STRAFTER/REPLACE, xsd:* casts,
@@ -53,8 +58,9 @@ import re
 
 from dataclasses import dataclass
 
+from rippledb_spark import model
 from rippledb_spark.errors import QueryError
-from rippledb_spark.plans.sparql import Sparql, SparqlUnion
+from rippledb_spark.plans.sparql import QueryUnit, Sparql, SparqlUnion, Val, Var
 
 
 @dataclass(frozen=True)
@@ -94,6 +100,7 @@ _TOKEN = re.compile(
 )
 
 _PATH_OPS = set("/|^+*?{")  # { = r6 quantifier brackets p{n,m}
+_RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
 
 
 class _Tokens:
@@ -134,6 +141,55 @@ class _Tokens:
 
 def _is_kw(tok: str | None, kw: str) -> bool:
     return tok is not None and tok.upper() == kw.upper()
+
+
+def _prologue(t: _Tokens) -> dict[str, str]:
+    """The PREFIX declarations at the head of a query or update."""
+    prefixes: dict[str, str] = {}
+    while _is_kw(t.peek(), "PREFIX"):
+        t.take()
+        pname = t.take()
+        if not pname.endswith(":"):
+            raise QueryError(f"PREFIX name must end with ':', got {pname!r}")
+        iri = t.take()
+        if not (iri.startswith("<") and iri.endswith(">")):
+            raise QueryError(f"PREFIX expansion must be an <iri>, got {iri!r}")
+        prefixes[pname[:-1]] = iri[1:-1]
+    return prefixes
+
+
+def _iri(tok: str, prefixes: dict[str, str]) -> str:
+    """The value of an ``<iri>``, a declared ``prefix:local`` or a bare
+    token (kept verbatim)."""
+    if tok.startswith("<") and tok.endswith(">"):
+        return tok[1:-1]
+    pfx, sep, local = tok.partition(":")
+    return prefixes[pfx] + local if sep and pfx in prefixes else tok
+
+
+def _term(tok: str, t: _Tokens, prefixes: dict[str, str], verb: bool = False) -> QueryUnit:
+    """One term token → a ``Var`` or a constant ``Val``; a string literal
+    takes its ``@lang`` / ``^^datatype`` suffix from ``t``. ``verb`` marks
+    predicate position, where ``a`` is ``rdf:type``."""
+    if tok.startswith("?") or tok.startswith("$"):
+        if len(tok) == 1:
+            raise QueryError(f"empty variable name {tok!r}")
+        return Var(tok[1:])
+    if tok.startswith('"'):
+        value = re.sub(r"\\(.)", r"\1", tok[1:-1])
+        nxt = t.peek()
+        if nxt is not None and nxt.startswith("@") and len(nxt) > 1:
+            t.take()
+            return Val(value, model.LANG_LITERAL, lang=nxt[1:])
+        if nxt is not None and nxt.startswith("^^") and len(nxt) > 2:
+            t.take()
+            return Val(value, model.TYPED_LITERAL, datatype=_iri(nxt[2:], prefixes))
+        return Val(value, model.LITERAL)
+    if tok.startswith("_:"):
+        return Val(tok, model.BLANK)
+    if verb and tok == "a":
+        return Val(_RDF_TYPE)
+    return Val(_iri(tok, prefixes))
 
 
 _AGGS = ("COUNT", "SUM", "AVG", "MIN", "MAX", "SAMPLE", "GROUP_CONCAT")
@@ -215,16 +271,7 @@ def _parse_select_list(t: _Tokens) -> tuple[bool, list[str], list[tuple]]:
 def parse_sparql(text: str) -> Sparql | SparqlUnion:
     """Parse a SPARQL query string (subset above) into a builder query."""
     t = _Tokens(text)
-    prefixes: dict[str, str] = {}
-    while _is_kw(t.peek(), "PREFIX"):
-        t.take()
-        pname = t.take()
-        if not pname.endswith(":"):
-            raise QueryError(f"PREFIX name must end with ':', got {pname!r}")
-        iri = t.take()
-        if not (iri.startswith("<") and iri.endswith(">")):
-            raise QueryError(f"PREFIX expansion must be an <iri>, got {iri!r}")
-        prefixes[pname[:-1]] = iri[1:-1]
+    prefixes = _prologue(t)
 
     form = t.take().upper()
     if form not in ("SELECT", "ASK", "CONSTRUCT", "DESCRIBE"):
@@ -235,20 +282,9 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
     if form == "SELECT":
         distinct, sel_vars, sel_aggs = _parse_select_list(t)
 
-    def term(tok: str) -> str:
-        """Lower one term token to the engine's string value / $var form."""
-        if tok.startswith("?") or tok.startswith("$"):
-            return "$" + tok[1:]
-        if tok.startswith("<") and tok.endswith(">"):
-            return tok[1:-1]
-        if tok.startswith('"'):
-            body = tok[1:-1]
-            return re.sub(r"\\(.)", r"\1", body)
-        if ":" in tok:
-            pfx, local = tok.split(":", 1)
-            if pfx in prefixes:
-                return prefixes[pfx] + local
-        return tok
+    def value(tok: str) -> str:
+        """A FILTER/BIND operand's value (operands stay values)."""
+        return _iri(tok, prefixes)
 
     def collect_path(first: str) -> str:
         """Greedily reassemble a property path split across tokens: the
@@ -366,24 +402,11 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
                 # dataset-tier: planned by plans.bgp over a QuadStore's
                 # named graphs
                 t.take()
-                gterm = term(t.take())
+                gterm = _term(t.take(), t, prefixes)
                 t.expect("{")
                 sub = Sparql()
                 parse_group(sub)
-                if (
-                    sub.optionals
-                    or sub.minuses
-                    or sub.values_blocks
-                    or sub.exists_groups
-                    or sub.binds
-                    or sub.subqueries
-                    or sub.graph_groups
-                ):
-                    raise QueryError(
-                        "GRAPH groups support triple, path, and FILTER "
-                        "patterns only"
-                    )
-                q.graph(gterm, sub)
+                q._graph(gterm, sub)
                 if t.peek() == ".":
                     t.take()
                 continue
@@ -406,18 +429,7 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
                     )
                 if not sub.conds and not sub.paths and not sub.graph_groups:
                     raise QueryError(f"{kw} group is empty")
-                # paths, group-scoped FILTERs (r6), or GRAPH scopes → keep
-                # the Sparql form; plain groups keep the historical
-                # pattern-list form
-                grp = (
-                    sub
-                    if (sub.paths or sub.filters or sub.graph_groups)
-                    else sub.conds
-                )
-                if kw == "OPTIONAL":
-                    q.optionals.append(grp)
-                else:
-                    q.minuses.append(grp)
+                (q.optionals if kw == "OPTIONAL" else q.minuses).append(sub)
                 if t.peek() == ".":
                     t.take()
                 continue
@@ -438,7 +450,10 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
                     row = []
                     while t.peek() != ")":
                         v = t.take()
-                        row.append(None if _is_kw(v, "UNDEF") else term(v))
+                        u = None if _is_kw(v, "UNDEF") else _term(v, t, prefixes)
+                        if isinstance(u, Var):
+                            raise QueryError(f"VALUES rows take constants, got {v!r}")
+                        row.append(None if u is None else u.value)
                     t.take()
                     rows.append(tuple(row))
                 t.take()  # '}'
@@ -479,14 +494,9 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
                         )
                     if not sub.conds and not sub.paths and not sub.graph_groups:
                         raise QueryError("EXISTS group is empty")
-                    q.exists_groups.append(
-                        (
-                            positive,
-                            sub if (sub.paths or sub.graph_groups) else sub.conds,
-                        )
-                    )
+                    q.exists_groups.append((positive, sub))
                 else:
-                    q.filter_expr(parse_filter(t, term))
+                    q.filter_expr(parse_filter(t, value))
                 if t.peek() == ".":
                     t.take()
                 continue
@@ -520,7 +530,7 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
 
                 t.take()
                 t.expect("(")
-                vexpr = parse_value(t, term)
+                vexpr = parse_value(t, value)
                 t.expect("AS")
                 a = t.take()
                 if not (a.startswith("?") or a.startswith("$")):
@@ -532,26 +542,19 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
                 continue
             # triple block: subject, then ';'-separated predicate lists,
             # each with ','-separated object lists
-            s = term(t.take())
+            s = _term(t.take(), t, prefixes)
             while True:
                 p_tok = t.take()
                 if not (p_tok.startswith("?") or p_tok.startswith("$")):
                     p_tok = collect_path(p_tok)
                 path = path_expr(p_tok)
-                if path is None and p_tok == "a":
-                    # 'a' is the rdf:type keyword in PREDICATE position
-                    # only (SPARQL grammar: Verb := VarOrIri | 'a')
-                    p = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
-                elif path is None:
-                    p = term(p_tok)
-                else:
-                    p = None
+                p = _term(p_tok, t, prefixes, verb=True) if path is None else None
                 while True:
-                    o = term(t.take())
-                    if path is not None:
-                        q.path(s, path, o)
+                    o = _term(t.take(), t, prefixes)
+                    if path is None:
+                        q.conds.append((s, p, o))
                     else:
-                        q.filter([[s, p, o]])
+                        q.paths.append((s, path, o))
                     if t.peek() == ",":
                         t.take()
                         continue
@@ -564,11 +567,6 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
                 break
             if t.peek() == ".":
                 t.take()
-
-    def unit_to_str(u) -> str:
-        from rippledb_spark.plans.sparql import Var
-
-        return ("$" + u.name) if isinstance(u, Var) else u.value
 
     if form == "DESCRIBE":
         raw = t.take()
@@ -589,7 +587,7 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
                 raise QueryError(f"trailing tokens after DESCRIBE: {t.toks[t.i:]}")
             sub.select([f"${raw[1:]}"])  # the described variable only
             return SparqlDescribe(None, var=raw[1:], query=sub)
-        node = term(raw)
+        node = _term(raw, t, prefixes).value
         if t.peek() is not None:
             raise QueryError(f"trailing tokens after DESCRIBE: {t.toks[t.i:]}")
         return SparqlDescribe(node)
@@ -619,7 +617,7 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
                 )
             if not q.conds:
                 raise QueryError("empty CONSTRUCT WHERE group")
-            template = [[unit_to_str(u) for u in cond] for cond in q.conds]
+            template = list(q.conds)
             if t.peek() is not None:
                 raise QueryError("modifiers after CONSTRUCT are not in the text subset")
             return SparqlConstruct(q, template)
@@ -635,9 +633,10 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
             or tq.exists_groups
             or tq.binds
             or tq.subqueries
+            or tq.graph_groups
         ):
             raise QueryError("CONSTRUCT templates take plain triples only")
-        template = [[unit_to_str(u) for u in cond] for cond in tq.conds]
+        template = list(tq.conds)
         if not template:
             raise QueryError("empty CONSTRUCT template")
         t.expect("WHERE")
@@ -659,9 +658,8 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
         return SparqlAsk(q)
 
     # FROM / FROM NAMED dataset clauses (§13.2) — dataset-tier: applied
-    # by plans.graphs.dataset_frames when the query runs over a QuadStore
-    # (a single-graph TripleStore has no named graphs to select from: it
-    # refuses GRAPH groups and ignores FROM).
+    # by plans.graphs.dataset_frames (a single-graph TripleStore is the
+    # dataset with no named graphs, so FROM leaves its default graph empty).
     from_graphs: list[str] = []
     from_named: list[str] = []
     while _is_kw(t.peek(), "FROM"):
@@ -672,7 +670,7 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
         src = t.take()
         if src.startswith("?") or src.startswith("$"):
             raise QueryError(f"FROM takes an IRI, got variable {src!r}")
-        (from_named if named_from else from_graphs).append(term(src))
+        (from_named if named_from else from_graphs).append(_iri(src, prefixes))
 
     t.expect("WHERE")
     t.expect("{")
@@ -733,8 +731,6 @@ def _pattern_vars(q: Sparql, required: bool = True) -> list[str]:
     """SELECT * expansion: every variable, in first-appearance order.
     ``required=False`` returns [] for a variable-free group instead of
     raising (the ground-ASK caller's case)."""
-    from rippledb_spark.plans.sparql import Var
-
     seen: list[str] = []
     for cond in q.conds:
         for u in cond:
@@ -753,15 +749,7 @@ def _pattern_vars(q: Sparql, required: bool = True) -> list[str]:
     # OPTIONAL variables are in scope per spec §18.2.1 (NULL-extended);
     # MINUS/EXISTS variables are NOT and stay excluded
     for group in getattr(q, "optionals", []):
-        if isinstance(group, Sparql):
-            names = _pattern_vars(group, required=False)
-        else:
-            names = []
-            for cond in group:
-                for u in cond:
-                    if isinstance(u, Var) and u.name not in names:
-                        names.append(u.name)
-        for n in names:
+        for n in _pattern_vars(group, required=False):
             if n not in seen:
                 seen.append(n)
     for vnames, _rows in getattr(q, "values_blocks", []):

@@ -12,9 +12,10 @@ standard text form (W3C SPARQL 1.1 Update subset)::
                                      -- the modify form (either clause
                                      -- may be omitted, not both)
 
-Triple statements are ``s p o .`` (the final dot optional before ``}``);
-literals take ``"lit"``, ``"lit"@lang``, and ``"lit"^^<datatype>`` forms;
-``_:name`` terms are blank nodes.
+Triple statements are ``s p o .`` (the final dot optional before ``}``).
+Terms and the PREFIX prologue are read by the query parser's lexer
+(plans.text): ``"lit"``, ``"lit"@lang`` and ``"lit"^^<datatype>`` literals,
+``_:name`` blank nodes, ``a`` as the predicate ``rdf:type``.
 
 Two modes share the parser and the evaluator. ``parse_update(text)`` is
 single-graph like the reference: GRAPH/WITH/USING and graph management
@@ -39,24 +40,25 @@ TripleStore is the frame with no
 and inserted rows carry no label — and the single-graph modify form is
 the quad-pattern one with every template pattern in the WITH graph.
 
-Semantics notes (the engine's flattened-model conventions, shared with
+Semantics notes. Constants are whole terms (value, kind, language tag,
+datatype), as in queries; solutions carry values only (shared with
 plans.bgp):
 
 - DELETE WHERE removes the ACTUAL matched triples — each pattern's
   matches are semi-joined against the group's solutions, so kinds/lang/
-  datatype are exact, and bound values match named nodes only
-  (pattern_filter's rule, graph.rs:1031-1033).
+  datatype are exact, and a constant matches only its own term
+  (pattern_filter's rule).
 - The modify form plans its WHERE group once; both templates
-  instantiate per solution of that one frame. The DELETE template
-  removes store rows matching on (g, s, p, o_value) regardless of object
-  kind — solutions carry values, not kinds (the same flattening that
-  makes CONSTRUCT lift terms as named nodes); the INSERT template lifts
-  every instantiated term as a named node (src/lib.rs:17-19). A solution
-  leaving a template variable unbound skips that pattern, per spec; a
-  template variable the WHERE group never binds is an error, even when
-  the WHERE matches nothing. A ground WHERE gates the whole modify
-  (bgp.ask_ground): one empty solution if it matches, else
-  the store itself comes back.
+  instantiate per solution of that one frame (bgp._instantiate, which
+  CONSTRUCT shares): a constant keeps its kind, language tag and
+  datatype, a variable's value lifts as a named node (src/lib.rs:17-19).
+  The DELETE template removes store rows matching on (g, s, p, o_value)
+  regardless of object kind, because a variable's kind is unknown. A
+  solution leaving a template variable unbound skips that pattern, per
+  spec; a template variable the WHERE group never binds is an error,
+  even when the WHERE matches nothing. A ground WHERE gates the whole
+  modify (bgp.ask_ground): one empty solution if it matches, else the
+  store itself comes back.
 
 Scale shape: every form is DataFrame algebra end to end — pattern scans,
 semi-joins, one anti-join for deletion, union+dedup for insertion. No
@@ -92,8 +94,8 @@ from rippledb_spark import model
 from rippledb_spark.errors import QueryError
 from rippledb_spark.operators.triple_patterns import pattern_filter, position_column
 from rippledb_spark.plans import bgp
-from rippledb_spark.plans.sparql import Sparql, Val, Var, parse_unit
-from rippledb_spark.plans.text import _is_kw, _pattern_vars, _Tokens
+from rippledb_spark.plans.sparql import QueryUnit, Sparql, Var
+from rippledb_spark.plans.text import _iri, _is_kw, _pattern_vars, _prologue, _term, _Tokens
 
 
 @dataclass(frozen=True)
@@ -114,8 +116,8 @@ class DeleteWhere:
 
 @dataclass(frozen=True)
 class Modify:
-    delete_template: list[list[str]]  # [] = no DELETE clause
-    insert_template: list[list[str]]  # [] = no INSERT clause
+    delete_template: list[tuple]  # (s, p, o) unit triples; [] = no DELETE
+    insert_template: list[tuple]  # [] = no INSERT clause
     query: Sparql
     graph: str | None = None  # WITH graph (quads mode)
     using: str | None = None  # USING graph: overrides WHERE's graph
@@ -124,13 +126,13 @@ class Modify:
 @dataclass(frozen=True)
 class ModifyQuads:
     """The modify form with QUAD patterns (GRAPH blocks in templates
-    and/or WHERE — quads mode only). Templates are (g, [s, p, o]) pairs
-    where ``g`` is None (the WITH graph, or default), an IRI, or
-    ``'$var'``; the WHERE group's GRAPH blocks live in ``query``'s
+    and/or WHERE — quads mode only). Templates are (g, (s, p, o)) unit
+    pairs where ``g`` is None (the WITH graph, or default), a graph's
+    ``Val``, or a ``Var``; the WHERE group's GRAPH blocks live in ``query``'s
     graph_groups. Evaluated exactly like :class:`Modify` (module
     docstring), which :func:`apply` lifts to this shape."""
 
-    delete_template: list[tuple]  # [(g, [s,p,o]), ...]; [] = no DELETE
+    delete_template: list[tuple]  # [(g, (s, p, o)), ...]; [] = no DELETE
     insert_template: list[tuple]
     query: Sparql
     graph: str | None = None  # WITH graph
@@ -165,64 +167,17 @@ UpdateForm = (
 _UNSUPPORTED = ("GRAPH", "WITH", "USING", "LOAD", "CLEAR", "DROP", "CREATE", "MOVE", "COPY", "ADD")
 
 
-def _parse_prefixes(t: _Tokens) -> dict[str, str]:
-    prefixes: dict[str, str] = {}
-    while _is_kw(t.peek(), "PREFIX"):
-        t.take()
-        pname = t.take()
-        if not pname.endswith(":"):
-            raise QueryError(f"PREFIX name must end with ':', got {pname!r}")
-        iri = t.take()
-        if not (iri.startswith("<") and iri.endswith(">")):
-            raise QueryError(f"PREFIX expansion must be an <iri>, got {iri!r}")
-        prefixes[pname[:-1]] = iri[1:-1]
-    return prefixes
-
-
-def _expand(tok: str, prefixes: dict[str, str]) -> str:
-    if tok.startswith("<") and tok.endswith(">"):
-        return tok[1:-1]
-    if ":" in tok:
-        pfx, local = tok.split(":", 1)
-        if pfx in prefixes:
-            return prefixes[pfx] + local
-    return tok
-
-
-def _parse_term(t: _Tokens, prefixes: dict[str, str]) -> tuple:
-    """One term → (value, kind, lang, datatype) or ('$var', None, ...)
-    for variables (kind None marks a variable)."""
-    import re as _re
-
-    tok = t.take()
-    if tok.startswith("?") or tok.startswith("$"):
-        return ("$" + tok[1:], None, None, None)
-    if tok.startswith('"'):
-        value = _re.sub(r"\\(.)", r"\1", tok[1:-1])
-        nxt = t.peek()
-        if isinstance(nxt, str) and nxt.startswith("@") and len(nxt) > 1:
-            t.take()
-            return (value, model.LANG_LITERAL, nxt[1:], None)
-        if isinstance(nxt, str) and nxt.startswith("^^") and len(nxt) > 2:
-            t.take()
-            return (value, model.TYPED_LITERAL, None, _expand(nxt[2:], prefixes))
-        return (value, model.LITERAL, None, None)
-    value = _expand(tok, prefixes)
-    kind = model.BLANK if value.startswith("_:") else model.NAMED
-    return (value, kind, None, None)
-
-
 def _parse_triple_block(
     t: _Tokens,
     prefixes: dict[str, str],
     quads: bool = False,
-    graph: str | None = None,
+    graph: QueryUnit | None = None,
     allow_var_graph: bool = False,
 ) -> list[tuple]:
     """Parse '{ s p o . ... }' (the opening brace already expected by the
-    caller) → list of (g, s_term, p_term, o_term) tuples; ``g`` is None
-    outside GRAPH sub-blocks, an IRI inside ``GRAPH <iri> { ... }``, or
-    ``'$name'`` inside ``GRAPH ?var { ... }`` (templates/WHERE only —
+    caller) → list of (g, (s, p, o)) unit pairs; ``g`` is None outside
+    GRAPH sub-blocks, the graph's ``Val`` inside ``GRAPH <iri> { ... }``,
+    or a ``Var`` inside ``GRAPH ?var { ... }`` (templates/WHERE only —
     ``allow_var_graph``; DATA forms stay ground). In triples mode any
     graph keyword refuses loudly."""
     t.expect("{")
@@ -234,19 +189,13 @@ def _parse_triple_block(
         if tok == "}":
             t.take()
             return out
-        if isinstance(tok, str) and _is_kw(tok, "GRAPH") and quads:
+        if _is_kw(tok, "GRAPH") and quads:
             if graph is not None:
                 raise QueryError("GRAPH blocks do not nest in QuadData")
             t.take()
-            gtok = t.take()
-            if gtok.startswith("?") or gtok.startswith("$"):
-                if not allow_var_graph:
-                    raise QueryError(
-                        "QuadData GRAPH takes a ground IRI, not a variable"
-                    )
-                glabel = "$" + gtok[1:]
-            else:
-                glabel = _expand(gtok, prefixes)
+            glabel = _term(t.take(), t, prefixes)
+            if isinstance(glabel, Var) and not allow_var_graph:
+                raise QueryError("QuadData GRAPH takes a ground IRI, not a variable")
             out.extend(
                 _parse_triple_block(
                     t,
@@ -259,37 +208,32 @@ def _parse_triple_block(
             if t.peek() == ".":
                 t.take()
             continue
-        if isinstance(tok, str) and tok.upper() in _UNSUPPORTED:
+        if tok.upper() in _UNSUPPORTED:
             raise QueryError(
                 f"{tok.upper()} is not supported here"
                 + ("" if quads else " (single-graph engine; use QuadStore.update)")
             )
-        s = _parse_term(t, prefixes)
-        p = _parse_term(t, prefixes)
-        o = _parse_term(t, prefixes)
-        out.append((graph, s, p, o))
+        s = _term(t.take(), t, prefixes)
+        p = _term(t.take(), t, prefixes, verb=True)
+        o = _term(t.take(), t, prefixes)
+        out.append((graph, (s, p, o)))
         if t.peek() == ".":
             t.take()
 
 
 def _ground_rows(block: list, what: str, quads: bool = False) -> list[tuple]:
-    """Ground (g, s, p, o) term tuples → 7-tuple triple rows, or 8-tuple
+    """Ground (g, (s, p, o)) unit pairs → 7-tuple triple rows, or 8-tuple
     quad rows when ``quads``."""
     rows = []
-    for g, s, p, o in block:
+    for g, (s, p, o) in block:
         for term in (s, p, o):
-            if term[1] is None:
-                raise QueryError(f"{what} takes ground triples; got variable {term[0]}")
-        if s[1] not in (model.NAMED, model.BLANK):
-            raise QueryError(f"literal subjects are not valid RDF: {s[0]!r}")
-        row = (s[0], s[1], p[0], o[0], o[1], o[2], o[3])
-        rows.append((g, *row) if quads else row)
+            if isinstance(term, Var):
+                raise QueryError(f"{what} takes ground triples; got variable ${term.name}")
+        if s.kind not in (model.NAMED, model.BLANK):
+            raise QueryError(f"literal subjects are not valid RDF: {s.value!r}")
+        row = (s.value, s.kind, p.value, o.value, o.kind, o.lang, o.datatype)
+        rows.append((None if g is None else g.value, *row) if quads else row)
     return rows
-
-
-def _quad_patterns(block: list) -> list[tuple]:
-    """Term tuples → (g, [s, p, o]) pairs, keeping GRAPH scopes."""
-    return [(g, [s[0], p[0], o[0]]) for g, s, p, o in block]
 
 
 def _where_query(block: list) -> Sparql:
@@ -297,37 +241,19 @@ def _where_query(block: list) -> Sparql:
     entries are default-graph conds, same-label GRAPH entries fold into
     one graph group each."""
     q = Sparql()
-    plain = [[s[0], p[0], o[0]] for g, s, p, o in block if g is None]
-    if plain:
-        q.filter(plain)
-    by_label: dict[str, list[list[str]]] = {}
-    for g, s, p, o in block:
-        if g is not None:
-            by_label.setdefault(g, []).append([s[0], p[0], o[0]])
-    for label, pats in by_label.items():
-        q.graph(label, pats)
+    by_label: dict[QueryUnit, Sparql] = {}
+    for g, triple in block:
+        (q if g is None else by_label.setdefault(g, Sparql())).conds.append(triple)
+    for label, group in by_label.items():
+        q._graph(label, group)
     return q
-
-
-def _patterns(block: list) -> list[list[str]]:
-    """Term tuples → the builder's [s, p, o] string patterns ('$var' or
-    plain value — the flattened-model form). WHERE/template groups are
-    single-graph (scoped by WITH/USING), so a GRAPH sub-block here is a
-    parse error upstream and ``g`` is always None."""
-    for g, *_ in block:
-        if g is not None:
-            raise QueryError(
-                "GRAPH blocks are supported in DATA forms only; scope the "
-                "modify form with WITH <iri> / USING <iri>"
-            )
-    return [[s[0], p[0], o[0]] for _, s, p, o in block]
 
 
 def _graph_target(t: _Tokens, prefixes: dict[str, str], op: str) -> tuple[str | None, str]:
     """One CLEAR/DROP/MOVE/COPY/ADD target → (iri-or-None, scope)."""
     tok = t.take()
     if _is_kw(tok, "GRAPH"):
-        return _expand(t.take(), prefixes), "graph"
+        return _iri(t.take(), prefixes), "graph"
     if _is_kw(tok, "DEFAULT"):
         return None, "default"
     if _is_kw(tok, "NAMED") and op in ("CLEAR", "DROP"):
@@ -336,7 +262,7 @@ def _graph_target(t: _Tokens, prefixes: dict[str, str], op: str) -> tuple[str | 
         return None, "all"
     if tok.startswith("<") and tok.endswith(">") and op in ("MOVE", "COPY", "ADD"):
         # the GRAPH keyword is optional in MOVE/COPY/ADD operands (§3.2.5)
-        return _expand(tok, prefixes), "graph"
+        return _iri(tok, prefixes), "graph"
     raise QueryError(f"{op} expects GRAPH <iri>/DEFAULT, got {tok!r}")
 
 
@@ -347,11 +273,11 @@ def parse_update(text: str, quads: bool = False) -> UpdateForm:
     MOVE/COPY/ADD), and LOAD; the TripleStore path keeps refusing those
     loudly."""
     t = _Tokens(text)
-    prefixes = _parse_prefixes(t)
+    prefixes = _prologue(t)
     head = t.take().upper()
     with_graph: str | None = None
     if quads and head == "WITH":
-        with_graph = _expand(t.take(), prefixes)
+        with_graph = _iri(t.take(), prefixes)
         head = t.take().upper()
         if head not in ("DELETE", "INSERT"):
             raise QueryError(f"WITH <iri> expects a DELETE/INSERT form, got {head!r}")
@@ -362,7 +288,7 @@ def parse_update(text: str, quads: bool = False) -> UpdateForm:
             tok = t.take()
             if not _is_kw(tok, "GRAPH"):
                 raise QueryError(f"CREATE expects GRAPH <iri>, got {tok!r}")
-            form: UpdateForm = GraphManage("create", src=_expand(t.take(), prefixes))
+            form: UpdateForm = GraphManage("create", src=_iri(t.take(), prefixes))
         else:
             iri, scope = _graph_target(t, prefixes, head)
             form = GraphManage(head.lower(), src=iri, scope=scope)
@@ -382,14 +308,14 @@ def parse_update(text: str, quads: bool = False) -> UpdateForm:
     elif quads and head == "LOAD":
         if _is_kw(t.peek(), "SILENT"):
             t.take()
-        source = _expand(t.take(), prefixes)
+        source = _iri(t.take(), prefixes)
         graph = None
         if _is_kw(t.peek(), "INTO"):
             t.take()
             tok = t.take()
             if not _is_kw(tok, "GRAPH"):
                 raise QueryError(f"LOAD ... INTO expects GRAPH <iri>, got {tok!r}")
-            graph = _expand(t.take(), prefixes)
+            graph = _iri(t.take(), prefixes)
         if t.peek() is not None:
             raise QueryError(f"trailing tokens in update: {t.toks[t.i:]}")
         return Load(source, graph)
@@ -417,15 +343,11 @@ def parse_update(text: str, quads: bool = False) -> UpdateForm:
         block = _parse_triple_block(t, prefixes, quads=quads, allow_var_graph=quads)
         if not block:
             raise QueryError("DELETE WHERE needs at least one pattern")
-        if any(g is not None for g, *_ in block):
+        if any(g is not None for g, _ in block):
             # DELETE WHERE { QuadPattern } ≡ DELETE {Q} WHERE {Q} (§3.1.3.2)
-            form = ModifyQuads(
-                _quad_patterns(block), [], _where_query(block), graph=with_graph
-            )
+            form = ModifyQuads(block, [], _where_query(block), graph=with_graph)
         else:
-            q = Sparql()
-            q.filter(_patterns(block))
-            form = DeleteWhere(q, graph=with_graph)
+            form = DeleteWhere(_where_query(block), graph=with_graph)
     elif head in ("DELETE", "INSERT"):
         delete_blk: list = []
         insert_blk: list = []
@@ -451,28 +373,19 @@ def parse_update(text: str, quads: bool = False) -> UpdateForm:
             t.take()
             if _is_kw(t.peek(), "NAMED"):
                 raise QueryError("USING NAMED is not supported; use GRAPH groups")
-            using = _expand(t.take(), prefixes)
+            using = _iri(t.take(), prefixes)
         t.expect("WHERE")
         block = _parse_triple_block(t, prefixes, quads=quads, allow_var_graph=quads)
         if not block:
             raise QueryError("the modify form needs a non-empty WHERE group")
-        graphy = any(
-            g is not None for g, *_ in (*delete_blk, *insert_blk, *block)
-        )
-        if graphy:
-            form = ModifyQuads(
-                _quad_patterns(delete_blk),
-                _quad_patterns(insert_blk),
-                _where_query(block),
-                graph=with_graph,
-                using=using,
-            )
+        q = _where_query(block)
+        if any(g is not None for g, _ in (*delete_blk, *insert_blk, *block)):
+            form = ModifyQuads(delete_blk, insert_blk, q, graph=with_graph, using=using)
         else:
-            q = Sparql()
-            q.filter(_patterns(block))
             form = Modify(
-                _patterns(delete_blk), _patterns(insert_blk), q,
-                graph=with_graph, using=using,
+                [triple for _, triple in delete_blk],
+                [triple for _, triple in insert_blk],
+                q, graph=with_graph, using=using,
             )
     else:
         raise QueryError(
@@ -593,8 +506,8 @@ def apply(store, form: UpdateForm):
     names = _pattern_vars(q, required=False)
     # static validation FIRST: an unbound template variable is an error
     # regardless of whether the WHERE happens to match
-    for g, pat in form.delete_template + form.insert_template:
-        for u in [parse_unit(x) for x in ([g] if g else []) + pat]:
+    for g, triple in form.delete_template + form.insert_template:
+        for u in (g, *triple):
             if isinstance(u, Var) and u.name not in names:
                 raise QueryError(
                     f"template variable ${u.name} is not bound by the WHERE group"
@@ -617,7 +530,7 @@ def apply(store, form: UpdateForm):
         sol = spark.range(1).drop("id")  # its one empty solution
     out = store
     if form.delete_template:
-        dels = _instantiated(sol, form.delete_template, form.graph, quads)
+        dels = bgp._instantiate(sol, form.delete_template, form.graph, quads)
         cond = (
             (df["s"] == dels["s"])
             & (df["p"] == dels["p"])
@@ -627,17 +540,7 @@ def apply(store, form: UpdateForm):
             cond = df["g"].eqNullSafe(dels["g"]) & cond
         out = new(spark, df.join(dels, on=cond, how="left_anti"))
     if form.insert_template:
-        ins = _instantiated(sol, form.insert_template, form.graph, quads)
-        null_s = F.lit(None).cast("string")
-        out = out.insert(
-            ins.select(
-                *ins.columns,
-                F.lit(model.NAMED).alias("s_kind"),
-                F.lit(model.NAMED).alias("o_kind"),
-                null_s.alias("o_lang"),
-                null_s.alias("o_datatype"),
-            )
-        )
+        out = out.insert(bgp._instantiate(sol, form.insert_template, form.graph, quads))
     return materialised(out)
 
 
@@ -665,8 +568,7 @@ def matched_triples(triples: DataFrame, q: Sparql) -> DataFrame:
     sol = _solutions(triples, q, names) if names else None
     parts: list[DataFrame] = []
     for cond in q.conds:
-        bounds = tuple(None if isinstance(u, Var) else u.value for u in cond)
-        ci = pattern_filter(triples, *bounds)
+        ci = pattern_filter(triples, *cond)
         vpos = [(i, u.name) for i, u in enumerate(cond) if isinstance(u, Var)]
         if vpos and sol is not None:
             probe = sol.select(
@@ -682,30 +584,3 @@ def matched_triples(triples: DataFrame, q: Sparql) -> DataFrame:
     for p in parts[1:]:
         out = out.unionByName(p)
     return out.dropDuplicates(model.TRIPLE_KEY)
-
-
-def _instantiated(
-    sol: DataFrame, template: list[tuple], graph: str | None, quads: bool
-) -> DataFrame:
-    """Quad templates × solutions → distinct (g, s, p, o_value) keys,
-    without ``g`` for a triple store. A template's ``g`` of None is
-    ``graph`` (the WITH graph; None = the default graph), ``'$var'`` takes
-    the solution binding, anything else is a ground label. A row with an
-    unbound variable — GRAPH variable included — is skipped, per spec."""
-    parts = []
-    for g, pat in template:
-        units = dict(zip(("s", "p", "o_value"), map(parse_unit, pat)))
-        if quads:
-            units = {"g": Val(graph) if g is None else parse_unit(g), **units}
-        term = lambda u: (  # noqa: E731
-            F.col(u.name) if isinstance(u, Var) else F.lit(u.value).cast("string")
-        )
-        row = sol.select(*[term(u).alias(c) for c, u in units.items()])
-        for c, u in units.items():
-            if isinstance(u, Var):
-                row = row.filter(F.col(c).isNotNull())
-        parts.append(row)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.dropDuplicates()

@@ -41,7 +41,7 @@ from rippledb_spark import model
 from rippledb_spark.errors import SchemaError
 from rippledb_spark.operators.triple_patterns import pattern_filter
 from rippledb_spark.plans import bgp
-from rippledb_spark.plans.sparql import Sparql
+from rippledb_spark.plans.sparql import Sparql, parse_unit
 from rippledb_spark.sources import rdfio
 
 TripleLike = tuple | list
@@ -335,8 +335,9 @@ class TripleStore:
     # -- query (Q2-Q12) -----------------------------------------------------
 
     def pattern(self, s: str | None, p: str | None, o: str | None) -> DataFrame:
-        """One triple pattern — all 8 access paths (Q3-Q11)."""
-        return pattern_filter(self.df, s, p, o)
+        """One triple pattern — all 8 access paths (Q3-Q11); None = any."""
+        units = (None if x is None else parse_unit(x) for x in (s, p, o))
+        return pattern_filter(self.df, *units)
 
     def get(self, query: Sparql) -> DataFrame:
         """Reference-exact conjunctive query (Q2; graph.rs:333-413)."""
@@ -414,12 +415,11 @@ class TripleStore:
     ) -> "TripleStore":
         """SPARQL CONSTRUCT superset: instantiate ``template`` patterns per
         solution → a NEW TripleStore (a CONSTRUCT result is an RDF graph
-        with set semantics; terms lift as named nodes, the reference's
-        plain-string lift, src/lib.rs:17-19)."""
+        with set semantics; the builder's terms are named nodes, and
+        variables lift as named nodes, src/lib.rs:17-19)."""
         stats = self.analyze() if use_stats else None
-        return TripleStore(
-            self.spark, bgp.construct(self.df, query, template, stats=stats)
-        )
+        units = Sparql().filter(template).conds
+        return TripleStore(self.spark, bgp.construct(self.df, query, units, stats=stats))
 
     # -- iteration / export (S7, S8) ----------------------------------------
 
@@ -532,10 +532,15 @@ def _answer(store, text: str, stats: dict[str, int] | None = None) -> DataFrame:
     )
 
     q = parse_sparql(text)
-    if isinstance(store, TripleStore):
-        default, named = store.df, None
+    query = getattr(q, "query", q)
+    if not isinstance(store, TripleStore):
+        default, named = dataset_frames(store.df, query)
+    elif getattr(query, "from_graphs", None) or getattr(query, "from_named", None):
+        # FROM over the dataset with no named graphs: nothing to merge (§13.2)
+        no_g = F.lit(None).cast("string")
+        default, named = dataset_frames(store.df.withColumn("g", no_g), query)
     else:
-        default, named = dataset_frames(store.df, getattr(q, "query", q))
+        default, named = store.df, None
 
     def solve(query: Sparql) -> DataFrame:
         return bgp._select(default, named, query, True, stats)

@@ -239,8 +239,8 @@ def naive_select_join_optional(rows, conds, optionals, names):
     for c in conds[1:]:
         acc = _bag_join(acc, _pattern_solutions(rows, c))
     for group in optionals:
-        g = _pattern_solutions(rows, group[0])
-        for c in group[1:]:
+        g = _pattern_solutions(rows, group.conds[0])
+        for c in group.conds[1:]:
             g = _bag_join(g, _pattern_solutions(rows, c))
         out = []
         for a in acc:
@@ -282,6 +282,33 @@ def test_select_join_optional_matches_naive(spark, seed):
     conds = q.conds
     want = naive_select_join_optional(rows, conds, q.optionals, ["v", "w"])
     # None sorts: normalize via tuple of (is_none, value)
+    key = lambda t: tuple((x is None, x if x is not None else "") for x in t)
+    assert sorted(got, key=key) == sorted(want, key=key)
+
+
+@pytest.mark.parametrize("seed", range(6))
+def test_optional_sharing_no_variable_matches_naive(spark, seed):
+    """SPARQL §18.5 LeftJoin: an OPTIONAL group sharing no variable with
+    the required patterns extends every required row with each of its
+    solutions (the cross product), or keeps the row alone when it has
+    none; a ground group keeps the required rows as they are."""
+    from rippledb_spark.plans.bgp import select_join
+
+    rng = random.Random(4000 + seed)
+    # a graph is a set of triples
+    rows = list(dict.fromkeys(_random_row(rng) for _ in range(rng.randint(4, 12))))
+    required = [["$v", *_random_pattern(rng)[1:]]]
+    optional = [_random_pattern(rng) for _ in range(rng.randint(1, 2))]
+    for pats, var in ((required, "$v"), (optional, "$w")):
+        for pat in pats:
+            pat[:] = [var if term in VARS else term for term in pat]
+    q = Sparql().select(["$v", "$w"]).filter(required).optional(optional)
+    if not any("$w" in pat for pat in optional):
+        q.vars.pop()  # a ground group binds nothing to select
+    df = spark.createDataFrame(rows, model.TRIPLES_SCHEMA)
+    got = [tuple(r) for r in select_join(df, q).collect()]
+    names = q.var_names()
+    want = naive_select_join_optional(rows, q.conds, q.optionals, names)
     key = lambda t: tuple((x is None, x if x is not None else "") for x in t)
     assert sorted(got, key=key) == sorted(want, key=key)
 
@@ -328,8 +355,8 @@ def _group_solutions(rows, conds):
 def naive_select_join(rows, query):
     sols = _group_solutions(rows, query.conds)
     for group in query.optionals:
-        gsols = _group_solutions(rows, group)
-        gvars = {u.name for c in group for u in c if isinstance(u, Var)}
+        gsols = _group_solutions(rows, group.conds)
+        gvars = {u.name for c in group.conds for u in c if isinstance(u, Var)}
         out = []
         for s in sols:
             shared = set(s) & gvars
@@ -343,8 +370,8 @@ def naive_select_join(rows, query):
                 out.append({**s, **{v: None for v in gvars - set(s)}})
         sols = out
     for group in query.minuses:
-        gsols = _group_solutions(rows, group)
-        gvars = {u.name for c in group for u in c if isinstance(u, Var)}
+        gsols = _group_solutions(rows, group.conds)
+        gvars = {u.name for c in group.conds for u in c if isinstance(u, Var)}
         kept = []
         for s in sols:
             shared = set(s) & gvars

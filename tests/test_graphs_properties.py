@@ -9,8 +9,9 @@ loop — evaluate per graph with the SINGLE-graph machinery, union — is
 the spec.
 
 Store parity: random query texts give the same answer on a TripleStore,
-on a QuadStore holding it as the default graph, and, with every group in
-GRAPH <g:x>, on a QuadStore holding it as that named graph.
+on a QuadStore holding it as the default graph (FROM clauses included),
+and, with every group in GRAPH <g:x>, on a QuadStore holding it as that
+named graph.
 
 Spark runs per example, so example counts stay small (the same trade as
 test_bgp_properties)."""
@@ -217,6 +218,12 @@ def test_stores_agree_on_random_queries(spark, form, seed):
     want = _outcome(ts, text, exact=True)
     as_default = QuadStore.from_triplestores(spark, default=ts)
     assert _outcome(as_default, text, exact=True) == want, text
+    # FROM selects the dataset (§13.2): a TripleStore has no named graphs
+    for clause in () if form == "ask" else ("FROM <g:none>", "FROM NAMED <g:none>"):
+        from_text = text.replace(" WHERE", f" {clause} WHERE", 1)
+        assert _outcome(ts, from_text, exact=True) == _outcome(
+            as_default, from_text, exact=True
+        ), from_text
     as_named = QuadStore.from_triplestores(spark, named={"g:x": ts})
     if isinstance(want, tuple):
         want = ("QueryError", None)

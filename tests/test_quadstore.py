@@ -661,6 +661,7 @@ def test_select_dataset_restores_query_on_lowering_error(qs):
     bad_inner.filter([["c1", "in_nation", "n1"]])  # ground — binds nothing
     bad_opt = Sparql()
     bad_opt.graph("g:cust", bad_inner)
+    bad_opt.filter_expr("?zz = 1")  # names a variable the group never binds
 
     outer = Sparql()
     outer.filter([["$n", "in_region", "$r"]])
@@ -668,7 +669,7 @@ def test_select_dataset_restores_query_on_lowering_error(qs):
     outer.optional_group(bad_opt)
     outer.select(["$n", "$r"])
     before = copy.deepcopy(outer)
-    with pytest.raises(QueryError, match="bind at least one"):
+    with pytest.raises(QueryError, match="not bound in the group"):
         qs.select_dataset(outer)
     # the failed evaluation must not leave planning state behind
     assert fields(outer) == fields(before)

@@ -188,8 +188,10 @@ def test_text_ask_variable_free(store):
     # ground property path
     assert store.sparql("ASK { a next+ d . }").count() == 1
     assert store.sparql("ASK { x next+ a . }").count() == 0
-    # a bound literal value never matches (named-only rule)
-    assert store.sparql('ASK { a label "node a" . }').count() == 0
+    # a literal constant matches the stored literal, and a named node with
+    # the same text only the named node
+    assert store.sparql('ASK { a label "node a" . }').count() == 1
+    assert store.sparql('ASK { a next "b" . }').count() == 0
 
 
 def test_text_ask(store):

@@ -11,6 +11,7 @@ import pytest
 
 from rippledb_spark import Sparql, TripleStore
 from rippledb_spark.operators.triple_patterns import pattern_filter
+from rippledb_spark.plans.sparql import Val
 
 FIXTURE = [
     # (s, p, o) shorthand → named nodes; 7-tuples for literals
@@ -247,7 +248,7 @@ def test_pattern_filter_equals_manual_filter(spark, store):
         (F.col("p") == "knows") & (F.col("o_value") == "person:carol")
         & (F.col("o_kind") == "named")
     )
-    auto = pattern_filter(store.df, None, "knows", "person:carol")
+    auto = pattern_filter(store.df, None, Val("knows"), Val("person:carol"))
     assert sorted(map(tuple, manual.collect())) == sorted(map(tuple, auto.collect()))
 
 

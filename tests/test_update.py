@@ -15,6 +15,8 @@ from rippledb_spark import QuadStore, TripleStore, model
 from rippledb_spark.errors import QueryError
 from rippledb_spark.operators._itergc import release_iteration_garbage
 from rippledb_spark.plans import bgp
+from rippledb_spark.plans.sparql import Val, Var
+from rippledb_spark.plans.text import parse_sparql
 from rippledb_spark.plans.update import (
     DeleteData,
     DeleteWhere,
@@ -70,8 +72,8 @@ def test_parse_forms():
     assert isinstance(parse_update("DELETE WHERE { ?x p ?y }"), DeleteWhere)
     m = parse_update("DELETE { ?x p ?y } INSERT { ?x q ?y } WHERE { ?x p ?y }")
     assert isinstance(m, Modify)
-    assert m.delete_template == [["$x", "p", "$y"]]
-    assert m.insert_template == [["$x", "q", "$y"]]
+    assert m.delete_template == [(Var("x"), Val("p"), Var("y"))]
+    assert m.insert_template == [(Var("x"), Val("q"), Var("y"))]
 
 
 def test_parse_literal_forms():
@@ -304,32 +306,22 @@ def test_join_keeps_typed_and_plain_literals_apart(spark, kind):
     assert st.sparql("SELECT ?x ?y WHERE { ?x lbl ?v . ?y age ?v }").count() == 0
 
 
-# Query constants are flattened to bare values by the text parser, so a
-# literal, an IRI and a '$'-string with the same text are one term. These
-# pin the defects until the parser emits typed terms.
+# Constants are whole terms from the parser to the plan: a literal, an IRI
+# and a '$'-string with the same text are three terms.
 
 
-@pytest.mark.xfail(
-    strict=True, raises=AssertionError, reason="literal constants match named nodes only"
-)
 @pytest.mark.parametrize("kind", KINDS)
 def test_literal_constant_finds_the_plain_literal(spark, kind):
     st = as_store(spark, kind, [PLAIN_5])
     assert st.sparql('SELECT ?s WHERE { ?s lbl "5" }').collect() == [("s",)]
 
 
-@pytest.mark.xfail(
-    strict=True, raises=AssertionError, reason="a literal constant matches the IRI <5>"
-)
 @pytest.mark.parametrize("kind", KINDS)
 def test_literal_constant_spares_the_iri(spark, kind):
     st = as_store(spark, kind, [("a", model.NAMED, "knows", "5", model.NAMED, None, None)])
     assert st.sparql('SELECT ?s WHERE { ?s knows "5" }').count() == 0
 
 
-@pytest.mark.xfail(
-    strict=True, raises=QueryError, reason="typed literal constants do not parse"
-)
 @pytest.mark.parametrize("kind", KINDS)
 def test_typed_literal_constant_parses(spark, kind):
     st = as_store(spark, kind, [TYPED_5])
@@ -337,14 +329,79 @@ def test_typed_literal_constant_parses(spark, kind):
     assert st.sparql(text).collect() == [("s",)]
 
 
-@pytest.mark.xfail(
-    strict=True, raises=QueryError, reason='the template literal "$x" reads as ?x'
-)
 @pytest.mark.parametrize("kind", KINDS)
 def test_template_dollar_literal_is_inserted(spark, kind):
     st = as_store(spark, kind, [("a", model.NAMED, "p", "b", model.NAMED, None, None)])
     out = st.update('INSERT { a q "$x" } WHERE { a p b }')
     assert ("a", "q", "$x") in {(r[0], r[2], r[3]) for r in default_rows(out)}
+
+
+# one stored row of every kind under the predicate v, all with the text "5"
+FIVES = [
+    ("s1", model.NAMED, "v", "5", model.NAMED, None, None),
+    ("s2", model.NAMED, "v", "_:5", model.BLANK, None, None),
+    ("s3", model.NAMED, "v", "5", model.LITERAL, None, None),
+    ("s4", model.NAMED, "v", "5", model.LANG_LITERAL, "en", None),
+    ("s5", model.NAMED, "v", "5", model.TYPED_LITERAL, None, XSD_INT),
+]
+FIVE_TEXTS = ["<5>", "_:5", '"5"', '"5"@en', '"5"^^xsd:integer']
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_each_kind_of_constant_finds_exactly_its_row(spark, kind):
+    st = as_store(spark, kind, FIVES)
+    prologue = "PREFIX xsd: <http://www.w3.org/2001/XMLSchema#> "
+    for text, row in zip(FIVE_TEXTS, FIVES):
+        got = st.sparql(f"{prologue}SELECT ?s WHERE {{ ?s v {text} }}").collect()
+        assert got == [(row[0],)], text
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_delete_where_literal_spares_the_other_kinds(spark, kind):
+    st = as_store(spark, kind, FIVES)
+    out = st.update('DELETE WHERE { ?s v "5" }')
+    assert default_rows(out) == sorted(r for r in FIVES if r[0] != "s3")
+
+
+# Random terms of all five kinds, rendered as SPARQL text: each parses to the
+# same Val in a SELECT pattern, an INSERT DATA block and a modify template.
+_text = st.text(alphabet='ab 5$?"\\{}.@^', max_size=6)
+_name = st.text(alphabet="abcxyz", min_size=1, max_size=4)
+_IRI = "http://ex/"
+_terms = st.one_of(
+    _name.map(lambda n: (Val(_IRI + n), f"<{_IRI}{n}>")),
+    _name.map(lambda n: (Val(_IRI + n), f"ex:{n}")),
+    _name.map(lambda n: (Val("_:" + n, model.BLANK), f"_:{n}")),
+    _text.map(lambda v: (Val(v, model.LITERAL), _quoted(v))),
+    st.tuples(_text, _name).map(
+        lambda t: (Val(t[0], model.LANG_LITERAL, lang=t[1]), f"{_quoted(t[0])}@{t[1]}")
+    ),
+    st.tuples(_text, _name, st.booleans()).map(
+        lambda t: (
+            Val(t[0], model.TYPED_LITERAL, datatype=_IRI + t[1]),
+            _quoted(t[0]) + (f"^^ex:{t[1]}" if t[2] else f"^^<{_IRI}{t[1]}>"),
+        )
+    ),
+)
+
+
+def _quoted(value: str) -> str:
+    return '"' + value.replace("\\", "\\\\").replace('"', '\\"') + '"'
+
+
+@settings(max_examples=8, deadline=None)
+@given(term=_terms)
+def test_terms_round_trip_through_every_front_end_form(term):
+    want, text = term
+    prologue = f"PREFIX ex: <{_IRI}> "
+    q = parse_sparql(f"{prologue}SELECT ?s WHERE {{ ?s ex:p {text} }}")
+    assert q.conds == [(Var("s"), Val(_IRI + "p"), want)]
+    data = parse_update(f"{prologue}INSERT DATA {{ ex:s ex:p {text} . }}")
+    assert data.rows == [
+        (_IRI + "s", model.NAMED, _IRI + "p", want.value, want.kind, want.lang, want.datatype)
+    ]
+    m = parse_update(f"{prologue}DELETE {{ ?s ex:p {text} }} WHERE {{ ?s ex:p ?o }}")
+    assert m.delete_template == [(Var("s"), Val(_IRI + "p"), want)]
 
 
 # -- one evaluator: TripleStore and QuadStore agree -----------------------------
