@@ -47,6 +47,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column
 
 from rippledb_spark.errors import QueryError
+from rippledb_spark.sources.rdfio import _unescape_nt
 
 
 # ---------------------------------------------------------------------------
@@ -470,7 +471,7 @@ def parse_value(tokens, term) -> ValueExpr:
         if tok.startswith("?") or tok.startswith("$"):
             return FVar(tok[1:])
         if tok.startswith('"'):
-            return FStr(re.sub(r"\\(.)", r"\1", tok[1:-1]))
+            return FStr(_unescape_nt(tok[1:-1]))
         if _NUM_RE.match(tok):
             return FNum(float(tok))
         if tok[0].isdigit() and any(c in tok for c in "+-*/"):

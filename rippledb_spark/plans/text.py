@@ -42,7 +42,10 @@ prologue), ``"lit"``, ``"lit"@lang``, ``"lit"^^<datatype>`` and
 ``"lit"^^prefix:local`` literals, ``_:name`` blank nodes, and bare tokens
 (named nodes kept verbatim, as is an undeclared ``prefix:local``; ``5`` is
 the named node ``5``, not a number). ``a`` in predicate position is
-``rdf:type``. A constant matches the stored term with the same value,
+``rdf:type``. String escapes (``\\t``, ``\\n``, ``\\uXXXX``, ...) decode
+through the N-Triples readers' decoder (``sources.rdfio._unescape_nt``),
+so a literal loaded from a file is found by its own escaped text. A
+constant matches the stored term with the same value,
 kind, language tag and datatype; VALUES cells and FILTER/BIND operands
 are compared by value. FILTER/BIND expression grammar and typing rules live in
 plans.filters (comparisons, + - * / arithmetic, CONCAT/STR/STRLEN/UCASE/
@@ -61,6 +64,7 @@ from dataclasses import dataclass
 from rippledb_spark import model
 from rippledb_spark.errors import QueryError
 from rippledb_spark.plans.sparql import QueryUnit, Sparql, SparqlUnion, Val, Var
+from rippledb_spark.sources.rdfio import _unescape_nt
 
 
 @dataclass(frozen=True)
@@ -176,7 +180,7 @@ def _term(tok: str, t: _Tokens, prefixes: dict[str, str], verb: bool = False) ->
             raise QueryError(f"empty variable name {tok!r}")
         return Var(tok[1:])
     if tok.startswith('"'):
-        value = re.sub(r"\\(.)", r"\1", tok[1:-1])
+        value = _unescape_nt(tok[1:-1])
         nxt = t.peek()
         if nxt is not None and nxt.startswith("@") and len(nxt) > 1:
             t.take()
@@ -252,7 +256,7 @@ def _parse_select_list(t: _Tokens) -> tuple[bool, list[str], list[tuple]]:
                 sv = t.take()
                 if not (isinstance(sv, str) and sv.startswith('"')):
                     raise QueryError("SEPARATOR takes a string literal")
-                sep = re.sub(r"\\(.)", r"\1", sv[1:-1])
+                sep = _unescape_nt(sv[1:-1])
                 if fn != "GROUP_CONCAT":
                     raise QueryError("SEPARATOR is only valid for GROUP_CONCAT")
             t.expect(")")

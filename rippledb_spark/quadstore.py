@@ -4,7 +4,8 @@ single-graph engine (one K2Tree store, src/datastore/graph.rs — no graph
 dimension anywhere), so everything here is engine-tier, built so that a
 TripleStore user can move to multi-graph data without changing idioms.
 
-Design (mirrors TripleStore, store.py):
+Design (shares ``_Store`` with TripleStore, store.py: constructors, DML,
+set algebra, the SQL view, UPDATE and the parquet writer are defined once):
 
 - one DataFrame in model.QUADS_SCHEMA; ``g`` NULL = the default graph;
 - immutable: every mutation returns a NEW QuadStore snapshot;
@@ -24,7 +25,7 @@ quad stores.
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+from functools import reduce
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -33,48 +34,14 @@ from rippledb_spark import model
 from rippledb_spark.errors import SchemaError
 from rippledb_spark.plans import graphs
 from rippledb_spark.plans.sparql import Sparql
-from rippledb_spark.store import TripleStore, _answer
-
-QuadLike = tuple | list
+from rippledb_spark.store import TripleStore, _answer, _Store
 
 
-def _normalize_quads(rows: Iterable[QuadLike]) -> list[tuple]:
-    """Accept (g, s, p, o) shorthand — terms lifted to Named nodes like
-    TripleStore's 3-tuple form — or full 8-tuples in QUADS_SCHEMA order."""
-    out = []
-    for r in rows:
-        r = tuple(r)
-        if len(r) == 4:
-            out.append(model.quad_row(r[0], r[1], r[2], r[3]))
-        elif len(r) == 8:
-            out.append(r)
-        else:
-            raise SchemaError(f"quad row must have 4 or 8 fields, got {len(r)}")
-    return out
-
-
-class QuadStore:
-    def __init__(self, spark: SparkSession, df: DataFrame):
-        missing = [c for c in model.QUAD_KEY if c not in df.columns]
-        if missing:
-            raise SchemaError(f"quads DataFrame missing columns {missing}")
-        self.spark = spark
-        self.df = df.select(*model.QUAD_KEY)
+class QuadStore(_Store):
+    KEY, SCHEMA, ARITY, VIEW = model.QUAD_KEY, model.QUADS_SCHEMA, 4, "quads"
+    LIFT = staticmethod(model.quad_row)  # (g, s, p, o); g None = default graph
 
     # -- constructors -------------------------------------------------------
-
-    @classmethod
-    def empty(cls, spark: SparkSession) -> "QuadStore":
-        return cls(spark, spark.createDataFrame([], model.QUADS_SCHEMA))
-
-    @classmethod
-    def from_df(cls, spark: SparkSession, df: DataFrame) -> "QuadStore":
-        return cls(spark, df.dropDuplicates(model.QUAD_KEY))
-
-    @classmethod
-    def from_rows(cls, spark: SparkSession, rows: Iterable[QuadLike]) -> "QuadStore":
-        df = spark.createDataFrame(_normalize_quads(rows), model.QUADS_SCHEMA)
-        return cls.from_df(spark, df)
 
     @classmethod
     def from_triplestores(
@@ -94,10 +61,7 @@ class QuadStore:
             parts.append(ts.df.withColumn("g", F.lit(iri)))
         if not parts:
             return cls.empty(spark)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return cls.from_df(spark, out.select(*model.QUAD_KEY))
+        return cls.from_df(spark, reduce(DataFrame.unionByName, parts))
 
     @classmethod
     def from_nquads(cls, spark: SparkSession, path: str) -> "QuadStore":
@@ -110,10 +74,6 @@ class QuadStore:
         from rippledb_spark.sources.trig import read_trig
 
         return cls.from_df(spark, read_trig(spark, path))
-
-    @classmethod
-    def from_backup(cls, spark: SparkSession, path: str) -> "QuadStore":
-        return cls(spark, spark.read.parquet(path).select(*model.QUAD_KEY))
 
     # -- persistence --------------------------------------------------------
 
@@ -134,8 +94,9 @@ class QuadStore:
         predicates, so the parquet reader prunes whole graph directories
         — the plan shows ``PartitionFilters: [(g = <iri>)]`` and
         non-matching graphs are never opened (receipt in docs/PLANS.md,
-        pinned by tests/test_quadstore.py)."""
-        self.df.write.mode(mode).partitionBy(*partition_by).parquet(path)
+        pinned by tests/test_quadstore.py). Written by the one colocating
+        writer, :meth:`_write_by_predicate`."""
+        self._write_by_predicate(path, mode, partition_by)
 
     def write_nquads(self, path: str, mode: str = "overwrite") -> None:
         from rippledb_spark.sources.nquads import write_nquads
@@ -150,17 +111,12 @@ class QuadStore:
     # -- graph access -------------------------------------------------------
 
     def default_graph(self) -> TripleStore:
-        return TripleStore(
-            self.spark, self.df.filter(F.col("g").isNull()).select(*model.TRIPLE_KEY)
-        )
+        return TripleStore(self.spark, self.df.filter(F.col("g").isNull()))
 
     def graph(self, iri: str) -> TripleStore:
         """One named graph as a TripleStore (every single-graph operator —
         paths, exports, analytics — applies unchanged)."""
-        return TripleStore(
-            self.spark,
-            self.df.filter(F.col("g") == F.lit(iri)).select(*model.TRIPLE_KEY),
-        )
+        return TripleStore(self.spark, self.df.filter(F.col("g") == F.lit(iri)))
 
     def graph_names(self) -> DataFrame:
         """DataFrame(g) of named-graph IRIs present (a graph exists iff
@@ -176,60 +132,6 @@ class QuadStore:
             F.countDistinct("p").alias("n_predicates"),
         )
 
-    # -- DML ----------------------------------------------------------------
-
-    def insert(self, rows: Iterable[QuadLike] | DataFrame) -> "QuadStore":
-        """Idempotent set insert (TripleStore.insert semantics, lifted to
-        quads): union + dedup on the 8-column identity."""
-        add = (
-            rows.select(*model.QUAD_KEY)
-            if isinstance(rows, DataFrame)
-            else self.spark.createDataFrame(_normalize_quads(rows), model.QUADS_SCHEMA)
-        )
-        return QuadStore(
-            self.spark, self.df.unionByName(add).dropDuplicates(model.QUAD_KEY)
-        )
-
-    def remove(self, rows: Iterable[QuadLike] | DataFrame) -> "QuadStore":
-        """Set remove (missing = no-op): null-safe anti-join on the quad
-        identity — ``g`` and the lang/datatype columns are nullable, so
-        the join condition must treat NULL = NULL as a match."""
-        drop = (
-            rows.select(*model.QUAD_KEY)
-            if isinstance(rows, DataFrame)
-            else self.spark.createDataFrame(_normalize_quads(rows), model.QUADS_SCHEMA)
-        )
-        cond = None
-        for c in model.QUAD_KEY:
-            eq = self.df[c].eqNullSafe(drop[c])
-            cond = eq if cond is None else (cond & eq)
-        return QuadStore(self.spark, self.df.join(drop, on=cond, how="left_anti"))
-
-    # -- dataset set algebra (TripleStore.union/intersect/difference,
-    #    lifted to the quad identity) ---------------------------------------
-
-    def union(self, other: "QuadStore") -> "QuadStore":
-        """Dataset merge — set semantics on the full quad identity (each
-        graph merges with its same-named counterpart; default with
-        default)."""
-        return QuadStore(
-            self.spark,
-            self.df.unionByName(other.df).dropDuplicates(model.QUAD_KEY),
-        )
-
-    def intersect(self, other: "QuadStore") -> "QuadStore":
-        """Quads present in BOTH datasets."""
-        return QuadStore(self.spark, self.df.intersect(other.df))
-
-    def difference(self, other: "QuadStore") -> "QuadStore":
-        """Quads in this dataset but not in ``other`` (≡ bulk remove)."""
-        return QuadStore(self.spark, self.df.subtract(other.df))
-
-    def create_view(self, name: str = "quads") -> None:
-        """Register the dataset as a temp view → full spark.sql over
-        quads (the SQL escape hatch, graph label included)."""
-        self.df.createOrReplaceTempView(name)
-
     # -- query --------------------------------------------------------------
 
     def select_dataset(self, query: Sparql) -> DataFrame:
@@ -243,12 +145,3 @@ class QuadStore:
         without graph features behave exactly like
         ``default_graph().sparql(text)``."""
         return _answer(self, text)
-
-    # -- SPARQL Update ------------------------------------------------------
-
-    def update(self, text: str) -> "QuadStore":
-        """Apply one SPARQL 1.1 Update request in quads mode → a new
-        snapshot; forms and semantics: plans/update.py's docstring."""
-        from rippledb_spark.plans.update import apply, parse_update
-
-        return apply(self, parse_update(text, quads=True))

@@ -28,14 +28,19 @@ Design deltas (immutability replaces mutation — SURVEY §1.4):
   partition pruning for bound-predicate patterns. Low-cardinality predicate
   columns (~10-60 distinct in RDF corpora) keep the file count sane at any
   scale; within a predicate, files split by size normally.
+- Constructors, DML, set algebra, the SQL view, UPDATE and the parquet
+  writer are defined once, in ``_Store``, which QuadStore (quadstore.py)
+  shares: a TripleStore is the dataset with no named graphs.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable, Iterator
+from collections.abc import Callable, Iterable, Iterator
+from typing import Self
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import types as T
 
 from rippledb_spark import model
 from rippledb_spark.errors import SchemaError
@@ -47,60 +52,150 @@ from rippledb_spark.sources import rdfio
 TripleLike = tuple | list
 
 
-def _normalize_rows(rows: Iterable[TripleLike]) -> list[tuple]:
-    """Accept (s, p, o) shorthand — lifted to Named nodes exactly like
-    ``triple_into_rdf`` (src/lib.rs:17-19) — or full 7-tuples."""
-    out = []
-    for r in rows:
-        r = tuple(r)
-        if len(r) == 3:
-            out.append(model.triple_row(r[0], r[1], r[2]))
-        elif len(r) == 7:
-            out.append(r)
-        else:
-            raise SchemaError(f"row must have 3 or 7 fields, got {len(r)}")
-    return out
-
-
-def _anti_triples(left: DataFrame, right: DataFrame) -> DataFrame:
-    """NULL-SAFE left-anti join on the full 7-column triple identity —
-    the ONE definition of triple-set subtraction (o_lang/o_datatype are
-    nullable: a plain name-equi join would never match NULL-bearing
-    triples). The right side is renamed so a set derived from the left
-    store itself (a self-join lineage) resolves unambiguously. Used by
-    remove (D2) and diff (the CDC feed)."""
-    r = right.select(*model.TRIPLE_KEY).toDF(
-        *[f"__r_{c}" for c in model.TRIPLE_KEY]
-    )
+def _anti(left: DataFrame, right: DataFrame, key: list[str]) -> DataFrame:
+    """NULL-SAFE left-anti join on the full identity ``key`` — the ONE
+    definition of set subtraction (g/o_lang/o_datatype are nullable: a
+    plain name-equi join would never match NULL-bearing rows). The right
+    side is renamed so a set derived from the left store itself (a
+    self-join lineage) resolves unambiguously. Used by remove (D2) and
+    diff (the CDC feed)."""
+    r = right.select(*key).toDF(*[f"__r_{c}" for c in key])
     cond = None
-    for c in model.TRIPLE_KEY:
+    for c in key:
         eq = F.col(c).eqNullSafe(F.col(f"__r_{c}"))
         cond = eq if cond is None else (cond & eq)
     return left.join(r, on=cond, how="left_anti")
 
 
-class TripleStore:
+class _Store:
+    """The one core of TripleStore and QuadStore: a set of rows keyed on
+    the full identity ``KEY`` (in ``SCHEMA``). Every operation returns a
+    NEW snapshot of the same class. Subclasses set ``KEY``/``SCHEMA``, the
+    shorthand ``ARITY`` and its ``LIFT`` to a full row, and the default
+    ``VIEW`` name."""
+
+    KEY: list[str]
+    SCHEMA: T.StructType
+    ARITY: int
+    LIFT: Callable[..., tuple]
+    VIEW: str
+
     def __init__(self, spark: SparkSession, df: DataFrame):
-        missing = [c for c in model.TRIPLE_KEY if c not in df.columns]
+        missing = [c for c in self.KEY if c not in df.columns]
         if missing:
-            raise SchemaError(f"triples DataFrame missing columns {missing}")
+            raise SchemaError(f"{self.VIEW} DataFrame missing columns {missing}")
         self.spark = spark
-        self.df = df.select(*model.TRIPLE_KEY)
+        self.df = df.select(*self.KEY)
 
-    # -- constructors (S1, S2, S5) ------------------------------------------
-
-    @classmethod
-    def empty(cls, spark: SparkSession) -> "TripleStore":
-        return cls(spark, spark.createDataFrame([], model.TRIPLES_SCHEMA))
+    # -- constructors (S1, S5) ----------------------------------------------
 
     @classmethod
-    def from_df(cls, spark: SparkSession, df: DataFrame) -> "TripleStore":
-        return cls(spark, df.dropDuplicates(model.TRIPLE_KEY))
+    def empty(cls, spark: SparkSession) -> Self:
+        return cls(spark, spark.createDataFrame([], cls.SCHEMA))
 
     @classmethod
-    def from_rows(cls, spark: SparkSession, rows: Iterable[TripleLike]) -> "TripleStore":
-        df = spark.createDataFrame(_normalize_rows(rows), model.TRIPLES_SCHEMA)
-        return cls.from_df(spark, df)
+    def from_df(cls, spark: SparkSession, df: DataFrame) -> Self:
+        return cls(spark, df.dropDuplicates(cls.KEY))
+
+    @classmethod
+    def from_rows(cls, spark: SparkSession, rows: Iterable[TripleLike]) -> Self:
+        return cls.from_df(spark, cls._frame(spark, rows))
+
+    @classmethod
+    def from_backup(cls, spark: SparkSession, path: str) -> Self:
+        """Restore a persisted store (S5). The schema is the store's own,
+        never inferred: an empty snapshot has no parquet file to infer
+        from, and a partition value like ``p=5`` must stay a string."""
+        return cls(spark, spark.read.schema(cls.SCHEMA).parquet(path))
+
+    @classmethod
+    def _frame(cls, spark: SparkSession, rows: Iterable[TripleLike]) -> DataFrame:
+        """Local rows → a frame. Shorthand rows of ``ARITY`` plain strings
+        lift to Named nodes exactly like ``triple_into_rdf``
+        (src/lib.rs:17-19); full rows come in ``SCHEMA`` order."""
+        full, out = len(cls.KEY), []
+        for r in map(tuple, rows):
+            if len(r) == cls.ARITY:
+                r = cls.LIFT(*r)
+            elif len(r) != full:
+                raise SchemaError(f"row must have {cls.ARITY} or {full} fields, got {len(r)}")
+            out.append(r)
+        return spark.createDataFrame(out, cls.SCHEMA)
+
+    # -- persistence (S6) ---------------------------------------------------
+
+    def _write_by_predicate(
+        self, path: str, mode: str, cols: tuple[str, ...] = ("p",)
+    ) -> None:
+        """The one write path of persisted snapshots (both stores'
+        ``persist_to``, :meth:`TripleStore.persist_version`): rows are
+        hash-colocated on the partition columns (``p`` by default), then
+        written one directory per value. Without the repartition every
+        task holding rows of a predicate opens its own file under that
+        predicate's directory — predicates × tasks tiny files whose parquet
+        footer/dictionary overhead made small backups LARGER than their
+        RDF/XML source (measured 2.5× on www-2011). Colocated, each
+        predicate writes from few tasks and dictionary encoding sees the
+        whole slice (backup ≈ 0.4× source; tools/bench_backup.py). At
+        100 TB the same repartition is what bounds file counts; AQE
+        coalesces the small-slice partitions."""
+        df = self.df.repartition(*cols) if cols else self.df  # () = one flat directory
+        df.write.mode(mode).partitionBy(*cols).parquet(path)
+
+    # -- DML (D1, D2) -------------------------------------------------------
+
+    def insert(self, rows: Iterable[TripleLike] | DataFrame) -> Self:
+        """Bulk idempotent insert (D1): union + set-dedup, new snapshot."""
+        add = rows if isinstance(rows, DataFrame) else self._frame(self.spark, rows)
+        merged = self.df.unionByName(add.select(*self.KEY)).dropDuplicates(self.KEY)
+        return type(self)(self.spark, merged)
+
+    def remove(self, rows: Iterable[TripleLike] | DataFrame) -> Self:
+        """Bulk delete (D2): null-safe anti-join; missing rows are a
+        no-op exactly like graph.rs:513-523."""
+        # Broadcast only local rows (provably small: already on the driver).
+        # A caller's DataFrame — e.g. a delete set derived from the store
+        # itself — may be huge, so there Catalyst/AQE picks the strategy.
+        if not isinstance(rows, DataFrame):
+            rows = F.broadcast(self._frame(self.spark, rows))
+        return type(self)(self.spark, _anti(self.df, rows, self.KEY))
+
+    # -- set algebra over whole graphs / datasets ---------------------------
+
+    def union(self, other: Self) -> Self:
+        """Merge — set semantics (dedup on full identity; a QuadStore's
+        graphs merge with their same-named counterparts)."""
+        merged = self.df.unionByName(other.df).dropDuplicates(self.KEY)
+        return type(self)(self.spark, merged)
+
+    def intersect(self, other: Self) -> Self:
+        """Rows present in BOTH stores."""
+        return type(self)(self.spark, self.df.intersect(other.df))
+
+    def difference(self, other: Self) -> Self:
+        """Rows in this store but not in ``other`` (≡ bulk remove)."""
+        return type(self)(self.spark, self.df.exceptAll(other.df).distinct())
+
+    def create_view(self, name: str | None = None) -> None:
+        """Register the store as a temp view (default ``VIEW``) → full
+        spark.sql over its rows (the SQL escape hatch the reference's
+        builder-only API lacks)."""
+        self.df.createOrReplaceTempView(name or self.VIEW)
+
+    def update(self, text: str) -> Self:
+        """Apply one SPARQL 1.1 Update request → a new snapshot; a
+        TripleStore parses in single-graph mode, a QuadStore in quads
+        mode (forms and semantics: plans/update.py's docstring)."""
+        from rippledb_spark.plans.update import apply, parse_update
+
+        return apply(self, parse_update(text, quads="g" in self.KEY))
+
+
+class TripleStore(_Store):
+    KEY, SCHEMA, ARITY, VIEW = model.TRIPLE_KEY, model.TRIPLES_SCHEMA, 3, "triples"
+    LIFT = staticmethod(model.triple_row)
+
+    # -- constructors (S2) --------------------------------------------------
 
     @classmethod
     def from_rdf(cls, spark: SparkSession, path: str) -> "TripleStore":
@@ -140,11 +235,6 @@ class TripleStore:
         return cls.from_df(spark, read_jsonld(spark, path))
 
     @classmethod
-    def from_backup(cls, spark: SparkSession, path: str) -> "TripleStore":
-        """Restore a persisted store (S5)."""
-        return cls(spark, spark.read.parquet(path).select(*model.TRIPLE_KEY))
-
-    @classmethod
     def from_ripplebackup(cls, spark: SparkSession, path: str) -> "TripleStore":
         """Migrate a reference-format `.ripplebackup` directory
         (head.json dicts + trees/{i}.json K²-Trees, graph.rs:54-222) into
@@ -166,25 +256,10 @@ class TripleStore:
     # -- persistence (S6) ---------------------------------------------------
 
     def persist_to(self, path: str) -> None:
-        """Write partitioned-by-predicate parquet (S6); overwrite like the
-        reference's wipe-and-rewrite (graph.rs:665-680).
-
-        Rows are hash-colocated on ``p`` before the write: without it,
-        every task holding rows of a predicate opens its own file under
-        that predicate's directory — predicates × tasks tiny files whose
-        parquet footer/dictionary overhead made small backups LARGER than
-        their RDF/XML source (measured 2.5× on www-2011). Colocated, each
-        predicate writes from few tasks and dictionary encoding sees the
-        whole slice (backup ≈ 0.4× source; tools/bench_backup.py). At
-        100 TB the same repartition is what bounds file counts; AQE
-        coalesces the small-slice partitions."""
+        """Write partitioned-by-predicate parquet (S6) through the one
+        colocating writer (:meth:`_write_by_predicate`); overwrite like the
+        reference's wipe-and-rewrite (graph.rs:665-680)."""
         self._write_by_predicate(path, "overwrite")
-
-    def _write_by_predicate(self, path: str, mode: str) -> None:
-        """The one write path of persisted snapshots (:meth:`persist_to`,
-        :meth:`persist_version`): colocate on ``p``, one directory per
-        predicate."""
-        self.df.repartition("p").write.mode(mode).partitionBy("p").parquet(path)
 
     # -- versioned persistence (extension over the reference's single-slot
     #    backup: snapshots are immutable, so versions are free) -------------
@@ -228,53 +303,6 @@ class TripleStore:
             raise SchemaError(f"version {v} not in {versions}")
         return cls.from_backup(spark, f"{base_path}/v{v}")
 
-    # -- DML (D1, D2) -------------------------------------------------------
-
-    def insert(self, rows: Iterable[TripleLike] | DataFrame) -> "TripleStore":
-        """Bulk idempotent insert (D1): union + set-dedup, new snapshot."""
-        new_df = rows if isinstance(rows, DataFrame) else self.spark.createDataFrame(
-            _normalize_rows(rows), model.TRIPLES_SCHEMA
-        )
-        merged = self.df.unionByName(new_df.select(*model.TRIPLE_KEY)).dropDuplicates(
-            model.TRIPLE_KEY
-        )
-        return TripleStore(self.spark, merged)
-
-    def remove(self, rows: Iterable[TripleLike] | DataFrame) -> "TripleStore":
-        """Bulk delete (D2): null-safe anti-join; missing triples are a
-        no-op exactly like graph.rs:513-523."""
-        # Broadcast only the local-row-list case (provably small: it was
-        # materialized on the driver already). An arbitrary caller-supplied
-        # DataFrame — e.g. a delete set derived from the store itself — may
-        # be huge; forcing broadcast would collect it to the driver, so
-        # there Catalyst/AQE picks the join strategy.
-        if isinstance(rows, DataFrame):
-            del_df, hint = rows, lambda d: d
-        else:
-            del_df = self.spark.createDataFrame(
-                _normalize_rows(rows), model.TRIPLES_SCHEMA
-            )
-            hint = F.broadcast
-        remaining = _anti_triples(self.df, hint(del_df))
-        return TripleStore(self.spark, remaining)
-
-    # -- graph set algebra (set ops over whole graphs) ----------------------
-
-    def union(self, other: "TripleStore") -> "TripleStore":
-        """Graph merge — set semantics (dedup on full identity)."""
-        return TripleStore(
-            self.spark,
-            self.df.unionByName(other.df).dropDuplicates(model.TRIPLE_KEY),
-        )
-
-    def intersect(self, other: "TripleStore") -> "TripleStore":
-        """Triples present in BOTH graphs."""
-        return TripleStore(self.spark, self.df.intersect(other.df))
-
-    def difference(self, other: "TripleStore") -> "TripleStore":
-        """Triples in this graph but not in ``other`` (≡ bulk remove)."""
-        return TripleStore(self.spark, self.df.exceptAll(other.df).distinct())
-
     # -- snapshot diff / change-data-feed ------------------------------------
     # Closes the version-history loop: immutable snapshots
     # (persist_version) → a change feed (diff) → incremental downstream
@@ -294,10 +322,10 @@ class TripleStore:
         stay distributed (nothing collects) and Catalyst/AQE picks the
         join strategy, so a small delta against a huge base plans as a
         broadcast anti-join."""
-        inserts = _anti_triples(other.df, self.df).select(
+        inserts = _anti(other.df, self.df, self.KEY).select(
             F.lit("insert").alias("op"), *model.TRIPLE_KEY
         )
-        deletes = _anti_triples(self.df, other.df).select(
+        deletes = _anti(self.df, other.df, self.KEY).select(
             F.lit("delete").alias("op"), *model.TRIPLE_KEY
         )
         return inserts.unionByName(deletes)
@@ -324,13 +352,6 @@ class TripleStore:
         dels = diff.where(F.col("op") == "delete").select(*model.TRIPLE_KEY)
         ins = diff.where(F.col("op") == "insert").select(*model.TRIPLE_KEY)
         return self.remove(dels).insert(ins)
-
-    # -- SQL surface --------------------------------------------------------
-
-    def create_view(self, name: str = "triples") -> None:
-        """Register the store as a temp view → full spark.sql over triples
-        (the SQL escape hatch the reference's builder-only API lacks)."""
-        self.df.createOrReplaceTempView(name)
 
     # -- query (Q2-Q12) -----------------------------------------------------
 
@@ -365,13 +386,6 @@ class TripleStore:
         ``Sparql.union``); each arm plans independently."""
         stats = self.analyze() if use_stats else None
         return bgp.select_union(self.df, query, stats=stats)
-
-    def update(self, text: str) -> "TripleStore":
-        """Apply one SPARQL 1.1 Update request (single-graph mode) → a new
-        snapshot; forms and semantics: plans/update.py's docstring."""
-        from rippledb_spark.plans.update import apply, parse_update
-
-        return apply(self, parse_update(text))
 
     def sparql(self, text: str, use_stats: bool = False) -> DataFrame:
         """Evaluate a SPARQL query STRING (the text frontend —

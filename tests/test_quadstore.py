@@ -5,9 +5,16 @@ plans/graphs.py, plans/update.py quads mode, sources/nquads.py)."""
 from __future__ import annotations
 
 import copy
+import functools
 import os
+import shutil
+import tempfile
 
+import pyspark.sql.functions as F
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import DataFrame
 
 from rippledb_spark import model
 from rippledb_spark.errors import QueryError, SchemaError
@@ -708,3 +715,118 @@ def test_graph_scope_prunes_graph_partitions(spark, qs, tmp_path_factory):
         .toString()
     )
     assert "PartitionFilters" in plan_p and "in_nation" in plan_p
+
+
+# -- one store core: TripleStore and QuadStore share _Store -------------------
+
+
+def test_persist_writes_one_file_per_predicate_directory(spark, tmp_path):
+    quads = [(None if i % 2 else "g:x", f"s{i}", f"p{i % 4}", f"o{i}") for i in range(400)]
+    spread = QuadStore(spark, QuadStore.from_rows(spark, quads).df.repartition(8))
+    per_part = spread.df.rdd.glom().map(lambda part: len({r.p for r in part})).collect()
+    assert per_part == [4] * 8  # 8 partitions, each holding every predicate
+    spread.persist_to(str(tmp_path / "q"))
+    dirs = sorted((tmp_path / "q").glob("p=*"))
+    assert [len(list(d.glob("*.parquet"))) for d in dirs] == [1] * 4
+    assert QuadStore.from_backup(spark, str(tmp_path / "q")).df.count() == 400
+    spread.persist_to(str(tmp_path / "flat"), partition_by=())  # no partition columns
+    assert QuadStore.from_backup(spark, str(tmp_path / "flat")).df.count() == 400
+
+
+XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
+_SUBJ = [("a", model.NAMED), ("_:b1", model.BLANK)]
+_OBJ = [
+    ("5", model.NAMED, None, None),
+    ("_:b1", model.BLANK, None, None),
+    ("5", model.LITERAL, None, None),
+    ("x\ty", model.LITERAL, None, None),
+    ("5", model.LANG_LITERAL, "en", None),
+    ("5", model.TYPED_LITERAL, None, XSD_INT),
+]
+triples_st = st.lists(
+    st.tuples(st.sampled_from(_SUBJ), st.sampled_from(["p", "q"]), st.sampled_from(_OBJ))
+    .map(lambda t: (*t[0], t[1], *t[2])),
+    max_size=6,
+    unique=True,
+)
+ALL_KINDS = [("a", model.NAMED, "q", *o) for o in _OBJ]
+NOISE = [("a", model.NAMED, "q", "5", model.LITERAL, None, None)]
+
+
+def core_frame(spark, base, tmp, a, b):
+    """Every shared operation over rows ``a`` (the store) and ``b`` (the
+    operand) on one scope, as one frame of result rows tagged with
+    ``scope`` and ``op``: ``base`` is None for a TripleStore, "default"
+    for a QuadStore's default graph, or a named graph's IRI (whose
+    dataset also holds NOISE in its default graph)."""
+    g = None if base in (None, "default") else base
+
+    def make(triples):
+        ts = TripleStore.from_rows(spark, triples)
+        if base is None:
+            return ts
+        if g is None:
+            return QuadStore.from_triplestores(spark, default=ts)
+        noise = TripleStore.from_rows(spark, NOISE)
+        return QuadStore.from_triplestores(spark, default=noise, named={g: ts})
+
+    def lift_df(triples):
+        df = spark.createDataFrame(triples, model.TRIPLES_SCHEMA)
+        return df if base is None else df.withColumn("g", F.lit(g).cast("string"))
+
+    def project(store):
+        return store if base is None else store.graph(g) if g else store.default_graph()
+
+    store, other = make(a), make(b)
+    path = f"{tmp}/{str(base).replace(':', '_')}"
+    store.persist_to(path)
+    lifted = b if base is None else [(g, *t) for t in b]
+    outs = {
+        "insert_rows": store.insert(lifted),
+        "insert_df": store.insert(lift_df(b)),
+        "remove_rows": store.remove(lifted),
+        "remove_df": store.remove(lift_df(b)),
+        "remove_own": store.remove(store.df.filter(F.col("o_kind") == model.LITERAL)),
+        "union": store.union(other),
+        "intersect": store.intersect(other),
+        "difference": store.difference(other),
+        "persist": type(store).from_backup(spark, path),
+    }
+    tagged = [
+        project(out).df.withColumn("op", F.lit(name)).withColumn("scope", F.lit(str(base)))
+        for name, out in outs.items()
+    ]
+    return functools.reduce(DataFrame.unionByName, tagged)
+
+
+# each example runs 27 store operations (about 15 s on 2 CPUs): a few
+# random ones beside the pinned cases keep the suite's budget
+@settings(max_examples=4, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(a=triples_st, b=triples_st)
+@example(a=ALL_KINDS, b=NOISE)
+@example(a=ALL_KINDS, b=ALL_KINDS[::2])
+@example(a=[], b=ALL_KINDS)
+def test_store_core_agrees_across_triples_default_and_named_graph(spark, a, b):
+    A, B = set(a), set(b)
+    want = {
+        "insert_rows": A | B,
+        "insert_df": A | B,
+        "remove_rows": A - B,
+        "remove_df": A - B,
+        "remove_own": {t for t in A if t[4] != model.LITERAL},
+        "union": A | B,
+        "intersect": A & B,
+        "difference": A - B,
+        "persist": A,
+    }
+    scopes = [None, "default", "g:x"]
+    tmp = tempfile.mkdtemp(prefix="store_core_")
+    try:
+        frames = [core_frame(spark, base, tmp, a, b) for base in scopes]
+        got = {(str(base), op): set() for base in scopes for op in want}
+        for r in functools.reduce(DataFrame.unionByName, frames).collect():
+            got[r["scope"], r["op"]].add(tuple(r)[:-2])
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    for base in scopes:
+        assert {op: got[str(base), op] for op in want} == want, base

@@ -830,6 +830,9 @@ def test_group_concat_separator(store):
         "WHERE { ?s child ?o } GROUP BY ?s"
     )
     assert rows(store.sparql(q2), "s", "kids") == [("c1", "g1"), ("r", "c1|c2")]
+    # the separator's escapes decode like any SPARQL string
+    q_tab = q.replace('", "', r'"\t"')
+    assert rows(store.sparql(q_tab), "s", "kids") == [("c1", "g1"), ("r", "c1\tc2")]
     # default separator is ' '; SEPARATOR on other aggregates refuses
     q3 = "SELECT ?s (GROUP_CONCAT(?o) AS ?kids) WHERE { ?s child ?o } GROUP BY ?s"
     assert rows(store.sparql(q3), "s", "kids") == [("c1", "g1"), ("r", "c1 c2")]

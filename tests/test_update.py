@@ -306,6 +306,19 @@ def test_join_keeps_typed_and_plain_literals_apart(spark, kind):
     assert st.sparql("SELECT ?x ?y WHERE { ?x lbl ?v . ?y age ?v }").count() == 0
 
 
+@pytest.mark.xfail(
+    strict=True, raises=AssertionError, reason="modify deletes a ground literal by value"
+)
+@pytest.mark.parametrize("kind", KINDS)
+def test_modify_delete_of_a_ground_literal_spares_the_iri(spark, kind):
+    iri_5 = ("a", model.NAMED, "q", "5", model.NAMED, None, None)
+    lit_5 = ("a", model.NAMED, "q", "5", model.LITERAL, None, None)
+    gate = ("a", model.NAMED, "p", "b", model.NAMED, None, None)
+    st = as_store(spark, kind, [iri_5, lit_5, gate])
+    out = st.update('DELETE { a q "5" } WHERE { a p b }')
+    assert default_rows(out) == sorted([iri_5, gate])
+
+
 # Constants are whole terms from the parser to the plan: a literal, an IRI
 # and a '$'-string with the same text are three terms.
 
@@ -363,9 +376,21 @@ def test_delete_where_literal_spares_the_other_kinds(spark, kind):
     assert default_rows(out) == sorted(r for r in FIVES if r[0] != "s3")
 
 
+@pytest.mark.parametrize("kind", KINDS)
+def test_string_escapes_decode_like_the_ntriples_reader(spark, kind, tmp_path):
+    nt = tmp_path / "tab.nt"
+    nt.write_text('<s> <p> "x\\ty" .\n')
+    ts = TripleStore.from_ntriples(spark, str(nt))
+    assert rows(ts) == [("s", model.NAMED, "p", "x\ty", model.LITERAL, None, None)]
+    st = ts if kind == "triples" else QuadStore.from_triplestores(spark, default=ts)
+    assert st.sparql(r'SELECT ?s WHERE { ?s p "x\ty" }').collect() == [("s",)]
+    assert st.sparql(r'SELECT ?s WHERE { ?s p ?o FILTER(?o = "x\ty") }').count() == 1
+    assert default_rows(st.update(r'DELETE DATA { s p "x\ty" }')) == []
+
+
 # Random terms of all five kinds, rendered as SPARQL text: each parses to the
 # same Val in a SELECT pattern, an INSERT DATA block and a modify template.
-_text = st.text(alphabet='ab 5$?"\\{}.@^', max_size=6)
+_text = st.text(alphabet='ab 5$?"\\{}.@^\n\t', max_size=6)
 _name = st.text(alphabet="abcxyz", min_size=1, max_size=4)
 _IRI = "http://ex/"
 _terms = st.one_of(
@@ -386,11 +411,14 @@ _terms = st.one_of(
 
 
 def _quoted(value: str) -> str:
-    return '"' + value.replace("\\", "\\\\").replace('"', '\\"') + '"'
+    for char, escape in (("\\", "\\\\"), ('"', '\\"'), ("\n", "\\n"), ("\t", "\\t")):
+        value = value.replace(char, escape)
+    return f'"{value}"'
 
 
 @settings(max_examples=8, deadline=None)
 @given(term=_terms)
+@example(term=(Val("x\ty\n", model.LITERAL), '"x\\ty\\n"'))
 def test_terms_round_trip_through_every_front_end_form(term):
     want, text = term
     prologue = f"PREFIX ex: <{_IRI}> "
