@@ -41,11 +41,14 @@ Terms (one lexer, :func:`_term`, shared with plans.update):
 prologue), ``"lit"``, ``"lit"@lang``, ``"lit"^^<datatype>`` and
 ``"lit"^^prefix:local`` literals, ``_:name`` blank nodes, and bare tokens
 (named nodes kept verbatim, as is an undeclared ``prefix:local``; ``5`` is
-the named node ``5``, not a number). ``a`` in predicate position is
-``rdf:type``. String escapes (``\\t``, ``\\n``, ``\\uXXXX``, ...) decode
-through the N-Triples readers' decoder (``sources.rdfio._unescape_nt``),
-so a literal loaded from a file is found by its own escaped text. A
-constant matches the stored term with the same value,
+the named node ``5``, not a number). In a query pattern a blank node is a
+non-distinguished variable (§4.1.4): it matches any term, joins on its
+label within the query and is not projected by ``SELECT *``. A CONSTRUCT
+template and SPARQL UPDATE (plans.update) keep it a blank node. ``a`` in
+predicate position is ``rdf:type``. String escapes (``\\t``, ``\\n``,
+``\\uXXXX``, ...) decode through the N-Triples readers' decoder
+(``sources.rdfio._unescape_nt``), so a literal loaded from a file is found
+by its own escaped text. A constant matches the stored term with the same value,
 kind, language tag and datatype; VALUES cells and FILTER/BIND operands
 are compared by value. FILTER/BIND expression grammar and typing rules live in
 plans.filters (comparisons, + - * / arithmetic, CONCAT/STR/STRLEN/UCASE/
@@ -381,8 +384,18 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
                 i = j
         return "".join(out)
 
-    def parse_group(q: Sparql) -> None:
-        """Parse statements until the matching '}' (consumed)."""
+    def node(tok: str, template: bool) -> QueryUnit:
+        """A subject/object term. In a pattern a blank node is a
+        non-distinguished variable (§4.1.4) named by its label, which no
+        ``?var`` can take (VARNAME excludes ':'); a template keeps it."""
+        u = _term(tok, t, prefixes)
+        if not template and isinstance(u, Val) and u.kind == model.BLANK:
+            return Var(tok)
+        return u
+
+    def parse_group(q: Sparql, template: bool = False) -> None:
+        """Parse statements until the matching '}' (consumed);
+        ``template`` marks a CONSTRUCT template."""
         while True:
             tok = t.peek()
             if tok is None:
@@ -546,7 +559,7 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
                 continue
             # triple block: subject, then ';'-separated predicate lists,
             # each with ','-separated object lists
-            s = _term(t.take(), t, prefixes)
+            s = node(t.take(), template)
             while True:
                 p_tok = t.take()
                 if not (p_tok.startswith("?") or p_tok.startswith("$")):
@@ -554,7 +567,7 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
                 path = path_expr(p_tok)
                 p = _term(p_tok, t, prefixes, verb=True) if path is None else None
                 while True:
-                    o = _term(t.take(), t, prefixes)
+                    o = node(t.take(), template)
                     if path is None:
                         q.conds.append((s, p, o))
                     else:
@@ -627,7 +640,7 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
             return SparqlConstruct(q, template)
         t.expect("{")
         tq = Sparql()
-        parse_group(tq)
+        parse_group(tq, template=True)
         if (
             tq.paths
             or tq.optionals
@@ -731,10 +744,11 @@ def parse_sparql(text: str) -> Sparql | SparqlUnion:
     return q
 
 
-def _pattern_vars(q: Sparql, required: bool = True) -> list[str]:
+def _pattern_vars(q: Sparql, required: bool = True, blanks: bool = False) -> list[str]:
     """SELECT * expansion: every variable, in first-appearance order.
     ``required=False`` returns [] for a variable-free group instead of
-    raising (the ground-ASK caller's case)."""
+    raising (the ground-ASK caller's case). Blank-node variables (named
+    ``_:label``) are not projected unless ``blanks`` asks for them."""
     seen: list[str] = []
     for cond in q.conds:
         for u in cond:
@@ -747,13 +761,13 @@ def _pattern_vars(q: Sparql, required: bool = True) -> list[str]:
     for gterm, group in getattr(q, "graph_groups", []):
         if isinstance(gterm, Var) and gterm.name not in seen:
             seen.append(gterm.name)
-        for n in _pattern_vars(group, required=False):
+        for n in _pattern_vars(group, required=False, blanks=blanks):
             if n not in seen:
                 seen.append(n)
     # OPTIONAL variables are in scope per spec §18.2.1 (NULL-extended);
     # MINUS/EXISTS variables are NOT and stay excluded
     for group in getattr(q, "optionals", []):
-        for n in _pattern_vars(group, required=False):
+        for n in _pattern_vars(group, required=False, blanks=blanks):
             if n not in seen:
                 seen.append(n)
     for vnames, _rows in getattr(q, "values_blocks", []):
@@ -768,6 +782,8 @@ def _pattern_vars(q: Sparql, required: bool = True) -> list[str]:
         for n in sub.var_names():
             if n not in seen:
                 seen.append(n)
+    if not blanks:
+        seen = [n for n in seen if not n.startswith("_:")]
     if not seen and required:
         raise QueryError("SELECT * found no variables in the group")
     return seen

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from rippledb_spark.operators._itergc import pin_persisted
 from rippledb_spark.quadstore import QuadStore
+from rippledb_spark.queries.triples import _NT_TERMS_SQL, _iri_sql
 from rippledb_spark.registry import query
 from rippledb_spark.tables import load
 
@@ -388,24 +389,11 @@ def update_quad_template_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NQ_ESC_SQL = (
-    "replace(replace(replace(replace(replace(o_value,"
-    " '\\', '\\\\'), '\"', '\\\"'), chr(10), '\\n'), chr(13), '\\r'),"
-    " chr(9), '\\t')"
-)
-
 _NQ_LINE_SQL = f"""
-    (CASE WHEN s_kind = 'named' THEN '<' || s || '>' ELSE s END)
-    || ' <' || p || '> ' ||
-    (CASE o_kind
-       WHEN 'named' THEN '<' || o_value || '>'
-       WHEN 'blank' THEN o_value
-       WHEN 'lang_literal' THEN '"' || {_NQ_ESC_SQL} || '"@' || o_lang
-       WHEN 'typed_literal' THEN '"' || {_NQ_ESC_SQL} || '"^^<' || o_datatype || '>'
-       ELSE '"' || {_NQ_ESC_SQL} || '"' END)
+    {_NT_TERMS_SQL}
     || (CASE WHEN g IS NULL THEN ''
              WHEN starts_with(g, '_:') THEN ' ' || g
-             ELSE ' <' || g || '>' END)
+             ELSE ' ' || {_iri_sql('g')} END)
     || ' .'
 """
 

@@ -33,6 +33,7 @@ from rippledb_spark.operators._itergc import pin_persisted
 from rippledb_spark.registry import query
 from rippledb_spark.store import TripleStore
 from rippledb_spark.plans.sparql import Sparql
+from rippledb_spark.sources.rdfio import _IRI_EXCLUDED
 from rippledb_spark.tables import load
 
 # ---------------------------------------------------------------------------
@@ -604,17 +605,28 @@ _NT_ESC_SQL = (
     " chr(9), '\\t')"
 )
 
-_NT_LINE_SQL = f"""
-    (CASE WHEN s_kind = 'named' THEN '<' || s || '>' ELSE s END)
-    || ' <' || p || '> ' ||
+
+def _iri_sql(col: str) -> str:
+    """``<iri>`` with the characters IRIREF excludes written as
+    ``\\uXXXX`` — the SQL twin of rdfio.iri_expr."""
+    for ch in _IRI_EXCLUDED:
+        col = f"replace({col}, chr({ord(ch)}), '\\u{ord(ch):04X}')"
+    return f"('<' || {col} || '>')"
+
+
+# subject, predicate and object terms; the N-Quads twin
+# (queries/quads.py) appends a graph term before the dot
+_NT_TERMS_SQL = f"""
+    (CASE WHEN s_kind = 'named' THEN {_iri_sql('s')} ELSE s END)
+    || ' ' || {_iri_sql('p')} || ' ' ||
     (CASE o_kind
-       WHEN 'named' THEN '<' || o_value || '>'
+       WHEN 'named' THEN {_iri_sql('o_value')}
        WHEN 'blank' THEN o_value
        WHEN 'lang_literal' THEN '"' || {_NT_ESC_SQL} || '"@' || o_lang
-       WHEN 'typed_literal' THEN '"' || {_NT_ESC_SQL} || '"^^<' || o_datatype || '>'
+       WHEN 'typed_literal' THEN '"' || {_NT_ESC_SQL} || '"^^' || {_iri_sql('o_datatype')}
        ELSE '"' || {_NT_ESC_SQL} || '"' END)
-    || ' .'
 """
+_NT_LINE_SQL = f"{_NT_TERMS_SQL} || ' .'"
 
 
 @query(
@@ -686,7 +698,7 @@ def _ttl_compact_sql(col: str) -> str:
         f"THEN '{pfx}:' || substr({col}, {len(ns) + 1}) "
         for pfx, ns in _TTL_PREFIXES.items()
     )
-    return f"(CASE {cases}ELSE '<' || {col} || '>' END)"
+    return f"(CASE {cases}ELSE {_iri_sql(col)} END)"
 
 
 _TTL_LINE_SQL = f"""

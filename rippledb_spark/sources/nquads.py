@@ -18,7 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from rippledb_spark import model
-from rippledb_spark.sources.rdfio import _unescape_nt, nt_term_exprs
+from rippledb_spark.sources.rdfio import _unescape_iri, _unescape_nt, iri_expr, nt_term_exprs
 
 # An N-Triples line with an optional graph term (IRI or blank label)
 # between the object and the dot.
@@ -44,21 +44,21 @@ def parse_nquads_line(line: str) -> Optional[tuple]:
     if not m:
         return None
     d = m.groupdict()
-    g = d["g_iri"] if d["g_iri"] is not None else d["g_blank"]
+    g = _unescape_iri(d["g_iri"]) if d["g_iri"] is not None else d["g_blank"]
     if d["s_iri"] is not None:
-        s, s_kind = d["s_iri"], model.NAMED
+        s, s_kind = _unescape_iri(d["s_iri"]), model.NAMED
     else:
         s, s_kind = d["s_blank"], model.BLANK
-    p = d["p"]
+    p = _unescape_iri(d["p"])
     if d["o_iri"] is not None:
-        return (g, s, s_kind, p, d["o_iri"], model.NAMED, None, None)
+        return (g, s, s_kind, p, _unescape_iri(d["o_iri"]), model.NAMED, None, None)
     if d["o_blank"] is not None:
         return (g, s, s_kind, p, d["o_blank"], model.BLANK, None, None)
     lit = _unescape_nt(d["o_lit"])
     if d["lang"] is not None:
         return (g, s, s_kind, p, lit, model.LANG_LITERAL, d["lang"], None)
     if d["dtype"] is not None:
-        return (g, s, s_kind, p, lit, model.TYPED_LITERAL, None, d["dtype"])
+        return (g, s, s_kind, p, lit, model.TYPED_LITERAL, None, _unescape_iri(d["dtype"]))
     return (g, s, s_kind, p, lit, model.LITERAL, None, None)
 
 
@@ -93,7 +93,7 @@ def nquads_line_expr() -> "F.Column":
     gterm = (
         F.when(F.col("g").isNull(), F.lit(None).cast("string"))
         .when(F.col("g").startswith("_:"), F.col("g"))
-        .otherwise(F.concat(F.lit("<"), F.col("g"), F.lit(">")))
+        .otherwise(iri_expr(F.col("g")))
     )
     return F.concat_ws(" ", subj, pred, obj, gterm, F.lit("."))
 

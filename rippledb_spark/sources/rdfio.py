@@ -343,25 +343,37 @@ def _unescape_nt(s: str) -> str:
     return _NT_ESC_RE.sub(_sub, s)
 
 
+_UCHAR_RE = re.compile(r"\\u([0-9A-Fa-f]{4})|\\U([0-9A-Fa-f]{8})")
+
+
+def _unescape_iri(s: str | None) -> str | None:
+    """An IRI's UCHAR escapes (``\\uXXXX`` / ``\\UXXXXXXXX``) decoded — the
+    only escapes IRIREF has. Anything else stays as written, so an IRI
+    with a raw space (which strict N-Triples excludes) still loads."""
+    if s is None or "\\" not in s:
+        return s
+    return _UCHAR_RE.sub(lambda m: chr(int(m.group(1) or m.group(2), 16)), s)
+
+
 def parse_ntriples_line(line: str) -> Optional[tuple]:
     m = _NT_LINE.match(line)
     if not m:
         return None
     g = m.groupdict()
     if g["s_iri"] is not None:
-        s, s_kind = g["s_iri"], model.NAMED
+        s, s_kind = _unescape_iri(g["s_iri"]), model.NAMED
     else:
         s, s_kind = g["s_blank"], model.BLANK
-    p = g["p"]
+    p = _unescape_iri(g["p"])
     if g["o_iri"] is not None:
-        return (s, s_kind, p, g["o_iri"], model.NAMED, None, None)
+        return (s, s_kind, p, _unescape_iri(g["o_iri"]), model.NAMED, None, None)
     if g["o_blank"] is not None:
         return (s, s_kind, p, g["o_blank"], model.BLANK, None, None)
     lit = _unescape_nt(g["o_lit"])
     if g["lang"] is not None:
         return (s, s_kind, p, lit, model.LANG_LITERAL, g["lang"], None)
     if g["dtype"] is not None:
-        return (s, s_kind, p, lit, model.TYPED_LITERAL, None, g["dtype"])
+        return (s, s_kind, p, lit, model.TYPED_LITERAL, None, _unescape_iri(g["dtype"]))
     return (s, s_kind, p, lit, model.LITERAL, None, None)
 
 
@@ -397,19 +409,35 @@ def nt_escape_expr(c) -> "F.Column":
     return c
 
 
+# The characters IRIREF excludes (N-Triples / Turtle grammar): the
+# backslash comes first, so the escapes written for the others are not
+# escaped again.
+_IRI_EXCLUDED = "\\" + '<>"{}|^`' + "".join(map(chr, range(0x21)))
+_IRI_EXCLUDED_RE = r'[\x00-\x20<>"{}|^`\\]'
+
+
+def iri_expr(c) -> "F.Column":
+    """``<iri>`` in N-Triples / Turtle surface syntax as a column
+    expression: the characters IRIREF excludes become ``\\uXXXX``
+    escapes (the inverse of :func:`_unescape_iri`), so an IRI holding a
+    space reads back as itself; IRIs without them pass through."""
+    esc = c
+    for ch in _IRI_EXCLUDED:
+        esc = F.replace(esc, F.lit(ch), F.lit(f"\\u{ord(ch):04X}"))
+    body = F.when(c.rlike(_IRI_EXCLUDED_RE), esc).otherwise(c)
+    return F.concat(F.lit("<"), body, F.lit(">"))
+
+
 def nt_term_exprs() -> tuple["F.Column", "F.Column", "F.Column"]:
     """(subject, predicate, object) term expressions in N-Triples surface
-    syntax — shared by the N-Triples sink and the N-Quads sink
-    (sources/nquads.py), which appends a graph term."""
-    subj = F.when(
-        F.col("s_kind") == model.NAMED, F.concat(F.lit("<"), F.col("s"), F.lit(">"))
-    ).otherwise(F.col("s"))  # blank nodes carry their _: prefix already
+    syntax — shared by the N-Triples sink and the N-Quads and TriG sinks
+    (sources/nquads.py, sources/trig.py), which add a graph term."""
+    subj = F.when(F.col("s_kind") == model.NAMED, iri_expr(F.col("s"))).otherwise(
+        F.col("s")
+    )  # blank nodes carry their _: prefix already
     lit = F.concat(F.lit('"'), nt_escape_expr(F.col("o_value")), F.lit('"'))
     obj = (
-        F.when(
-            F.col("o_kind") == model.NAMED,
-            F.concat(F.lit("<"), F.col("o_value"), F.lit(">")),
-        )
+        F.when(F.col("o_kind") == model.NAMED, iri_expr(F.col("o_value")))
         .when(F.col("o_kind") == model.BLANK, F.col("o_value"))
         .when(
             F.col("o_kind") == model.LANG_LITERAL,
@@ -417,12 +445,11 @@ def nt_term_exprs() -> tuple["F.Column", "F.Column", "F.Column"]:
         )
         .when(
             F.col("o_kind") == model.TYPED_LITERAL,
-            F.concat(lit, F.lit("^^<"), F.col("o_datatype"), F.lit(">")),
+            F.concat(lit, F.lit("^^"), iri_expr(F.col("o_datatype"))),
         )
         .otherwise(lit)
     )
-    pred = F.concat(F.lit("<"), F.col("p"), F.lit(">"))
-    return subj, pred, obj
+    return subj, iri_expr(F.col("p")), obj
 
 
 def ntriples_line_expr() -> "F.Column":

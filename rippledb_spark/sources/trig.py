@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from rippledb_spark import model
 from rippledb_spark.errors import RdfParseError as ParseError
-from rippledb_spark.sources.rdfio import nt_term_exprs
+from rippledb_spark.sources.rdfio import iri_expr, nt_term_exprs
 from rippledb_spark.sources.turtle import _Parser, _tokenize
 
 
@@ -181,7 +181,7 @@ def write_trig(quads: DataFrame, path: str, mode: str = "overwrite") -> None:
     triple = F.concat_ws(" ", subj, pred, obj)
     gterm = F.when(
         F.col("g").isNull() | F.col("g").startswith("_:"), F.col("g")
-    ).otherwise(F.concat(F.lit("<"), F.col("g"), F.lit(">")))
+    ).otherwise(iri_expr(F.col("g")))
     rows = quads.select(gterm.alias("g"), triple.alias("t")).repartition("g")
 
     def to_docs(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -32,7 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from rippledb_spark import model
 from rippledb_spark.errors import RdfParseError as ParseError
-from rippledb_spark.sources.rdfio import RDF_NS, _unescape_nt
+from rippledb_spark.sources.rdfio import RDF_NS, _unescape_nt, iri_expr
 
 _XSD = "http://www.w3.org/2001/XMLSchema#"
 _RDF_TYPE = RDF_NS + "type"
@@ -42,7 +42,7 @@ _RDF_FIRST, _RDF_REST, _RDF_NIL = RDF_NS + "first", RDF_NS + "rest", RDF_NS + "n
 _TOKEN = re.compile(
     r"""
     (?P<ws>\s+|\#[^\n]*)
-  | (?P<iriref><[^<>"{}|^`\\\x00-\x20]*>)
+  | (?P<iriref><(?:[^<>"{}|^`\\\x00-\x20]|\\u[0-9A-Fa-f]{4}|\\U[0-9A-Fa-f]{8})*>)
   | (?P<long_str>\"\"\"(?:[^"\\]|\\.|\"(?!\"\"))*\"\"\"|'''(?:[^'\\]|\\.|'(?!''))*''')
   | (?P<string>"(?:[^"\\\n]|\\.)*"|'(?:[^'\\\n]|\\.)*')
   | (?P<prefix_kw>(?:@prefix|@base|[Pp][Rr][Ee][Ff][Ii][Xx]|[Bb][Aa][Ss][Ee])(?=\s))
@@ -329,7 +329,7 @@ def _compact_expr(col, prefixes: dict[str, str]):
     mirrored exactly by the SQL twin in queries/triples.py."""
     import pyspark.sql.functions as F
 
-    expr = F.concat(F.lit("<"), col, F.lit(">"))
+    expr = iri_expr(col)
     for pfx, ns in reversed(list(prefixes.items())):
         local = F.substring(col, len(ns) + 1, 1_000_000)
         cond = col.startswith(ns) & local.rlike(_SAFE_LOCAL)

@@ -733,6 +733,28 @@ def test_persist_writes_one_file_per_predicate_directory(spark, tmp_path):
     assert QuadStore.from_backup(spark, str(tmp_path / "flat")).df.count() == 400
 
 
+@pytest.mark.parametrize(
+    "partition_by,key",
+    [
+        (("p",), ["g", "s", "o_value"]),
+        (("g",), ["p", "s", "o_value"]),
+        ((), ["g", "p", "s", "o_value"]),
+    ],
+)
+def test_persisted_quads_are_zstd_and_sorted(spark, tmp_path, snapshot_layout, partition_by, key):
+    """Every layout stores zstd column chunks, each file sorted on its
+    non-partition g/p columns, then (s, o_value)."""
+    quads = [
+        (None if i % 2 else "g:x", f"s{i % 9}", f"p{i % 4}", f"o{(i * 37) % 101:03d}")
+        for i in range(200, 0, -1)
+    ]
+    spread = QuadStore(spark, QuadStore.from_rows(spark, quads).df.repartition(8))
+    spread.persist_to(str(tmp_path / "q"), partition_by=partition_by)
+    files = snapshot_layout(tmp_path / "q", key)
+    assert files and all(codecs == {"ZSTD"} and in_order for codecs, in_order in files)
+    assert QuadStore.from_backup(spark, str(tmp_path / "q")).df.count() == 200
+
+
 XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
 _SUBJ = [("a", model.NAMED), ("_:b1", model.BLANK)]
 _OBJ = [

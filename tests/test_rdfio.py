@@ -468,3 +468,26 @@ def test_rdfjson_parse_errors_are_loud(spark):
         parse_rdfjson('{"s": {"p": {"value": "x"}}}')
     with pytest.raises(RdfParseError, match="unknown RDF/JSON object type"):
         parse_rdfjson('{"s": {"p": [{"value": "x", "type": "zzz"}]}}')
+
+
+@pytest.mark.parametrize("fmt", ["ntriples", "turtle"])
+def test_iris_outside_iriref_round_trip(spark, tmp_path, fmt):
+    """The writers escape the characters IRIREF excludes as \\uXXXX and
+    the readers decode them, so an IRI with a space (rdfbench's
+    ``priority:4-NOT SPECIFIED``) or a backslash reads back as itself."""
+    rows = [
+        ("order:1", "named", "has_priority", "priority:4-NOT SPECIFIED", "named", None, None),
+        ("a b", "named", "p\\q", 'x<y>{z}|^`"\t', "named", None, None),
+        ("a", "named", "n", "7", "typed_literal", None, "dt with space"),
+    ]
+    st = TripleStore.from_rows(spark, rows)
+    out = str(tmp_path / fmt)
+    getattr(st, f"to_{fmt}")(out)
+    back = getattr(TripleStore, f"from_{fmt}")(spark, out)
+    assert sorted(map(tuple, back.df.collect())) == sorted(rows)
+
+
+def test_ntriples_reader_decodes_uchar_and_keeps_raw_spaces():
+    assert parse_ntriples_line("<a\\u0020b> <p> <c d> .") == (
+        "a b", "named", "p", "c d", "named", None, None
+    )

@@ -938,3 +938,29 @@ def test_order_by_aggregate_alias_and_expression(store):
     assert [(r["s"], r["n"]) for r in store.sparql(q2).collect()] == [
         ("r", 2), ("c1", 1),
     ]
+
+
+def test_query_blank_nodes_are_non_distinguished_variables(spark):
+    """SPARQL §4.1.4: a blank node in a query pattern matches any term,
+    one label used twice in a group joins on it, and SELECT * does not
+    project it; a CONSTRUCT template keeps it a blank node."""
+    from rippledb_spark import model
+    from rippledb_spark.plans.sparql import Val, Var
+
+    st = TripleStore.from_rows(
+        spark,
+        [
+            ("a", "q", "5"),
+            ("a", "named", "q", "5", model.LITERAL, None, None),
+            ("b", "q", "c"),
+            ("c", "r", "d"),
+        ],
+    )
+    assert rows(st.sparql("SELECT ?s WHERE { ?s q _:x }"), "s") == [("a",), ("a",), ("b",)]
+    star = st.sparql("SELECT * WHERE { ?s q _:x . _:x r ?t }")
+    assert star.columns == ["s", "t"]
+    assert rows(star, "s", "t") == [("b", "d")]
+    assert parse_sparql("SELECT ?s WHERE { ?s q _:x }").conds[0][2] == Var("_:x")
+    cq = parse_sparql("CONSTRUCT { ?s z _:n } WHERE { ?s q _:x }")
+    assert cq.template[0][2] == Val("_:n", model.BLANK)
+    assert cq.query.conds[0][2] == Var("_:x")

@@ -324,6 +324,47 @@ def test_persist_to_and_persist_version_write_one_layout(store, tmp_path):
     assert layout(tmp_path / "versions" / f"v{v}") == backup
 
 
+def test_persisted_slices_are_zstd_and_sorted_on_s_o(spark, tmp_path, snapshot_layout):
+    """Both write paths store every column chunk zstd-compressed and each
+    predicate slice's rows sorted on (s, o_value)."""
+    rows = [(f"s{i % 7}", f"p{i % 3}", f"o{(i * 37) % 101:03d}") for i in range(120, 0, -1)]
+    spread = TripleStore(spark, TripleStore.from_rows(spark, rows).df.repartition(4))
+    spread.persist_to(str(tmp_path / "backup"))
+    v = spread.persist_version(str(tmp_path / "versions"))
+    for root in (tmp_path / "backup", tmp_path / "versions" / f"v{v}"):
+        files = snapshot_layout(root, ["s", "o_value"])
+        assert len(files) == 3
+        assert all(codecs == {"ZSTD"} and in_order for codecs, in_order in files)
+        assert TripleStore.from_backup(spark, str(root)).count() == spread.count()
+
+
+# every term kind, in both positions a kind can take
+OLD_LAYOUT_ROWS = [
+    ("a", "named", "q", "b", "named", None, None),
+    ("_:s", "blank", "q", "_:o", "blank", None, None),
+    ("a", "named", "q", "5", "literal", None, None),
+    ("a", "named", "r", "5", "lang_literal", "en", None),
+    ("a", "named", "r", "5", "typed_literal", None, "http://www.w3.org/2001/XMLSchema#integer"),
+    ("a", "named", "5", "5", "named", None, None),
+]
+
+
+def test_restore_reads_unsorted_snappy_snapshots(spark, tmp_path):
+    """A snapshot written before the writer sorted and used zstd (plain
+    partitionBy("p"), snappy, rows as they come) restores row for row
+    through from_backup and from_version."""
+    df = spark.createDataFrame(OLD_LAYOUT_ROWS, TripleStore.SCHEMA)
+    for path in (tmp_path / "backup", tmp_path / "versions" / "v1"):
+        df.write.partitionBy("p").option("compression", "snappy").parquet(str(path))
+    want = sorted(OLD_LAYOUT_ROWS, key=repr)
+    restored = [
+        TripleStore.from_backup(spark, str(tmp_path / "backup")),
+        TripleStore.from_version(spark, str(tmp_path / "versions")),
+    ]
+    for st in restored:
+        assert sorted(map(tuple, st.df.collect()), key=repr) == want
+
+
 def test_diff_versions_cdc_feed(spark, store, tmp_path):
     """r11: snapshot diff — the change feed between persisted versions,
     with null-safe identity (lang-tagged/typed literals carry NULLs)."""
